@@ -413,9 +413,6 @@ def _streaming_foreach_batch_run(spark, sf_dir: str) -> float:
     from spark_expectations_spark.streaming import foreach_batch_dq
 
     li = load(spark, sf_dir, "lineitem")
-    base = tempfile.mkdtemp(prefix="bench_stream_")
-    src, ckpt = os.path.join(base, "src"), os.path.join(base, "ckpt")
-    li.repartition(4).write.mode("overwrite").parquet(src)
     rules = RuleSet(lineitem_row_rules())
     cfg = DQConfig(product_id="bench", table_name="lineitem",
                    write_error_table=False)
@@ -425,15 +422,28 @@ def _streaming_foreach_batch_run(spark, sf_dir: str) -> float:
         res.final_df.write.format("noop").mode("overwrite").save()
         outputs.append(res.output_count)
 
-    stream = (spark.readStream.schema(li.schema)
-              .option("maxFilesPerTrigger", 1).parquet(src))
-    t0 = time.time()
-    q = foreach_batch_dq(stream, rules, cfg, on_result=on_result,
-                         checkpoint_location=ckpt,
-                         trigger={"availableNow": True})
-    q.awaitTermination()
-    dt = time.time() - t0
-    shutil.rmtree(base, ignore_errors=True)
+    base = tempfile.mkdtemp(prefix="bench_stream_")
+    q = None
+    # every exit, a failed micro-batch included, stops the query and
+    # removes the source and checkpoint
+    try:
+        src, ckpt = os.path.join(base, "src"), os.path.join(base, "ckpt")
+        li.repartition(4).write.mode("overwrite").parquet(src)
+        stream = (spark.readStream.schema(li.schema)
+                  .option("maxFilesPerTrigger", 1).parquet(src))
+        t0 = time.time()
+        q = foreach_batch_dq(stream, rules, cfg, on_result=on_result,
+                             checkpoint_location=ckpt,
+                             trigger={"availableNow": True})
+        q.awaitTermination()
+        dt = time.time() - t0
+    finally:
+        if q is not None:
+            try:
+                q.stop()
+            except Exception:  # best effort: keep the run's own error
+                pass
+        shutil.rmtree(base, ignore_errors=True)
     if len(outputs) < 2:
         raise RuntimeError(f"expected multiple micro-batches, "
                            f"got {len(outputs)}")

@@ -718,7 +718,7 @@ def chi2_pvalue(
         # float's repr round-trips to the same double.
         if isinstance(c, str):
             return "`" + c.replace("`", "``") + "`"
-        if isinstance(c, int):
+        if isinstance(c, int) and not isinstance(c, bool):
             return str(c)
         return None
 

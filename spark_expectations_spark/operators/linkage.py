@@ -907,7 +907,8 @@ def weighted_cosine_join(
     ``‖X‖ = sqrt(Σ_{t∈X} w_t²)``. ``weights`` is a (token, weight)
     frame — idf from :func:`~..text.term_weights`, hand-tuned field
     weights, anything positive; tokens absent from it contribute
-    nothing (weight 0). Returns ``(left_id, right_id, n_common, dot,
+    nothing (weight 0), and a token with several positive weight rows
+    takes the largest. Returns ``(left_id, right_id, n_common, dot,
     cosine)``.
 
     ``hash_tokens=True`` runs the pipeline in the md5-60 token image
@@ -976,15 +977,21 @@ def weighted_cosine_join(
         # prefix window, and BOTH verify joins run on 8-byte longs
         # instead of token strings — the hash is a codegen row
         # expression on already-exploded rows. A 60-bit collision
-        # would merge two tokens; the weights side aggregates by
-        # hashed key (max) so even that stays deterministic
-        # (P ≈ vocab²/2^61 — see set_similarity_join).
+        # would merge two tokens (P ≈ vocab²/2^61 — see
+        # set_similarity_join); the per-token max below keeps even
+        # that deterministic.
         h = F.conv(F.substring(F.md5(F.col("__tok")), 1, 15), 16, 10) \
             .cast("long")
         lt = lt.select("__lid", h.alias("__tok"))
         rt = rt.select("__rid", h.alias("__tok"))
-        w2 = (w2.select(h.alias("__tok"), "__w2")
-              .groupBy("__tok").agg(F.max("__w2").alias("__w2")))
+        w2 = w2.select(h.alias("__tok"), "__w2")
+    # ONE weight per token: duplicate weight rows would otherwise fan
+    # each token row out in the joins below and inflate the norms and
+    # the dot product. Pinned semantics: the largest weight wins. A
+    # weights frame built by a groupBy on its token column already
+    # satisfies this aggregation's distribution, so it plans no
+    # exchange of its own.
+    w2 = w2.groupBy("__tok").agg(F.max("__w2").alias("__w2"))
     lw = lt.join(w2, "__tok")
     rw = rt.join(w2, "__tok")
     # per-id norm AND carried weighted-token array from ONE groupBy per

@@ -184,6 +184,17 @@ def fan_out(df: DataFrame, min_partitions: int = 0,
 _LOCAL_FRAME_MAX_LITERALS = 128
 
 
+def _literal_count(v) -> int:
+    """Literal nodes one cell becomes: nested arrays count every leaf,
+    and a map counts a key and a value per entry."""
+    if isinstance(v, dict):
+        return sum(_literal_count(k) + _literal_count(x)
+                   for k, x in v.items())
+    if isinstance(v, (list, tuple)):
+        return sum(_literal_count(x) for x in v)
+    return 1
+
+
 def local_frame(spark, rows, schema) -> DataFrame:
     """Driver-computed rows → DataFrame as a pure-JVM literal relation.
 
@@ -225,9 +236,7 @@ def local_frame(spark, rows, schema) -> DataFrame:
     # cols" centroid frame with dim-512 vectors is really ~32k literal
     # nodes — exactly the analyzer-retraversal blow-up the cap was
     # measured to prevent (the docstring's 512-row A/B: 1.7 -> 12.4 s)
-    n_literals = sum(
-        (len(v) if isinstance(v, (list, tuple, dict)) else 1)
-        for row in rows for v in row)
+    n_literals = sum(_literal_count(v) for row in rows for v in row)
     if n_literals > _LOCAL_FRAME_MAX_LITERALS:
         return spark.createDataFrame(
             [tuple(r) for r in rows], schema)

@@ -30,6 +30,14 @@ _BASE = {
     "spark.executorEnv.OMP_NUM_THREADS": "1",
     "spark.executorEnv.OPENBLAS_NUM_THREADS": "1",
     "spark.executorEnv.MKL_NUM_THREADS": "1",
+    # generated-class cache: every operator runs as Catalyst-generated
+    # Java, and one warm pass of the heavy-operator roster needs ~370
+    # classes, so at the default 100 entries each warm pass recompiled
+    # ~350 of them in Janino; at 2000 it compiles fewer than 30. A
+    # STATIC SQL conf: it takes effect only as a builder conf set
+    # before the session starts (``configure``); ``spark.conf.set`` on
+    # a live session cannot change it
+    "spark.sql.codegen.cache.maxEntries": "2000",
 }
 
 
@@ -118,7 +126,12 @@ def spread_scan(df, spark, min_partitions: Optional[int] = None):
 def configure(builder, confs: Mapping[str, str]):
     """Apply a conf dict to a ``SparkSession.builder`` (returns the
     builder for chaining): ``configure(builder,
-    scale_confs('cluster-large', total_cores=2000)).getOrCreate()``."""
+    scale_confs('cluster-large', total_cores=2000)).getOrCreate()``.
+
+    Apply the profile here, before the session starts: static SQL confs
+    in it (``spark.sql.codegen.cache.maxEntries``) take effect only as
+    builder confs, and ``spark.conf.set`` on a running session cannot
+    change them."""
     for k, v in confs.items():
         builder = builder.config(k, v)
     return builder

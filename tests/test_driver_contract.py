@@ -8,6 +8,10 @@ import re
 import sys
 from pathlib import Path
 
+import pytest
+
+from conftest import SF_DIR
+
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 
@@ -137,3 +141,45 @@ class TestDriverCanonEmulation:
         assert driver_canon_error(
             ["a", "b"], [([1, 2], 1), ([3], 2)]) is not None
         assert driver_canon_error(["a", "b"], [(1, "x"), (2, None)]) is None
+
+
+class TestBenchStreamingCleanup:
+    """bench's streaming entry stops its query and removes its source
+    and checkpoint directory on every exit, a failed run included."""
+
+    @pytest.mark.parametrize("failure", ["batch_raises", "wait_raises"])
+    def test_forced_failure_leaves_nothing_behind(self, spark, tmp_path,
+                                                  monkeypatch, failure):
+        import tempfile
+
+        import bench
+        from spark_expectations_spark import streaming
+
+        real = streaming.foreach_batch_dq
+
+        def boom(*_):
+            raise RuntimeError("forced failure")
+
+        class Waiting:
+            # a caller interrupted while the stream still runs
+            def __init__(self, q):
+                self._q = q
+
+            def __getattr__(self, name):
+                return getattr(self._q, name)
+
+            def awaitTermination(self):
+                boom()
+
+        def forced(stream, rules, cfg, *, on_result, **kw):
+            if failure == "batch_raises":
+                return real(stream, rules, cfg, on_result=boom, **kw)
+            return Waiting(real(stream, rules, cfg, on_result=on_result,
+                                **kw))
+
+        monkeypatch.setattr(streaming, "foreach_batch_dq", forced)
+        monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+        with pytest.raises(Exception, match="forced failure"):
+            bench._streaming_foreach_batch_run(spark, SF_DIR)
+        assert spark.streams.active == []
+        assert list(tmp_path.iterdir()) == []

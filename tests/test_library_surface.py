@@ -1236,6 +1236,8 @@ class TestSessionProfiles:
         assert big["spark.sql.shuffle.partitions"] == "4000"
         assert big["spark.sql.files.maxPartitionBytes"] == "128m"
         assert big["spark.sql.adaptive.skewJoin.enabled"] == "true"
+        for confs in (local, big):
+            assert int(confs["spark.sql.codegen.cache.maxEntries"]) >= 1000
         b = se.configure(SparkSession.builder, local)
         assert b is not None                     # chainable
         import pytest as _pytest
@@ -1243,6 +1245,59 @@ class TestSessionProfiles:
             se.scale_confs("cluster-large")
         with _pytest.raises(ValueError, match="unknown profile"):
             se.scale_confs("exotic")
+
+    def test_warm_pass_reuses_generated_classes(self, tmp_path):
+        """The cache size is a static conf, so the profile is applied to
+        a fresh session in its own JVM. A pass over these two entries
+        needs ~200 generated classes, more than Spark's default cache of
+        100 holds; the second pass must find them cached. At the
+        default size it recompiles ~96 % of them. With the profile a
+        warm pass still compiles 8-41 classes, varying run to run (plans
+        that AQE re-optimizes differently, per-run literals), so the
+        bound is a third of the cold pass, not zero."""
+        import os
+        import subprocess
+        import sys
+        import textwrap
+
+        entries = ("docs_dedup_pipeline", "docs_weighted_cosine")
+        root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        script = tmp_path / "warm_pass.py"
+        script.write_text(textwrap.dedent(f"""
+            import json, sys
+            sys.path.insert(0, {root!r})
+            from pyspark.sql import SparkSession
+            from spark_expectations_spark.queries import QUERIES
+            from spark_expectations_spark.session import (configure,
+                                                          scale_confs)
+            spark = configure(SparkSession.builder.master("local[2]"),
+                              scale_confs("local-dev", total_cores=2)
+                              ).getOrCreate()
+            try:
+                compiles = (spark.sparkContext._jvm.org.apache.spark
+                            .metrics.source.CodegenMetrics
+                            .METRIC_COMPILATION_TIME())
+                counts = []
+                for _ in range(2):
+                    c0 = compiles.getCount()
+                    for name in {entries!r}:
+                        (QUERIES[name](spark, {SF_DIR!r}).write
+                         .format("noop").mode("overwrite").save())
+                    spark.catalog.clearCache()
+                    counts.append(compiles.getCount() - c0)
+                print("COMPILES " + json.dumps(counts))
+            finally:
+                spark.stop()
+        """))
+        proc = subprocess.run([sys.executable, str(script)],
+                              capture_output=True, text=True, timeout=600,
+                              cwd=str(tmp_path))
+        lines = [ln for ln in proc.stdout.splitlines()
+                 if ln.startswith("COMPILES ")]
+        assert proc.returncode == 0 and lines, proc.stderr[-3000:]
+        cold, warm = json.loads(lines[-1].split(" ", 1)[1])
+        assert cold > 100, (cold, warm)
+        assert 3 * warm <= cold, (cold, warm)
 
     def test_spread_scan_widens_narrow_and_noops_wide(self, spark,
                                                       tmp_path):
@@ -1265,6 +1320,27 @@ class TestSessionProfiles:
         out2 = se.spread_scan(narrow, spark)
         assert (out2.rdd.getNumPartitions()
                 == spark.sparkContext.defaultParallelism)
+
+
+class TestLocalFrameLiteralCap:
+    """``plans.local_frame`` counts every literal node a cell becomes:
+    each leaf of a nested array, a key and a value per map entry. Both
+    frames below are under the 128 cap when a cell counts only its
+    top-level length, and over it counted in full."""
+
+    @pytest.mark.parametrize("rows,schema", [
+        ([(i, [[float(i)] * 8] * 8) for i in range(4)],
+         "k int, v array<array<double>>"),
+        ([(i, {f"k{j}": j for j in range(20)}) for i in range(4)],
+         "k int, v map<string, int>"),
+    ], ids=["nested_array", "map"])
+    def test_nested_payload_falls_back_to_create_dataframe(
+            self, spark, rows, schema):
+        df = plans.local_frame(spark, rows, schema)
+        txt = plans.plan_text(df)
+        assert "Scan ExistingRDD" in txt or "LocalTableScan" in txt
+        want = spark.createDataFrame(rows, schema).orderBy("k").collect()
+        assert df.orderBy("k").collect() == want
 
 
 class TestExecutionMetrics:

@@ -4513,6 +4513,17 @@ class TestChi2BySegmentFdr:
         with _pytest.raises(ValueError, match="terms"):
             drift.ks_pvalue("d", "nb", "nc", terms=0)
 
+    def test_bool_dof_is_rejected_on_both_paths(self, spark):
+        """A bool is not a degree of freedom: the SQL fast path (string
+        chi2) rejects it as the Column path does, instead of comparing
+        ``dof = true``."""
+        import pytest as _pytest
+        from pyspark.sql import functions as F
+        from spark_expectations_spark.operators import drift
+        for chi2 in ("chi2", F.col("chi2")):
+            with _pytest.raises(TypeError):
+                drift.chi2_pvalue(chi2, True)
+
     def test_odd_dof_yields_null_pvalue(self, spark):
         from pyspark.sql import functions as F
         from spark_expectations_spark.operators import drift
@@ -6172,6 +6183,31 @@ class TestWeightedCosineJoin:
         assert set(got) == set(expect)
         for k in got:
             assert got[k] == approx(expect[k])
+
+    @pytest.mark.parametrize("hash_tokens", [False, True])
+    def test_duplicate_weight_rows_take_the_max(self, spark, hash_tokens):
+        """A token with several weight rows counts once, at its largest
+        weight: the result equals the run over the deduplicated table."""
+        from spark_expectations_spark.operators import linkage
+        L = spark.createDataFrame([(1, ["a", "b", "c"]), (2, ["c", "d"])],
+                                  "lid int, ls array<string>")
+        R = spark.createDataFrame([(10, ["a", "b"]), (11, ["c", "d"])],
+                                  "rid int, rs array<string>")
+        clean = [("a", 2.0), ("b", 1.0), ("c", 3.0), ("d", 1.0)]
+        dup = clean + [("a", 1.0), ("a", 2.0), ("c", 0.5), ("d", 1.0)]
+
+        def run(pairs):
+            return sorted(map(tuple, linkage.weighted_cosine_join(
+                L, R, "lid", "ls", "rid", "rs",
+                self._weights(spark, pairs), threshold=0.5,
+                hash_tokens=hash_tokens).collect()))
+
+        want = run(clean)
+        # squared norms: lid 1 -> 14, lid 2 -> 10, rid 10 -> 5, rid 11
+        # -> 10; (1,10) 5/sqrt(70), (1,11) 9/sqrt(140), (2,11) 1.0
+        assert [r[:4] for r in want] == [
+            (1, 10, 2, 5.0), (1, 11, 1, 9.0), (2, 11, 2, 10.0)]
+        assert run(dup) == want
 
     def test_threshold_validation(self, spark):
         import pytest as _pytest

@@ -1,15 +1,20 @@
-"""Per-JOB breakdown of one catalog query: what are all those jobs?
+"""Per-JOB breakdown of catalog queries: what are all those jobs?
 
-Runs the named query once (bench session profile + warmers), then lists
-every job it submitted — description, wall ms, task-time ms, stages —
-from the UI REST API. The companion to profile_queries.py for the
-build-dominated entries where fn() itself runs driver actions.
+Runs the named queries twice, in order (bench session profile +
+warmers), then lists every job each run submitted — description, wall
+ms, task-time ms, stages — from the UI REST API, and how many classes
+Janino compiled for the run (``codegen_compiles``, from Spark's
+CodegenMetrics). The companion to profile_queries.py for the
+build-dominated entries where fn() itself runs driver actions. A warm
+second run that still compiles about as much as the first means the
+generated-class cache evicts (``spark.sql.codegen.cache.maxEntries``).
 
-    python tools/profile_jobs.py <query>
+    python tools/profile_jobs.py <query> [<query> ...]
 """
 
 from __future__ import annotations
 
+import itertools
 import json
 import os
 import sys
@@ -28,7 +33,7 @@ def _api(base: str, path: str):
 
 
 def main() -> int:
-    name = sys.argv[1]
+    names = sys.argv[1:]
     from spark_expectations_spark.queries import QUERIES, load
     from spark_expectations_spark.session import configure, scale_confs
 
@@ -51,10 +56,13 @@ def main() -> int:
         lambda it: it, "id long").write.format("noop").mode("overwrite").save()
 
     base = f"http://localhost:4049/api/v1/applications/{sc.applicationId}"
-    # second warm run is the interesting one (codegen cache warm-ish)
-    for run in range(2):
+    compiles = (sc._jvm.org.apache.spark.metrics.source.CodegenMetrics
+                .METRIC_COMPILATION_TIME())
+    # second warm run is the interesting one (codegen cache warm)
+    for run, name in itertools.product(range(2), names):
         group = f"jobs-{name}-{run}"
         sc.setJobGroup(group, name)
+        c0 = compiles.getCount()
         t0 = time.time()
         df = QUERIES[name](spark, sf_dir)
         t1 = time.time()
@@ -62,8 +70,9 @@ def main() -> int:
         t2 = time.time()
         sc.setJobGroup(None, None)
         spark.catalog.clearCache()
-        print(f"== run {run}: build {t1-t0:.2f}s exec {t2-t1:.2f}s "
-              f"rows {n}")
+        print(f"== {name} run {run}: build {t1-t0:.2f}s exec "
+              f"{t2-t1:.2f}s rows {n} "
+              f"codegen_compiles {compiles.getCount() - c0}")
         jobs = [j for j in _api(base, "/jobs")
                 if j.get("jobGroup") == group]
         jobs.sort(key=lambda j: j["jobId"])
