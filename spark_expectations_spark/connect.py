@@ -31,6 +31,8 @@ similarity broadcast        closure capture instead of ``sc.broadcast``
                             (similarity.py:44-60)
 ``sinks.layout`` fs ops     unavailable (Hadoop FS via ``_jvm``) — raises
                             the documented RuntimeError
+``local_checkpoint_rdds``   returns ``{}``: the stream steps leave their
+                            per-batch checkpoints to the server
 ==========================  =================================================
 """
 
@@ -125,3 +127,18 @@ def spark_context(spark: Any) -> Optional[Any]:
     except AttributeError as exc:
         _debug_once("spark.sparkContext", exc)
         return None
+
+
+def local_checkpoint_rdds(df: Any) -> dict:
+    """``{rdd_id: JVM RDD}`` for every locally checkpointed RDD that
+    ``df``'s plan reads (its ``LogicalRDD`` leaves), so a caller can
+    unpersist the checkpoints it took; ``{}`` under Spark Connect,
+    where the server owns checkpoints."""
+    qe = jvm_query_execution(df)
+    if qe is None:
+        return {}
+    leaves = qe.analyzed().collectLeaves()
+    nodes = [leaves.apply(i) for i in range(leaves.size())]
+    rdds = [n.rdd() for n in nodes
+            if n.getClass().getSimpleName() == "LogicalRDD"]
+    return {r.id(): r for r in rdds if r.isLocallyCheckpointed()}

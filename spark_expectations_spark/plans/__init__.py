@@ -220,7 +220,7 @@ def local_frame(spark, rows, schema) -> DataFrame:
     mapping sent docs_isotonic_by_source 0.9 → 25.4 s, while ≤ ~100-
     literal spec frames all won). Above ``_LOCAL_FRAME_MAX_LITERALS``
     this silently falls back to ``createDataFrame`` — identical rows
-    either way.
+    either way. So does any frame with a map-typed field.
     """
     from pyspark.sql import functions as F
 
@@ -237,7 +237,9 @@ def local_frame(spark, rows, schema) -> DataFrame:
     # nodes — exactly the analyzer-retraversal blow-up the cap was
     # measured to prevent (the docstring's 512-row A/B: 1.7 -> 12.4 s)
     n_literals = sum(_literal_count(v) for row in rows for v in row)
-    if n_literals > _LOCAL_FRAME_MAX_LITERALS:
+    # F.lit has no map literal, so a map-typed field always falls back
+    if (n_literals > _LOCAL_FRAME_MAX_LITERALS
+            or any("map<" in f.dataType.simpleString() for f in fields)):
         return spark.createDataFrame(
             [tuple(r) for r in rows], schema)
     structs = [

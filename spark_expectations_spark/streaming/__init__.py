@@ -11,12 +11,38 @@ Two tiers (SURVEY.md §2.9):
   engine on every micro-batch via foreachBatch, so agg/query rules and
   fail actions are enforceable per micro-batch; plus watermark/window
   helpers for event-time rules.
+
+State recipe. foreachBatch is at-least-once: after a failure the SAME
+(batch_id, offsets) is replayed, and Spark's contract is "use batchId to
+deduplicate". Every disk-state step here (the ``incremental_*`` builders,
+the dedup / fuzzy-match / Bloom / k-means / drift-verdict sinks) keeps it
+the same way:
+
+1. Write, don't update: each micro-batch writes ONLY its own increment
+   as the ``_batch_id=<id>`` partition, with dynamic partition
+   overwrite, so a replayed batch replaces its partition instead of
+   appending a second copy.
+2. Merge on read: readers fold the partitions with the state's merge —
+   SUM for counts, OR for bitmaps and Bloom words, latest version for the
+   k-means codebook — so the per-batch write never reads history.
+3. Exclude the current batch on read: a step that reads its own state
+   first drops the current batch id's partition (a failed attempt's
+   half-written increment), so a replay sees exactly what the first
+   attempt saw.
+4. Compact at quiescence, to a new path: the ``compact_*`` functions fold
+   the partitions into one (``_batch_id=0``) at ``out_path``; swap the
+   stream onto it after its last pre-compaction batch commits. Additive
+   state must not be compacted while a batch may still replay into the
+   old path (its increment would then count in both). The Bloom store is
+   the exception: ``compact_bloom_state`` truncates in place.
 """
 
 from __future__ import annotations
 
+import math
 from typing import Callable, Optional, Sequence
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -471,6 +497,20 @@ def idempotent_foreach_batch(
     return wrapped
 
 
+def _psi(base: dict, cur: dict) -> float:
+    """Population stability index of two bucket → proportion maps, each
+    side floored at ``operators/drift._EPS`` (a bucket missing on one
+    side stays finite)."""
+    from ..operators.drift import _EPS
+
+    psi = 0.0
+    for b in set(base) | set(cur):
+        p = max(base.get(b, 0.0), _EPS)
+        q = max(cur.get(b, 0.0), _EPS)
+        psi += (p - q) * math.log(p / q)
+    return psi
+
+
 def drift_monitor(
     stream_df: DataFrame,
     col: str,
@@ -492,8 +532,6 @@ def drift_monitor(
     psi)`` fires when PSI crosses ``threshold``; wire it to a
     NotificationHub channel for alerting.
     """
-    from ..operators.drift import _EPS
-
     edges = [float(e) for e in baseline_edges]
     base = {int(k): float(v) for k, v in baseline_props.items()}
 
@@ -507,13 +545,7 @@ def drift_monitor(
         total = sum(r.n for r in rows)
         if not total:
             return
-        cur = {r.bucket: r.n / total for r in rows}
-        import math
-        psi = 0.0
-        for bucket in set(base) | set(cur):
-            p = max(base.get(bucket, 0.0), _EPS)
-            q = max(cur.get(bucket, 0.0), _EPS)
-            psi += (p - q) * math.log(p / q)
+        psi = _psi(base, {r.bucket: r.n / total for r in rows})
         if psi > threshold and on_drift is not None:
             on_drift(batch_id, psi)
 
@@ -521,6 +553,70 @@ def drift_monitor(
     if checkpoint_location:
         writer = writer.option("checkpointLocation", checkpoint_location)
     return writer.start()
+
+
+def _write_increment(df: DataFrame, path: str, batch_id: int) -> None:
+    """Write ``df`` as partition ``_batch_id=batch_id`` of ``path`` with
+    dynamic partition overwrite — step 1 of the module's State recipe:
+    a replay replaces its own partition and leaves the others alone."""
+    (df.withColumn("_batch_id", F.lit(batch_id))
+     .write.mode("overwrite").partitionBy("_batch_id")
+     .option("partitionOverwriteMode", "dynamic")
+     .parquet(path))
+
+
+def _increment_step(
+    state_path: str, snapshot: Callable[[DataFrame], DataFrame],
+) -> Callable[[DataFrame, int], None]:
+    """The foreachBatch step that writes ``snapshot(batch_df)`` as the
+    batch's increment of the state at ``state_path``."""
+
+    def step(batch_df: DataFrame, batch_id: int) -> None:
+        _write_increment(snapshot(batch_df), state_path, batch_id)
+
+    return step
+
+
+def _prior_state(spark, path: str, batch_id: int) -> Optional[DataFrame]:
+    """The state at ``path`` as the current batch must see it — without
+    its own ``_batch_id`` partition (step 3 of the State recipe) — or
+    ``None`` when there is no state yet. Only a missing path / empty dir
+    (``AnalysisException``) means "no state": any other error
+    (corruption, permissions) propagates, because guessing "empty" would
+    silently re-admit duplicates or mark every key unseen."""
+    try:
+        state = spark.read.parquet(path)
+    except AnalysisException:
+        return None
+    if "_batch_id" not in state.columns:  # pre-stamping layout
+        return state
+    return state.filter(F.col("_batch_id") != batch_id)
+
+
+def _sum_state(spark, path: str, key_cols: Sequence[str],
+               sum_cols: Sequence[str],
+               carry_cols: Sequence[str] = ()) -> DataFrame:
+    """The additive merge: one row per ``key_cols`` with every
+    ``sum_cols`` summed over all batch partitions and each key-constant
+    ``carry_cols`` passenger taken by MAX."""
+    return (spark.read.parquet(path).groupBy(*key_cols)
+            .agg(*[F.max(c).alias(c) for c in carry_cols],
+                 *[F.sum(c).alias(c) for c in sum_cols]))
+
+
+def _release_checkpoints(df: DataFrame,
+                         keep: Optional[DataFrame] = None) -> None:
+    """Unpersist the local checkpoints ``df`` reads — a step's own
+    ``localCheckpoint`` and any an operator took inside it
+    (``bloom_might_contain`` checkpoints its word table) — except those
+    ``keep`` (the caller's batch) also reads. Left alone, every
+    micro-batch pins one more RDD for the life of the session."""
+    from ..connect import local_checkpoint_rdds
+
+    kept = local_checkpoint_rdds(keep) if keep is not None else {}
+    for rdd_id, rdd in local_checkpoint_rdds(df).items():
+        if rdd_id not in kept:
+            rdd.unpersist(False)
 
 
 def incremental_bitmap_distinct(
@@ -534,31 +630,16 @@ def incremental_bitmap_distinct(
     (distinct users ever seen per type, distinct docs per source across
     a whole crawl).
 
-    Each micro-batch writes ONLY its own per-(group, bucket) bitmaps
-    (``operators/sketches.bitmap_distinct_by_group``), partitioned by
-    ``_batch_id`` with dynamic partition overwrite — a retried batch
-    REPLACES its own partition, and because bitmap OR-merge is
-    idempotent (a value seen in five batches sets the same bit five
-    times), the merged answer is exactly-once without ever READING
-    prior state in the hot path: merging happens at query time via
-    :func:`bitmap_distinct_counts`. Per-batch write cost tracks the
-    batch's value range, never the stream's history; no state-store
-    memory, no rescans.
-
-    Compact occasionally (re-write ``bitmap_distinct_by_group`` over a
-    rollup of the state) if thousands of tiny batch partitions
-    accumulate — the answer is unaffected either way."""
+    Snapshot: the batch's per-(group, bucket) bitmaps
+    (``operators/sketches.bitmap_distinct_by_group``). Merge: bitmap OR
+    at query time via :func:`bitmap_distinct_counts` — idempotent, so
+    the step never reads prior state. State recipe: module docstring.
+    Once thousands of tiny batch partitions accumulate, fold them with
+    :func:`compact_bitmap_state`; answers are unaffected."""
     from ..operators.sketches import bitmap_distinct_by_group
 
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        bm = bitmap_distinct_by_group(batch_df, group_cols, value_col)
-        (bm.withColumn("_batch_id", F.lit(batch_id))
-         .write.mode("overwrite")
-         .partitionBy("_batch_id")
-         .option("partitionOverwriteMode", "dynamic")
-         .parquet(state_path))
-
-    return step
+    return _increment_step(state_path, lambda df: bitmap_distinct_by_group(
+        df, group_cols, value_col))
 
 
 def bitmap_distinct_counts(spark, state_path: str,
@@ -579,51 +660,28 @@ def incremental_histogram_state(
     *,
     drop_nulls: bool = False,
 ) -> Callable[[DataFrame, int], None]:
-    """foreachBatch step accumulating a multi-column
-    ``operators/drift.histogram_snapshot`` on disk — the streaming
-    baseline for :func:`~..operators.drift.drift_from_snapshot`: each
-    micro-batch writes ONLY its own (column, bucket, n) increment,
-    partitioned by ``_batch_id`` with dynamic overwrite (a retried
-    batch REPLACES its partition; the read-time re-sum merges
-    increments, so the accumulated histogram is exactly-once — the
-    :func:`incremental_bitmap_distinct` recipe, with additive counts
-    instead of idempotent bitmaps). Per-batch cost is
-    columns × buckets rows; the stream is never rescanned, and any
-    later frame can drift against the whole history via
-    ``drift_from_snapshot(spark.read.parquet(state_path), cur,
-    edges)``."""
+    """foreachBatch step accumulating a multi-column histogram on disk —
+    the streaming baseline for
+    :func:`~..operators.drift.drift_from_snapshot`.
+
+    Snapshot: the batch's ``(column, bucket, n)`` rows
+    (``operators/drift.histogram_snapshot``). Merge: SUM of ``n`` per
+    (column, bucket) — ``drift_from_snapshot(spark.read.parquet(
+    state_path), cur, edges)`` re-sums, so any later frame drifts
+    against the whole history. State recipe: module docstring."""
     from ..operators.drift import histogram_snapshot
 
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        (histogram_snapshot(batch_df, edges_by_col,
-                            drop_nulls=drop_nulls)
-         .withColumn("_batch_id", F.lit(batch_id))
-         .write.mode("overwrite")
-         .partitionBy("_batch_id")
-         .option("partitionOverwriteMode", "dynamic")
-         .parquet(state_path))
-
-    return step
+    return _increment_step(state_path, lambda df: histogram_snapshot(
+        df, edges_by_col, drop_nulls=drop_nulls))
 
 
 def compact_histogram_state(spark, state_path: str,
                             out_path: str) -> None:
-    """Compact an :func:`incremental_histogram_state` dir: re-sum every
-    (column, bucket) to one row, written to ``out_path`` as batch
-    partition 0 (swap-not-overwrite, like
-    :func:`compact_bitmap_state`). Because counts ADD, compact only
-    AFTER the stream has stopped writing to ``state_path`` (or between
-    its batches) — unlike the idempotent bitmap OR, a batch replayed
-    into the OLD path after its increment was folded into the new one
-    would double-count if both paths were later combined."""
-    state = spark.read.parquet(state_path)
-    (state.groupBy("column", "bucket")
-     .agg(F.sum("n").alias("n"))
-     .withColumn("_batch_id", F.lit(0))
-     .write.mode("overwrite")
-     .partitionBy("_batch_id")
-     .option("partitionOverwriteMode", "dynamic")
-     .parquet(out_path))
+    """Compact an :func:`incremental_histogram_state` dir to one row per
+    (column, bucket) at ``out_path`` — :func:`compact_additive_state`
+    with the histogram's keys."""
+    compact_additive_state(spark, state_path, out_path,
+                           ("column", "bucket"), ("n",))
 
 
 def incremental_quantile_state(
@@ -635,26 +693,16 @@ def incremental_quantile_state(
 ) -> Callable[[DataFrame, int], None]:
     """foreachBatch step accumulating a
     :func:`~..operators.sketches.quantile_histogram` cell table on disk
-    — the streaming member of the mergeable quantile rollup (the
-    :func:`incremental_histogram_state` recipe with the r13 sketch):
-    each micro-batch writes ONLY its own ``(*partition_cols, bin, n,
-    lo, hi)`` cells under its ``_batch_id`` partition with dynamic
-    overwrite, so a retried batch REPLACES its increment and the
-    read-time SUM/MIN/MAX re-merge is exactly-once. Any later session
-    answers quantile questions over the whole history via
-    :func:`quantile_state_quantiles` without rescanning the stream."""
+    — the streaming member of the mergeable quantile rollup.
+
+    Snapshot: the batch's ``(*partition_cols, bin, n, lo, hi)`` cells.
+    Merge: SUM/MIN/MAX per cell (``quantile_histogram_merge``), read via
+    :func:`quantile_state_quantiles` without rescanning the stream.
+    State recipe: module docstring."""
     from ..operators.sketches import quantile_histogram
 
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        (quantile_histogram(batch_df, value_col, edges,
-                            partition_cols=partition_cols)
-         .withColumn("_batch_id", F.lit(batch_id))
-         .write.mode("overwrite")
-         .partitionBy("_batch_id")
-         .option("partitionOverwriteMode", "dynamic")
-         .parquet(state_path))
-
-    return step
+    return _increment_step(state_path, lambda df: quantile_histogram(
+        df, value_col, edges, partition_cols=partition_cols))
 
 
 def quantile_state_quantiles(
@@ -679,21 +727,12 @@ def quantile_state_quantiles(
 def compact_quantile_state(spark, state_path: str, out_path: str,
                            group_cols: Sequence[str] = ()) -> None:
     """Compact an :func:`incremental_quantile_state` dir to one row per
-    (group, bin), written as batch partition 0 at ``out_path``
-    (swap-not-overwrite). Counts ADD, so — exactly like
-    :func:`compact_histogram_state` and unlike the idempotent bitmap
-    OR — compact only after the stream has stopped writing to
-    ``state_path``, or a straddling replayed batch would double-count
-    across the two paths."""
+    (group, bin), written as batch partition 0 at ``out_path``. Counts
+    ADD: compact at quiescence only (State recipe, step 4)."""
     from ..operators.sketches import quantile_histogram_merge
 
-    (quantile_histogram_merge(spark.read.parquet(state_path),
-                              group_cols)
-     .withColumn("_batch_id", F.lit(0))
-     .write.mode("overwrite")
-     .partitionBy("_batch_id")
-     .option("partitionOverwriteMode", "dynamic")
-     .parquet(out_path))
+    _write_increment(quantile_histogram_merge(
+        spark.read.parquet(state_path), group_cols), out_path, 0)
 
 
 def quantile_state_edge_report(
@@ -735,12 +774,8 @@ def reedge_quantile_state(spark, state_path: str, out_path: str,
 
     merged = quantile_histogram_merge(spark.read.parquet(state_path),
                                       group_cols)
-    (quantile_histogram_rebin(merged, new_edges, group_cols=group_cols)
-     .withColumn("_batch_id", F.lit(0))
-     .write.mode("overwrite")
-     .partitionBy("_batch_id")
-     .option("partitionOverwriteMode", "dynamic")
-     .parquet(out_path))
+    _write_increment(quantile_histogram_rebin(
+        merged, new_edges, group_cols=group_cols), out_path, 0)
 
 
 def incremental_vocab_state(
@@ -749,26 +784,16 @@ def incremental_vocab_state(
 ) -> Callable[[DataFrame, int], None]:
     """foreachBatch step accumulating a corpus TOKEN-COUNT table on
     disk — the streaming reference side for
-    :func:`vocab_divergence_from_state`: each micro-batch writes its
-    own (tok, c) counts under its ``_batch_id`` partition with dynamic
-    overwrite (retry replaces, read-time SUM re-merges — exactly-once,
-    the quantile/moments-state recipe). The persisted vocabulary grows
-    with distinct types, not rows, and lets any later batch ask "how
-    far has the token distribution walked from everything seen so
-    far" without rescanning the stream."""
-    from ..operators.text import _tokens
+    :func:`vocab_divergence_from_state`.
 
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        (batch_df
-         .select(F.explode(_tokens(F.col(text_col))).alias("tok"))
-         .groupBy("tok").agg(F.count(F.lit(1)).alias("c"))
-         .withColumn("_batch_id", F.lit(batch_id))
-         .write.mode("overwrite")
-         .partitionBy("_batch_id")
-         .option("partitionOverwriteMode", "dynamic")
-         .parquet(state_path))
+    Snapshot: the batch's ``(tok, c)`` counts
+    (``operators/text.token_counts``). Merge: SUM of ``c`` per token.
+    The vocabulary grows with distinct types, not rows. State recipe:
+    module docstring."""
+    from ..operators.text import token_counts
 
-    return step
+    return _increment_step(state_path,
+                           lambda df: token_counts(df, text_col))
 
 
 def vocab_divergence_from_state(
@@ -789,10 +814,10 @@ def vocab_divergence_from_state(
     from ..operators.text import (token_counts,
                                   vocab_divergence_from_counts)
 
-    base_counts = (spark.read.parquet(state_path)
-                   .groupBy("tok").agg(F.sum("c").alias("cb")))
+    base_counts = _sum_state(spark, state_path, ["tok"], ["c"])
     return vocab_divergence_from_counts(
-        base_counts, token_counts(cur, text_col, "cc"), alpha=alpha)
+        base_counts.withColumnRenamed("c", "cb"),
+        token_counts(cur, text_col, "cc"), alpha=alpha)
 
 
 def incremental_moments_state(
@@ -801,24 +826,15 @@ def incremental_moments_state(
     *,
     partition_cols: tuple[str, ...] | list[str] = (),
 ) -> Callable[[DataFrame, int], None]:
-    """foreachBatch step accumulating a
-    :func:`~..operators.sketches.moments_sketch` cell table on disk —
-    streaming mean/variance/min/max over unbounded history at one row
-    per (partition tuple, batch): the same ``_batch_id`` dynamic-
-    overwrite exactly-once recipe as :func:`incremental_quantile_state`;
-    read back via :func:`moments_state_stats`."""
+    """foreachBatch step accumulating streaming mean/variance/min/max
+    over unbounded history. Snapshot: one
+    :func:`~..operators.sketches.moments_sketch` row per partition
+    tuple. Merge: ``moments_merge``, read back via
+    :func:`moments_state_stats`. State recipe: module docstring."""
     from ..operators.sketches import moments_sketch
 
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        (moments_sketch(batch_df, value_col,
-                        partition_cols=partition_cols)
-         .withColumn("_batch_id", F.lit(batch_id))
-         .write.mode("overwrite")
-         .partitionBy("_batch_id")
-         .option("partitionOverwriteMode", "dynamic")
-         .parquet(state_path))
-
-    return step
+    return _increment_step(state_path, lambda df: moments_sketch(
+        df, value_col, partition_cols=partition_cols))
 
 
 def moments_state_stats(
@@ -844,26 +860,16 @@ def incremental_survival_state(
     group_cols: tuple[str, ...] | list[str] = (),
 ) -> Callable[[DataFrame, int], None]:
     """foreachBatch step accumulating Kaplan-Meier sufficient
-    statistics on disk — per-batch ``(group..., t, n_event,
+    statistics on disk. Snapshot: the batch's ``(group..., t, n_event,
     n_censored)`` counts (:func:`~..operators.drift
-    .survival_time_counts`) under the ``_batch_id`` dynamic-overwrite
-    exactly-once recipe. Each SUBJECT must arrive in exactly one batch
-    (counts are per subject); read the curve back via
+    .survival_time_counts`). Merge: SUM per (group, t), read via
     :func:`survival_from_state` — bit-identical to the one-shot over
-    the union, integer counts merge exactly (r14 verdict task 5: the
-    drift family's day-2 seam, matching the dedup convention)."""
+    the union. Each SUBJECT must arrive in exactly one batch (counts
+    are per subject). State recipe: module docstring."""
     from ..operators.drift import survival_time_counts
 
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        (survival_time_counts(batch_df, duration_col, event_col,
-                              group_cols=group_cols)
-         .withColumn("_batch_id", F.lit(batch_id))
-         .write.mode("overwrite")
-         .partitionBy("_batch_id")
-         .option("partitionOverwriteMode", "dynamic")
-         .parquet(state_path))
-
-    return step
+    return _increment_step(state_path, lambda df: survival_time_counts(
+        df, duration_col, event_col, group_cols=group_cols))
 
 
 def survival_from_state(
@@ -878,11 +884,9 @@ def survival_from_state(
     from ..operators.drift import survival_from_time_counts
 
     gc = list(group_cols)
-    merged = (spark.read.parquet(state_path)
-              .groupBy(*gc, "t")
-              .agg(F.sum("n_event").alias("n_event"),
-                   F.sum("n_censored").alias("n_censored")))
-    return survival_from_time_counts(merged, group_cols=gc)
+    return survival_from_time_counts(_sum_state(
+        spark, state_path, [*gc, "t"], ["n_event", "n_censored"]),
+        group_cols=gc)
 
 
 def incremental_cusum_state(
@@ -893,23 +897,15 @@ def incremental_cusum_state(
     group_cols: tuple[str, ...] | list[str] = (),
 ) -> Callable[[DataFrame, int], None]:
     """foreachBatch step accumulating CUSUM sufficient statistics on
-    disk — per-batch ``(group..., _b, _sv, _nv)`` bucket sums/counts
-    (:func:`~..operators.drift.cusum_bucket_stats`), ``_batch_id``
-    dynamic overwrite. A day's rows may split across batches freely
-    (sums add); read the change-point scan back via
-    :func:`cusum_from_state`."""
+    disk. Snapshot: the batch's ``(group..., _b, _sv, _nv)`` bucket
+    sums/counts (:func:`~..operators.drift.cusum_bucket_stats`). Merge:
+    SUM per (group, bucket) — a day's rows may split across batches —
+    read via :func:`cusum_from_state`. State recipe: module
+    docstring."""
     from ..operators.drift import cusum_bucket_stats
 
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        (cusum_bucket_stats(batch_df, bucket_col, value_col,
-                            group_cols=group_cols)
-         .withColumn("_batch_id", F.lit(batch_id))
-         .write.mode("overwrite")
-         .partitionBy("_batch_id")
-         .option("partitionOverwriteMode", "dynamic")
-         .parquet(state_path))
-
-    return step
+    return _increment_step(state_path, lambda df: cusum_bucket_stats(
+        df, bucket_col, value_col, group_cols=group_cols))
 
 
 def cusum_from_state(
@@ -924,10 +920,8 @@ def cusum_from_state(
     from ..operators.drift import cusum_from_bucket_stats
 
     gc = list(group_cols)
-    merged = (spark.read.parquet(state_path)
-              .groupBy(*gc, "_b")
-              .agg(F.sum("_sv").alias("_sv"), F.sum("_nv").alias("_nv")))
-    return cusum_from_bucket_stats(merged, group_cols=gc)
+    return cusum_from_bucket_stats(_sum_state(
+        spark, state_path, [*gc, "_b"], ["_sv", "_nv"]), group_cols=gc)
 
 
 def incremental_benford_state(
@@ -937,22 +931,14 @@ def incremental_benford_state(
     group_cols: tuple[str, ...] | list[str] = (),
 ) -> Callable[[DataFrame, int], None]:
     """foreachBatch step accumulating Benford first-digit counts on
-    disk (:func:`~..operators.profiling.benford_digit_counts`,
-    ``_batch_id`` dynamic overwrite); read the audit back via
-    :func:`benford_from_state` — integer counts merge exactly, so the
-    day-2 report is bit-identical to the one-shot over the union."""
+    disk. Snapshot: :func:`~..operators.profiling.benford_digit_counts`.
+    Merge: SUM per (group, digit), read via :func:`benford_from_state`
+    — bit-identical to the one-shot over the union. State recipe:
+    module docstring."""
     from ..operators.profiling import benford_digit_counts
 
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        (benford_digit_counts(batch_df, value_col,
-                              group_cols=group_cols)
-         .withColumn("_batch_id", F.lit(batch_id))
-         .write.mode("overwrite")
-         .partitionBy("_batch_id")
-         .option("partitionOverwriteMode", "dynamic")
-         .parquet(state_path))
-
-    return step
+    return _increment_step(state_path, lambda df: benford_digit_counts(
+        df, value_col, group_cols=group_cols))
 
 
 def benford_from_state(
@@ -966,33 +952,22 @@ def benford_from_state(
     from ..operators.profiling import benford_from_counts
 
     gc = list(group_cols)
-    merged = (spark.read.parquet(state_path)
-              .groupBy(*gc, "_d")
-              .agg(F.sum("_c").alias("_c")))
-    return benford_from_counts(merged, group_cols=gc)
+    return benford_from_counts(
+        _sum_state(spark, state_path, [*gc, "_d"], ["_c"]), group_cols=gc)
 
 
 def incremental_null_profile_state(
     state_path: str,
 ) -> Callable[[DataFrame, int], None]:
-    """foreachBatch step accumulating a
-    :func:`~..operators.profiling.null_profile_snapshot` (per-column
-    row/null counts + dtype) on disk, ``_batch_id`` dynamic overwrite
-    — the day-2 seam for schema/null-rate drift: yesterday's profile
-    is column-cardinality state, so today's
+    """foreachBatch step accumulating per-column row/null counts and
+    dtype — the day-2 seam for schema/null-rate drift. Snapshot:
+    :func:`~..operators.profiling.null_profile_snapshot`. Merge:
+    :func:`null_profile_from_state`, so today's
     :func:`~..operators.profiling.schema_drift_from_profiles` check
-    scans only today's rows."""
+    scans only today's rows. State recipe: module docstring."""
     from ..operators.profiling import null_profile_snapshot
 
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        (null_profile_snapshot(batch_df)
-         .withColumn("_batch_id", F.lit(batch_id))
-         .write.mode("overwrite")
-         .partitionBy("_batch_id")
-         .option("partitionOverwriteMode", "dynamic")
-         .parquet(state_path))
-
-    return step
+    return _increment_step(state_path, null_profile_snapshot)
 
 
 def null_profile_from_state(spark, state_path: str) -> DataFrame:
@@ -1000,11 +975,8 @@ def null_profile_from_state(spark, state_path: str) -> DataFrame:
     per column (SUM counts; dtype is constant per producer version —
     MAX picks it deterministically if a retype lands mid-stream, and
     the drift report against the next snapshot flags the retype)."""
-    return (spark.read.parquet(state_path)
-            .groupBy("column")
-            .agg(F.max("dtype").alias("dtype"),
-                 F.sum("n_rows").alias("n_rows"),
-                 F.sum("n_nulls").alias("n_nulls")))
+    return _sum_state(spark, state_path, ["column"],
+                      ["n_rows", "n_nulls"], ["dtype"])
 
 
 def incremental_rank_state(
@@ -1015,29 +987,20 @@ def incremental_rank_state(
     group_cols: tuple[str, ...] | list[str] = (),
 ) -> Callable[[DataFrame, int], None]:
     """foreachBatch step accumulating Mann-Whitney sufficient
-    statistics on disk — per-batch ``(group..., _v, _t, _t1)``
-    value-bucket counts (:func:`~..operators.drift.rank_value_counts`)
-    under the ``_batch_id`` dynamic-overwrite exactly-once recipe. A
-    value's rows may split across batches freely (integer counts SUM);
-    read the test back via :func:`mann_whitney_from_state` —
-    bit-identical to the one-shot over the union (r15 verdict task 6:
-    the rank family joins the drift day-2 seam; Kendall/Spearman/
-    Theil-Sen are NOT additive — their statistics need cross-batch
-    pair/rank structure that per-batch buckets cannot carry — so they
-    deliberately have no state wrappers, see examples/
-    ops_monitoring.py)."""
+    statistics on disk. Snapshot: the batch's ``(group..., _v, _t,
+    _t1)`` value-bucket counts
+    (:func:`~..operators.drift.rank_value_counts`). Merge: SUM per
+    (group, value) inside :func:`mann_whitney_from_state` — a value's
+    rows may split across batches. State recipe: module docstring.
+
+    Kendall/Spearman/Theil-Sen are NOT additive — their statistics need
+    cross-batch pair/rank structure that per-batch buckets cannot carry
+    — so they deliberately have no state wrappers (see
+    examples/ops_monitoring.py)."""
     from ..operators.drift import rank_value_counts
 
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        (rank_value_counts(batch_df, value_col, side_col,
-                           group_cols=group_cols)
-         .withColumn("_batch_id", F.lit(batch_id))
-         .write.mode("overwrite")
-         .partitionBy("_batch_id")
-         .option("partitionOverwriteMode", "dynamic")
-         .parquet(state_path))
-
-    return step
+    return _increment_step(state_path, lambda df: rank_value_counts(
+        df, value_col, side_col, group_cols=group_cols))
 
 
 def mann_whitney_from_state(
@@ -1063,22 +1026,15 @@ def incremental_trend_state(
     group_cols: tuple[str, ...] | list[str] = (),
 ) -> Callable[[DataFrame, int], None]:
     """foreachBatch step accumulating Cochran-Armitage sufficient
-    statistics on disk — per-batch ``(group..., _w, _n, _rf)`` scored-
-    bucket counts (:func:`~..operators.drift.trend_bucket_counts`),
-    ``_batch_id`` dynamic overwrite. Buckets split across batches
-    freely; read back via :func:`cochran_armitage_from_state`."""
+    statistics on disk. Snapshot: the batch's ``(group..., _w, _n,
+    _rf)`` scored-bucket counts
+    (:func:`~..operators.drift.trend_bucket_counts`). Merge: SUM per
+    bucket inside :func:`cochran_armitage_from_state` — buckets split
+    across batches freely. State recipe: module docstring."""
     from ..operators.drift import trend_bucket_counts
 
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        (trend_bucket_counts(batch_df, bucket_col, flag_col,
-                             group_cols=group_cols)
-         .withColumn("_batch_id", F.lit(batch_id))
-         .write.mode("overwrite")
-         .partitionBy("_batch_id")
-         .option("partitionOverwriteMode", "dynamic")
-         .parquet(state_path))
-
-    return step
+    return _increment_step(state_path, lambda df: trend_bucket_counts(
+        df, bucket_col, flag_col, group_cols=group_cols))
 
 
 def cochran_armitage_from_state(
@@ -1104,26 +1060,15 @@ def compact_additive_state(
     *,
     carry_cols: Sequence[str] = (),
 ) -> None:
-    """Compact ANY additive-count state dir (the survival/cusum/
-    benford/null-profile family — and any future state whose merge is
-    SUM per key) to one row per key, written to ``out_path`` as batch
-    partition 0 (swap-not-overwrite, the :func:`compact_histogram_state`
-    recipe). ``carry_cols`` are key-constant passengers (e.g. the null
-    profile's ``dtype``) taken by MAX. Counts ADD, so — exactly like
-    every additive compactor here and unlike the idempotent bitmap OR
-    — compact only after the stream has stopped writing to
-    ``state_path``, or a straddling replayed batch would double-count
-    across the two paths. Readers accept the compacted dir unchanged
-    (their merge is the same SUM)."""
-    state = spark.read.parquet(state_path)
-    (state.groupBy(*key_cols)
-     .agg(*[F.max(c).alias(c) for c in carry_cols],
-          *[F.sum(c).alias(c) for c in sum_cols])
-     .withColumn("_batch_id", F.lit(0))
-     .write.mode("overwrite")
-     .partitionBy("_batch_id")
-     .option("partitionOverwriteMode", "dynamic")
-     .parquet(out_path))
+    """Compact ANY additive-count state dir (the histogram/survival/
+    cusum/benford/null-profile family — and any future state whose
+    merge is SUM per key) to one row per key, written to ``out_path``
+    as batch partition 0. ``carry_cols`` are key-constant passengers
+    (e.g. the null profile's ``dtype``) taken by MAX. Counts ADD:
+    compact at quiescence only (State recipe, step 4). Readers accept
+    the compacted dir unchanged (their merge is the same SUM)."""
+    _write_increment(_sum_state(spark, state_path, key_cols, sum_cols,
+                                carry_cols), out_path, 0)
 
 
 def compact_bitmap_state(spark, state_path: str, out_path: str,
@@ -1142,14 +1087,10 @@ def compact_bitmap_state(spark, state_path: str, out_path: str,
     batch ids land beside partition 0 and the OR-merge keeps absorbing
     both. Because merge is idempotent, a batch that straddles the swap
     double-counts nothing."""
-    state = spark.read.parquet(state_path)
-    merged = (state.groupBy(*group_cols, "bitmap_bucket")
-              .agg(F.bitmap_or_agg(F.col("bitmap")).alias("bitmap"))
-              .withColumn("_batch_id", F.lit(0)))
-    (merged.write.mode("overwrite")
-     .partitionBy("_batch_id")
-     .option("partitionOverwriteMode", "dynamic")
-     .parquet(out_path))
+    merged = (spark.read.parquet(state_path)
+              .groupBy(*group_cols, "bitmap_bucket")
+              .agg(F.bitmap_or_agg(F.col("bitmap")).alias("bitmap")))
+    _write_increment(merged, out_path, 0)
 
 
 def corpus_append_dedup(
@@ -1172,50 +1113,30 @@ def corpus_append_dedup(
     ``out_path`` and their fingerprints to the index. Index growth per
     batch == admitted rows; the corpus is never rescanned.
 
-    Exactly-once across mid-batch failures: both sinks are partitioned
-    by ``_batch_id`` and written with DYNAMIC partition overwrite, so a
-    retried batch *replaces* its own partition instead of appending a
-    second copy. The admitted set is deterministic under retry because
-    the dedup excludes index entries stamped with the current batch_id
-    (a failed prior attempt's half-written state), and foreachBatch
-    replays the same source offsets. Readers of ``out_path`` see the
-    extra ``_batch_id`` partition column.
+    Exactly-once across mid-batch failures by the module's State recipe:
+    both sinks are batch partitions, and the anti-join excludes index
+    entries stamped with the current batch id, so a replay admits the
+    same rows and replaces its own partitions. Readers of ``out_path``
+    see the extra ``_batch_id`` partition column.
     """
-    from pyspark.errors import AnalysisException
-
     from ..operators.dedup import incremental_dedup
 
     def step(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        try:
-            index = spark.read.parquet(index_path)
-        except AnalysisException:  # first batch: no index yet (path
-            # missing / empty dir). Anything else — corruption, perms —
-            # must propagate: treating it as "empty index" would silently
-            # re-admit every duplicate.
-            index = spark.createDataFrame([], f"{fp_col} string, _batch_id long")
-        if "_batch_id" in index.columns:
-            # a failed attempt of THIS batch may have committed its index
-            # partition; exclude it so the admitted set is identical on
-            # retry (the overwrite below then replaces, not duplicates)
-            prior = index.filter(F.col("_batch_id") != batch_id)
-        else:  # pre-stamping index layout
-            prior = index
+        prior = _prior_state(spark, index_path, batch_id)
+        if prior is None:  # first batch: no index yet
+            prior = spark.createDataFrame([], f"{fp_col} string")
+        # both writes below consume admitted; checkpoint it once so they
+        # see the same rows, and free it when the step is done
         admitted = incremental_dedup(
-            batch_df, prior.select(fp_col), id_col, fp_col=fp_col)
-        # admitted is computed lazily twice below — tiny frames per batch;
-        # localCheckpoint would sever lineage but costs a job either way
-        admitted = admitted.localCheckpoint(eager=True)
-        stamped = admitted.withColumn("_batch_id", F.lit(batch_id))
-        if out_path is not None:
-            (stamped.write.mode("overwrite")
-             .partitionBy("_batch_id")
-             .option("partitionOverwriteMode", "dynamic")
-             .parquet(out_path))
-        (stamped.select(fp_col, "_batch_id").write.mode("overwrite")
-         .partitionBy("_batch_id")
-         .option("partitionOverwriteMode", "dynamic")
-         .parquet(index_path))
+            batch_df, prior.select(fp_col), id_col,
+            fp_col=fp_col).localCheckpoint(eager=True)
+        try:
+            if out_path is not None:
+                _write_increment(admitted, out_path, batch_id)
+            _write_increment(admitted.select(fp_col), index_path, batch_id)
+        finally:
+            _release_checkpoints(admitted, keep=batch_df)
 
     return step
 
@@ -1249,58 +1170,62 @@ def fuzzy_match_stream(
     an empty/missing index is supported: the first batch registers
     everything).
 
-    Exactly-once across mid-batch failures, same discipline as
-    corpus_append_dedup: both sinks partition by ``_batch_id`` with
-    DYNAMIC partition overwrite (a retried batch replaces its own
-    partition), and the match step excludes index rows stamped with the
-    CURRENT batch id (a failed attempt's half-registered state), so the
-    matched/registered sets are identical on replay.
+    Exactly-once across mid-batch failures by the module's State
+    recipe, as in corpus_append_dedup: the probe excludes the current
+    batch's index partition, so the matched/registered sets are
+    identical on replay.
 
     The blocker configuration is baked into the index — every probe
     and registration must use the settings the index was built with
     (same contract as ``probe_blocking_index``)."""
-    from pyspark.errors import AnalysisException
-
     from ..operators import linkage
 
     kw = dict(blockers=blockers, prefix_len=prefix_len,
               length_bucket=length_bucket, ngram_q=ngram_q)
 
     def step(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        try:
-            index = spark.read.parquet(index_path)
-        except AnalysisException:  # first batch: no index yet. Other
-            # errors (corruption, perms) must propagate — an "empty
-            # index" guess would silently match nothing and, with
-            # register_unmatched, re-register the whole batch.
-            index = (linkage.blocking_index(
+        prior = _prior_state(batch_df.sparkSession, index_path, batch_id)
+        if prior is None:  # first batch: an empty index
+            prior = linkage.blocking_index(
                 batch_df.limit(0), probe_id, probe_key, **kw)
-                .withColumn("_batch_id", F.lit(-1).cast("long")))
-        prior = (index.filter(F.col("_batch_id") != batch_id)
-                 if "_batch_id" in index.columns else index)
         matches = linkage.probe_blocking_index(
             prior, batch_df, probe_id, probe_key,
-            max_distance=max_distance, **kw)
-        matches = matches.localCheckpoint(eager=True)
-        stamped = matches.withColumn("_batch_id", F.lit(batch_id))
-        if out_path is not None:
-            (stamped.write.mode("overwrite")
-             .partitionBy("_batch_id")
-             .option("partitionOverwriteMode", "dynamic")
-             .parquet(out_path))
-        if register_unmatched:
-            unmatched = batch_df.join(
-                matches.select(probe_id), probe_id, "left_anti")
-            new_keys = (linkage.blocking_index(
-                unmatched, probe_id, probe_key, **kw)
-                .withColumn("_batch_id", F.lit(batch_id).cast("long")))
-            (new_keys.write.mode("overwrite")
-             .partitionBy("_batch_id")
-             .option("partitionOverwriteMode", "dynamic")
-             .parquet(index_path))
+            max_distance=max_distance, **kw).localCheckpoint(eager=True)
+        try:
+            if out_path is not None:
+                _write_increment(matches, out_path, batch_id)
+            if register_unmatched:
+                unmatched = batch_df.join(
+                    matches.select(probe_id), probe_id, "left_anti")
+                _write_increment(linkage.blocking_index(
+                    unmatched, probe_id, probe_key, **kw),
+                    index_path, batch_id)
+        finally:
+            _release_checkpoints(matches, keep=batch_df)
 
     return step
+
+
+def _centroids(rows) -> dict:
+    """Collected long-form ``(centroid_id, pos, coord)`` rows → ``{
+    centroid_id: [coord by pos]}`` in centroid_id order."""
+    by_cid: dict = {}
+    for r in rows:
+        by_cid.setdefault(r["centroid_id"], {})[r["pos"]] = r["coord"]
+    return {c: [v[p] for p in sorted(v)] for c, v in sorted(by_cid.items())}
+
+
+def _assigned(batch_df: DataFrame, vec_col: str, cents: list) -> DataFrame:
+    """The batch's non-empty vectors as double arrays ``__v``, each with
+    its nearest centroid ``__cid`` (one map-only broadcast argmin,
+    similarity's ``_l2_assigned``)."""
+    from ..operators.similarity import _l2_assigned
+
+    vecs = (batch_df
+            .filter(F.col(vec_col).isNotNull() & (F.size(vec_col) > 0))
+            .select(F.transform(F.col(vec_col), lambda x: x.cast("double"))
+                    .alias("__v")))
+    return _l2_assigned(vecs, cents)
 
 
 def embedding_drift_monitor(
@@ -1331,56 +1256,31 @@ def embedding_drift_monitor(
     histogram exactly like ``drift_monitor``.
 
     Verdict rows ``(_batch_id, n, psi, drifted)`` land at ``out_path``
-    partitioned by ``_batch_id`` with dynamic partition overwrite — a
-    replayed batch replaces its own row (the corpus_append_dedup
-    exactly-once discipline). ``on_drift(batch_id, psi)`` additionally
+    as batch partitions (the module's State recipe — a replayed batch
+    replaces its own row). ``on_drift(batch_id, psi)`` additionally
     fires above ``threshold``; wire it to a NotificationHub channel.
     Empty batches write nothing (no histogram -> no verdict)."""
-    import math
-
-    from ..operators.drift import _EPS
-    from ..operators.similarity import _l2_assigned
-
-    cb_rows = codebook.select("centroid_id", "pos", "coord").collect()
-    by_cid: dict = {}
-    for r in cb_rows:
-        by_cid.setdefault(r["centroid_id"], {})[r["pos"]] = r["coord"]
+    by_cid = _centroids(
+        codebook.select("centroid_id", "pos", "coord").collect())
     if not by_cid:
         raise ValueError("codebook has no centroids")
-    if sorted(by_cid) != list(range(len(by_cid))):
+    if list(by_cid) != list(range(len(by_cid))):
         raise ValueError("codebook centroid_ids must be 0..k-1")
-    cents = [[by_cid[cid][p] for p in sorted(by_cid[cid])]
-             for cid in sorted(by_cid)]
+    cents = list(by_cid.values())
     base = {int(k): float(v) for k, v in baseline_props.items()}
 
     def step(batch_df: DataFrame, batch_id: int) -> None:
-        vecs = (batch_df
-                .filter(F.col(vec_col).isNotNull()
-                        & (F.size(vec_col) > 0))
-                .select(F.transform(F.col(vec_col),
-                                    lambda x: x.cast("double"))
-                        .alias("__v")))
-        rows = (_l2_assigned(vecs, cents)
+        rows = (_assigned(batch_df, vec_col, cents)
                 .groupBy("__cid").agg(F.count(F.lit(1)).alias("n"))
                 .collect())
         total = sum(r["n"] for r in rows)
         if not total:
             return
-        cur = {r["__cid"]: r["n"] / total for r in rows}
-        psi = 0.0
-        for cid in set(base) | set(cur):
-            p = max(base.get(cid, 0.0), _EPS)
-            q = max(cur.get(cid, 0.0), _EPS)
-            psi += (p - q) * math.log(p / q)
+        psi = _psi(base, {r["__cid"]: r["n"] / total for r in rows})
         if out_path is not None:
-            spark = batch_df.sparkSession
-            row = [(int(batch_id), int(total), float(psi),
-                    bool(psi > threshold))]
-            (spark.createDataFrame(
-                row, "_batch_id long, n long, psi double, drifted boolean")
-             .write.mode("overwrite").partitionBy("_batch_id")
-             .option("partitionOverwriteMode", "dynamic")
-             .parquet(out_path))
+            _write_increment(batch_df.sparkSession.createDataFrame(
+                [(int(total), float(psi), bool(psi > threshold))],
+                "n long, psi double, drifted boolean"), out_path, batch_id)
         if psi > threshold and on_drift is not None:
             on_drift(batch_id, psi)
 
@@ -1394,15 +1294,12 @@ def init_codebook_state(codebook: DataFrame, codebook_path: str) -> None:
     _batch_id=-1)`` — ``n_seen`` starts from the training run's
     ``n_assigned`` when present (so the online updates are weighted as
     a continuation of training), else 0."""
-    cols = codebook.columns
-    n_seen = (F.col("n_assigned").cast("long") if "n_assigned" in cols
+    n_seen = (F.col("n_assigned").cast("long")
+              if "n_assigned" in codebook.columns
               else F.lit(0).cast("long"))
-    (codebook.select("centroid_id", "pos", "coord",
-                     n_seen.alias("n_seen"))
-     .withColumn("_batch_id", F.lit(-1).cast("long"))
-     .write.mode("overwrite").partitionBy("_batch_id")
-     .option("partitionOverwriteMode", "dynamic")
-     .parquet(codebook_path))
+    _write_increment(codebook.select("centroid_id", "pos", "coord",
+                                     n_seen.alias("n_seen")),
+                     codebook_path, -1)
 
 
 def kmeans_update_stream(
@@ -1424,53 +1321,33 @@ def kmeans_update_stream(
     corpus streams in, and ``embedding_drift_monitor`` watches the
     SAME codebook for distribution shift.
 
-    State is the full long-form codebook re-written each batch,
-    stamped and partitioned by ``_batch_id`` with dynamic overwrite —
-    k×dim rows per version, model-scale, so "rewrite the whole state"
-    is the cheap and replay-safe design (a retried batch replaces its
-    own version; the read side takes the latest version EXCLUDING the
-    current batch id, so a failed attempt's half-written state is
-    invisible). Empty batches (no usable vectors) write nothing.
-    ``out_path`` optionally records one observability row per batch:
-    ``(_batch_id, n, max_shift)`` — the largest centroid L2 move,
+    State is the full long-form codebook re-written each batch as its
+    batch partition — k×dim rows per version, model-scale, so "rewrite
+    the whole state" is the cheap and replay-safe design. Merge: the
+    read side takes the latest version, excluding the current batch id
+    (the module's State recipe). Empty batches (no usable vectors) write
+    nothing. ``out_path`` optionally records one observability row per
+    batch: ``(_batch_id, n, max_shift)`` — the largest centroid L2 move,
     the number to alarm on when the stream drifts faster than the
     codebook can follow.
     """
-    import math
-
-    from pyspark.errors import AnalysisException
-
-    from ..operators.similarity import _l2_assigned
 
     def step(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        try:
-            state = spark.read.parquet(codebook_path)
-        except AnalysisException as exc:
+        prior = _prior_state(spark, codebook_path, batch_id)
+        if prior is None:
             raise ValueError(
                 "kmeans_update_stream: no codebook state at "
                 f"{codebook_path!r} — seed it with init_codebook_state "
-                "from a lloyd_kmeans run") from exc
-        prior = state.filter(F.col("_batch_id") != batch_id)
+                "from a lloyd_kmeans run")
         latest = prior.agg(F.max("_batch_id")).first()[0]
         rows = (prior.filter(F.col("_batch_id") == latest)
                 .select("centroid_id", "pos", "coord", "n_seen")
                 .collect())
-        by_cid: dict = {}
-        n_seen: dict = {}
-        for r in rows:
-            by_cid.setdefault(r["centroid_id"], {})[r["pos"]] = r["coord"]
-            n_seen[r["centroid_id"]] = r["n_seen"]
-        cents = [[by_cid[c][p] for p in sorted(by_cid[c])]
-                 for c in sorted(by_cid)]
+        cents = list(_centroids(rows).values())
+        n_seen = {r["centroid_id"]: r["n_seen"] for r in rows}
         dim = len(cents[0])
-        vecs = (batch_df
-                .filter(F.col(vec_col).isNotNull()
-                        & (F.size(vec_col) > 0))
-                .select(F.transform(F.col(vec_col),
-                                    lambda x: x.cast("double"))
-                        .alias("__v")))
-        stats = (_l2_assigned(vecs, cents)
+        stats = (_assigned(batch_df, vec_col, cents)
                  .groupBy("__cid")
                  .agg(F.count(F.lit(1)).alias("__n"),
                       *[F.sum(F.element_at("__v", i + 1)).alias(f"__s{i}")
@@ -1491,22 +1368,15 @@ def kmeans_update_stream(
                     (a - b) * (a - b) for a, b in zip(new, cvec))))
                 cvec, seen = new, seen + n
             out_rows.extend(
-                (cid, pos, float(cvec[pos]), seen, int(batch_id))
-                for pos in range(dim))
-        (spark.createDataFrame(
-            out_rows, "centroid_id int, pos int, coord double, "
-                      "n_seen long, _batch_id long")
-         .write.mode("overwrite").partitionBy("_batch_id")
-         .option("partitionOverwriteMode", "dynamic")
-         .parquet(codebook_path))
+                (cid, pos, float(cvec[pos]), seen) for pos in range(dim))
+        _write_increment(spark.createDataFrame(
+            out_rows, "centroid_id int, pos int, coord double, n_seen long"),
+            codebook_path, batch_id)
         if out_path is not None:
             n_total = sum(int(r["__n"]) for r in stats)
-            (spark.createDataFrame(
-                [(int(batch_id), n_total, float(max_shift))],
-                "_batch_id long, n long, max_shift double")
-             .write.mode("overwrite").partitionBy("_batch_id")
-             .option("partitionOverwriteMode", "dynamic")
-             .parquet(out_path))
+            _write_increment(spark.createDataFrame(
+                [(n_total, float(max_shift))], "n long, max_shift double"),
+                out_path, batch_id)
 
     return step
 
@@ -1531,16 +1401,12 @@ def bloom_membership_stream(
     false-positive rate on ``seen_before`` (never false negatives —
     a False is proof the key is new).
 
-    State layout: the standing filter is a parquet word table
-    partitioned by ``_batch_id`` — each batch writes ONLY its own
-    delta words (dynamic partition overwrite, so a retried batch
-    replaces its own partition) and readers OR-merge the partitions
-    (``groupBy(word).agg(bit_or)``), the mergeable-sketch rollup
-    philosophy applied to streaming state. Exactly-once under
-    foreachBatch's same-offsets replay: the probe view EXCLUDES the
-    current batch_id's partition (a failed prior attempt's
-    half-written words must not make the batch's own keys look seen),
-    so the annotation is deterministic under retry.
+    State: a parquet word table under the module's State recipe. Each
+    batch writes ONLY its own delta words as its batch partition;
+    readers OR-merge the partitions (``groupBy(word).agg(bit_or)``).
+    The probe view excludes the current batch's partition (a failed
+    attempt's words must not make the batch's own keys look seen), so
+    the annotation is deterministic under replay.
 
     The MERGED filter is fixed-size; the ON-DISK store is one
     ≤ n_bits/32-row partition per batch (KBs each), growing with
@@ -1555,37 +1421,26 @@ def bloom_membership_stream(
     step then only maintains the filter), one k×-explode groupBy over
     batch rows. Nothing rescans the corpus.
     """
-    from pyspark.errors import AnalysisException
-
     from ..operators.sketches import (bloom_filter, bloom_might_contain)
 
     def step(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        try:
-            words = spark.read.parquet(filter_path)
-        except AnalysisException:  # first batch: no filter yet. Other
-            # errors (corruption, perms) must propagate — an "empty
-            # filter" default would silently mark every key unseen.
-            words = spark.createDataFrame(
-                [], "word long, bits long, _batch_id long")
-        prior = (words.filter(F.col("_batch_id") != batch_id)
-                 if "_batch_id" in words.columns else words)
         if out_path is not None:  # probe only when someone reads it
+            prior = _prior_state(spark, filter_path, batch_id)
+            if prior is None:  # first batch: no filter yet
+                prior = spark.createDataFrame([], "word long, bits long")
             merged = (prior.groupBy("word")
                       .agg(F.bit_or("bits").alias("bits")))
             annotated = bloom_might_contain(
                 merged, batch_df, key_col, n_bits=n_bits, k=k,
                 salt=salt, out_col=seen_col)
-            (annotated.withColumn("_batch_id", F.lit(batch_id))
-             .write.mode("overwrite").partitionBy("_batch_id")
-             .option("partitionOverwriteMode", "dynamic")
-             .parquet(out_path))
-        delta = bloom_filter(batch_df, key_col, n_bits=n_bits, k=k,
-                             salt=salt)
-        (delta.withColumn("_batch_id", F.lit(batch_id))
-         .write.mode("overwrite").partitionBy("_batch_id")
-         .option("partitionOverwriteMode", "dynamic")
-         .parquet(filter_path))
+            try:
+                _write_increment(annotated, out_path, batch_id)
+            finally:  # the probe checkpoints the merged words
+                _release_checkpoints(annotated, keep=batch_df)
+        _write_increment(bloom_filter(batch_df, key_col, n_bits=n_bits,
+                                      k=k, salt=salt),
+                         filter_path, batch_id)
 
     return step
 
@@ -1617,10 +1472,13 @@ def compact_bloom_state(spark, filter_path: str, *,
               .groupBy("word").agg(F.bit_or("bits").alias("bits"))
               .withColumn("_batch_id", F.lit(-1))
               .localCheckpoint(eager=True))
-    # STATIC overwrite explicitly: under a session-wide dynamic
-    # setting, overwrite would replace only the -1 partition and the
-    # deltas would never be removed — compaction must truncate
-    (merged.write.mode("overwrite").partitionBy("_batch_id")
-     .option("partitionOverwriteMode", "static")
-     .parquet(filter_path))
-    return merged.count()
+    try:
+        # STATIC overwrite explicitly: under a session-wide dynamic
+        # setting, overwrite would replace only the -1 partition and the
+        # deltas would never be removed — compaction must truncate
+        (merged.write.mode("overwrite").partitionBy("_batch_id")
+         .option("partitionOverwriteMode", "static")
+         .parquet(filter_path))
+        return merged.count()
+    finally:
+        _release_checkpoints(merged)

@@ -70,6 +70,18 @@ class TestConnectDeclaration:
         assert connect.jvm_query_execution(_FakeConnectDataFrame()) is None
         assert connect.spark_context(_FakeConnectSession()) is None
 
+    def test_local_checkpoint_rdds(self, spark):
+        """Classic frames list the local checkpoints their plan reads
+        (and only those); Connect shapes list none."""
+        assert connect.local_checkpoint_rdds(_FakeConnectDataFrame()) == {}
+        assert connect.local_checkpoint_rdds(spark.range(3)) == {}
+        ck = spark.range(3).localCheckpoint(eager=True)
+        try:
+            assert len(connect.local_checkpoint_rdds(ck.filter("id > 0"))) == 1
+        finally:
+            for rdd in connect.local_checkpoint_rdds(ck).values():
+                rdd.unpersist(False)
+
     def test_jvm_accessors_work_on_classic(self, spark):
         df = spark.range(3)
         qe = connect.jvm_query_execution(df)

@@ -1342,6 +1342,15 @@ class TestLocalFrameLiteralCap:
         want = spark.createDataFrame(rows, schema).orderBy("k").collect()
         assert df.orderBy("k").collect() == want
 
+    def test_small_map_frame_matches_create_dataframe(self, spark):
+        """A map cell under the cap still builds (``F.lit`` has no map
+        literal), with createDataFrame's rows."""
+        rows = [(1, {"a": 1.0}), (2, {"b": 2.0, "c": None})]
+        schema = "id int, m map<string,double>"
+        got = plans.local_frame(spark, rows, schema).orderBy("id").collect()
+        assert got == spark.createDataFrame(rows, schema) \
+            .orderBy("id").collect()
+
 
 class TestExecutionMetrics:
     def test_map_side_combine_visible_in_shuffle_records(self, spark,
@@ -2518,3 +2527,63 @@ class TestKmeansUpdateStream:
                 spark.createDataFrame([(1, [0.0])],
                                       "id long, embedding array<double>"),
                 0)
+
+
+class TestStreamingStateRecipe:
+    """The shared exactly-once state helpers behind the stream steps."""
+
+    @pytest.mark.parametrize("name", [
+        "corpus_append_dedup", "fuzzy_match_stream",
+        "bloom_membership_stream", "compact_bloom_state"])
+    def test_steps_release_their_local_checkpoints(self, spark, tmp_path,
+                                                   name):
+        """Two batches plus a replay of batch 1 (then, for
+        compact_bloom_state, one compaction) leave no RDD persisted:
+        every localCheckpoint a step takes is freed before it returns.
+        Compared by RDD id against the ids persisted before, because
+        the session is shared with other tests."""
+        from spark_expectations_spark import streaming as st
+        idx, out = str(tmp_path / "idx"), str(tmp_path / "out")
+        if name == "corpus_append_dedup":
+            step = st.corpus_append_dedup(idx, "id", fp_col="key",
+                                          out_path=out)
+        elif name == "fuzzy_match_stream":
+            step = st.fuzzy_match_stream(idx, "id", "key", out_path=out,
+                                         register_unmatched=True)
+        else:
+            step = st.bloom_membership_stream(idx, "key", n_bits=2048, k=3,
+                                              out_path=out)
+        b1 = spark.createDataFrame([(1, "a.com"), (2, "b.com")],
+                                   "id long, key string")
+        b2 = spark.createDataFrame([(3, "a.com"), (4, "c.com")],
+                                   "id long, key string")
+        jsc = spark.sparkContext._jsc
+
+        def persisted():
+            return set(jsc.getPersistentRDDs().keySet().toArray())
+
+        before = persisted()
+        step(b1, 0)
+        step(b2, 1)
+        step(b2, 1)                      # replay
+        if name == "compact_bloom_state":
+            assert st.compact_bloom_state(spark, idx) > 0
+        assert persisted() - before == set()
+
+    def test_corpus_append_dedup_reads_pre_stamping_index(self, spark,
+                                                          tmp_path):
+        """A fingerprint index written before batch stamping (no
+        ``_batch_id`` column) is still the dedup state: cross-batch
+        duplicates are rejected, and the batch's own fingerprints land
+        in a stamped partition."""
+        from spark_expectations_spark import streaming as st
+        idx, out = tmp_path / "fp_index", tmp_path / "corpus"
+        spark.createDataFrame([("a",), ("b",)], "fingerprint string") \
+            .write.parquet(str(idx))
+        step = st.corpus_append_dedup(str(idx), "doc_id", out_path=str(out))
+        step(spark.createDataFrame([(6, "c"), (7, "b"), (8, "a")],
+                                   "doc_id long, fingerprint string"), 3)
+        assert [(r["doc_id"], r["_batch_id"])
+                for r in spark.read.parquet(str(out)).collect()] == [(6, 3)]
+        stamped = spark.read.parquet(str(idx / "_batch_id=3"))
+        assert [r["fingerprint"] for r in stamped.collect()] == ["c"]
