@@ -10,10 +10,15 @@ Spark-job budget per batch run (N row rules, M agg rules, Q query rules):
     (stage fusion: the agg-rule expressions ride the row-summary agg job)
   1 error-table write (only if errors enabled) — one scan
   1 fused agg job for ALL target agg rules (post-row-dq frame)
-  1 fused SELECT for ALL query rules (scalar subqueries; rule-scale)
-  1 final write (optional)
-Measured: a full 5-stage run launches FEWER Spark jobs (12) than the
-equivalent hand-written pipeline (13). The reference runs >=4 full scans
+  1 fused SELECT per query stage (scalar subqueries; rule-scale)
+  the stats writes and the final write (optional)
+Spark counts more jobs than these scans: adaptive execution submits each
+shuffle stage (a window rule's exchange, a partial aggregate) as a job of
+its own, and every scalar subquery and table write is at least one job.
+``tests/test_engine_core.py::TestEngineJobBudget`` pins the total for a
+full five-stage run over sf0.001 lineitem (5 row rules, 3 agg rules, 2
+query rules, error and stats writes, final frame to the noop sink): 20
+jobs, 25 with ``enable_detailed_stats``. The reference runs >=4 full scans
 + 2 jobs per agg rule; at 100 TB the difference is the whole game.
 
 A thin ``with_expectations`` decorator preserves the reference's public
@@ -53,30 +58,25 @@ class DQEngine:
         hub = cfg.notifications
         if hub is not None:
             hub.on_start(cfg.product_id, cfg.table_name)
-        if df.isStreaming:
-            # streaming gets the same alerting lifecycle as batch — a
-            # failed stream SETUP must page like a failed batch run
-            try:
-                result = self._run_streaming(df, rules, spark)
-            except Exception as e:
-                if hub is not None:
-                    hub.on_failure(cfg.product_id, cfg.table_name, e)
-                raise
-            if hub is not None:
-                hub.on_completion(result, list(rules))
-            return result
         result = DQResult(
             run_id=new_run_id(cfg.product_id),
             product_id=cfg.product_id,
             table_name=cfg.table_name,
         )
+        # streaming gets the same alerting lifecycle as batch — a failed
+        # stream SETUP must page like a failed batch run
         try:
-            result = self._run_batch(df, rules, spark, result)
+            if df.isStreaming:
+                result = self._run_streaming(df, rules, spark, result)
+            else:
+                result = self._run_batch(df, rules, spark, result)
         except Exception as e:
-            # reference parity: the stats row is written on failure too
-            # (sinks/utils/collect_statistics.py:21-50), carrying whatever
-            # stage statuses/counts were reached before the abort
-            self._write_stats(spark, result, best_effort=True)
+            if not df.isStreaming:
+                # reference parity: the stats row is written on failure
+                # too (sinks/utils/collect_statistics.py:21-50), carrying
+                # whatever stage statuses/counts were reached before the
+                # abort
+                self._write_stats(spark, result, best_effort=True)
             if hub is not None:
                 hub.on_failure(cfg.product_id, cfg.table_name, e)
             raise
@@ -98,28 +98,19 @@ class DQEngine:
         # every run count come out of ONE scan (the reference pays a scan
         # per stage). The fused job runs here so the agg fail gate fires
         # in reference order — before query_dq, before any write.
-        fused_state = None
-        if settings["source_agg_dq"]:
-            if settings["row_dq"]:
-                fused_state = self._timed(
-                    result, "source_agg_dq", self._source_agg_fused,
-                    df, rules, result)
-            else:
-                self._timed(result, "source_agg_dq", self._source_agg, df, rules, result)
-        else:
-            result.status["source_agg_dq"] = "Skipped"
+        fused_state = self._stage(result, "source_agg_dq",
+                                  settings["source_agg_dq"], self._agg,
+                                  df, rules, result, False, settings["row_dq"])
 
         # -- stage 2: source query_dq ---------------------------------------
-        if settings["source_query_dq"]:
-            self._timed(result, "source_query_dq", self._source_query, spark, rules, result)
-        else:
-            result.status["source_query_dq"] = "Skipped"
+        self._stage(result, "source_query_dq", settings["source_query_dq"],
+                    self._query, spark, rules, result, False)
 
         # -- stage 3: row_dq ------------------------------------------------
         final_df = df
         if settings["row_dq"]:
-            final_df = self._timed(result, "row_dq", self._row, df, rules,
-                                   result, spark, fused_state)
+            final_df = self._stage(result, "row_dq", True, self._row, df,
+                                   rules, result, fused_state)
         else:
             result.status["row_dq"] = "Skipped"
             if not result.input_count:
@@ -131,16 +122,14 @@ class DQEngine:
 
         # -- stages 4/5: target agg/query on post-row-dq frame --------------
         run_target = settings["row_dq"]
-        if settings["target_agg_dq"] and run_target:
-            self._timed(result, "target_agg_dq", self._target_agg, final_df, rules, result)
-        else:
-            result.status["target_agg_dq"] = "Skipped"
-        if settings["target_query_dq"] and run_target:
-            if cfg.target_view:
-                final_df.createOrReplaceTempView(cfg.target_view)
-            self._timed(result, "target_query_dq", self._target_query, spark, rules, result)
-        else:
-            result.status["target_query_dq"] = "Skipped"
+        self._stage(result, "target_agg_dq",
+                    settings["target_agg_dq"] and run_target, self._agg,
+                    final_df, rules, result, True)
+        run_query = settings["target_query_dq"] and run_target
+        if run_query and cfg.target_view:
+            final_df.createOrReplaceTempView(cfg.target_view)
+        self._stage(result, "target_query_dq", run_query, self._query,
+                    spark, rules, result, True)
 
         # -- final write + stats --------------------------------------------
         if cfg.write_target_table and cfg.target_table:
@@ -183,92 +172,71 @@ class DQEngine:
             flags = flags.persist()
         return flags
 
-    def _source_agg_fused(self, df: DataFrame, rules: RuleSet, result: DQResult):
-        """source agg_dq + row summary in ONE aggregation job."""
-        agg_rules = rules.for_stage(AGG_DQ, target=False)
-        stage_rules = rules.for_stage(ROW_DQ)
-        flags = self._prepare_flags(df, rules)
-        exprs, parsed = agg_dq.rule_agg_exprs(agg_rules, prefix="__sagg")
-        summary, row = row_dq.summarize_flags_with(flags, stage_rules, exprs)
-        res = agg_dq.results_from_row(agg_rules, parsed, row, prefix="__sagg")
-        result.source_agg = res
-        self._attach_grouped_agg(df, agg_rules, result)
-        result.status["source_agg_dq"] = "Failed" if agg_dq.failed(res) else "Passed"
-        if self.config.enforce_fail:
-            try:
-                agg_dq.enforce_fail_action(res, "source_agg_dq")
-            except Exception:
-                # the run aborts before _row can release the cache
-                if self.config.cache_projected:
-                    flags.unpersist()
-                raise
-        return flags, summary
-
-    def _source_agg(self, df: DataFrame, rules: RuleSet, result: DQResult) -> None:
-        # with_count: this path only runs when row_dq is OFF (otherwise
-        # the fused variant handles both), so the input count rides the
-        # same aggregation job instead of a second full-table scan
-        res, n = agg_dq.evaluate_agg_rules(
-            df, rules.for_stage(AGG_DQ, target=False), with_count=True)
-        if n is not None:
-            result.input_count = int(n)
-        result.source_agg = res
-        self._attach_grouped_agg(
-            df, rules.for_stage(AGG_DQ, target=False), result)
-        result.status["source_agg_dq"] = "Failed" if agg_dq.failed(res) else "Passed"
-        if self.config.enforce_fail:
-            agg_dq.enforce_fail_action(res, "source_agg_dq")
-
-    def _attach_grouped_agg(self, df: DataFrame, agg_rules,
-                            result: DQResult, target: bool = False) -> None:
-        """Per-segment attribution (DQConfig.agg_group_cols): a LAZY
-        grouped evaluation of the same agg rules — no job runs unless
-        the caller inspects the frame, and run status/gating stay
-        whole-table. target=False groups the SOURCE rules over the
-        input; target=True groups the TARGET rules over the post-clean
-        final_df (which segment broke the published table — r8 verdict
-        task 3)."""
+    def _agg(self, df: DataFrame, rules: RuleSet, result: DQResult,
+             target: bool, fuse_rows: bool = False):
+        """One agg_dq stage over ``df``: the source rules over the input
+        or the target rules over the post-row-dq frame. With
+        ``fuse_rows`` (source stage, row_dq on) the agg rules ride the
+        row-summary aggregation job and ``(flags, summary)`` is returned
+        for ``_row``."""
+        side = "target" if target else "source"
+        agg_rules = rules.for_stage(AGG_DQ, target=target)
+        fused = None
+        if fuse_rows:
+            flags = self._prepare_flags(df, rules)
+            exprs, parsed = agg_dq.rule_agg_exprs(agg_rules, prefix="__sagg")
+            summary, row = row_dq.summarize_flags_with(
+                flags, rules.for_stage(ROW_DQ), exprs)
+            res = agg_dq.results_from_row(agg_rules, parsed, row,
+                                          prefix="__sagg")
+            fused = flags, summary
+        elif target:
+            res = agg_dq.evaluate_agg_rules(df, agg_rules)
+        else:
+            # row_dq is off: the input count rides the same aggregation
+            # job instead of a second full-table scan
+            res, n = agg_dq.evaluate_agg_rules(df, agg_rules, with_count=True)
+            if n is not None:
+                result.input_count = int(n)
+        setattr(result, f"{side}_agg", res)
+        # per-segment attribution (DQConfig.agg_group_cols): a LAZY
+        # grouped evaluation of the same rules over the same frame — no
+        # job runs unless the caller inspects it; status and gating stay
+        # whole-table
         cols = list(self.config.agg_group_cols or ())
         if cols and agg_rules:
-            grouped = agg_dq.evaluate_agg_rules_grouped(df, agg_rules, cols)
-            if target:
-                result.target_agg_grouped = grouped
-            else:
-                result.source_agg_grouped = grouped
+            setattr(result, f"{side}_agg_grouped",
+                    agg_dq.evaluate_agg_rules_grouped(df, agg_rules, cols))
+        try:
+            self._gate(result, f"{side}_agg_dq", res)
+        except Exception:
+            # the run aborts before _row can release the cache
+            if fused is not None and self.config.cache_projected:
+                flags.unpersist()
+            raise
+        return fused
 
-    def _target_agg(self, df: DataFrame, rules: RuleSet, result: DQResult) -> None:
-        target_rules = rules.for_stage(AGG_DQ, target=True)
-        res = agg_dq.evaluate_agg_rules(df, target_rules)
-        result.target_agg = res
-        self._attach_grouped_agg(df, target_rules, result, target=True)
-        result.status["target_agg_dq"] = "Failed" if agg_dq.failed(res) else "Passed"
-        if self.config.enforce_fail:
-            agg_dq.enforce_fail_action(res, "target_agg_dq")
-
-    def _source_query(self, spark: SparkSession, rules: RuleSet, result: DQResult) -> None:
+    def _query(self, spark: SparkSession, rules: RuleSet, result: DQResult,
+               target: bool) -> None:
+        side = "target" if target else "source"
         res = query_dq.evaluate_query_rules(
-            spark, rules.for_stage(QUERY_DQ, target=False),
+            spark, rules.for_stage(QUERY_DQ, target=target),
             timeout_s=self.config.query_timeout_s)
-        result.source_query = res
-        result.status["source_query_dq"] = "Failed" if query_dq.failed(res) else "Passed"
-        if self.config.enforce_fail:
-            query_dq.enforce_fail_action(res, "source_query_dq")
+        setattr(result, f"{side}_query", res)
+        self._gate(result, f"{side}_query_dq", res)
 
-    def _target_query(self, spark: SparkSession, rules: RuleSet, result: DQResult) -> None:
-        res = query_dq.evaluate_query_rules(
-            spark, rules.for_stage(QUERY_DQ, target=True),
-            timeout_s=self.config.query_timeout_s)
-        result.target_query = res
-        result.status["target_query_dq"] = "Failed" if query_dq.failed(res) else "Passed"
+    def _gate(self, result: DQResult, stage: str, res) -> None:
+        """A stage's status, then its 'fail'-action gate."""
+        result.status[stage] = "Failed" if agg_dq.failed(res) else "Passed"
         if self.config.enforce_fail:
-            query_dq.enforce_fail_action(res, "target_query_dq")
+            agg_dq.enforce_fail_action(res, stage)
 
     def _row(self, df: DataFrame, rules: RuleSet, result: DQResult,
-             spark: SparkSession, fused_state=None) -> DataFrame:
+             fused_state=None) -> DataFrame:
         cfg = self.config
         stage_rules = rules.for_stage(ROW_DQ)
-        # boolean-flag fast path: rule maps are only materialized for rows
-        # that actually land in the error table
+        # boolean flags: rule maps are only materialized for rows that
+        # actually land in the error table
         if fused_state is not None:
             flags, summary = fused_state   # scan already done at stage 1
         else:
@@ -280,13 +248,12 @@ class DQEngine:
         result.output_count = summary.output_count
 
         try:
+            errors = row_dq.errors_from_flags(flags, stage_rules)
             if cfg.write_error_table and summary.error_count > 0:
-                err = writer.stamp_run_metadata(
-                    row_dq.errors_from_flags(flags, stage_rules),
-                    result.run_id)
-                writer.write_batch(err, cfg.resolved_error_table(),
-                                   cfg.error_writer)
-            result.error_df = row_dq.errors_from_flags(flags, stage_rules)
+                writer.write_batch(
+                    writer.stamp_run_metadata(errors, result.run_id),
+                    cfg.resolved_error_table(), cfg.error_writer)
+            result.error_df = errors
             try:
                 final = row_dq.final_from_flags(
                     flags, stage_rules, summary if cfg.enforce_fail else None)
@@ -306,18 +273,13 @@ class DQEngine:
 
     # ------------------------------------------------------------- streaming
     def _run_streaming(self, df: DataFrame, rules: RuleSet,
-                       spark: SparkSession) -> DQResult:
+                       spark: SparkSession, result: DQResult) -> DQResult:
         """Reference-parity streaming: row rules + drop filtering only;
         agg/query stages skipped (uncountable mid-stream), counts zero
         (reference core/expectations.py:523-546,960). For full DQ on
         streams use streaming.foreach_batch_dq instead.
         """
         cfg = self.config
-        result = DQResult(
-            run_id=new_run_id(cfg.product_id),
-            product_id=cfg.product_id,
-            table_name=cfg.table_name,
-        )
         for s in ("source_agg_dq", "source_query_dq", "target_agg_dq", "target_query_dq"):
             result.status[s] = "Skipped"
         stage_rules = rules.for_stage(ROW_DQ)
@@ -339,7 +301,11 @@ class DQEngine:
         return result
 
     # ---------------------------------------------------------------- helpers
-    def _timed(self, result: DQResult, name: str, fn, *args):
+    def _stage(self, result: DQResult, name: str, enabled: bool, fn, *args):
+        """Run stage ``name`` timed, or mark it skipped."""
+        if not enabled:
+            result.status[name] = "Skipped"
+            return None
         t0 = utcnow()
         try:
             return fn(*args)

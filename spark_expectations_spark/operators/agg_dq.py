@@ -211,41 +211,16 @@ def evaluate_agg_rules(
     return (res, row["__n_rows"]) if with_count else res
 
 
-def evaluate_agg_rules_df(df: DataFrame, rules: Sequence[Rule]) -> DataFrame:
-    """Same fused single-job evaluation, returned as a tall DataFrame
-    (rule, status, actual_value double) — stays fully lazy/distributed,
-    usable as a query result or for the detailed-stats join."""
-    exprs: list[Column] = []
-    parsed: list[Optional[ParsedExpectation]] = []
-    for i, r in enumerate(rules):
-        exprs.append(F.expr(r.expectation).alias(f"__b{i}"))
-        p = parse_expectation(r.expectation)
-        parsed.append(p)
-        exprs.append(
-            F.expr(p.source_expr).cast("double").alias(f"__v{i}")
-            if p is not None else F.lit(None).cast("double").alias(f"__v{i}")
-        )
-    agg = df.agg(*exprs)
-    structs = [
-        F.struct(
-            F.lit(r.rule).alias("rule"),
-            F.when(F.col(f"__b{i}"), F.lit("pass")).otherwise(F.lit("fail")).alias("status"),
-            F.col(f"__v{i}").alias("actual_value"),
-        )
-        for i, r in enumerate(rules)
-    ]
-    return agg.select(F.explode(F.array(*structs)).alias("r")).select("r.*")
-
-
 def evaluate_agg_rules_grouped(
     df: DataFrame,
     rules: Sequence[Rule],
     group_cols: Sequence[str],
 ) -> DataFrame:
-    """Per-SEGMENT aggregate assertions — the grouped extension of
-    :func:`evaluate_agg_rules_df`: every agg rule evaluated once per
-    ``group_cols`` combination, returning a tall
-    ``(*group_cols, rule, status, actual_value)`` frame. "avg price
+    """Every agg rule evaluated once per ``group_cols`` combination, as a
+    lazy tall ``(*group_cols, rule, status, actual_value double)`` frame.
+    Empty ``group_cols`` gives the whole-table result (``df.agg`` is
+    ``groupBy().agg``), usable as a query result. Per-SEGMENT
+    aggregate assertions are the grouped case: "avg price
     between 30k and 40k" as a whole-table rule can pass while one
     region is wildly off; this is the rule surface for "…FOR EVERY
     segment".
@@ -261,15 +236,11 @@ def evaluate_agg_rules_grouped(
     if not rules:
         raise ValueError("rules must be non-empty")
     exprs: list[Column] = []
-    parsed: list[Optional[ParsedExpectation]] = []
     for i, r in enumerate(rules):
-        exprs.append(F.expr(r.expectation).alias(f"__b{i}"))
         p = parse_expectation(r.expectation)
-        parsed.append(p)
-        exprs.append(
-            F.expr(p.source_expr).cast("double").alias(f"__v{i}")
-            if p is not None else F.lit(None).cast("double").alias(f"__v{i}")
-        )
+        actual = F.expr(p.source_expr) if p is not None else F.lit(None)
+        exprs += [F.expr(r.expectation).alias(f"__b{i}"),
+                  actual.cast("double").alias(f"__v{i}")]
     agg = df.groupBy(*group_cols).agg(*exprs)
     structs = [
         F.struct(
@@ -285,11 +256,13 @@ def evaluate_agg_rules_grouped(
             .select(*group_cols, "r.*"))
 
 
-def failed(results: Sequence[AggRuleResult]) -> list[AggRuleResult]:
-    return [r for r in results if r.status == "fail"]
+def failed(results: Sequence) -> list:
+    """Agg or query results that did not pass: a query rule's 'timeout'
+    gates like 'fail' (an assertion that was not evaluated did not pass)."""
+    return [r for r in results if r.status != "pass"]
 
 
-def enforce_fail_action(results: Sequence[AggRuleResult], stage: str) -> None:
+def enforce_fail_action(results: Sequence, stage: str) -> None:
     hard = [r for r in failed(results) if r.rule.action_if_failed == ACTION_FAIL]
     if hard:
         names = [r.rule.rule for r in hard]

@@ -19,8 +19,10 @@ from typing import Any, Optional, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..core.rules import ACTION_FAIL, Rule
-from .agg_dq import DQAggFailError, parse_expectation
+from ..core.rules import Rule
+# failed / enforce_fail_action: one gate for agg and query results,
+# re-exported here so query_dq callers keep their names
+from .agg_dq import enforce_fail_action, failed, parse_expectation  # noqa: F401
 
 
 @dataclass
@@ -49,14 +51,17 @@ class QueryRuleResult:
         return d
 
 
-def _run_with_timeout(spark: SparkSession, fn, timeout_s: float, desc: str):
+def _run_with_timeout(spark: SparkSession, fn, timeout_s: Optional[float],
+                      desc: str):
     """Run ``fn`` (which triggers Spark jobs on THIS thread) inside a
     job group that a watchdog timer cancels after ``timeout_s`` seconds.
-    Returns ``(value, timed_out)``. Spark has no per-query timeout of
-    its own; job-group cancellation is the supported mechanism (the
-    same one the UI's kill button uses). Under Spark Connect there is
-    no ``sparkContext`` — the query then runs without a watchdog (the
-    caller's contract is best-effort budget, not hard real-time).
+    Returns ``(value, timed_out)``; with ``timeout_s=None`` there is no
+    budget, so ``fn`` runs as is and no job group is touched. Spark has
+    no per-query timeout of its own; job-group cancellation is the
+    supported mechanism (the same one the UI's kill button uses). Under
+    Spark Connect there is no ``sparkContext`` — the query then runs
+    without a watchdog (the caller's contract is best-effort budget,
+    not hard real-time).
 
     Interruptibility caveat: cancellation marks tasks killed, but a
     task only dies when its generated code polls the kill flag. Scans,
@@ -72,8 +77,9 @@ def _run_with_timeout(spark: SparkSession, fn, timeout_s: float, desc: str):
 
     from ..connect import spark_context
 
-    sc = spark_context(spark)
-    if sc is None:  # Spark Connect: no job-group API on the client
+    # no budget, or Spark Connect (no job-group API on the client)
+    sc = None if timeout_s is None else spark_context(spark)
+    if sc is None:
         return fn(), False
     gid = f"se-querydq-{uuid.uuid4().hex[:12]}"
     # snapshot the caller's thread-local job-group properties BEFORE
@@ -153,37 +159,42 @@ def evaluate_query_rules(
     if not rules:
         return []
     parsed = [parse_expectation(r.expectation) for r in rules]
-    selects = []
-    for i, (r, p) in enumerate(zip(rules, parsed)):
-        selects.append(f"({r.expectation}) AS status_{i}")
-        if p is not None:
-            selects.append(f"({p.source_expr}) AS actual_{i}")
-    fused_sql = "SELECT " + ", ".join(selects)
-    if timeout_s is None:
-        row = spark.sql(fused_sql).first()
-    else:
-        row, timed_out = _run_with_timeout(
-            spark, lambda: spark.sql(fused_sql).first(), timeout_s,
-            "query_dq fused assertions")
-        if timed_out:
-            return _evaluate_individually(
-                spark, rules, parsed, capture_secondary, timeout_s)
+    row, timed_out = _run_with_timeout(
+        spark, lambda: spark.sql(_select(rules, parsed)).first(), timeout_s,
+        "query_dq fused assertions")
+    if timed_out:
+        return _evaluate_individually(
+            spark, rules, parsed, capture_secondary, timeout_s)
+    return [_result(spark, r, p, row, i, capture_secondary, timeout_s)
+            for i, (r, p) in enumerate(zip(rules, parsed))]
 
-    out: list[QueryRuleResult] = []
+
+def _select(rules: Sequence[Rule], parsed: Sequence[Any]) -> str:
+    """The fused SELECT: rule i's pass bit as ``status_i`` and, when the
+    expectation parses, its measured value as ``actual_i``."""
+    sel = []
     for i, (r, p) in enumerate(zip(rules, parsed)):
-        secondary, s_timeouts = _capture_secondaries(
-            spark, r, capture_secondary, timeout_s)
-        out.append(
-            QueryRuleResult(
-                rule=r,
-                status="pass" if bool(row[f"status_{i}"]) else "fail",
-                actual_value=row[f"actual_{i}"] if p is not None else None,
-                expected=p.expected_repr() if p is not None else None,
-                secondary_output=secondary,
-                timed_out_secondaries=s_timeouts,
-            )
-        )
-    return out
+        sel.append(f"({r.expectation}) AS status_{i}")
+        if p is not None:
+            sel.append(f"({p.source_expr}) AS actual_{i}")
+    return "SELECT " + ", ".join(sel)
+
+
+def _result(spark: SparkSession, r: Rule, p, row, i: int,
+            capture_secondary: bool,
+            timeout_s: Optional[float]) -> QueryRuleResult:
+    """Rule ``r``'s result from column ``i`` of a ``_select`` row, with
+    its secondary queries captured."""
+    secondary, s_timeouts = _capture_secondaries(
+        spark, r, capture_secondary, timeout_s)
+    return QueryRuleResult(
+        rule=r,
+        status="pass" if bool(row[f"status_{i}"]) else "fail",
+        actual_value=row[f"actual_{i}"] if p is not None else None,
+        expected=p.expected_repr() if p is not None else None,
+        secondary_output=secondary,
+        timed_out_secondaries=s_timeouts,
+    )
 
 
 def _capture_secondaries(
@@ -204,15 +215,12 @@ def _capture_secondaries(
             and r.secondary_queries):
         return secondary, timeouts
     for alias, sql in r.secondary_queries.items():
-        if timeout_s is None:
-            rows = spark.sql(sql).collect()
-        else:
-            rows, s_to = _run_with_timeout(
-                spark, lambda q=sql: spark.sql(q).collect(), timeout_s,
-                f"query_dq secondary {r.rule}:{alias}")
-            if s_to:
-                timeouts.append(alias)
-                continue
+        rows, s_to = _run_with_timeout(
+            spark, lambda q=sql: spark.sql(q).collect(), timeout_s,
+            f"query_dq secondary {r.rule}:{alias}")
+        if s_to:
+            timeouts.append(alias)
+            continue
         secondary[alias] = [rw.asDict(recursive=True) for rw in rows]
     return secondary, timeouts
 
@@ -229,41 +237,15 @@ def _evaluate_individually(
     identified by name instead of poisoning the batch."""
     out: list[QueryRuleResult] = []
     for r, p in zip(rules, parsed):
-        sel = [f"({r.expectation}) AS status_0"]
-        if p is not None:
-            sel.append(f"({p.source_expr}) AS actual_0")
-        sql = "SELECT " + ", ".join(sel)
         row, timed_out = _run_with_timeout(
-            spark, lambda q=sql: spark.sql(q).first(), timeout_s,
-            f"query_dq rule {r.rule}")
-        if timed_out:
-            out.append(QueryRuleResult(
-                rule=r, status="timeout",
-                expected=p.expected_repr() if p is not None else None))
-            continue
-        secondary, s_timeouts = _capture_secondaries(
-            spark, r, capture_secondary, timeout_s)
+            spark, lambda q=_select([r], [p]): spark.sql(q).first(),
+            timeout_s, f"query_dq rule {r.rule}")
         out.append(QueryRuleResult(
-            rule=r,
-            status="pass" if bool(row["status_0"]) else "fail",
-            actual_value=row["actual_0"] if p is not None else None,
-            expected=p.expected_repr() if p is not None else None,
-            secondary_output=secondary,
-            timed_out_secondaries=s_timeouts,
-        ))
+            rule=r, status="timeout",
+            expected=p.expected_repr() if p is not None else None)
+            if timed_out else
+            _result(spark, r, p, row, 0, capture_secondary, timeout_s))
     return out
-
-
-def failed(results: Sequence[QueryRuleResult]) -> list[QueryRuleResult]:
-    # timeout gates like failure: an unevaluated assertion did not pass
-    return [r for r in results if r.status in ("fail", "timeout")]
-
-
-def enforce_fail_action(results: Sequence[QueryRuleResult], stage: str) -> None:
-    hard = [r for r in failed(results) if r.rule.action_if_failed == ACTION_FAIL]
-    if hard:
-        names = [r.rule.rule for r in hard]
-        raise DQAggFailError(f"{stage}: rules {names} failed with action 'fail'")
 
 
 def register_views(spark: SparkSession, views: dict[str, DataFrame]) -> None:

@@ -4,15 +4,25 @@ This is the engine's core operator, re-expressing reference
 utils/actions.py:497-599 + sinks/utils/writer.py:1011-1102. Design goals at
 100 TB scale:
 
-* ONE wide ``select("*", rule_1, ..., rule_N)`` — N predicates compiled into
-  a single WholeStageCodegen projection; no per-rule passes.
-* Each rule column is NULL on pass and a ``map<string,string>`` of rule
-  metadata on fail; ``meta_row_dq_results`` is the null-compacted array.
-  (The reference materializes pass-maps too and filters them out later —
-  skipping them halves the meta-column bytes shuffled/written.)
+* ONE wide ``select("*", flag_1, ..., flag_N)`` (``project_flags``): each
+  rule is a boolean FAIL flag, so N predicates compile into a single
+  WholeStageCodegen projection as cheap as hand-written checks; no
+  per-rule passes. A predicate evaluating to NULL counts as a failure,
+  matching the reference's ``when(expr(e), pass).otherwise(fail)``.
 * All run counts (input, error, per-rule failures, drop-count, fail-count)
-  come from ONE aggregation job over the projected frame — the reference
-  runs 3+ separate full scans (input count, error count, output count).
+  come from ONE aggregation job of conditional sums over the flags
+  (``summarize_flags``; ``summarize_flags_with`` splices extra aggregates,
+  the engine's source agg rules, into the same job) — the reference runs
+  3+ separate full scans (input count, error count, output count).
+* The error-table contract column ``meta_row_dq_results`` (an
+  ``array<map<string,string>>`` of the failed rules' metadata) is built by
+  ``errors_from_flags`` only AFTER the boolean filter, so Catalyst
+  evaluates the map literals on error rows alone. Building them per rule
+  per row on every scan cost ~3x the checks themselves (measured at
+  sf0.1: 5.6s vs 1.7s), and pass-maps are never built (the reference
+  materializes them and filters them out later).
+* ``final_from_flags`` applies the drop filter and the fail gate; the gate
+  reads the summary, so it costs no extra scan.
 * Zero Python UDFs; everything stays JVM-side.
 
 Window expressions inside rules (``count(*) over (partition by pk) = 1``)
@@ -41,10 +51,6 @@ class DQRowFailError(RuntimeError):
     """Raised when a failed rule has action_if_failed='fail'."""
 
 
-def _rule_col_name(rule: Rule) -> str:
-    return f"__dq_{rule.rule_type}_{rule.rule}"
-
-
 def fail_map(rule: Rule) -> Column:
     """map<string,string> of rule metadata + status=fail (reference
     utils/actions.py:84-99)."""
@@ -53,32 +59,6 @@ def fail_map(rule: Rule) -> Column:
         kvs.extend([F.lit(k), F.lit(v)])
     kvs.extend([F.lit("status"), F.lit("fail")])
     return F.create_map(*kvs)
-
-
-def rule_column(rule: Rule) -> Column:
-    """NULL when the predicate holds, fail-map otherwise.
-
-    SQL three-valued logic: a predicate evaluating to NULL (e.g. comparing
-    a NULL column) counts as a failure, matching the reference's
-    ``when(expr(e), pass).otherwise(fail)``.
-    """
-    return (
-        F.when(F.expr(rule.expectation), F.lit(None))
-        .otherwise(fail_map(rule))
-        .alias(_rule_col_name(rule))
-    )
-
-
-def project_rules(df: DataFrame, rules: Sequence[Rule]) -> DataFrame:
-    """Append ``meta_row_dq_results: array<map<string,string>>`` in one pass."""
-    if not rules:
-        return df.withColumn(META_ROW_RESULTS,
-                             F.lit([]).cast("array<map<string,string>>"))
-    projected = df.select("*", *[rule_column(r) for r in rules])
-    names = [_rule_col_name(r) for r in rules]
-    return projected.withColumn(
-        META_ROW_RESULTS, F.array_compact(F.array(*[F.col(n) for n in names]))
-    ).drop(*names)
 
 
 @dataclass
@@ -94,112 +74,12 @@ class RowDQSummary:
         return self.input_count - self.drop_count
 
 
-def summarize(projected: DataFrame, rules: Sequence[Rule]) -> RowDQSummary:
-    """ONE aggregation job → every count the run needs.
-
-    Replaces the reference's separate input ``count()``, error ``count()``,
-    output ``count()`` and explode+groupBy error summary
-    (writer.py:1087-1102) with a single scan of the projected frame. The
-    per-rule counters are plain conditional sums, so the whole thing is one
-    partial+final hash aggregate with no shuffle wider than one row per
-    partition.
-    """
-    res = F.col(META_ROW_RESULTS)
-    has_err = F.size(res) > 0
-    aggs: list[Column] = [
-        F.count(F.lit(1)).alias("__input"),
-        F.sum(has_err.cast("long")).alias("__errors"),
-        F.sum(
-            F.exists(res, lambda m: m["action_if_failed"] == ACTION_DROP).cast("long")
-        ).alias("__drops"),
-        F.sum(
-            F.exists(res, lambda m: m["action_if_failed"] == ACTION_FAIL).cast("long")
-        ).alias("__fails"),
-    ]
-    for i, r in enumerate(rules):
-        aggs.append(
-            F.sum(
-                F.exists(res, (lambda name: lambda m: m["rule"] == name)(r.rule))
-                .cast("long")
-            ).alias(f"__r{i}")
-        )
-    row = projected.agg(*aggs).first()
-    return RowDQSummary(
-        input_count=row["__input"] or 0,
-        error_count=row["__errors"] or 0,
-        drop_count=row["__drops"] or 0,
-        fail_count=row["__fails"] or 0,
-        rule_failed_counts={r.rule: (row[f"__r{i}"] or 0) for i, r in enumerate(rules)},
-    )
-
-
-def error_rows(projected: DataFrame) -> DataFrame:
-    """Rows with >=1 failed rule, meta column retained (error-table shape,
-    reference sinks/utils/writer.py:1026-1050)."""
-    return projected.filter(F.size(F.col(META_ROW_RESULTS)) > 0)
-
-
-def apply_actions(
-    projected: DataFrame,
-    summary: Optional[RowDQSummary],
-    *,
-    keep_meta: bool = False,
-) -> DataFrame:
-    """Drop 'drop'-rows; raise if a 'fail' rule fired (reference
-    utils/actions.py:613-690).
-
-    The fail gate uses the already-computed summary — no extra scan (the
-    reference re-scans with array_contains + count()). For streaming frames
-    pass summary=None: the gate is skipped (uncountable), drop filtering
-    still applies — same semantics as reference utils/actions.py:657-665.
-    """
-    if summary is not None and summary.fail_count > 0:
-        raise DQRowFailError(
-            f"{summary.fail_count} row(s) failed rules with action_if_failed='fail'"
-        )
-    out = projected.filter(
-        ~F.exists(F.col(META_ROW_RESULTS), lambda m: m["action_if_failed"] == ACTION_DROP)
-    )
-    return out if keep_meta else out.drop(META_ROW_RESULTS)
-
-
-def run_row_dq(
-    df: DataFrame,
-    rules: Sequence[Rule],
-    *,
-    compute_summary: bool = True,
-):
-    """Convenience: project → summarize → (errors, final) lazily.
-
-    Returns (projected, summary | None). ``error_rows`` / ``apply_actions``
-    derive from ``projected`` without re-evaluating predicates.
-    """
-    projected = project_rules(df, rules)
-    summary = None
-    if compute_summary and not df.isStreaming:
-        summary = summarize(projected, rules)
-    return projected, summary
-
-
-# ---------------------------------------------------------------------------
-# Boolean-flag fast path (what DQEngine uses)
-#
-# The map-typed meta column above is the error-table CONTRACT, but building
-# map<string,string> literals per rule per row on every scan is ~3× the cost
-# of the checks themselves (measured at sf0.1: 5.6s engine vs 1.7s
-# hand-written booleans). So the engine evaluates rules as boolean fail
-# flags — as cheap as hand-written code — and attaches the meta maps only
-# AFTER filtering down to error rows, where Catalyst evaluates them on the
-# errors alone.
-# ---------------------------------------------------------------------------
-
 def _flag_name(i: int) -> str:
     return f"__dq_f{i}"
 
 
 def flag_column(rule: Rule, i: int) -> Column:
-    """TRUE when the rule FAILS (null predicate counts as failure, matching
-    the map path's when/otherwise semantics)."""
+    """TRUE when the rule FAILS (a NULL predicate counts as failure)."""
     return (
         ~F.coalesce(F.expr(rule.expectation).cast("boolean"), F.lit(False))
     ).alias(_flag_name(i))
@@ -237,8 +117,7 @@ def summarize_flags_with(
 
 def summarize_flags(flags_df: DataFrame, rules: Sequence[Rule]) -> RowDQSummary:
     """ONE aggregation job over the boolean flags — conditional sums only."""
-    row = flags_df.agg(*_summary_aggs(rules)).first()
-    return _summary_from_row(rules, row)
+    return _summary_from_row(rules, flags_df.agg(*_summary_aggs(rules)).first())
 
 
 def _summary_aggs(rules: Sequence[Rule]) -> list[Column]:

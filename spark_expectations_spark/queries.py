@@ -85,8 +85,8 @@ WITH t AS (
 
 
 def q_dq_row_errors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Engine-grade path: boolean flags filter first, the map-typed meta
-    contract is materialized only for the surviving error rows."""
+    """The engine's row path: boolean flags filter first, the map-typed
+    meta contract is materialized only for the surviving error rows."""
     li = load(spark, sf_dir, "lineitem")
     flags = row_dq.project_flags(li, lineitem_row_rules())
     err = row_dq.errors_from_flags(flags, lineitem_row_rules())
@@ -112,8 +112,8 @@ WHERE NOT (l_quantity BETWEEN 1 AND 50) OR l_quantity IS NULL
 
 def q_dq_row_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load(spark, sf_dir, "lineitem")
-    projected = row_dq.project_rules(li, lineitem_row_rules())
-    err = row_dq.error_rows(projected)
+    rules = lineitem_row_rules()
+    err = row_dq.errors_from_flags(row_dq.project_flags(li, rules), rules)
     return (
         err.select(F.explode(row_dq.META_ROW_RESULTS).alias("m"))
         .groupBy(F.col("m")["rule"].alias("rule"))
@@ -133,15 +133,14 @@ SELECT rule, count(*) AS failed_count FROM (
 
 
 def q_dq_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The engine's run counts: its summary aggregation over the flags."""
     li = load(spark, sf_dir, "lineitem")
-    projected = row_dq.project_rules(li, lineitem_row_rules())
-    res = F.col(row_dq.META_ROW_RESULTS)
-    return projected.agg(
-        F.count(F.lit(1)).alias("input_count"),
-        F.sum((F.size(res) > 0).cast("long")).alias("error_count"),
-        (F.count(F.lit(1)) - F.sum(
-            F.exists(res, lambda m: m["action_if_failed"] == "drop").cast("long")
-        )).alias("output_count"),
+    rules = lineitem_row_rules()
+    summary = row_dq.project_flags(li, rules).agg(*row_dq._summary_aggs(rules))
+    return summary.select(
+        F.col("__input").alias("input_count"),
+        F.col("__errors").alias("error_count"),
+        (F.col("__input") - F.col("__drops")).alias("output_count"),
     )
 
 
@@ -168,7 +167,7 @@ def q_dq_agg_results(spark: SparkSession, sf_dir: str) -> DataFrame:
         mk("distinct_orders", "l_orderkey", "count(distinct l_orderkey) > 0"),
         mk("max_qty", "l_quantity", "max(l_quantity) <= 50"),
     ]
-    out = agg_dq.evaluate_agg_rules_df(li, rules)
+    out = agg_dq.evaluate_agg_rules_grouped(li, rules, [])
     return out.select("rule", "status", F.round("actual_value", 4).alias("actual_value"))
 
 

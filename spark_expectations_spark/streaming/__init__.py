@@ -590,7 +590,15 @@ def _prior_state(spark, path: str, batch_id: int) -> Optional[DataFrame]:
         return None
     if "_batch_id" not in state.columns:  # pre-stamping layout
         return state
-    return state.filter(F.col("_batch_id") != batch_id)
+    state = state.filter(F.col("_batch_id") != batch_id)
+    # a pre-stamping index keeps its root-level files, which partition
+    # discovery skips once stamped partitions sit beside them; the glob
+    # reads exactly those files (it does not descend into partitions)
+    try:
+        legacy = spark.read.parquet(f"{path.rstrip('/')}/*.parquet")
+    except AnalysisException:
+        return state
+    return state.unionByName(legacy, allowMissingColumns=True)
 
 
 def _sum_state(spark, path: str, key_cols: Sequence[str],

@@ -881,3 +881,58 @@ class TestRound5ReviewFixes:
         res = DQEngine(cfg).run(lineitem, rules, spark)
         assert res.input_count == lineitem.count()
         assert res.status["row_dq"] == "Skipped"
+
+
+class TestEngineJobBudget:
+    """The Spark-job budget of a full five-stage run, pinned: a change
+    that adds a scan or a write to the engine shows up here as a count
+    change, not only as a slower benchmark."""
+
+    @staticmethod
+    def _rules():
+        from spark_expectations_spark.queries import lineitem_row_rules
+
+        def mk(rule_type, name, exp, target=False):
+            return Rule("p", "lineitem", rule_type, name, "", exp,
+                        enable_for_source_dq_validation=not target,
+                        enable_for_target_dq_validation=target)
+
+        return RuleSet(lineitem_row_rules() + [
+            mk("agg_dq", "cnt_pos", "count(*) > 0"),
+            mk("agg_dq", "avg_disc", "avg(l_discount) between 0 and 0.1"),
+            mk("agg_dq", "final_max_disc", "max(l_discount) <= 0.05",
+               target=True),
+            mk("query_dq", "orders_cover",
+               "(select count(*) from orders) >= "
+               "(select count(distinct l_orderkey) from lineitem)"),
+            mk("query_dq", "final_not_larger",
+               "(select count(*) from lineitem_final) <= "
+               "(select count(*) from lineitem)", target=True),
+        ])
+
+    @pytest.mark.parametrize("detailed, jobs", [(False, 20), (True, 25)])
+    def test_full_run_job_count(self, spark, lineitem, orders, tmp_path,
+                                detailed, jobs):
+        from spark_expectations_spark import WriterOptions
+        sink = WriterOptions(format="parquet", mode="overwrite",
+                             path=str(tmp_path))
+        cfg = DQConfig(product_id="p", table_name="lineitem",
+                       source_view="lineitem", target_view="lineitem_final",
+                       views={"orders": orders},
+                       write_error_table=True, error_writer=sink,
+                       write_stats_table=True, stats_writer=sink,
+                       enable_detailed_stats=detailed)
+        # a frame another test left cached would change the plans
+        spark.catalog.clearCache()
+        sc = spark.sparkContext
+        group = f"dq-job-budget-{detailed}"
+        sc.setJobGroup(group, "DQEngine job budget")
+        try:
+            res = DQEngine(cfg).run(lineitem, self._rules(), spark)
+            res.final_df.write.format("noop").mode("overwrite").save()
+        finally:
+            for p in ("spark.jobGroup.id", "spark.job.description",
+                      "spark.job.interruptOnCancel"):
+                sc.setLocalProperty(p, None)
+        assert res.status["row_dq"] == "Failed"
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) == jobs

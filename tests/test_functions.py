@@ -10,7 +10,7 @@ def _projected(spark, simple3):
         Rule("p", "t", "row_dq", "gt1", "col1", "col1 > 1", action_if_failed="drop"),
         Rule("p", "t", "row_dq", "is_c", "col2", "col2 != 'c'"),
     ]
-    return row_dq.project_rules(simple3, rules)
+    return row_dq.errors_from_flags(row_dq.project_flags(simple3, rules), rules)
 
 
 class TestMetaHelpers:
@@ -77,21 +77,11 @@ class TestThinSurfaceHelpers:
             Rule("p", "t", "row_dq", "is_c", "col2", "col2 != 'c'",
                  tag="accuracy"),
         ]
-        p = row_dq.project_rules(simple3, rules)
+        p = row_dq.errors_from_flags(row_dq.project_flags(simple3, rules),
+                                     rules)
         assert p.filter(dqf.failed_by_tag("validity")).count() == 1
         assert p.filter(dqf.failed_by_tag("accuracy")).count() == 1
         assert p.filter(dqf.failed_by_tag("absent")).count() == 0
-
-    def test_run_row_dq_wrapper(self, spark, simple3):
-        rules = [Rule("p", "t", "row_dq", "gt1", "col1", "col1 > 1",
-                      action_if_failed="drop")]
-        projected, summary = row_dq.run_row_dq(simple3, rules)
-        assert projected.filter(dqf.any_rule_failed()).count() == 1
-        assert summary is not None and summary.error_count == 1
-        proj_only, none_summary = row_dq.run_row_dq(
-            simple3, rules, compute_summary=False)
-        assert none_summary is None
-        assert proj_only.count() == simple3.count()
 
     def test_rules_to_df_roundtrip(self, spark):
         from spark_expectations_spark.core.rules import RuleSet as RS

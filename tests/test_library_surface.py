@@ -1398,7 +1398,8 @@ class TestPlanShapes:
             Rule("p", "t", "row_dq", "d", "l_discount", "l_discount >= 0"),
             Rule("p", "t", "row_dq", "s", "l_shipdate", "l_shipdate is not null"),
         ]
-        projected = row_dq.project_rules(lineitem, rules)
+        projected = row_dq.errors_from_flags(
+            row_dq.project_flags(lineitem, rules), rules)
         assert plans.num_shuffles(projected) == 0
 
     def test_agg_partial_aggregation(self, spark, lineitem):
@@ -2587,3 +2588,25 @@ class TestStreamingStateRecipe:
                 for r in spark.read.parquet(str(out)).collect()] == [(6, 3)]
         stamped = spark.read.parquet(str(idx / "_batch_id=3"))
         assert [r["fingerprint"] for r in stamped.collect()] == ["c"]
+
+    def test_corpus_append_dedup_keeps_pre_stamping_index_after_stamping(
+            self, spark, tmp_path):
+        """The legacy root-level files stay part of the index once
+        stamped ``_batch_id=N/`` partitions sit beside them (partition
+        discovery alone no longer reads them): a later batch still
+        rejects a legacy fingerprint, and a replay of an earlier batch
+        admits the same rows again."""
+        from spark_expectations_spark import streaming as st
+        idx, out = tmp_path / "fp_index", tmp_path / "corpus"
+        spark.createDataFrame([("a",), ("b",)], "fingerprint string") \
+            .write.parquet(str(idx))
+        step = st.corpus_append_dedup(str(idx), "doc_id", out_path=str(out))
+        batch3 = spark.createDataFrame([(6, "c"), (7, "b")],
+                                       "doc_id long, fingerprint string")
+        step(batch3, 3)
+        step(spark.createDataFrame([(8, "a"), (9, "d")],
+                                   "doc_id long, fingerprint string"), 4)
+        step(batch3, 3)  # replay
+        assert sorted((r["doc_id"], r["_batch_id"])
+                      for r in spark.read.parquet(str(out)).collect()) \
+            == [(6, 3), (9, 4)]
