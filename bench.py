@@ -42,7 +42,7 @@ shape appears at least once. Excluded, by rule:
 
 Everything else — every NEW operator family a round ships — gets a row
 the same round it lands. The graded pair (dq_engine_full_run vs
-dq_handwritten_run) is always measured, min-of-2.
+dq_handwritten_run) is always measured, min-of-3.
 
 CANARY PROTOCOL (r11 verdict task 4): CANARY_QUERIES (five entries
 frozen since r8) are timed first and last each run; the summary line
@@ -50,6 +50,12 @@ carries `canary_ratio` (last/first — host drift within the run) and
 `canary_total` (mean of the two passes — the cross-run normalizer).
 Cross-round comparisons should divide per-query swings by the rounds'
 canary_total ratio before calling anything a regression.
+
+HARNESS: this module is also the one bench harness the tools/ bench and
+profile scripts import — ``bench_session``, ``warm``, ``run_query`` /
+``time_query`` (the timed action), ``canary_bracket`` and
+``job_metrics`` (per-run jobs, stages, task/CPU time, shuffle and input
+bytes from the in-process status store; no UI needed).
 """
 
 from __future__ import annotations
@@ -58,13 +64,16 @@ import json
 import os
 import sys
 import time
+import uuid
+from contextlib import contextmanager
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
 from pyspark.sql import SparkSession  # noqa: E402
 
-from spark_expectations_spark.queries import QUERIES  # noqa: E402
+from perfbench.trace import _new_stages, status_store  # noqa: E402
+from spark_expectations_spark.queries import QUERIES, TABLES, load  # noqa: E402
 
 BENCH_QUERIES = [
     "dq_row_errors", "dq_counts", "dq_agg_results",
@@ -385,6 +394,133 @@ CANARY_QUERIES = [
 # small-canary total.
 STAGEHEAVY_ANCHOR = ["part_blocking_quality", "dedup_jaccard"]
 
+def bench_session() -> SparkSession:
+    """The shared ``local-dev`` profile on local[$SPARK_GRAFT_CPUS]
+    (default 32) plus the bench extras: the headline dedup/ANN queries
+    hold pair frames + broadcast matrices at sf0.1."""
+    from spark_expectations_spark.session import configure, scale_confs
+
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    confs = scale_confs("local-dev", total_cores=cpus)
+    confs.update({"spark.driver.memory": "24g",
+                  "spark.sql.autoBroadcastJoinThreshold": "64m"})
+    spark = configure(
+        SparkSession.builder.master(f"local[{cpus}]")
+        .appName("spark_expectations_spark-bench"), confs).getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    return spark
+
+
+def warm(spark, sf_dir: str) -> None:
+    """Warm the JVM/codegen paths, the parquet readers of the ten tables
+    at ``sf_dir`` (file listing, footer decode, OS page cache) and the
+    python worker pool (workers importing numpy/pandas take ~5s once
+    per session), so per-query numbers measure the plan, not session
+    startup / first-touch I/O."""
+    spark.range(1000).selectExpr("sum(id)").collect()
+    for t in TABLES:
+        load(spark, sf_dir, t).write.format("noop").mode("overwrite").save()
+    spark.range(0, 32, 1, 32).mapInPandas(
+        lambda it: it, "id long"
+    ).write.format("noop").mode("overwrite").save()
+
+
+def run_query(spark, name: str, sf_dir: str) -> tuple[float, float]:
+    """One run of the timed action: build the catalog frame, then write
+    it to the NOOP sink, which computes every column of every row —
+    ``df.count()`` lets Catalyst prune whole subtrees (the r16 audit,
+    OPTIMIZATION_r16.md "count() elimination": part_copurchase_triangles
+    lost all 7 joins). The run's persists are dropped afterwards,
+    untimed, so one run's cache doesn't pressure the next one's memory.
+    Returns (build_s, exec_s)."""
+    t0 = time.time()
+    df = QUERIES[name](spark, sf_dir)
+    t1 = time.time()
+    df.write.format("noop").mode("overwrite").save()
+    t2 = time.time()
+    spark.catalog.clearCache()
+    return t1 - t0, t2 - t1
+
+
+def time_query(spark, name: str, sf_dir: str) -> float:
+    """Min of 3 runs of the timed action, in seconds. The first run
+    still pays per-plan JIT/codegen compilation, which at sf0.1 can
+    exceed the execution and at real scale amortizes to nothing; the
+    third sample tames the shared host's ±50% noise spikes (three
+    phantom regressions in round 4)."""
+    best = round(min(sum(run_query(spark, name, sf_dir))
+                     for _ in range(3)), 3)
+    print(f"# {name}: {best}s (noop sink, min of 3)", file=sys.stderr)
+    return best
+
+
+def canary_bracket(spark, sf_dir: str, body):
+    """Time CANARY_QUERIES at ``sf_dir``, run ``body()``, time them
+    again. Returns (body's result, canary, first, last): ``first`` and
+    ``last`` map each canary to its seconds; ``canary`` holds their sums
+    ("first", "last"), the drift "ratio" last/first and the cross-run
+    normalizer "total" (mean of the two passes)."""
+    first = {n: time_query(spark, n, sf_dir) for n in CANARY_QUERIES}
+    out = body()
+    last = {n: time_query(spark, n, sf_dir) for n in CANARY_QUERIES}
+    canary = {"first": round(sum(first.values()), 3),
+              "last": round(sum(last.values()), 3)}
+    canary["ratio"] = round(canary["last"] / max(canary["first"], 1e-9), 3)
+    canary["total"] = round((canary["first"] + canary["last"]) / 2, 3)
+    print(f"# canary first={canary['first']}s last={canary['last']}s "
+          f"drift ratio={canary['ratio']}x", file=sys.stderr)
+    return out, canary, first, last
+
+
+@contextmanager
+def job_metrics(spark):
+    """Tag every job the block starts on this thread; on a clean exit
+    fill the yielded dict from the status store: ``jobs`` (one record
+    per tagged job, in id order) and their sums ``n_jobs``,
+    ``n_stages``, ``n_tasks``, ``task_s``, ``cpu_s``, ``shuffle_w_mb``,
+    ``shuffle_r_mb``, ``input_mb``. A stage reused by a later job
+    counts for the first one only. The tag is removed on every exit;
+    job groups and the caller's other tags are left alone.
+
+    The tag is a SparkContext thread tag, not a session tag
+    (``spark.addTag``): session tags stamp only SQL executions, and miss
+    the jobs a query's build starts outside one (parquet schema
+    inference, one job per table read)."""
+    sc = spark.sparkContext
+    tag = f"bench-{uuid.uuid4().hex}"
+    metrics: dict = {}
+    sc.addJobTag(tag)
+    try:
+        yield metrics
+    finally:
+        sc.removeJobTag(tag)
+    all_jobs, by_stage = status_store(sc)
+    seen: set[int] = set()
+    jobs = []
+    for job in sorted(all_jobs, key=lambda j: j["jobId"]):
+        if tag not in job["jobTags"]:
+            continue
+        stages = list(_new_stages(job, by_stage, seen))
+        jobs.append({
+            "job_id": job["jobId"],
+            "description": job.get("description") or job.get("name", ""),
+            "submitted_s": (job.get("submissionTime") or 0) / 1e3,
+            "completed_s": (job.get("completionTime") or 0) / 1e3,
+            "n_stages": len(stages),
+            "n_tasks": sum(st["numCompleteTasks"] for st in stages),
+            "task_s": sum(st["executorRunTime"] for st in stages) / 1e3,
+            "cpu_s": sum(st["executorCpuTime"] for st in stages) / 1e9,
+            "shuffle_w_mb": sum(st["shuffleWriteBytes"] for st in stages) / 1e6,
+            "shuffle_r_mb": sum(st["shuffleReadBytes"] for st in stages) / 1e6,
+            "input_mb": sum(st["inputBytes"] for st in stages) / 1e6,
+        })
+    metrics["n_jobs"] = len(jobs)
+    for k, digits in (("n_stages", 0), ("n_tasks", 0), ("task_s", 3),
+                      ("cpu_s", 3), ("shuffle_w_mb", 2),
+                      ("shuffle_r_mb", 2), ("input_mb", 2)):
+        metrics[k] = round(sum(j[k] for j in jobs), digits)
+    metrics["jobs"] = jobs
+
 
 def _streaming_foreach_batch_run(spark, sf_dir: str) -> float:
     """Streaming representative (r17, r16 verdict task 7): the full DQ
@@ -409,7 +545,7 @@ def _streaming_foreach_batch_run(spark, sf_dir: str) -> float:
     import tempfile
 
     from spark_expectations_spark import DQConfig, DQEngine, Rule, RuleSet  # noqa: F401
-    from spark_expectations_spark.queries import lineitem_row_rules, load
+    from spark_expectations_spark.queries import lineitem_row_rules
     from spark_expectations_spark.streaming import foreach_batch_dq
 
     li = load(spark, sf_dir, "lineitem")
@@ -454,7 +590,7 @@ def _engine_full_run(spark, sf_dir: str) -> float:
     """Full 5-stage DQ run (row + agg + query rules, stats assembled)."""
     from spark_expectations_spark import DQConfig, DQEngine, Rule, RuleSet
     from spark_expectations_spark.operators import query_dq
-    from spark_expectations_spark.queries import lineitem_row_rules, load
+    from spark_expectations_spark.queries import lineitem_row_rules
 
     li = load(spark, sf_dir, "lineitem")
     od = load(spark, sf_dir, "orders")
@@ -481,7 +617,6 @@ def _handwritten_run(spark, sf_dir: str) -> float:
     what a careful engineer would write without any framework."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
-    from spark_expectations_spark.queries import load
 
     li = load(spark, sf_dir, "lineitem")
     od = load(spark, sf_dir, "orders")
@@ -518,87 +653,11 @@ def _handwritten_run(spark, sf_dir: str) -> float:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    from spark_expectations_spark.session import configure, scale_confs
-
-    confs = scale_confs("local-dev", total_cores=int(cpus))
-    # bench-specific extras on top of the shared profile: the headline
-    # dedup/ANN queries hold pair frames + broadcast matrices at sf0.1
-    confs.update({"spark.driver.memory": "24g",
-                  "spark.sql.autoBroadcastJoinThreshold": "64m"})
-    spark = configure(
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("spark_expectations_spark-bench"), confs).getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-
-    # warm the JVM/codegen paths and the parquet readers (file listing,
-    # footer decode, OS page cache) so per-query numbers measure the plan,
-    # not session startup / first-touch I/O
-    spark.range(1000).selectExpr("sum(id)").collect()
-    from spark_expectations_spark.queries import load
-    for t in ("lineitem", "orders", "customer", "documents", "embeddings",
-              "events", "part", "supplier", "nation", "region"):
-        load(spark, sf_dir, t).write.format("noop").mode("overwrite").save()
-    # spin up the python worker pool (32 workers importing numpy/pandas
-    # ~5s once per session) so Arrow-UDF queries measure compute
-    spark.range(0, 32, 1, 32).mapInPandas(
-        lambda it: it, "id long"
-    ).write.format("noop").mode("overwrite").save()
-
-    # three timed runs per query, report the warm (min) one: the first
-    # run still pays per-plan JIT/codegen compilation, which at sf0.1 can
-    # exceed the actual execution (e.g. minhash's wide agg compiles ~10s,
-    # runs ~1.5s) and at real scale amortizes to nothing — steady-state
-    # is what a 100 TB comparison should measure
-    def _time_query(name: str) -> float:
-        fn = QUERIES[name]
-        best, runs = None, 0
-        # min of 3 runs for EVERY query: the shared host shows ±50%
-        # noise spikes, and round-over-round comparisons on sub-second
-        # queries were dominated by that noise (three phantom
-        # regressions flagged in round 4) — a third sample stabilizes
-        # them for a few seconds of extra wall-clock
-        while runs < 3:
-            t0 = time.time()
-            df = fn(spark, sf_dir)
-            # r16 MEASUREMENT FIX (guide §1.4): the timed action is the
-            # noop sink, NOT df.count(). count() lets Catalyst prune
-            # whole subtrees behind provably-unique outer joins — the
-            # r16 audit (OPTIMIZATION_r16.md "count() elimination")
-            # found 8 entries whose counted plan dropped most of the
-            # algorithm (part_copurchase_triangles: all 7 joins, true
-            # cost ~14× the counted one; the pagerank family: the whole
-            # rank loop once the r16 lineage-cut gating made it lazy).
-            # Rounds ≤ r16-close numbers are count-based — compare
-            # across the boundary only via the ledger's dual capture.
-            df.write.format("noop").mode("overwrite").save()
-            dt = time.time() - t0
-            best = dt if best is None else min(best, dt)
-            runs += 1
-            # each run is timed standalone: drop any intra-query persists
-            # so one run's cache doesn't pressure the next one's memory
-            spark.catalog.clearCache()
-        print(f"# {name}: {round(best, 3)}s (noop sink, warm of {runs})",
-              file=sys.stderr)
-        return round(best, 3)
-
-    # canary pass 1 (host-speed anchor, frozen-code entries)
-    canary_first = {name: _time_query(name) for name in CANARY_QUERIES}
-
-    timings: dict[str, float] = {}
-    for name in BENCH_QUERIES:
-        timings[name] = _time_query(name)
-
-    # canary pass 2: same five entries at the end of the run
-    canary_last = {name: _time_query(name) for name in CANARY_QUERIES}
-    canary = {
-        "first": round(sum(canary_first.values()), 3),
-        "last": round(sum(canary_last.values()), 3),
-    }
-    canary["ratio"] = round(canary["last"] / max(canary["first"], 1e-9), 3)
-    canary["total"] = round((canary["first"] + canary["last"]) / 2, 3)
-    print(f"# canary first={canary['first']}s last={canary['last']}s "
-          f"drift ratio={canary['ratio']}x", file=sys.stderr)
+    spark = bench_session()
+    warm(spark, sf_dir)
+    timings, canary, canary_first, canary_last = canary_bracket(
+        spark, sf_dir,
+        lambda: {n: time_query(spark, n, sf_dir) for n in BENCH_QUERIES})
 
     # BASELINE.md gate: full 5-stage engine run vs an equivalent
     # hand-written PySpark pipeline (same checks, no framework).

@@ -406,7 +406,6 @@ def set_similarity_join(
     *,
     threshold: float = 0.8,
     hash_tokens: bool = False,
-    large_sets: bool = False,
 ) -> DataFrame:
     """Set-similarity join with PPJoin-family prefix filtering (Xiao et
     al. 2008 / Chaudhuri et al. SSJoin): pairs whose token SETS have
@@ -416,24 +415,6 @@ def set_similarity_join(
     ``(left_id, right_id, n_common, jaccard)``, one row per pair. The
     token-set sibling of :func:`blocked_fuzzy_join`'s edit-distance
     join — shingle sets, word sets, q-gram sets all fit.
-
-    ``large_sets=True`` switches the per-side prefix builder from the
-    rank WINDOW to a groupBy-carried-array shape (one sorted
-    (df, token) array per id + ``posexplode`` of its prefix slice) —
-    output-identical, but the window's unbounded-frame projection
-    copies each id's FULL df-sorted array onto every one of its k
-    token rows (O(k²) bytes per id through WindowExec), while the
-    groupBy builds the array once (O(k)). Measured crossover (r17
-    sweep, OPTIMIZATION_r17.md): on the real catalog entry (mixed
-    k ≈ 30–130, md5-60 longs) the window wins 1.25× (the r16 A/B);
-    on uniform string-token synthetics the groupBy already wins
-    1.41× at k = 64, 1.80× at k = 256, and 1.28× at k = 1024
-    (broadcast disabled — at k ≥ 1024 the planner underestimates the
-    array-carrying prefix rows and mis-broadcasts a >200 MB relation
-    under either shape; disable auto-broadcast or pre-hash tokens
-    there). Default False — flip it when ids carry hundreds+ of
-    tokens (long documents shingled without pre-hashing, q-gram sets
-    of long strings).
 
     ``hash_tokens=True`` runs the whole pipeline in the md5-60 token
     image (``conv(substr(md5(tok), 1, 15), 16, 10)`` — the repo's
@@ -522,47 +503,24 @@ def set_similarity_join(
             .persist(StorageLevel.MEMORY_AND_DISK))
     def _prefix_rows(tok_stream, id_col, rk_out, s_out, arr_out):
         """(id, tok, rank, size, df-sorted token array) rows kept to
-        the prefix bound rank <= s - ceil(t*s) + 1, via the WINDOW
-        shape (default) or the groupBy-carried-array shape
-        (``large_sets`` — see the docstring's crossover note)."""
-        joined = tok_stream.join(freq, "__tok")
-        if not large_sets:
-            # rank + size + df-sorted array from ONE window sort: the
-            # unbounded-frame count/collect_list share the rank's
-            # partitioning and ordering, so no join back to L/R is
-            # needed to recover the row's set for the verify (the
-            # collect_list rebuilds it, df-sorted — array_intersect is
-            # order-independent, so the verify is unchanged)
-            w = Window.partitionBy(id_col).orderBy("__df", "__tok")
-            w_all = w.rowsBetween(Window.unboundedPreceding,
-                                  Window.unboundedFollowing)
-            return (joined
-                    .select(id_col, "__tok",
-                            F.row_number().over(w).alias(rk_out),
-                            F.count(F.lit(1)).over(w_all).alias(s_out),
-                            F.collect_list("__tok").over(w_all)
-                            .alias(arr_out))
-                    .filter(F.col(rk_out) <= F.col(s_out)
-                            - F.ceil(F.lit(t) * F.col(s_out)) + 1))
-        # groupBy-carried-array shape: ONE sorted (df, tok) struct
-        # array per id (tokens are distinct per id, so the struct sort
-        # is tie-free and equals the window's (df, tok) order), then
-        # posexplode of just the prefix slice — ranks are positions+1
-        arr = F.transform(
-            F.sort_array(F.collect_list(F.struct("__df", "__tok"))),
-            lambda x: x["__tok"])
-        grouped = (joined.groupBy(id_col)
-                   .agg(arr.alias(arr_out),
-                        F.count(F.lit(1)).alias(s_out)))
-        plen = (F.col(s_out)
-                - F.ceil(F.lit(t) * F.col(s_out)) + 1).cast("int")
-        return (grouped
-                .select(id_col, s_out, arr_out,
-                        F.posexplode(F.slice(F.col(arr_out), 1, plen))
-                        .alias("__p", "__tok"))
+        the prefix bound rank <= s - ceil(t*s) + 1. Rank + size +
+        df-sorted array come from ONE window sort: the unbounded-frame
+        count/collect_list share the rank's partitioning and ordering,
+        so no join back to L/R is needed to recover the row's set for
+        the verify (the collect_list rebuilds it, df-sorted —
+        array_intersect is order-independent, so the verify is
+        unchanged)."""
+        w = Window.partitionBy(id_col).orderBy("__df", "__tok")
+        w_all = w.rowsBetween(Window.unboundedPreceding,
+                              Window.unboundedFollowing)
+        return (tok_stream.join(freq, "__tok")
                 .select(id_col, "__tok",
-                        (F.col("__p") + 1).alias(rk_out),
-                        s_out, arr_out))
+                        F.row_number().over(w).alias(rk_out),
+                        F.count(F.lit(1)).over(w_all).alias(s_out),
+                        F.collect_list("__tok").over(w_all)
+                        .alias(arr_out))
+                .filter(F.col(rk_out) <= F.col(s_out)
+                        - F.ceil(F.lit(t) * F.col(s_out)) + 1))
 
     lpre = _prefix_rows(ltok, "__lid", "__rka", "__sa", "__la")
     rpre = _prefix_rows(rtok, "__rid", "__rkb", "__sb", "__ra")

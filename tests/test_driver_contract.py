@@ -183,3 +183,32 @@ class TestBenchStreamingCleanup:
             bench._streaming_foreach_batch_run(spark, SF_DIR)
         assert spark.streams.active == []
         assert list(tmp_path.iterdir()) == []
+
+
+class TestBenchHarness:
+    """bench's timed action under job_metrics: the run's jobs come from
+    the status store (the test session runs with the UI off), and the
+    caller's job group and tags are left as they were."""
+
+    def test_tagged_metrics_keep_the_callers_job_group(self, spark):
+        import bench
+
+        sc = spark.sparkContext
+        sc.setJobGroup("caller-group", "set before the harness runs")
+        try:
+            with bench.job_metrics(spark) as m:
+                assert bench.time_query(spark, "dq_counts", SF_DIR) > 0
+            assert m["n_jobs"] >= 1 and m["n_stages"] >= 1
+            assert m["task_s"] > 0
+            assert len(m["jobs"]) == m["n_jobs"]
+            assert not spark.getTags() and not sc.getJobTags()
+            assert sc.getLocalProperty("spark.jobGroup.id") == "caller-group"
+            # a failed run removes the tag too
+            with pytest.raises(KeyError):
+                with bench.job_metrics(spark):
+                    bench.run_query(spark, "no_such_entry", SF_DIR)
+            assert not spark.getTags() and not sc.getJobTags()
+        finally:
+            for key in ("spark.jobGroup.id", "spark.job.description",
+                        "spark.job.interruptOnCancel"):
+                sc.setLocalProperty(key, None)

@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 
 from spark_expectations_spark import DQConfig, DQEngine, DQRuleError, Rule, RuleSet
 from spark_expectations_spark import plans, validation
+from spark_expectations_spark.plans import local_frame, plan_text
 from spark_expectations_spark.notifications import (
     CollectingNotifier, NotificationHub, NotificationRules,
 )
@@ -1350,6 +1351,74 @@ class TestLocalFrameLiteralCap:
         got = plans.local_frame(spark, rows, schema).orderBy("id").collect()
         assert got == spark.createDataFrame(rows, schema) \
             .orderBy("id").collect()
+
+
+class TestLocalFrame:
+    """r16: plans.local_frame — driver-rows spec tables as literal
+    relations (no Python-RDD scan stage) with the measured size cap."""
+
+    def test_matches_createdataframe(self, spark):
+        from pyspark.sql.types import (DoubleType, LongType, StringType,
+                                       StructField, StructType)
+        from spark_expectations_spark.plans import local_frame
+        schema = StructType([StructField("s", StringType()),
+                             StructField("n", LongType()),
+                             StructField("x", DoubleType())])
+        rows = [("a", 1, 0.5), (None, 2, float("nan")), ("c", None, None)]
+        lit_df = local_frame(spark, rows, schema)
+        ref_df = spark.createDataFrame(rows, schema)
+        assert lit_df.schema == ref_df.schema
+        got = sorted(map(tuple, lit_df.collect()),
+                     key=lambda t: (t[0] is None, str(t)))
+        want = sorted(map(tuple, ref_df.collect()),
+                      key=lambda t: (t[0] is None, str(t)))
+        assert repr(got) == repr(want)  # repr: NaN == NaN comparison
+
+    def test_no_python_scan_under_cap(self, spark):
+        from spark_expectations_spark.plans import local_frame
+        df = local_frame(spark, [("a", 1)], "k string, v long")
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "ExistingRDD" not in plan and "Scan" not in plan.replace(
+            "LocalTableScan", "").replace("RowDataSourceScan", "SCAN_OK")
+
+    def test_falls_back_above_cap(self, spark):
+        from spark_expectations_spark import plans
+        rows = [(str(i), i) for i in range(200)]  # 400 literals > cap
+        df = plans.local_frame(spark, rows, "k string, v long")
+        assert df.count() == 200
+        assert sorted(map(tuple, df.collect()))[:2] == [("0", 0), ("1", 1)]
+
+    def test_empty_rows_keep_schema(self, spark):
+        from spark_expectations_spark.plans import local_frame
+        df = local_frame(spark, [], "k string, v long")
+        assert df.count() == 0
+        assert [f.name for f in df.schema.fields] == ["k", "v"]
+
+
+class TestLocalFrameArrayCap:
+    def test_array_payload_counts_toward_cap(self, spark):
+        # 64 rows x 2 cols passes the old rows*cols cap, but each cell's
+        # dim-64 vector is 64 literal nodes -> must route to
+        # createDataFrame (no literal relation in the plan)
+        rows = [(i, [float(i)] * 64) for i in range(64)]
+        df = local_frame(spark, rows, "cid int, vec array<double>")
+        txt = plan_text(df)
+        assert "Scan ExistingRDD" in txt or "LocalTableScan" in txt
+        got = df.orderBy("cid").collect()
+        assert len(got) == 64 and got[3]["vec"] == [3.0] * 64
+
+    def test_small_scalar_frame_still_literal(self, spark):
+        rows = [(i, float(i) / 2) for i in range(10)]
+        df = local_frame(spark, rows, "k int, v double")
+        # the literal-relation path plans no Python RDD scan
+        assert "Scan ExistingRDD" not in plan_text(df)
+        assert df.count() == 10
+
+    def test_small_array_frame_under_cap_stays_literal(self, spark):
+        rows = [(i, [float(i), 1.0]) for i in range(8)]  # 8*(1+2)=24
+        df = local_frame(spark, rows, "k int, v array<double>")
+        assert "Scan ExistingRDD" not in plan_text(df)
+        assert df.orderBy("k").collect()[2]["v"] == [2.0, 1.0]
 
 
 class TestExecutionMetrics:

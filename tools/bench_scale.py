@@ -8,25 +8,25 @@ overhead); anything super-linear is a finding for SCALE.md.
     python tools/make_scale_tier.py                # build the tier once
     python tools/bench_scale.py [tier_dir] [entry ...]
 
-Protocol: same session profile as bench.py, warm noop scans per tier,
-min-of-3 per query, the 5 frozen canaries timed at each tier's start
-and end (host-speed anchor — ratios are reported raw AND canary-
-normalized). Output: one JSON line with per-entry seconds at both
-tiers + ratios.
+Protocol: bench.py's harness — its session on local[$SPARK_GRAFT_CPUS]
+(default 32), warm noop scans per tier, min-of-3 per query, the 5
+frozen canaries timed at each tier's start and end (host-speed anchor —
+ratios are reported raw AND canary-normalized). Output: one JSON line
+with per-entry seconds at both tiers + ratios. SCALE_r13-r15 are
+count()-timed, so compare only to SCALE_r17_* and later, and only at
+the same core count (SCALE_r17_* ran on 32).
 """
 
 from __future__ import annotations
 
 import json
 import sys
-import time
+from pathlib import Path
 
-sys.path.insert(0, ".")
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-from pyspark.sql import SparkSession  # noqa: E402
-
-from bench import CANARY_QUERIES  # noqa: E402
-from spark_expectations_spark.queries import QUERIES, load  # noqa: E402
+from bench import (bench_session, canary_bracket, time_query,  # noqa: E402
+                   warm)
 
 #: The 12 most expensive BENCH_r12 entries (plus the two dq twins are
 #: deliberately absent — the engine-overhead ratio is BASELINE.md's
@@ -38,89 +38,42 @@ DEFAULT_ENTRIES = [
     "lineitem_ks_by_flag_fdr", "ann_ivf_kmeans", "dedup_lsh_quality",
 ]
 
-
-def _time_query(spark, name: str, sf_dir: str) -> float:
-    fn = QUERIES[name]
-    best = None
-    for _ in range(3):
-        t0 = time.time()
-        # r17: noop sink, matching bench.py's r16 protocol fix (guide
-        # §1.4) — count() let Catalyst prune whole subtrees (the r16
-        # audit: part_copurchase_triangles' counted plan dropped all 7
-        # joins), which would invalidate scale ratios for exactly the
-        # rewritten entries this tool exists to measure. SCALE_r13-r15
-        # artifacts are count-protocol; compare r17 tiers only to r17.
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        dt = time.time() - t0
-        best = dt if best is None else min(best, dt)
-        spark.catalog.clearCache()
-    return round(best, 3)
-
-
-def _warm(spark, sf_dir: str) -> None:
-    for t in ("lineitem", "orders", "customer", "documents",
-              "embeddings", "events", "part", "supplier", "nation",
-              "region"):
-        load(spark, sf_dir, t).write.format("noop") \
-            .mode("overwrite").save()
-
-
 CANARY_DIR = "/root/testdata/sf0.1"
 
 
-def _tier(spark, sf_dir: str, entries) -> dict:
+def _tier(spark, sf_dir: str, entries) -> tuple[dict, float]:
     """Time the entries at sf_dir, bracketed by the 5 frozen canaries
     run against FIXED sf0.1 data — the canaries anchor HOST speed, so
     they must not scale with the tier under measurement."""
-    _warm(spark, sf_dir)
+    warm(spark, sf_dir)
     # re-warm the canaries' own tables too: on a second tier the sf0.1
     # page-cache residue from the previous pass is stale, and a cold
     # canary_first would bias the host-drift normalization (ADVICE r13)
     if sf_dir != CANARY_DIR:
-        _warm(spark, CANARY_DIR)
-    first = {n: _time_query(spark, n, CANARY_DIR) for n in CANARY_QUERIES}
-    times = {}
-    for n in entries:
-        times[n] = _time_query(spark, n, sf_dir)
-        print(f"# {sf_dir}: {n} = {times[n]}s", file=sys.stderr,
-              flush=True)
-    last = {n: _time_query(spark, n, CANARY_DIR) for n in CANARY_QUERIES}
-    canary = round((sum(first.values()) + sum(last.values())) / 2, 3)
-    return {"times": times, "canary": canary,
-            "canary_first": round(sum(first.values()), 3),
-            "canary_last": round(sum(last.values()), 3)}
+        warm(spark, CANARY_DIR)
+    times, canary, _, _ = canary_bracket(
+        spark, CANARY_DIR,
+        lambda: {n: time_query(spark, n, sf_dir) for n in entries})
+    return times, canary["total"]
 
 
 def main() -> None:
     tier_dir = sys.argv[1] if len(sys.argv) > 1 else "/tmp/spark_graft_sf1"
     entries = sys.argv[2:] or DEFAULT_ENTRIES
-    from spark_expectations_spark.session import configure, scale_confs
+    spark = bench_session()
 
-    confs = scale_confs("local-dev", total_cores=32)
-    confs.update({"spark.driver.memory": "24g",
-                  "spark.sql.autoBroadcastJoinThreshold": "64m"})
-    spark = configure(
-        SparkSession.builder.master("local[32]")
-        .appName("spark_expectations_spark-bench-scale"), confs) \
-        .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1000).selectExpr("sum(id)").collect()
-    spark.range(0, 32, 1, 32).mapInPandas(
-        lambda it: it, "id long").write.format("noop") \
-        .mode("overwrite").save()
+    base, canary_base = _tier(spark, CANARY_DIR, entries)
+    big, canary_tier = _tier(spark, tier_dir, entries)
 
-    base = _tier(spark, "/root/testdata/sf0.1", entries)
-    big = _tier(spark, tier_dir, entries)
-
-    host_drift = big["canary"] / max(base["canary"], 1e-9)
+    host_drift = canary_tier / max(canary_base, 1e-9)
     out = {"metric": "scale_ratio_10x", "sf_base": 0.1,
-           "tier_dir": tier_dir, "canary_base": base["canary"],
-           "canary_tier": big["canary"],
+           "tier_dir": tier_dir, "canary_base": canary_base,
+           "canary_tier": canary_tier,
            "host_drift": round(host_drift, 3), "entries": {}}
     for n in entries:
-        raw = big["times"][n] / max(base["times"][n], 1e-9)
+        raw = big[n] / max(base[n], 1e-9)
         out["entries"][n] = {
-            "base_s": base["times"][n], "tier_s": big["times"][n],
+            "base_s": base[n], "tier_s": big[n],
             "ratio_raw": round(raw, 2),
             "ratio_norm": round(raw / max(host_drift, 1e-9), 2),
         }

@@ -1,10 +1,11 @@
 """Exclusive subset bench: bench.py's exact protocol on named queries.
 
 For adjudicating suspected regressions on individual entries without
-paying the full 149-query run: same session profile, same warmers,
+paying the full 155-entry run: same session profile, same warmers,
 same min-of-3 per query, same frozen-canary bracket (host-speed
-anchor). Run it ALONE on the host — overlapping Spark jobs produce the
-phantom regressions this tool exists to rule out (r12 bench notes).
+anchor) — all from bench.py's harness. Run it ALONE on the host —
+overlapping Spark jobs produce the phantom regressions this tool
+exists to rule out (r12 bench notes).
 
     python tools/bench_subset.py <query> [query ...]
 
@@ -19,11 +20,12 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
+from pathlib import Path
 
-sys.path.insert(0, ".")
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-from pyspark.sql import SparkSession  # noqa: E402
+from bench import (QUERIES, bench_session, canary_bracket,  # noqa: E402
+                   time_query, warm)
 
 
 def main() -> int:
@@ -32,59 +34,17 @@ def main() -> int:
         print("usage: bench_subset.py <query> [query ...]",
               file=sys.stderr)
         return 2
-    from bench import CANARY_QUERIES  # noqa: E402 - repo-root import
-    from spark_expectations_spark.queries import QUERIES
-    from spark_expectations_spark.session import configure, scale_confs
-
     unknown = [n for n in names if n not in QUERIES]
     if unknown:
         print(f"unknown queries: {unknown}", file=sys.stderr)
         return 2
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    confs = scale_confs("local-dev", total_cores=int(cpus))
-    confs.update({"spark.driver.memory": "24g",
-                  "spark.sql.autoBroadcastJoinThreshold": "64m"})
-    spark = configure(
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("spark_expectations_spark-bench-subset"),
-        confs).getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-
-    # identical warmers to bench.py: JVM/codegen, parquet readers +
-    # page cache, the Arrow worker pool
-    spark.range(1000).selectExpr("sum(id)").collect()
-    from spark_expectations_spark.queries import load
-    for t in ("lineitem", "orders", "customer", "documents", "embeddings",
-              "events", "part", "supplier", "nation", "region"):
-        load(spark, sf_dir, t).write.format("noop").mode("overwrite").save()
-    spark.range(0, 32, 1, 32).mapInPandas(
-        lambda it: it, "id long").write.format("noop").mode(
-        "overwrite").save()
-
-    def _time_query(name: str) -> float:
-        fn = QUERIES[name]
-        best = None
-        for _ in range(3):
-            t0 = time.time()
-            # r16 measurement fix: noop sink, mirroring bench.py
-            # (count() prunes subtrees — guide §1.4)
-            fn(spark, sf_dir).write.format("noop").mode(
-                "overwrite").save()
-            dt = time.time() - t0
-            best = dt if best is None else min(best, dt)
-            spark.catalog.clearCache()
-        print(f"# {name}: {round(best, 3)}s (min of 3)", file=sys.stderr)
-        return round(best, 3)
-
-    canary_first = {n: _time_query(n) for n in CANARY_QUERIES}
-    timings = {n: _time_query(n) for n in names}
-    canary_last = {n: _time_query(n) for n in CANARY_QUERIES}
-    canary = {"first": round(sum(canary_first.values()), 3),
-              "last": round(sum(canary_last.values()), 3)}
-    canary["ratio"] = round(canary["last"] / max(canary["first"], 1e-9), 3)
-    canary["total"] = round((canary["first"] + canary["last"]) / 2, 3)
+    spark = bench_session()
+    warm(spark, sf_dir)
+    timings, canary, _, _ = canary_bracket(
+        spark, sf_dir, lambda: {n: time_query(spark, n, sf_dir)
+                                for n in names})
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     print(json.dumps({
         "metric": "subset_bench", "unit": "sec", "queries": timings,

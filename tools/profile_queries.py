@@ -1,15 +1,15 @@
 """Per-query time breakdown: driver (plan/codegen) vs executor work.
 
-For each named query, runs bench.py's protocol (same session profile,
-same warmers, same noop-sink action) but additionally splits the
-wall clock into:
+For each named query, runs bench.py's harness (same session profile,
+same warmers, same noop-sink action, min over 3 runs) and splits the
+best run's wall clock into:
 
 * ``build_s``   — Python DSL + Catalyst analysis (constructing the DF)
 * ``exec_s``    — action wall time (min over runs, like bench.py)
 * ``n_jobs`` / ``n_stages`` / ``n_tasks`` — scheduling surface
 * ``task_s``    — sum of executorRunTime across the query's stages
 * ``cpu_s``     — sum of executorCpuTime
-* ``shuffle_mb`` — shuffle write bytes
+* ``shuffle_w_mb`` / ``shuffle_r_mb`` — shuffle write / read bytes
 * ``input_mb``   — bytes read from source
 * ``sched_gap_s`` — exec_s - task_s/cores: wall time NOT covered by
   task execution = driver planning/codegen/scheduling/stage gaps.
@@ -22,7 +22,10 @@ Usage:
 
 Environment: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
 SPARK_GRAFT_CPUS (default 32). Prints one JSON line per query plus a
-sorted summary table on stderr. Run ALONE on the host.
+sorted summary table on stderr. Job metrics come from the status
+store of the run's tagged jobs (bench.job_metrics), with the UI off.
+``rows`` is always -1: the noop sink counts no rows. Run ALONE on the
+host.
 """
 
 from __future__ import annotations
@@ -30,118 +33,45 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
-import urllib.request
+from pathlib import Path
 
-sys.path.insert(0, ".")
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-from pyspark.sql import SparkSession  # noqa: E402
-
-
-def _api(base: str, path: str):
-    with urllib.request.urlopen(base + path, timeout=10) as r:
-        return json.load(r)
+from bench import (QUERIES, bench_session, job_metrics,  # noqa: E402
+                   run_query, warm)
 
 
 def main() -> int:
-    names = sys.argv[1:]
-    from spark_expectations_spark.queries import QUERIES, load
-    from spark_expectations_spark.session import configure, scale_confs
-
-    if not names:
-        names = [
-            "docs_weighted_cosine", "docs_set_jaccard_join",
-            "docs_dedup_pipeline", "part_copurchase_rank", "ann_ivf_kmeans",
-            "embed_ivf_pq", "embed_cluster_qa", "docs_fold_pack",
-            "embed_kmeans", "docs_label_alpha_ci",
-        ]
+    names = sys.argv[1:] or [
+        "docs_weighted_cosine", "docs_set_jaccard_join",
+        "docs_dedup_pipeline", "part_copurchase_rank", "ann_ivf_kmeans",
+        "embed_ivf_pq", "embed_cluster_qa", "docs_fold_pack",
+        "embed_kmeans", "docs_label_alpha_ci",
+    ]
     unknown = [n for n in names if n not in QUERIES]
     if unknown:
         print(f"unknown queries: {unknown}", file=sys.stderr)
         return 2
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    confs = scale_confs("local-dev", total_cores=cpus)
-    confs.update({
-        "spark.driver.memory": "24g",
-        "spark.sql.autoBroadcastJoinThreshold": "64m",
-        # profiling session only: the UI REST API is the metrics source
-        "spark.ui.enabled": "true",
-        "spark.ui.port": "4049",
-    })
-    spark = configure(
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("spark_expectations_spark-profile"), confs).getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    sc = spark.sparkContext
-
-    # bench.py's warmers
-    spark.range(1000).selectExpr("sum(id)").collect()
-    for t in ("lineitem", "orders", "customer", "documents", "embeddings",
-              "events", "part", "supplier", "nation", "region"):
-        load(spark, sf_dir, t).write.format("noop").mode("overwrite").save()
-    spark.range(0, 32, 1, 32).mapInPandas(
-        lambda it: it, "id long").write.format("noop").mode("overwrite").save()
-
-    base = f"http://localhost:4049/api/v1/applications/{sc.applicationId}"
+    spark = bench_session()
+    cores = spark.sparkContext.defaultParallelism
+    warm(spark, sf_dir)
 
     results = []
     for name in names:
-        fn = QUERIES[name]
         best = None
-        for run in range(3):
-            group = f"prof-{name}-{run}"
-            sc.setJobGroup(group, name)
-            t0 = time.time()
-            df = fn(spark, sf_dir)
-            t1 = time.time()
-            # r16 measurement fix: noop sink, mirroring bench.py
-            # (count() prunes subtrees — guide §1.4)
-            df.write.format("noop").mode("overwrite").save()
-            n = -1
-            t2 = time.time()
-            sc.setJobGroup(None, None)
-            rec = {"query": name, "rows": n,
-                   "build_s": round(t1 - t0, 3),
-                   "exec_s": round(t2 - t1, 3),
-                   "total_s": round(t2 - t0, 3)}
+        for _ in range(3):
+            with job_metrics(spark) as m:
+                build_s, exec_s = run_query(spark, name, sf_dir)
+            rec = {"query": name, "rows": -1,
+                   "build_s": round(build_s, 3),
+                   "exec_s": round(exec_s, 3),
+                   "total_s": round(build_s + exec_s, 3)}
+            rec.update((k, v) for k, v in m.items() if k != "jobs")
+            rec["sched_gap_s"] = round(exec_s - m["task_s"] / cores, 3)
             if best is None or rec["total_s"] < best["total_s"]:
-                # collect stage metrics for THIS run's jobs
-                try:
-                    jobs = _api(base, "/jobs?status=succeeded")
-                    stage_ids = set()
-                    njobs = 0
-                    for j in jobs:
-                        if j.get("jobGroup") == group:
-                            njobs += 1
-                            stage_ids.update(j.get("stageIds", []))
-                    task_ms = cpu_ns = sw = sr = inp = 0
-                    ntasks = nst = 0
-                    for st in _api(base, "/stages?status=complete"):
-                        if st["stageId"] in stage_ids:
-                            nst += 1
-                            task_ms += st.get("executorRunTime", 0)
-                            cpu_ns += st.get("executorCpuTime", 0)
-                            sw += st.get("shuffleWriteBytes", 0)
-                            sr += st.get("shuffleReadBytes", 0)
-                            inp += st.get("inputBytes", 0)
-                            ntasks += st.get("numCompleteTasks", 0)
-                    rec.update({
-                        "n_jobs": njobs, "n_stages": nst, "n_tasks": ntasks,
-                        "task_s": round(task_ms / 1e3, 3),
-                        "cpu_s": round(cpu_ns / 1e9, 3),
-                        "shuffle_w_mb": round(sw / 1e6, 2),
-                        "shuffle_r_mb": round(sr / 1e6, 2),
-                        "input_mb": round(inp / 1e6, 2),
-                        "sched_gap_s": round(
-                            rec["exec_s"] - task_ms / 1e3 / cpus, 3),
-                    })
-                except Exception as exc:  # REST hiccup: keep the timing
-                    rec["metrics_err"] = str(exc)
                 best = rec
-            spark.catalog.clearCache()
         results.append(best)
         print(json.dumps(best), flush=True)
 
@@ -149,9 +79,9 @@ def main() -> int:
           "task_sum  gap   jobs stages  shufW(MB)", file=sys.stderr)
     for r in sorted(results, key=lambda r: -r["total_s"]):
         print(f"#  {r['query']:<28} {r['total_s']:6.2f} {r['build_s']:6.2f} "
-              f"{r['exec_s']:6.2f} {r.get('task_s', -1):8.2f} "
-              f"{r.get('sched_gap_s', -1):5.2f} {r.get('n_jobs', -1):4d} "
-              f"{r.get('n_stages', -1):5d} {r.get('shuffle_w_mb', -1):9.2f}",
+              f"{r['exec_s']:6.2f} {r['task_s']:8.2f} "
+              f"{r['sched_gap_s']:5.2f} {r['n_jobs']:4d} "
+              f"{r['n_stages']:5d} {r['shuffle_w_mb']:9.2f}",
               file=sys.stderr)
     spark.stop()
     return 0
