@@ -56,8 +56,7 @@ def main() -> None:
         text.url_normalize(F.col("url")).alias("url"),
         text.registered_domain(p["host"]).alias("domain"))
     # lineage cut: the regex-heavy extraction feeds a dozen downstream
-    # stages — checkpoint once so Catalyst plans stay bounded (the same
-    # reason DQConfig offers use_local_checkpoint)
+    # stages — checkpoint once so Catalyst plans stay bounded
     staged = staged.localCheckpoint(eager=True)
     print("staged:", staged.count(), "pages;",
           staged.select("domain").distinct().count(), "domains")

@@ -7,7 +7,7 @@ query rules, plus large-scale training-data operators (dedup, similarity
 search, text analysis, multimodal plumbing) the reference lacks.
 """
 
-from .core.engine import DQEngine, reprocess_quarantine, with_expectations
+from .core.engine import DQEngine, reprocess_quarantine
 from .core.rules import (
     ACTION_DROP,
     ACTION_FAIL,
@@ -35,8 +35,8 @@ __version__ = "0.1.0"
 
 __all__ = [
     "session",
-    "DQEngine", "reprocess_quarantine", "with_expectations", "Rule",
-    "RuleSet", "DQConfig", "DQResult",
+    "DQEngine", "reprocess_quarantine", "Rule", "RuleSet", "DQConfig",
+    "DQResult",
     "WriterOptions", "DQRuleError", "DQRowFailError", "DQAggFailError",
     "ROW_DQ", "AGG_DQ", "QUERY_DQ", "ACTION_IGNORE", "ACTION_DROP",
     "ACTION_FAIL", "RULE_COLUMNS",

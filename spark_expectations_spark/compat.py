@@ -24,7 +24,8 @@ from .core.rules import RuleSet, _as_bool
 from .core.state import DQConfig, WriterOptions
 from .notifications import (NotificationHub, NotificationRules,
                             console_notifier, email_notifier,
-                            webhook_notifier)
+                            slack_notifier, teams_notifier,
+                            webhook_notifier, zoom_notifier)
 from .sinks.builder import WrappedDataFrameWriter
 
 #: The reference exposes a separate builder class for streaming sinks
@@ -129,22 +130,25 @@ class SparkExpectations:
                 conf.get(SE_NOTIFICATIONS_MIN_PRIORITY_SLACK, "low")),
         )
         channels = [console_notifier]
-        # vendor channels (reference plugins/*): each is a webhook POST —
-        # the same JSON payload our webhook_notifier sends
-        for enable_key, url_key, headers in (
-            (SE_NOTIFICATIONS_ENABLE_SLACK, SE_NOTIFICATIONS_SLACK_WEBHOOK_URL,
-             None),
-            (SE_NOTIFICATIONS_ENABLE_TEAMS, SE_NOTIFICATIONS_TEAMS_WEBHOOK_URL,
-             None),
-            (SE_NOTIFICATIONS_ENABLE_ZOOM, SE_NOTIFICATIONS_ZOOM_WEBHOOK_URL,
-             {"Authorization": f"Bearer {conf.get(SE_NOTIFICATIONS_ZOOM_TOKEN)}"}
-             if conf.get(SE_NOTIFICATIONS_ZOOM_TOKEN) else None),
-            (SE_NOTIFICATIONS_ENABLE_PAGERDUTY,
-             SE_NOTIFICATIONS_PAGERDUTY_WEBHOOK_URL, None),
+        # vendor channels (reference plugins/*), each posting the body its
+        # webhook expects; PagerDuty's Events API also needs a routing
+        # key that user_conf does not carry, so it gets the generic body
+        token = conf.get(SE_NOTIFICATIONS_ZOOM_TOKEN)
+        for enabled, url, make in (
+            (b(SE_NOTIFICATIONS_ENABLE_SLACK, False),
+             conf.get(SE_NOTIFICATIONS_SLACK_WEBHOOK_URL), slack_notifier),
+            (b(SE_NOTIFICATIONS_ENABLE_TEAMS, False),
+             conf.get(SE_NOTIFICATIONS_TEAMS_WEBHOOK_URL), teams_notifier),
+            # Zoom's webhook rejects a post without its token
+            (b(SE_NOTIFICATIONS_ENABLE_ZOOM, False) and token,
+             conf.get(SE_NOTIFICATIONS_ZOOM_WEBHOOK_URL),
+             lambda u: zoom_notifier(u, str(token))),
+            (b(SE_NOTIFICATIONS_ENABLE_PAGERDUTY, False),
+             conf.get(SE_NOTIFICATIONS_PAGERDUTY_WEBHOOK_URL),
+             webhook_notifier),
         ):
-            if b(enable_key, False) and conf.get(url_key):
-                channels.append(
-                    webhook_notifier(str(conf[url_key]), headers=headers))
+            if enabled and url:
+                channels.append(make(str(url)))
         if (b(SE_NOTIFICATIONS_ENABLE_EMAIL, False)
                 and conf.get(SE_NOTIFICATIONS_EMAIL_SMTP_HOST)):
             channels.append(email_notifier(
@@ -185,7 +189,6 @@ class SparkExpectations:
             stats_table=self.stats_table,
             stats_writer=stats_writer,
             enable_detailed_stats=detailed,
-            write_target_table=write_to_table,
             target_table=target_table if write_to_table else None,
             target_writer=table_writer,
             use_temp_table=write_to_temp_table,

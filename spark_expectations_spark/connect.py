@@ -25,8 +25,8 @@ sinks (batch + streaming)   full — DataFrameWriter API only
 ``plans.execution_metrics`` returns ``{}`` (documented)
 ``plans.whole_stage_
 codegen_spans``             falls back to the ``codegen`` explain count
-query_dq runtime budget     no job-group watchdog (no ``sparkContext``) —
-                            the query runs un-timed (query_dq.py:52-78)
+query_dq runtime budget     no job-tag watchdog (no ``sparkContext``) —
+                            the query runs un-timed (query_dq.py:54-83)
 similarity broadcast        closure capture instead of ``sc.broadcast``
                             (similarity.py:44-60)
 ``sinks.layout`` fs ops     unavailable (Hadoop FS via ``_jvm``) — raises
@@ -118,8 +118,9 @@ def spark_context(spark: Any) -> Optional[Any]:
     """THE session JVM escape: ``spark.sparkContext`` or ``None`` under
     Connect (the property raises ``PySparkAttributeError`` there —
     connect/session.py's ``__getattr__`` JVM_ATTRIBUTE_NOT_SUPPORTED
-    list). Used for job-group timeouts, explicit broadcasts, and Hadoop
-    FS access — each caller's fallback is listed in the matrix above.
+    list). Used for query_dq's job-tag timeouts, explicit broadcasts,
+    and Hadoop FS access — each caller's fallback is listed in the
+    matrix above.
     Non-AttributeError failures propagate (same contract as
     :func:`jvm_query_execution`)."""
     try:

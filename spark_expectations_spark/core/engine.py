@@ -21,15 +21,14 @@ query rules, error and stats writes, final frame to the noop sink): 20
 jobs, 25 with ``enable_detailed_stats``. The reference runs >=4 full scans
 + 2 jobs per agg rule; at 100 TB the difference is the whole game.
 
-A thin ``with_expectations`` decorator preserves the reference's public
-API shape (core/expectations.py:893).
+The reference's ``with_expectations`` decorator lives in ``compat.py``,
+with the reference's signature, on top of ``DQEngine.run``.
 """
 
 from __future__ import annotations
 
-import functools
 import logging
-from typing import Callable, Mapping, Optional
+from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -132,7 +131,7 @@ class DQEngine:
                     spark, rules, result, True)
 
         # -- final write + stats --------------------------------------------
-        if cfg.write_target_table and cfg.target_table:
+        if cfg.target_table:
             writer.write_batch(final_df, cfg.target_table, cfg.target_writer)
         self._write_stats(spark, result)
         return result
@@ -165,12 +164,7 @@ class DQEngine:
         cfg = self.config
         if cfg.use_temp_table:
             df = writer.materialize_temp_table(df, cfg.table_name, cfg.temp_writer)
-        flags = row_dq.project_flags(df, rules.for_stage(ROW_DQ))
-        if cfg.use_local_checkpoint:
-            flags = flags.localCheckpoint(eager=False)
-        elif cfg.cache_projected:
-            flags = flags.persist()
-        return flags
+        return row_dq.project_flags(df, rules.for_stage(ROW_DQ))
 
     def _agg(self, df: DataFrame, rules: RuleSet, result: DQResult,
              target: bool, fuse_rows: bool = False):
@@ -207,13 +201,7 @@ class DQEngine:
         if cols and agg_rules:
             setattr(result, f"{side}_agg_grouped",
                     agg_dq.evaluate_agg_rules_grouped(df, agg_rules, cols))
-        try:
-            self._gate(result, f"{side}_agg_dq", res)
-        except Exception:
-            # the run aborts before _row can release the cache
-            if fused is not None and self.config.cache_projected:
-                flags.unpersist()
-            raise
+        self._gate(result, f"{side}_agg_dq", res)
         return fused
 
     def _query(self, spark: SparkSession, rules: RuleSet, result: DQResult,
@@ -228,8 +216,7 @@ class DQEngine:
     def _gate(self, result: DQResult, stage: str, res) -> None:
         """A stage's status, then its 'fail'-action gate."""
         result.status[stage] = "Failed" if agg_dq.failed(res) else "Passed"
-        if self.config.enforce_fail:
-            agg_dq.enforce_fail_action(res, stage)
+        agg_dq.enforce_fail_action(res, stage)
 
     def _row(self, df: DataFrame, rules: RuleSet, result: DQResult,
              fused_state=None) -> DataFrame:
@@ -247,27 +234,17 @@ class DQEngine:
         result.error_count = summary.error_count
         result.output_count = summary.output_count
 
+        errors = row_dq.errors_from_flags(flags, stage_rules)
+        if cfg.write_error_table and summary.error_count > 0:
+            writer.write_batch(
+                writer.stamp_run_metadata(errors, result.run_id),
+                cfg.resolved_error_table(), cfg.error_writer)
+        result.error_df = errors
         try:
-            errors = row_dq.errors_from_flags(flags, stage_rules)
-            if cfg.write_error_table and summary.error_count > 0:
-                writer.write_batch(
-                    writer.stamp_run_metadata(errors, result.run_id),
-                    cfg.resolved_error_table(), cfg.error_writer)
-            result.error_df = errors
-            try:
-                final = row_dq.final_from_flags(
-                    flags, stage_rules, summary if cfg.enforce_fail else None)
-            except row_dq.DQRowFailError:
-                result.status["row_dq"] = "Failed"
-                raise
-        finally:
-            # release on EVERY exit — a fail-action abort or a sink error
-            # must not leak the persisted flag frame for the driver's
-            # lifetime (NOTE: the final_df's lineage re-reads flags, but
-            # the error-table write above already consumed the cache; at
-            # test scale recomputing the projection is one fused scan)
-            if cfg.cache_projected:
-                flags.unpersist()
+            final = row_dq.final_from_flags(flags, stage_rules, summary)
+        except row_dq.DQRowFailError:
+            result.status["row_dq"] = "Failed"
+            raise
         result.status["row_dq"] = "Failed" if summary.error_count else "Passed"
         return final
 
@@ -291,7 +268,7 @@ class DQEngine:
         final = row_dq.final_from_flags(flags, stage_rules, None)
         result.final_df = final
         result.status["row_dq"] = "Passed"
-        if cfg.write_target_table and cfg.target_table:
+        if cfg.target_table:
             result.streaming_query = writer.write_stream(
                 final, cfg.target_table, cfg.target_writer)
         # reference parity: one batch-mode stats row per streaming run,
@@ -311,24 +288,6 @@ class DQEngine:
             return fn(*args)
         finally:
             result.timings.append(StageTiming(name, t0, utcnow()))
-
-
-def with_expectations(
-    rules: RuleSet,
-    config: DQConfig,
-) -> Callable[[Callable[..., DataFrame]], Callable[..., DQResult]]:
-    """API-parity sugar for ``DQEngine.run`` (reference
-    core/expectations.py:893). The wrapped function returns the DQResult;
-    ``.final_df`` is the reference's return value."""
-
-    def deco(func: Callable[..., DataFrame]) -> Callable[..., DQResult]:
-        @functools.wraps(func)
-        def wrapper(*args, **kwargs) -> DQResult:
-            df = func(*args, **kwargs)
-            return DQEngine(config).run(df, rules)
-        return wrapper
-
-    return deco
 
 
 def reprocess_quarantine(

@@ -67,28 +67,20 @@ class DQConfig:
     stats_writer: WriterOptions = field(default_factory=WriterOptions)
     enable_detailed_stats: bool = False
 
-    write_target_table: bool = False
+    #: when set, the final frame is written here
     target_table: Optional[str] = None
     target_writer: WriterOptions = field(default_factory=WriterOptions)
 
-    #: sever lineage between stages via localCheckpoint (replaces the
-    #: reference's write-to-temp-table-and-re-read, expectations.py:492-521)
-    use_local_checkpoint: bool = False
-    #: reference-parity alternative: materialize the input to
-    #: {table_name}_temp via temp_writer and re-read before row_dq
+    #: reference parity (expectations.py:492-521): materialize the input
+    #: to {table_name}_temp via temp_writer and re-read before row_dq
     use_temp_table: bool = False
     temp_writer: WriterOptions = field(default_factory=WriterOptions)
-    #: enforce 'fail' actions (always True in reference batch path)
-    enforce_fail: bool = True
     #: runtime budget (seconds) for each query_dq stage: the fused
-    #: assertion SELECT runs under a cancellable job group; on budget
+    #: assertion SELECT runs under a job tag a watchdog cancels; on budget
     #: overrun rules re-evaluate individually and the slow ones get
     #: status='timeout' (gating like failures) instead of hanging the
     #: run. None = no budget (reference behavior).
     query_timeout_s: Optional[float] = None
-    #: cache the projected frame between summary and error write. Sensible at
-    #: test scale; at 100 TB prefer False (two scans beat caching 100 TB).
-    cache_projected: bool = False
     #: per-segment attribution for SOURCE agg rules: when set, every
     #: source agg_dq rule is ALSO evaluated per combination of these
     #: columns (operators/agg_dq.evaluate_agg_rules_grouped) and the

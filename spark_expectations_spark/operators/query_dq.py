@@ -51,17 +51,17 @@ class QueryRuleResult:
         return d
 
 
-def _run_with_timeout(spark: SparkSession, fn, timeout_s: Optional[float],
-                      desc: str):
-    """Run ``fn`` (which triggers Spark jobs on THIS thread) inside a
-    job group that a watchdog timer cancels after ``timeout_s`` seconds.
-    Returns ``(value, timed_out)``; with ``timeout_s=None`` there is no
-    budget, so ``fn`` runs as is and no job group is touched. Spark has
-    no per-query timeout of its own; job-group cancellation is the
-    supported mechanism (the same one the UI's kill button uses). Under
-    Spark Connect there is no ``sparkContext`` — the query then runs
-    without a watchdog (the caller's contract is best-effort budget,
-    not hard real-time).
+def _run_with_timeout(spark: SparkSession, fn, timeout_s: Optional[float]):
+    """Run ``fn`` (which triggers Spark jobs on THIS thread) under a
+    SparkContext job tag that a watchdog timer cancels after
+    ``timeout_s`` seconds. Returns ``(value, timed_out)``; with
+    ``timeout_s=None`` there is no budget, so ``fn`` runs as is. Spark
+    has no per-query timeout of its own. A job tag adds to the caller's
+    job group, description and tags instead of replacing them, so a
+    pipeline that cancels its own group still reaches the budgeted jobs.
+    Under Spark Connect there is no ``sparkContext`` — the query then
+    runs without a watchdog (the caller's contract is best-effort
+    budget, not hard real-time).
 
     Interruptibility caveat: cancellation marks tasks killed, but a
     task only dies when its generated code polls the kill flag. Scans,
@@ -77,36 +77,31 @@ def _run_with_timeout(spark: SparkSession, fn, timeout_s: Optional[float],
 
     from ..connect import spark_context
 
-    # no budget, or Spark Connect (no job-group API on the client)
+    # no budget, or Spark Connect (no job-tag API on the client)
     sc = None if timeout_s is None else spark_context(spark)
     if sc is None:
         return fn(), False
-    gid = f"se-querydq-{uuid.uuid4().hex[:12]}"
-    # snapshot the caller's thread-local job-group properties BEFORE
-    # stamping ours: clusters commonly wrap whole pipelines in
-    # setJobGroup for cost attribution, and nulling these in the finally
-    # would silently strip that attribution from every job the caller
-    # runs after the DQ stage
-    _props = ("spark.jobGroup.id", "spark.job.description",
-              "spark.job.interruptOnCancel")
-    saved = {p: sc.getLocalProperty(p) for p in _props}
-    sc.setJobGroup(gid, desc, interruptOnCancel=True)
+    tag = f"se-querydq-{uuid.uuid4().hex[:12]}"
+    # interrupt the task threads on cancel for the budget only, then put
+    # back the caller's choice for the jobs it runs after the DQ stage
+    interrupt = sc.getLocalProperty("spark.job.interruptOnCancel")
+    sc.addJobTag(tag)
+    sc.setInterruptOnCancel(True)
     done = threading.Event()
     expired = threading.Event()
 
     def _watchdog():
         # REPEATING cancel, not a one-shot: a multi-subquery SELECT runs
-        # several sequential jobs, and cancelJobGroup only cancels jobs
-        # active at that instant — a single cancel landing in the gap
-        # between two jobs would be a no-op and the next job would run
-        # unbudgeted. Re-cancelling every 250ms until the main thread
-        # signals completion closes that race with public APIs
-        # (cancelJobGroupAndFutureJobs is JVM-only as of PySpark 4.1).
+        # several sequential jobs, and cancelJobsWithTag only cancels
+        # jobs active at that instant — a single cancel landing in the
+        # gap between two jobs would be a no-op and the next job would
+        # run unbudgeted. Re-cancelling every 250ms until the main thread
+        # signals completion closes that race.
         if done.wait(timeout_s):
             return
         expired.set()
         while not done.is_set():
-            sc.cancelJobGroup(gid)
+            sc.cancelJobsWithTag(tag)
             done.wait(0.25)
 
     watchdog = threading.Thread(target=_watchdog, daemon=True)
@@ -126,18 +121,14 @@ def _run_with_timeout(spark: SparkSession, fn, timeout_s: Optional[float],
         raise
     finally:
         done.set()
-        # restore the caller's thread-local properties (not None them) —
-        # a stomped description/interruptOnCancel would misattribute all
-        # later jobs on this thread and change their task-kill semantics
-        for p in _props:
-            sc.setLocalProperty(p, saved[p])
+        sc.removeJobTag(tag)
+        sc.setLocalProperty("spark.job.interruptOnCancel", interrupt)
 
 
 def evaluate_query_rules(
     spark: SparkSession,
     rules: Sequence[Rule],
     *,
-    capture_secondary: bool = True,
     timeout_s: Optional[float] = None,
 ) -> list[QueryRuleResult]:
     """ALL rules' pass/fail bits AND actual values are fused into ONE
@@ -148,7 +139,7 @@ def evaluate_query_rules(
     of the reference's 2 jobs per rule (utils/actions.py:306-430).
 
     ``timeout_s`` puts a runtime budget on the stage: the fused SELECT
-    runs under a cancellable job group, and if it exceeds the budget the
+    runs under a cancellable job tag, and if it exceeds the budget the
     rules are re-evaluated INDIVIDUALLY, each under its own
     ``timeout_s``, so one pathological scalar subquery (the classic
     reference-user failure: an accidental cross join in a rule) marks
@@ -160,12 +151,10 @@ def evaluate_query_rules(
         return []
     parsed = [parse_expectation(r.expectation) for r in rules]
     row, timed_out = _run_with_timeout(
-        spark, lambda: spark.sql(_select(rules, parsed)).first(), timeout_s,
-        "query_dq fused assertions")
+        spark, lambda: spark.sql(_select(rules, parsed)).first(), timeout_s)
     if timed_out:
-        return _evaluate_individually(
-            spark, rules, parsed, capture_secondary, timeout_s)
-    return [_result(spark, r, p, row, i, capture_secondary, timeout_s)
+        return _evaluate_individually(spark, rules, parsed, timeout_s)
+    return [_result(spark, r, p, row, i, timeout_s)
             for i, (r, p) in enumerate(zip(rules, parsed))]
 
 
@@ -181,12 +170,10 @@ def _select(rules: Sequence[Rule], parsed: Sequence[Any]) -> str:
 
 
 def _result(spark: SparkSession, r: Rule, p, row, i: int,
-            capture_secondary: bool,
             timeout_s: Optional[float]) -> QueryRuleResult:
     """Rule ``r``'s result from column ``i`` of a ``_select`` row, with
     its secondary queries captured."""
-    secondary, s_timeouts = _capture_secondaries(
-        spark, r, capture_secondary, timeout_s)
+    secondary, s_timeouts = _capture_secondaries(spark, r, timeout_s)
     return QueryRuleResult(
         rule=r,
         status="pass" if bool(row[f"status_{i}"]) else "fail",
@@ -200,7 +187,6 @@ def _result(spark: SparkSession, r: Rule, p, row, i: int,
 def _capture_secondaries(
     spark: SparkSession,
     r: Rule,
-    capture_secondary: bool,
     timeout_s: Optional[float],
 ) -> tuple[dict[str, list[dict]], list[str]]:
     """Secondary-query capture shared by the fused and per-rule paths.
@@ -211,13 +197,11 @@ def _capture_secondaries(
     an empty list always means 'ran clean, no rows'."""
     secondary: dict[str, list[dict]] = {}
     timeouts: list[str] = []
-    if not (capture_secondary and r.enable_querydq_custom_output
-            and r.secondary_queries):
+    if not (r.enable_querydq_custom_output and r.secondary_queries):
         return secondary, timeouts
     for alias, sql in r.secondary_queries.items():
         rows, s_to = _run_with_timeout(
-            spark, lambda q=sql: spark.sql(q).collect(), timeout_s,
-            f"query_dq secondary {r.rule}:{alias}")
+            spark, lambda q=sql: spark.sql(q).collect(), timeout_s)
         if s_to:
             timeouts.append(alias)
             continue
@@ -229,22 +213,20 @@ def _evaluate_individually(
     spark: SparkSession,
     rules: Sequence[Rule],
     parsed: Sequence[Any],
-    capture_secondary: bool,
     timeout_s: float,
 ) -> list[QueryRuleResult]:
     """Per-rule fallback after the fused SELECT blew its budget: each
-    rule gets its own job group + watchdog, so the slow subquery is
+    rule gets its own job tag + watchdog, so the slow subquery is
     identified by name instead of poisoning the batch."""
     out: list[QueryRuleResult] = []
     for r, p in zip(rules, parsed):
         row, timed_out = _run_with_timeout(
-            spark, lambda q=_select([r], [p]): spark.sql(q).first(),
-            timeout_s, f"query_dq rule {r.rule}")
+            spark, lambda q=_select([r], [p]): spark.sql(q).first(), timeout_s)
         out.append(QueryRuleResult(
             rule=r, status="timeout",
             expected=p.expected_repr() if p is not None else None)
             if timed_out else
-            _result(spark, r, p, row, 0, capture_secondary, timeout_s))
+            _result(spark, r, p, row, 0, timeout_s))
     return out
 
 

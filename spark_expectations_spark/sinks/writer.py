@@ -250,9 +250,8 @@ def materialize_temp_table(
 ) -> DataFrame:
     """Write df to ``{table}_temp`` and re-read — severs lineage so
     downstream stages re-plan from a materialized scan (reference
-    core/expectations.py:492-521 'break the spark plan'). Prefer
-    ``df.localCheckpoint()`` (DQConfig.use_local_checkpoint) unless the
-    intermediate must survive the session.
+    core/expectations.py:492-521 'break the spark plan'). Within one
+    session, ``df.localCheckpoint()`` cuts lineage without a table.
 
     The temp write always OVERWRITES: it is a per-run plan break, and
     honoring a caller's default append mode would accumulate every

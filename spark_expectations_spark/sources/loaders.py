@@ -1,4 +1,4 @@
-"""Rule loaders: YAML / JSON files → RuleSet (and rules DataFrame).
+"""Rule loaders: YAML / JSON files → RuleSet.
 
 Re-expresses reference rules/plugins/{yaml_loader,json_loader,_flatten}.py:
 per-environment blocks (``dq_env``), product-level defaults, normalization
@@ -91,8 +91,3 @@ def rules_from_doc(
             rec = {**defaults, **r, **env_overrides}
             records.append({k: v for k, v in rec.items() if k in RULE_COLUMNS})
     return RuleSet.from_records(records, params=params)
-
-
-def rules_to_df(spark, ruleset: RuleSet):
-    """RuleSet → canonical 17-column rules DataFrame."""
-    return ruleset.to_df(spark)

@@ -29,22 +29,6 @@ def read_csv(
     return r.csv(path)
 
 
-def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
-
-
-def read_json(spark: SparkSession, path: str,
-              schema: Optional[str] = None) -> DataFrame:
-    r = spark.read
-    if schema:
-        r = r.schema(schema)
-    return r.json(path)
-
-
-def read_orc(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.orc(path)
-
-
 def read_jsonl_quarantine(
     spark: SparkSession,
     path: str,

@@ -143,7 +143,7 @@ class TestConnectDegradation:
         )
 
         out, timed_out = _run_with_timeout(
-            _FakeConnectSession(), lambda: 41 + 1, 0.001, "probe")
+            _FakeConnectSession(), lambda: 41 + 1, 0.001)
         assert (out, timed_out) == (42, False)
 
     def test_broadcast_degrades_to_closure_capture(self):

@@ -449,6 +449,45 @@ class TestQueryDQTimeout:
         assert spark.sparkContext.getLocalProperty("spark.jobGroup.id") is None
 
 
+class TestQueryDQBudgetTag:
+    """The query_dq budget tags its jobs instead of setting a job group,
+    so a pipeline that cancels its own group still reaches them."""
+
+    def test_budgeted_jobs_stay_in_callers_group(self, spark, simple3):
+        from spark_expectations_spark.operators import query_dq
+        simple3.createOrReplaceTempView("qt_view")
+        rules = [_rule(rule="tot", rule_type="query_dq",
+                       expectation="(select sum(col3) from qt_view) > 20")]
+        sc = spark.sparkContext
+        sc.setJobGroup("caller-budget-group", "caller pipeline")
+        try:
+            res = query_dq.evaluate_query_rules(spark, rules, timeout_s=60.0)
+        finally:
+            for p in ("spark.jobGroup.id", "spark.job.description",
+                      "spark.job.interruptOnCancel"):
+                sc.setLocalProperty(p, None)
+        assert res[0].status == "pass"
+        assert sc.statusTracker().getJobIdsForGroup("caller-budget-group")
+        assert not sc.getJobTags()
+
+
+class TestDQConfigSurface:
+    def test_field_names(self):
+        """Every DQConfig field is an option the engine must honour and
+        the tests must cover; a new one shows up here as a diff."""
+        import dataclasses
+        assert [f.name for f in dataclasses.fields(DQConfig)] == [
+            "product_id", "table_name", "params", "source_view",
+            "target_view", "views",
+            "write_error_table", "error_table", "error_writer",
+            "write_stats_table", "stats_table", "stats_writer",
+            "enable_detailed_stats",
+            "target_table", "target_writer",
+            "use_temp_table", "temp_writer", "query_timeout_s",
+            "agg_group_cols", "notifications",
+        ]
+
+
 class TestStats:
     def test_stats_record(self, spark, simple3):
         rules = RuleSet([
@@ -836,8 +875,16 @@ class TestRound5ReviewFixes:
         assert "Ignore-action rules failed silently" in txt
         assert "rule=qty" in txt and "failed=7" in txt
 
-    def test_cache_projected_released_on_fail_action(self, spark, simple3):
-        from spark_expectations_spark.operators.row_dq import DQRowFailError
+    @pytest.mark.parametrize("rule_type, expectation, error", [
+        ("row_dq", "col1 > 100", DQRowFailError),
+        # with row_dq on, the source agg rule rides the fused
+        # row-summary job and aborts the run before the row stage
+        ("agg_dq", "sum(col3) > 1000", DQAggFailError),
+    ], ids=["row", "source_agg"])
+    def test_fail_action_leaves_nothing_persisted(
+            self, spark, simple3, rule_type, expectation, error):
+        """Every exit path releases what it took: a default-config run
+        that aborts on a fail action leaves no RDD persisted."""
         jsc = spark.sparkContext._jsc.sc()
 
         def ids():
@@ -849,12 +896,16 @@ class TestRound5ReviewFixes:
 
         before = ids()
         cfg = DQConfig(product_id="p", table_name="t",
-                       write_error_table=False, cache_projected=True)
-        rules = RuleSet([Rule("p", "t", "row_dq", "big", "col1",
-                              "col1 > 100", action_if_failed="fail")])
-        with pytest.raises(DQRowFailError):
+                       write_error_table=False)
+        rules = RuleSet([
+            Rule("p", "t", "row_dq", "pos", "col1", "col1 > 0",
+                 action_if_failed="drop"),
+            Rule("p", "t", rule_type, "big", "col1", expectation,
+                 action_if_failed="fail"),
+        ])
+        with pytest.raises(error):
             DQEngine(cfg).run(simple3, rules, spark)
-        assert not (ids() - before), "flag cache leaked on fail action"
+        assert not (ids() - before), "RDD left persisted after the abort"
 
     def test_reprocess_list_skips_inactive_rules(self, spark):
         from spark_expectations_spark import reprocess_quarantine

@@ -85,17 +85,16 @@ class TestThinSurfaceHelpers:
 
     def test_rules_to_df_roundtrip(self, spark):
         from spark_expectations_spark.core.rules import RuleSet as RS
-        from spark_expectations_spark.sources.loaders import rules_to_df
         rs = RuleSet([Rule("p", "t", "row_dq", "r1", "c", "c > 0")])
-        df = rules_to_df(spark, rs)
+        df = rs.to_df(spark)
         back = RS.from_df(df)
         assert [r.rule for r in back.rules] == ["r1"]
 
     def test_read_parquet_helper(self, spark, tmp_path):
-        from spark_expectations_spark.sources.readers import read_parquet
+        from spark_expectations_spark.sources.readers import read_table
         p = str(tmp_path / "rp")
         spark.range(5).write.parquet(p)
-        assert read_parquet(spark, p).count() == 5
+        assert read_table(spark, "parquet", p).count() == 5
 
     def test_has_sort_merge_join_predicate(self, spark):
         from spark_expectations_spark import plans

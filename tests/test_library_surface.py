@@ -157,7 +157,7 @@ class TestStreamingDQ:
             error_writer=WriterOptions(
                 path=str(tmp_path / "err"), format="parquet",
                 checkpoint_location=str(tmp_path / "ckpt_e")),
-            write_target_table=True, target_table="t_final",
+            target_table="t_final",
             target_writer=WriterOptions(
                 path=str(tmp_path / "out"), format="parquet",
                 checkpoint_location=str(tmp_path / "ckpt_f")),
@@ -946,7 +946,7 @@ class TestStreamingDQ:
         cfg = DQConfig(
             product_id="p1", table_name="topk",
             write_error_table=False,
-            write_target_table=True, target_table="topk_gated",
+            target_table="topk_gated",
             target_writer=WriterOptions(path=str(tmp_path), mode="append",
                                         format="parquet"))
         engine = DQEngine(cfg)
@@ -1069,7 +1069,7 @@ class TestSparkConnectStyle:
                                     # metrics route through connect.py)
         "operators/similarity.py",  # _broadcast_or_capture via
                                     # connect.spark_context
-        "operators/query_dq.py",    # _run_with_timeout job-group
+        "operators/query_dq.py",    # _run_with_timeout job-tag
                                     # watchdog via connect.spark_context
                                     # (Connect runs without a budget)
         "sinks/layout.py",          # _hadoop_fs pointer-flip client via
@@ -1864,7 +1864,7 @@ class TestStreamingStatsRow:
             product_id="p1", table_name="t", write_error_table=False,
             write_stats_table=True, stats_table="t_stats",
             stats_writer=WriterOptions(mode="overwrite", path=str(tmp_path)),
-            write_target_table=True, target_table="t_final",
+            target_table="t_final",
             target_writer=WriterOptions(
                 path=str(tmp_path / "out"), format="parquet",
                 checkpoint_location=str(tmp_path / "ckpt")),
@@ -2181,6 +2181,66 @@ class TestCompatChannelWiring:
         assert hub is not None
         notifiers = hub.config.notifications._notifiers
         assert len(notifiers) == 4  # console + slack + pagerduty + email
+
+
+class TestCompatVendorBodies:
+    @staticmethod
+    def _hub(spark, conf):
+        from spark_expectations_spark import compat as C
+        rules_df = RuleSet([
+            Rule("p1", "t1", "row_dq", "r1", "c", "c > 0")]).to_df(spark)
+        deco = C.SparkExpectations(product_id="p1", rules_df=rules_df,
+                                   stats_table="s").with_expectations(
+            "t1", user_conf=conf)
+        engine = next(c.cell_contents for c in deco.__closure__
+                      if hasattr(c.cell_contents, "config"))
+        return engine.config.notifications
+
+    def test_each_vendor_gets_its_own_body(self, spark, monkeypatch):
+        """compat's Slack / Teams / Zoom channels post the body each of
+        those webhooks expects, not the generic webhook JSON."""
+        import urllib.request
+
+        from spark_expectations_spark import compat as C
+        from spark_expectations_spark.notifications import (slack_payload,
+                                                            teams_payload)
+
+        posts = []
+
+        def fake_urlopen(req, timeout=None):
+            posts.append((req.full_url, json.loads(req.data.decode()),
+                          req.headers.get("Authorization")))
+            class R:  # noqa: N801 - minimal response stub
+                pass
+            return R()
+
+        monkeypatch.setattr(urllib.request, "urlopen", fake_urlopen)
+        hub = self._hub(spark, {
+            C.SE_NOTIFICATIONS_ON_START: True,
+            C.SE_NOTIFICATIONS_ENABLE_SLACK: True,
+            C.SE_NOTIFICATIONS_SLACK_WEBHOOK_URL: "http://h/slack",
+            C.SE_NOTIFICATIONS_ENABLE_TEAMS: True,
+            C.SE_NOTIFICATIONS_TEAMS_WEBHOOK_URL: "http://h/teams",
+            C.SE_NOTIFICATIONS_ENABLE_ZOOM: True,
+            C.SE_NOTIFICATIONS_ZOOM_WEBHOOK_URL: "http://h/zoom",
+            C.SE_NOTIFICATIONS_ZOOM_TOKEN: "tok",
+        })
+        hub.on_start("p1", "t1")
+        payload = {"product_id": "p1", "table_name": "t1"}
+        assert posts == [
+            ("http://h/slack", slack_payload("start", payload), None),
+            ("http://h/teams", teams_payload("start", payload), None),
+            ("http://h/zoom", teams_payload("start", payload),
+             "Bearer tok"),
+        ]
+
+    def test_zoom_without_token_is_skipped(self, spark):
+        from spark_expectations_spark import compat as C
+        hub = self._hub(spark, {
+            C.SE_NOTIFICATIONS_ENABLE_ZOOM: True,
+            C.SE_NOTIFICATIONS_ZOOM_WEBHOOK_URL: "http://h/zoom",
+        })
+        assert len(hub._notifiers) == 1  # console only
 
 
 class TestIdempotentForeachBatch:

@@ -13,7 +13,7 @@ SF = "/root/testdata/sf0.001"
 
 
 @pytest.fixture(scope="module")
-def docs(spark):
+def _docs(spark):
     # yield + unpersist: a lingering cache would swap InMemoryRelation
     # into other modules' scans and break their plan pins
     df = spark.read.parquet(f"{SF}/documents.parquet").cache()
@@ -22,10 +22,23 @@ def docs(spark):
 
 
 @pytest.fixture(scope="module")
-def emb(spark):
+def _emb(spark):
     df = spark.read.parquet(f"{SF}/embeddings.parquet").cache()
     yield df
     df.unpersist()
+
+
+# .cache() does nothing on a plan that is already cached; after a test
+# that called spark.catalog.clearCache() it puts the cache back, so the
+# plan pins that count one InMemoryTableScan hold in any test order
+@pytest.fixture
+def docs(_docs):
+    return _docs.cache()
+
+
+@pytest.fixture
+def emb(_emb):
+    return _emb.cache()
 
 
 class TestDedup:
@@ -494,6 +507,88 @@ class TestSimilarity:
         b2 = similarity.random_hyperplane_lsh(emb, dim=64, num_planes=8)
         assert (b1.select("vec_id", "lsh_bucket").collect()
                 == b2.select("vec_id", "lsh_bucket").collect())
+
+
+class TestSingleMaterialization:
+    """r16 batch 2: multi-consumer subtrees that had NO persist are
+    now lazily persisted (semdedup's assignment pass, ccnet's scored
+    frame via quantile_buckets(persist_input=True)) — without one the
+    subtree is planted once per consumer and computed that many times
+    (measured: two ~5 task-s assignment jobs per warm embed_semdedup
+    run). A LAZY persist computes it exactly once (accumulator-proven
+    in OPTIMIZATION_r16.md — the eager-populate variant was tried and
+    reverted as pure overhead)."""
+
+    def test_term_weights_reads_cache_and_values_stable(self, spark):
+        from spark_expectations_spark import plans
+        from spark_expectations_spark.operators import text
+
+        df = spark.createDataFrame(
+            [(i, f"tok{i % 5} tok{i % 3} shared") for i in range(60)],
+            "doc_id long, text string")
+        out = text.term_weights(df, "doc_id", "text", min_df=2)
+        # every consumer subtree reads the materialized (doc, term, tf)
+        # cache, never the tokenize+explode pipeline
+        assert "InMemoryTableScan" in plans.plan_text(out, "simple")
+        rows = {(r.doc_id, r.term): (r.tf, round(r.weight, 9))
+                for r in out.collect()}
+        # hand-check one cell: doc 0 has terms tok0, tok0, shared ->
+        # tf(tok0)=2; every doc carries "shared" (df=60)
+        assert rows[(0, "tok0")][0] == 2
+        assert all((d, "shared") in rows for d in range(60))
+        spark.catalog.clearCache()
+
+    def test_term_weights_unknown_scheme_raises_before_persist(self, spark):
+        from spark_expectations_spark.operators import text
+
+        df = spark.createDataFrame([(1, "a")], "doc_id long, text string")
+        base = spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+        with pytest.raises(ValueError, match="unknown scheme"):
+            text.term_weights(df, "doc_id", "text", scheme="nope")
+        # validation fires before the plan is built — the late branch
+        # raise left a marked-but-never-computed persist behind
+        assert spark.sparkContext._jsc.sc().getPersistentRDDs().size() \
+            == base
+
+    def test_quantile_buckets_persist_input_parity(self, spark):
+        from spark_expectations_spark.operators import sampling
+
+        rng = random.Random(5)
+        df = spark.createDataFrame(
+            [(i, "ab"[i % 2], rng.randint(-100, 100)) for i in range(300)],
+            "id long, g string, score long")
+        plain = sampling.quantile_buckets(df, "g", "score")
+        cached = sampling.quantile_buckets(df, "g", "score",
+                                           persist_input=True)
+        assert sorted(map(tuple, plain.collect())) == \
+            sorted(map(tuple, cached.collect()))
+        spark.catalog.clearCache()
+
+    def test_semdedup_reads_assignment_cache(self, spark):
+        from spark_expectations_spark import plans
+        from spark_expectations_spark.operators import similarity
+
+        rng = random.Random(9)
+        rows = [(i, i % 4, [rng.uniform(-1, 1) for _ in range(8)])
+                for i in range(120)]
+        # plant exact duplicates so the removal side is non-empty
+        rows += [(1000 + i, i % 4, rows[i][2]) for i in range(10)]
+        df = spark.createDataFrame(
+            rows, "vec_id long, label long, embedding array<double>")
+        cents = similarity.train_centroids_df(
+            df, vec_col="embedding", by_col="label")
+        kept = similarity.semdedup(
+            df, id_col="vec_id", vec_col="embedding",
+            threshold=0.999999, centroids=cents)
+        txt = plans.plan_text(kept, "simple")
+        # both consumers (pair search + anti-join keep side) read the
+        # single materialized assignment pass
+        assert "InMemoryTableScan" in txt
+        kept_ids = {r.vec_id for r in kept.collect()}
+        # exact duplicates: the higher id of each planted pair is gone
+        assert all(1000 + i not in kept_ids for i in range(10))
+        assert all(i in kept_ids for i in range(10))
+        spark.catalog.clearCache()
 
 
 class TestTransformedMoments:
@@ -9246,88 +9341,3 @@ class TestBrierDecomposition:
         assert r["brier"] == pytest.approx(0.25)
         # single-valued bins -> the identity closes exactly
         assert r["residual"] == pytest.approx(0.0)
-
-
-# Last in this module: its clearCache() calls drop the module-scoped
-# cached docs/emb fixtures, which earlier plan pins count on
-# (TestFinalReviewFixes' single-InMemoryTableScan check).
-class TestSingleMaterialization:
-    """r16 batch 2: multi-consumer subtrees that had NO persist are
-    now lazily persisted (semdedup's assignment pass, ccnet's scored
-    frame via quantile_buckets(persist_input=True)) — without one the
-    subtree is planted once per consumer and computed that many times
-    (measured: two ~5 task-s assignment jobs per warm embed_semdedup
-    run). A LAZY persist computes it exactly once (accumulator-proven
-    in OPTIMIZATION_r16.md — the eager-populate variant was tried and
-    reverted as pure overhead)."""
-
-    def test_term_weights_reads_cache_and_values_stable(self, spark):
-        from spark_expectations_spark import plans
-        from spark_expectations_spark.operators import text
-
-        df = spark.createDataFrame(
-            [(i, f"tok{i % 5} tok{i % 3} shared") for i in range(60)],
-            "doc_id long, text string")
-        out = text.term_weights(df, "doc_id", "text", min_df=2)
-        # every consumer subtree reads the materialized (doc, term, tf)
-        # cache, never the tokenize+explode pipeline
-        assert "InMemoryTableScan" in plans.plan_text(out, "simple")
-        rows = {(r.doc_id, r.term): (r.tf, round(r.weight, 9))
-                for r in out.collect()}
-        # hand-check one cell: doc 0 has terms tok0, tok0, shared ->
-        # tf(tok0)=2; every doc carries "shared" (df=60)
-        assert rows[(0, "tok0")][0] == 2
-        assert all((d, "shared") in rows for d in range(60))
-        spark.catalog.clearCache()
-
-    def test_term_weights_unknown_scheme_raises_before_persist(self, spark):
-        from spark_expectations_spark.operators import text
-
-        df = spark.createDataFrame([(1, "a")], "doc_id long, text string")
-        base = spark.sparkContext._jsc.sc().getPersistentRDDs().size()
-        with pytest.raises(ValueError, match="unknown scheme"):
-            text.term_weights(df, "doc_id", "text", scheme="nope")
-        # validation fires before the plan is built — the late branch
-        # raise left a marked-but-never-computed persist behind
-        assert spark.sparkContext._jsc.sc().getPersistentRDDs().size() \
-            == base
-
-    def test_quantile_buckets_persist_input_parity(self, spark):
-        from spark_expectations_spark.operators import sampling
-
-        rng = random.Random(5)
-        df = spark.createDataFrame(
-            [(i, "ab"[i % 2], rng.randint(-100, 100)) for i in range(300)],
-            "id long, g string, score long")
-        plain = sampling.quantile_buckets(df, "g", "score")
-        cached = sampling.quantile_buckets(df, "g", "score",
-                                           persist_input=True)
-        assert sorted(map(tuple, plain.collect())) == \
-            sorted(map(tuple, cached.collect()))
-        spark.catalog.clearCache()
-
-    def test_semdedup_reads_assignment_cache(self, spark):
-        from spark_expectations_spark import plans
-        from spark_expectations_spark.operators import similarity
-
-        rng = random.Random(9)
-        rows = [(i, i % 4, [rng.uniform(-1, 1) for _ in range(8)])
-                for i in range(120)]
-        # plant exact duplicates so the removal side is non-empty
-        rows += [(1000 + i, i % 4, rows[i][2]) for i in range(10)]
-        df = spark.createDataFrame(
-            rows, "vec_id long, label long, embedding array<double>")
-        cents = similarity.train_centroids_df(
-            df, vec_col="embedding", by_col="label")
-        kept = similarity.semdedup(
-            df, id_col="vec_id", vec_col="embedding",
-            threshold=0.999999, centroids=cents)
-        txt = plans.plan_text(kept, "simple")
-        # both consumers (pair search + anti-join keep side) read the
-        # single materialized assignment pass
-        assert "InMemoryTableScan" in txt
-        kept_ids = {r.vec_id for r in kept.collect()}
-        # exact duplicates: the higher id of each planted pair is gone
-        assert all(1000 + i not in kept_ids for i in range(10))
-        assert all(i in kept_ids for i in range(10))
-        spark.catalog.clearCache()

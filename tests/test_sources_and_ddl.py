@@ -30,7 +30,7 @@ class TestReaders:
         writer.write_batch(src, "t_orc",
                            WriterOptions(format="orc", mode="overwrite",
                                          path=str(tmp_path)))
-        back = readers.read_orc(spark, str(tmp_path / "t_orc"))
+        back = readers.read_table(spark, "orc", str(tmp_path / "t_orc"))
         assert back.count() == 10
         assert back.schema["k"].dataType.typeName() == "long"
 
@@ -49,7 +49,7 @@ class TestReaders:
         from spark_expectations_spark import plans
         spark.range(100).selectExpr("id AS k", "id * 2 AS v") \
             .write.mode("overwrite").orc(str(tmp_path / "orc_t"))
-        df = readers.read_orc(spark, str(tmp_path / "orc_t")) \
+        df = readers.read_table(spark, "orc", str(tmp_path / "orc_t")) \
             .filter("k > 50").select("v")
         assert plans.has_pushed_filters(df)
 
