@@ -16,8 +16,6 @@ import functools
 from dataclasses import dataclass
 from typing import Any, Callable, Dict, Optional, Union
 
-from pyspark.sql import DataFrame
-
 from .connect import AnyDataFrame
 from .core.engine import DQEngine
 from .core.rules import RuleSet, _as_bool

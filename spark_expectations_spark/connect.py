@@ -31,8 +31,10 @@ similarity broadcast        closure capture instead of ``sc.broadcast``
                             (similarity.py:44-60)
 ``sinks.layout`` fs ops     unavailable (Hadoop FS via ``_jvm``) — raises
                             the documented RuntimeError
-``local_checkpoint_rdds``   returns ``{}``: the stream steps leave their
-                            per-batch checkpoints to the server
+``local_checkpoint_rdds``   returns ``{}`` and ``release_checkpoints`` does
+                            nothing: the stream steps and
+                            ``graph.connected_components`` leave their
+                            checkpoints to the server
 ==========================  =================================================
 """
 
@@ -143,3 +145,16 @@ def local_checkpoint_rdds(df: Any) -> dict:
     rdds = [n.rdd() for n in nodes
             if n.getClass().getSimpleName() == "LogicalRDD"]
     return {r.id(): r for r in rdds if r.isLocallyCheckpointed()}
+
+
+def release_checkpoints(df: Any, keep: Any = None) -> None:
+    """Unpersist the local checkpoints ``df`` reads — a caller's own
+    ``localCheckpoint`` and any an operator took inside it
+    (``bloom_might_contain`` checkpoints its word table) — except those
+    ``keep`` also reads. Left alone, each one stays pinned for the life
+    of the session. A no-op under Spark Connect (see
+    :func:`local_checkpoint_rdds`)."""
+    kept = local_checkpoint_rdds(keep) if keep is not None else {}
+    for rdd_id, rdd in local_checkpoint_rdds(df).items():
+        if rdd_id not in kept:
+            rdd.unpersist(False)

@@ -21,6 +21,8 @@ from typing import Optional, Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from . import graph
+
 
 # ---------------------------------------------------------------------------
 # Exact dedup
@@ -1126,63 +1128,17 @@ def minhash_index_query(
 # Duplicate-cluster resolution (connected components over pair edges)
 # ---------------------------------------------------------------------------
 
-def connected_components(
-    pairs: DataFrame,
-    *,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    max_iterations: int = 25,
-) -> DataFrame:
-    """(node, component) labels over near-dup pair edges — pair lists
-    don't answer "keep one per duplicate GROUP" until transitive closure
-    groups them; this does it with min-label propagation.
-
-    Per iteration: one join (propagate each neighbor's label) + one
-    groupBy(min). Converges in O(diameter) rounds — near-dup clusters are
-    shallow, so typically 2-4. Lineage is cut with ``localCheckpoint``
-    each round (iterative plans otherwise grow exponentially). The label
-    is the MINIMUM id in the component — deterministic, so downstream
-    "keep doc_id == component" is a stable keep-one policy.
-    """
-    # one-pass symmetrize (r16): the union-of-swapped-selects form
-    # planted the WHOLE pair-construction subtree twice — for the
-    # ensemble-dedup entry that is the full shingle/posting pipeline —
-    # and the checkpoint materialized both copies; a single codegen
-    # explode emits both directions from one execution (guide §2.4)
-    sym = (pairs
-           .select(F.explode(F.array(
-               F.struct(F.col(id_a).alias("src"), F.col(id_b).alias("dst")),
-               F.struct(F.col(id_b).alias("src"), F.col(id_a).alias("dst")),
-           )).alias("__e"))
-           .select("__e.src", "__e.dst"))
-    sym = sym.localCheckpoint(eager=False)
-    labels = (
-        sym.select(F.col("src").alias("node"))
-        .distinct()
-        .withColumn("component", F.col("node"))
-    )
-    for _ in range(max_iterations):
-        neighbor = (
-            sym.join(labels, sym["dst"] == labels["node"])
-            .select(F.col("src").alias("node"), "component")
-        )
-        new_labels = (
-            labels.unionByName(neighbor)
-            .groupBy("node")
-            .agg(F.min("component").alias("component"))
-            .localCheckpoint(eager=False)
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "node")
-            .filter(F.col("n.component") != F.col("o.component"))
-            .limit(1)
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    return labels
+def _cluster_key(df: DataFrame, pairs: DataFrame, id_col: str, out: str,
+                 *, id_a: str, id_b: str) -> DataFrame:
+    """``df`` plus ``out``: the minimum member id of the row's
+    duplicate cluster over ``pairs``, or the row's own id when it is in
+    no pair. One id-keyed left join of the corpus against the
+    pair-list-sized labels (AQE broadcasts them when small)."""
+    labels = graph.connected_components(pairs, src=id_a, dst=id_b)
+    return (df.join(labels.select(F.col("node").alias(id_col),
+                                  "component"), id_col, "left")
+            .withColumn(out, F.coalesce(F.col("component"), F.col(id_col)))
+            .drop("component"))
 
 
 def dedup_clusters(
@@ -1192,8 +1148,10 @@ def dedup_clusters(
     id_b: str = "id_b",
 ) -> DataFrame:
     """(cluster_id, n_members) per duplicate cluster; cluster_id is the
-    minimum member id (the canonical survivor under keep-lowest)."""
-    cc = connected_components(pairs, id_a=id_a, id_b=id_b)
+    minimum member id (the canonical survivor under keep-lowest).
+    Pairs whose two ids are equal join nothing: a self-loop alone makes
+    no cluster."""
+    cc = graph.connected_components(pairs, src=id_a, dst=id_b)
     return cc.groupBy(F.col("component").alias("cluster_id")).agg(
         F.count(F.lit(1)).alias("n_members"))
 
@@ -1254,13 +1212,8 @@ def canonical_per_cluster(
         # (measured 5.5 → 3.3 s at sf0.1 on the jaccard fixture); the
         # r11 persist rule: cut only multi-consumer aggregate outputs
         pairs = pairs.localCheckpoint(eager=False)
-    labels = connected_components(pairs, id_a=id_a, id_b=id_b)
-    joined = df.join(
-        labels.select(F.col("node").alias(id_col), "component"),
-        id_col, "left")
-    clustered = joined.withColumn(
-        "cluster_id", F.coalesce(F.col("component"), F.col(id_col))
-    ).drop("component")
+    clustered = _cluster_key(df, pairs, id_col, "cluster_id",
+                             id_a=id_a, id_b=id_b)
     if strategy == "centrality":
         deg = (pairs.select(F.col(id_a).alias("__n"))
                .unionAll(pairs.select(F.col(id_b).alias("__n")))

@@ -10,17 +10,21 @@ min-id.
 
 Everything here is plain DataFrame joins/aggregations over an
 ``(src, dst)`` edge list — the natural Spark representation. Iterative
-algorithms follow the `dedup.connected_components` recipe: a bounded
-number of synchronous rounds, each ONE edge-keyed join + ONE
-destination-keyed aggregation, with ``localCheckpoint`` lineage cuts so
-the plan stays linear in rounds (an un-cut iterative plan grows
-exponentially and re-executes every prior round per action).
+algorithms share one recipe: a bounded number of synchronous rounds,
+each a few edge-keyed joins + keyed aggregations, with
+``localCheckpoint`` lineage cuts so the plan stays linear in rounds (an
+un-cut iterative plan grows exponentially and re-executes every prior
+round per action). :func:`connected_components` is also the package's
+transitive closure for duplicate clusters (``dedup``) and leakage-safe
+splits (``sampling``).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..connect import release_checkpoints
 
 __all__ = ["pagerank", "hits", "triangle_counts",
            "connected_components", "symmetrize_edges"]
@@ -383,7 +387,7 @@ def triangle_counts(
     self-loops dropped) — the structure gate for similarity/dedup
     graphs: near-dup pair lists that form dense triangles are
     transitive clusters (safe to collapse); triangle-free matches are
-    chains that label propagation will over-merge. Returns
+    chains that transitive closure will over-merge. Returns
     ``(node, degree, triangles, clustering)`` with clustering =
     2T/(d(d−1)) (NULL for degree < 2).
 
@@ -495,30 +499,39 @@ def connected_components(
 ) -> DataFrame:
     """Connected components via alternating large-star/small-star
     (Kiveris et al. 2014) — returns ``(node, component)`` with the
-    component labeled by its MINIMUM node id (the same deterministic
-    contract as ``dedup.connected_components``). The scale upgrade
-    over that min-label propagation: label propagation needs
-    O(diameter) rounds — a CHAIN of near-dups (doc A ~ B ~ C ~ ...,
-    each pair similar but the ends unrelated) is its worst case —
-    while star contraction provably converges in O(log² n) rounds
-    regardless of diameter, each round re-pointing whole subtrees at
-    their minimum instead of moving labels one hop.
+    component labeled by its MINIMUM node id, a deterministic label
+    downstream "keep doc_id == component" can rely on. This is the
+    package's one transitive-closure operator: duplicate clusters
+    (``dedup.dedup_clusters``, ``dedup.canonical_per_cluster``) and
+    the leakage-safe splits in ``sampling`` resolve through it. Star
+    contraction converges in O(log² n) rounds regardless of diameter —
+    a CHAIN of near-dups (doc A ~ B ~ C ~ ..., each pair similar but
+    the ends unrelated) costs no more than a star — because each round
+    re-points whole subtrees at their minimum instead of moving labels
+    one hop.
 
     Per round: large-star (every node's LARGER neighbors re-point to
     its minimum neighbor-or-self) then small-star (every node's
     smaller-or-equal neighbors re-point to its minimum) — each phase
-    ONE symmetric-view groupBy(min) + ONE edge-keyed join + distinct,
-    with ``localCheckpoint`` lineage cuts. Convergence is an edge-set
-    fingerprint (count + sum of xxhash64) — one 1-row driver action
-    per round, the iterative-operator convention here. At the fixed
-    point every edge points directly at its component minimum (a star),
-    so labels read off the edge list with no extra pass. Self-loops
-    and duplicate/bidirectional input edges are tolerated; isolated
-    nodes never appear in an edge list, so callers wanting them must
-    union ``(node, node)`` rows afterwards. Works for any orderable id
-    type. Raises RuntimeError if ``max_rounds`` is hit unconverged
-    (never observed below hundreds of millions of nodes at the
-    default; the bound is a runaway guard, not a tuning knob).
+    ONE groupBy(min) + ONE edge-keyed join + distinct, with
+    ``localCheckpoint`` lineage cuts; once a round's convergence check
+    has materialized its edge set, the round before it is unpersisted,
+    so a call leaves only the checkpoint its result reads. The fixed
+    point is a star forest — every edge points directly at its
+    component minimum, and neither phase changes it — so convergence
+    is checked as that shape: one per-node groupBy and a 1-row driver
+    action per round, run on the input too, so an input that is
+    already a star forest (disjoint pairs) runs no round. Labels then
+    read off the edge list in one pass: a leaf's one edge names its
+    component, a center labels itself. Self-loops and
+    duplicate/bidirectional input edges are
+    tolerated; an edge list with no edge between two distinct nodes
+    gives an empty frame. Isolated nodes never appear in an edge list,
+    so callers wanting them must union ``(node, node)`` rows
+    afterwards. Works for any orderable id type. Raises RuntimeError
+    if ``max_rounds`` is hit unconverged (never observed below
+    hundreds of millions of nodes at the default; the bound is a
+    runaway guard, not a tuning knob).
     """
     if max_rounds < 1:
         raise ValueError("max_rounds must be >= 1")
@@ -528,57 +541,54 @@ def connected_components(
          .select(F.greatest(a, b).alias("x"), F.least(a, b).alias("y"))
          .distinct()
          .localCheckpoint(eager=False))
-    if e.limit(1).count() == 0:
-        raise ValueError("connected_components: empty edge list")
 
-    def fingerprint(frame: DataFrame):
-        # sum hashes as decimal(38,0): a long sum overflows under ANSI
-        # mode on a few hundred random 64-bit values
-        r = frame.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.xxhash64("x", "y").cast("decimal(38,0)"))
-            .alias("h")).first()
-        return (r["n"], r["h"])
+    def off_star(frame: DataFrame) -> int:
+        # nodes that keep the edge set from being a star forest: a node
+        # with an out-edge (high -> low) and any other edge. With none,
+        # every leaf points straight at its component's minimum.
+        per = (symmetrize_edges(frame, "x", "y").groupBy("src")
+               .agg(F.count(F.lit(1)).alias("deg"),
+                    F.max(F.col("src") > F.col("dst")).alias("leaf")))
+        return per.agg(F.count(F.when(
+            F.col("leaf") & (F.col("deg") > 1), 1))).first()[0]
 
-    prev = fingerprint(e)
+    bad = off_star(e)
     for _ in range(max_rounds):
-        # large-star: symmetric neighbor view; each node u re-points
-        # its strictly-larger neighbors at m(u) = min(N(u) ∪ {u})
-        sym = e.select(F.col("x").alias("u"), F.col("y").alias("v")) \
-            .unionByName(
-                e.select(F.col("y").alias("u"), F.col("x").alias("v")))
-        m = (sym.groupBy("u")
-             .agg(F.least(F.min("v"), F.first("u")).alias("m")))
-        e = (sym.join(m, "u")
-             .filter(F.col("v") > F.col("u"))
-             .select(F.col("v").alias("x"), F.col("m").alias("y"))
-             .filter(F.col("x") != F.col("y"))
-             .distinct()
-             .localCheckpoint(eager=False))
+        if not bad:
+            break
+        # large-star: on the symmetric neighbor view each node src
+        # re-points its strictly-larger neighbors at
+        # m(src) = min(N(src) ∪ {src})
+        sym = symmetrize_edges(e, "x", "y")
+        m = (sym.groupBy("src")
+             .agg(F.least(F.min("dst"), F.first("src")).alias("m")))
+        large = (sym.join(m, "src")
+                 .filter(F.col("dst") > F.col("src"))
+                 .select(F.col("dst").alias("x"), F.col("m").alias("y"))
+                 .filter(F.col("x") != F.col("y"))
+                 .distinct()
+                 .localCheckpoint(eager=False))
         # small-star: edges already point high -> low; group on the
         # high endpoint, re-point it and all its smaller neighbors at
-        # the group minimum
-        mn = e.groupBy("x").agg(F.min("y").alias("m"))
-        joined = e.join(mn, "x")
-        e = (joined.select(F.col("x"), F.col("m").alias("y"))
-             .unionByName(
-                 joined.filter(F.col("y") != F.col("m"))
-                 .select(F.col("y").alias("x"), F.col("m").alias("y")))
-             .filter(F.col("x") != F.col("y"))
-             .distinct()
-             .localCheckpoint(eager=False))
-        cur = fingerprint(e)
-        if cur == prev:
-            break
-        prev = cur
-    else:
+        # the group minimum (both rows from one generator)
+        mn = large.groupBy("x").agg(F.min("y").alias("m"))
+        small = (large.join(mn, "x")
+                 .select(F.explode(F.array("x", "y")).alias("x"),
+                         F.col("m").alias("y"))
+                 .filter(F.col("x") != F.col("y"))
+                 .distinct()
+                 .localCheckpoint(eager=False))
+        bad = off_star(small)
+        # small is materialized now: the round's inputs are superseded
+        release_checkpoints(e)
+        release_checkpoints(large)
+        e = small
+    if bad:
+        release_checkpoints(e)
         raise RuntimeError(
             f"connected_components: no convergence in {max_rounds} "
-            f"rounds — raise max_rounds (edge fingerprint still "
-            f"moving: {prev} -> {cur})")
-    roots = e.select(F.col("y").alias("node")).distinct() \
-        .withColumn("component", F.col("node"))
-    return (e.select(F.col("x").alias("node"),
+            f"rounds — raise max_rounds ({bad} nodes still off a star)")
+    # a leaf's one edge names its component; a center labels itself
+    return (e.select(F.explode(F.array("x", "y")).alias("node"),
                      F.col("y").alias("component"))
-            .unionByName(roots)
-            .groupBy("node").agg(F.min("component").alias("component")))
+            .distinct())

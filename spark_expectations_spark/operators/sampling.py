@@ -35,6 +35,8 @@ from typing import Mapping, Optional, Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .dedup import _cluster_key
+
 #: buckets = first 4 md5 hex chars → 0..65535; plenty of resolution for
 #: pipeline split ratios while keeping the arithmetic in 32-bit range
 _BUCKETS = 65536
@@ -158,7 +160,7 @@ def leakage_safe_split(
     Pairs come from any detector in ``operators.dedup`` (fingerprint
     equality, MinHash/LSH, n-gram Jaccard, embedding cosine).
     Mechanism: transitive closure via
-    :func:`~.dedup.connected_components` (min-label propagation —
+    :func:`~.graph.connected_components` (star contraction —
     pair-list-sized, NOT corpus-sized), then :func:`with_split` keyed
     by the component representative (min member id; singletons key by
     their own id), inheriting its md5-coin determinism, weight
@@ -166,20 +168,13 @@ def leakage_safe_split(
     :func:`split_leakage_report` — this construction yields exactly
     zero leaked pairs.
 
-    Scale shape: label propagation over edges (O(diameter) rounds of
-    join + min-groupBy with localCheckpoint lineage cuts), one id-keyed
-    left join against the corpus (labels side is dup-cluster-member
-    sized; AQE broadcasts when small), and the split itself is a pure
-    projection — no extra shuffle beyond the label join."""
-    from .dedup import connected_components
-
-    labels = connected_components(pairs, id_a=id_a, id_b=id_b)
-    joined = df.join(
-        labels.select(F.col("node").alias(id_col), "component"),
-        id_col, "left")
-    keyed = joined.withColumn(
-        "__grp", F.coalesce(F.col("component"), F.col(id_col))
-    ).drop("component")
+    Scale shape: star contraction over edges (O(log² n) rounds of
+    join + min-groupBy with localCheckpoint lineage cuts, whatever the
+    chain length), one id-keyed left join against the corpus (labels
+    side is dup-cluster-member sized; AQE broadcasts when small), and
+    the split itself is a pure projection — no extra shuffle beyond
+    the label join."""
+    keyed = _cluster_key(df, pairs, id_col, "__grp", id_a=id_a, id_b=id_b)
     return with_split(keyed, "__grp", splits, out=out,
                       salt=salt).drop("__grp")
 
@@ -201,20 +196,12 @@ def leakage_safe_kfold(
     near-dup of another fold's training doc (the inflation that makes
     naive CV numbers lie is exactly proportional to cross-fold dup
     pairs, and this construction yields zero). Same mechanism:
-    transitive closure via min-label propagation, then
+    transitive closure via star contraction, then
     :func:`with_kfold` keyed by the component representative
     (singletons key by their own id) — inheriting the md5-coin
     determinism and NULL-key contract. Pairs-list-sized closure + one
     id-keyed left join; the fold itself is a projection."""
-    from .dedup import connected_components
-
-    labels = connected_components(pairs, id_a=id_a, id_b=id_b)
-    joined = df.join(
-        labels.select(F.col("node").alias(id_col), "component"),
-        id_col, "left")
-    keyed = joined.withColumn(
-        "__grp", F.coalesce(F.col("component"), F.col(id_col))
-    ).drop("component")
+    keyed = _cluster_key(df, pairs, id_col, "__grp", id_a=id_a, id_b=id_b)
     return with_kfold(keyed, "__grp", k, out=out,
                       salt=salt).drop("__grp")
 

@@ -19,7 +19,7 @@ quality problem this surfaces rather than hides — key_skew_stats
 
 from __future__ import annotations
 
-from typing import Optional, Sequence
+from typing import Sequence
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F

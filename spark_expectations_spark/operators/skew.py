@@ -17,8 +17,6 @@ Both are pure DataFrame ops (codegen, no Python).
 
 from __future__ import annotations
 
-from typing import Optional, Sequence
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 

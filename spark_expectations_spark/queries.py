@@ -566,7 +566,7 @@ GROUP BY s.doc_id
 
 def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate-cluster resolution: exact jaccard pairs → connected
-    components via iterative min-label propagation (operators/dedup.py) —
+    components via star contraction (graph.connected_components) —
     the 'keep one per duplicate GROUP' step a pair list alone can't
     answer. Oracle: duckdb recursive-CTE transitive closure."""
     docs = load(spark, sf_dir, "documents")
@@ -615,13 +615,13 @@ FROM comp GROUP BY component
 def q_docs_cc_largestar(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components via alternating large-star/small-star
     (graph.connected_components, Kiveris et al.) over the same exact
-    jaccard pair graph dedup_clusters resolves with min-label
-    propagation — per-NODE labels here (the clusters entry emits
+    jaccard pair graph dedup_clusters resolves through the same
+    operator — per-NODE labels here (the clusters entry emits
     per-cluster counts, so the two gates are complementary). Star
     contraction converges in O(log² n) rounds independent of
-    diameter, the scale story propagation lacks on chain-shaped dup
-    graphs; both must agree exactly with the recursive-CTE closure,
-    labeling each component by its minimum doc_id."""
+    diameter, so chain-shaped dup graphs cost no extra rounds; both
+    must agree exactly with the recursive-CTE closure, labeling each
+    component by its minimum doc_id."""
     from .operators import graph
 
     docs = load(spark, sf_dir, "documents")
@@ -815,8 +815,8 @@ def q_docs_dedup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     id). Jaccard and containment come from ONE shingle pass
     (dedup.similarity_pairs — the corpus is shingled and grouped once,
     not per signal), fingerprint pairs from a posting-list groupBy (no
-    corpus self-join), and component resolution is the bounded
-    min-label propagation of dedup_clusters."""
+    corpus self-join), and component resolution is the star
+    contraction of dedup_clusters (graph.connected_components)."""
     docs = load(spark, sf_dir, "documents")
     sim = dedup.similarity_pairs(
         docs, "doc_id", "text", n=3,
@@ -7160,7 +7160,7 @@ def q_part_copurchase_triangles(spark: SparkSession,
     """Per-node triangle counts + clustering coefficient
     (graph.triangle_counts) over the part co-purchase graph — the
     transitivity gate on a similarity graph (dense triangles =
-    collapse-safe clusters, triangle-free chains = label-propagation
+    collapse-safe clusters, triangle-free chains = transitive-closure
     over-merge risk). Compact-forward algorithm: degree-ordered
     orientation bounds the wedge self-join at O(m^1.5) total instead
     of hub-degree²; all counts exact integers, the only double is the
@@ -12173,7 +12173,12 @@ DRIVER_PRIORITY: list[str] = [
     "events_cms_daily_rollup", "events_distinct_rollup_exact",
     "events_hourly_anomalies", "docs_dsir_weights", "docs_group_sample",
     "docs_ngram_novelty", "docs_dup_shingles", "docs_corpus_report",
-    "docs_line_stats", "docs_label_alpha_ci",
+    # the two leakage-safe splits: with the dedup entries above they
+    # are every catalog caller of graph.connected_components, gated
+    # together since it became the one connected-components operator
+    # (displacing docs_line_stats and docs_label_alpha_ci, unchanged
+    # single-fold metrics)
+    "docs_split_leakage", "docs_cv_leakage_safe",
 ]
 
 

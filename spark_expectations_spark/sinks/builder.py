@@ -6,7 +6,7 @@ WriterOptions consumed by sinks.writer / DQConfig.
 
 from __future__ import annotations
 
-from typing import Any, Mapping, Optional
+from typing import Any, Optional
 
 from ..core.state import WriterOptions
 

@@ -18,9 +18,7 @@ from pyspark.sql.types import (
     StringType, StructField, StructType, TimestampType,
 )
 
-from ..core.state import DQConfig, DQResult, WriterOptions
-from ..operators.agg_dq import AggRuleResult
-from ..operators.query_dq import QueryRuleResult
+from ..core.state import DQResult, WriterOptions
 from ..operators.row_dq import META_RUN_DATETIME, META_RUN_ID
 
 

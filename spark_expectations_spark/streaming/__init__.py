@@ -46,6 +46,7 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..connect import release_checkpoints
 from ..core.engine import DQEngine
 from ..core.rules import RuleSet
 from ..core.state import DQConfig, DQResult
@@ -612,21 +613,6 @@ def _sum_state(spark, path: str, key_cols: Sequence[str],
                  *[F.sum(c).alias(c) for c in sum_cols]))
 
 
-def _release_checkpoints(df: DataFrame,
-                         keep: Optional[DataFrame] = None) -> None:
-    """Unpersist the local checkpoints ``df`` reads — a step's own
-    ``localCheckpoint`` and any an operator took inside it
-    (``bloom_might_contain`` checkpoints its word table) — except those
-    ``keep`` (the caller's batch) also reads. Left alone, every
-    micro-batch pins one more RDD for the life of the session."""
-    from ..connect import local_checkpoint_rdds
-
-    kept = local_checkpoint_rdds(keep) if keep is not None else {}
-    for rdd_id, rdd in local_checkpoint_rdds(df).items():
-        if rdd_id not in kept:
-            rdd.unpersist(False)
-
-
 def incremental_bitmap_distinct(
     state_path: str,
     group_cols: list,
@@ -1144,7 +1130,7 @@ def corpus_append_dedup(
                 _write_increment(admitted, out_path, batch_id)
             _write_increment(admitted.select(fp_col), index_path, batch_id)
         finally:
-            _release_checkpoints(admitted, keep=batch_df)
+            release_checkpoints(admitted, keep=batch_df)
 
     return step
 
@@ -1209,7 +1195,7 @@ def fuzzy_match_stream(
                     unmatched, probe_id, probe_key, **kw),
                     index_path, batch_id)
         finally:
-            _release_checkpoints(matches, keep=batch_df)
+            release_checkpoints(matches, keep=batch_df)
 
     return step
 
@@ -1445,7 +1431,7 @@ def bloom_membership_stream(
             try:
                 _write_increment(annotated, out_path, batch_id)
             finally:  # the probe checkpoints the merged words
-                _release_checkpoints(annotated, keep=batch_df)
+                release_checkpoints(annotated, keep=batch_df)
         _write_increment(bloom_filter(batch_df, key_col, n_bits=n_bits,
                                       k=k, salt=salt),
                          filter_path, batch_id)
@@ -1489,4 +1475,4 @@ def compact_bloom_state(spark, filter_path: str, *,
          .parquet(filter_path))
         return merged.count()
     finally:
-        _release_checkpoints(merged)
+        release_checkpoints(merged)

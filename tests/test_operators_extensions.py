@@ -2232,7 +2232,8 @@ class TestConnectedComponents:
         pairs = spark.createDataFrame(
             [(1, 2), (2, 3), (3, 4), (10, 11)], "id_a long, id_b long")
         cc = {r["node"]: r["component"]
-              for r in dedup.connected_components(pairs).collect()}
+              for r in graph.connected_components(
+                  pairs, src="id_a", dst="id_b").collect()}
         assert cc == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10}
         clusters = {r["cluster_id"]: r["n_members"]
                     for r in dedup.dedup_clusters(pairs).collect()}
@@ -2243,6 +2244,60 @@ class TestConnectedComponents:
             [(5, i) for i in range(6, 12)], "id_a long, id_b long")
         clusters = dedup.dedup_clusters(pairs).collect()
         assert [(r["cluster_id"], r["n_members"]) for r in clusters] == [(5, 7)]
+
+    # A 41-node chain, 40 hops deep: every caller must see ONE cluster
+    # however long the chain, or the split guards leak it.
+    @pytest.fixture
+    def chain(self, spark):
+        return spark.createDataFrame(
+            [(i, i + 1) for i in range(40)], "id_a long, id_b long")
+
+    def test_deep_chain_is_one_cluster(self, chain):
+        clusters = [tuple(r) for r in dedup.dedup_clusters(chain).collect()]
+        assert clusters == [(0, 41)]
+
+    def test_deep_chain_keeps_one_canonical_row(self, spark, chain):
+        docs = spark.createDataFrame(
+            [(i, i % 7) for i in range(41)], "doc_id long, score long")
+        for kw in ({"score_col": "score"}, {"strategy": "centrality"}):
+            kept = dedup.canonical_per_cluster(
+                docs, chain, "doc_id", **kw).collect()
+            assert [(r["cluster_id"], r["n_members"]) for r in kept] == \
+                [(0, 41)], kw
+
+    def test_deep_chain_shares_one_split_and_fold(self, spark, chain):
+        from spark_expectations_spark.operators import sampling
+        docs = spark.createDataFrame([(i,) for i in range(41)],
+                                     "doc_id long")
+        split = sampling.leakage_safe_split(
+            docs, chain, "doc_id", {"train": 0.5, "eval": 0.5})
+        got = [r["split"] for r in split.collect()]
+        assert len(got) == 41 and len(set(got)) == 1
+        rep = sampling.split_leakage_report(split, chain, "doc_id").first()
+        assert rep["n_pairs"] == 40 and rep["n_leaked"] == 0
+        folds = [r["fold"] for r in sampling.leakage_safe_kfold(
+            docs, chain, "doc_id", 5).collect()]
+        assert len(folds) == 41 and len(set(folds)) == 1
+
+    def test_no_pairs_every_row_is_its_own_cluster(self, spark):
+        """Empty in, empty out: a corpus with no duplicate pairs passes
+        through whole, each row its own cluster."""
+        from spark_expectations_spark.operators import sampling
+        docs = spark.createDataFrame([(1, 5), (2, 3), (7, 9)],
+                                     "doc_id long, score long")
+        none = spark.createDataFrame([], "id_a long, id_b long")
+        kept = dedup.canonical_per_cluster(docs, none, "doc_id",
+                                           score_col="score")
+        assert sorted((r["doc_id"], r["cluster_id"], r["n_members"])
+                      for r in kept.collect()) == \
+            [(1, 1, 1), (2, 2, 1), (7, 7, 1)]
+        split = sampling.leakage_safe_split(
+            docs, none, "doc_id", {"train": 0.5, "eval": 0.5})
+        solo = sampling.with_split(docs, "doc_id",
+                                   {"train": 0.5, "eval": 0.5})
+        assert sorted(map(tuple, split.collect())) == \
+            sorted(map(tuple, solo.collect()))
+        assert dedup.dedup_clusters(none).collect() == []
 
 
 class TestMinhashIndexQuery:
@@ -7689,25 +7744,40 @@ class TestPagerankWeighted:
 
 
 class TestGraphConnectedComponents:
-    def test_chain_and_agreement_with_label_propagation(self, spark):
-        """A 61-node chain (diameter 60 — label propagation's worst
-        case) resolves to one component labeled by its minimum, and on
-        a random multi-component graph the star-contraction labels
-        agree exactly with dedup.connected_components."""
-        from spark_expectations_spark.operators import dedup, graph
+    def test_chain_resolves_to_its_minimum(self, spark):
+        """A 61-node chain (diameter 60) resolves to one component
+        labeled by its minimum; random graphs are checked against
+        union-find in tests/test_properties.py."""
+        from spark_expectations_spark.operators import graph
         chain = spark.createDataFrame(
             [(i, i + 1) for i in range(60)], "src long, dst long")
         got = graph.connected_components(chain).collect()
         assert len(got) == 61
         assert all(r["component"] == 0 for r in got)
-        # deterministic pseudo-random graph, several components
-        edges = [((i * 37) % 50, (i * 53 + 11) % 50) for i in range(40)]
-        edges = [(a, b) for a, b in edges if a != b]
-        df = spark.createDataFrame(edges, "src long, dst long")
-        a = sorted(map(tuple, graph.connected_components(df).collect()))
-        b = sorted(map(tuple, dedup.connected_components(
-            df, id_a="src", id_b="dst").collect()))
-        assert a == b
+
+    def test_releases_superseded_checkpoints(self, spark):
+        """A multi-round call leaves persisted only the checkpoint its
+        result reads; a call that hits max_rounds leaves none."""
+        import pytest as _pytest
+        from spark_expectations_spark import connect
+        from spark_expectations_spark.operators import graph
+        jsc = spark.sparkContext._jsc
+
+        def persisted():
+            return set(jsc.getPersistentRDDs().keySet().toArray())
+
+        chain = spark.createDataFrame(
+            [(i, i + 1) for i in range(40)], "src long, dst long")
+        before = persisted()
+        cc = graph.connected_components(chain)
+        kept = set(connect.local_checkpoint_rdds(cc))
+        assert len(kept) == 1
+        assert persisted() - before == kept
+        assert cc.count() == 41
+        connect.release_checkpoints(cc)
+        with _pytest.raises(RuntimeError, match="no convergence"):
+            graph.connected_components(chain, max_rounds=1)
+        assert persisted() - before == set()
 
     def test_string_ids_duplicates_and_bidirectional_edges(self, spark):
         from spark_expectations_spark.operators import graph
@@ -7722,11 +7792,11 @@ class TestGraphConnectedComponents:
         import pytest as _pytest
         from spark_expectations_spark.operators import graph
         empty = spark.createDataFrame([], "src long, dst long")
-        with _pytest.raises(ValueError, match="empty"):
-            graph.connected_components(empty)
+        got = graph.connected_components(empty)
+        assert got.columns == ["node", "component"]
+        assert got.collect() == []
         loops = spark.createDataFrame([(1, 1)], "src long, dst long")
-        with _pytest.raises(ValueError, match="empty"):
-            graph.connected_components(loops)  # self-loops only
+        assert graph.connected_components(loops).collect() == []
         df = spark.createDataFrame([(1, 2)], "src long, dst long")
         with _pytest.raises(ValueError, match="max_rounds"):
             graph.connected_components(df, max_rounds=0)
