@@ -153,8 +153,10 @@ def release_checkpoints(df: Any, keep: Any = None) -> None:
     (``bloom_might_contain`` checkpoints its word table) — except those
     ``keep`` also reads. Left alone, each one stays pinned for the life
     of the session. A no-op under Spark Connect (see
-    :func:`local_checkpoint_rdds`)."""
+    :func:`local_checkpoint_rdds`). Each is dropped through the
+    context's ``unpersistRDD``: ``RDD.unpersist`` would log a "cannot be
+    recomputed" WARN per checkpoint, for a loss that is intended here."""
     kept = local_checkpoint_rdds(keep) if keep is not None else {}
     for rdd_id, rdd in local_checkpoint_rdds(df).items():
         if rdd_id not in kept:
-            rdd.unpersist(False)
+            rdd.context().unpersistRDD(rdd_id, False)

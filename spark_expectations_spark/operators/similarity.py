@@ -1,11 +1,14 @@
 """Similarity search over embedding columns (array<float>).
 
-Net-new scale operators (not in the reference). Two tiers:
+Net-new scale operators (not in the reference):
 
-* ``cosine_topk`` — exact brute force: broadcast the (small) query set,
-  JVM-side dot products via zip_with/aggregate, per-query top-k via a
-  window. Correctness baseline; O(|corpus| * |queries|) but embarrassingly
-  parallel with zero shuffle on the corpus side.
+* ``cosine_topk`` — exact brute force: the (small) query matrix is
+  broadcast, each corpus Arrow batch computes one BLAS product against
+  it inside ``mapInPandas`` and emits only its local top-k per query,
+  and a window keeps the global top-k. O(|corpus| * |queries|) compute,
+  zero shuffle on the corpus side. ``cosine_topk_hof`` is the same
+  search as pure Column math (broadcast cross join + higher-order dot
+  product), kept as the reference.
 * ``ivf_topk`` — IVF-style pruning: assign corpus vectors to the nearest
   of C centroids once (one pass), then search only the ``nprobe`` closest
   centroids' partitions per query. The scale path: 100 TB of vectors
@@ -13,7 +16,15 @@ Net-new scale operators (not in the reference). Two tiers:
 * ``random_hyperplane_lsh`` — sign-bit bucketing for cosine LSH; bucket
   join replaces the cross product.
 
-Embedding near-duplicate detection = cosine_topk/self with a threshold.
+Embedding near-duplicate pairs (``cosine >= threshold``, ``id_a < id_b``)
+come from one tiled BLAS kernel, :func:`_threshold_pairs`, under four
+contracts: :func:`near_duplicate_pairs` (exact, broadcast corpus, capped
+at 2M rows), :func:`blocked_near_duplicate_pairs` (exact, block
+nested-loop join, no cap), :func:`bucketed_near_duplicate_pairs` (LSH
+selects the candidates) and :func:`semdedup_pairs` (within one centroid
+cell). All four drop a row whose vector is NULL — it has no cosine, so
+it is in no pair — and take ids of any orderable type, typed from the
+input schema.
 """
 
 from __future__ import annotations
@@ -23,16 +34,43 @@ from typing import Optional
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegralType
+
+#: rows per side of one similarity tile: no product the pair kernel forms
+#: exceeds _CHUNK² doubles (128 MiB), whatever the group or corpus size
+_CHUNK = 4096
+
+
+def _id_dtype(df: DataFrame, id_col: str) -> str:
+    """numpy dtype of an id column in the pair kernel: int64 for integral
+    Spark types, object (Python values compared with ``<``) for any other
+    orderable type."""
+    return ("int64" if isinstance(df.schema[id_col].dataType, IntegralType)
+            else "object")
+
+
+def _unit_rows(pdf, id_col: str, vec_col: str, id_dtype: str):
+    """``(rows, ids, unit)`` for the rows of ``pdf`` that can be compared.
+    A row whose vector or id is NULL has no cosine, so it is dropped here:
+    the one NULL rule of every search in this module. ``unit`` stacks the
+    vectors as float64 rows scaled to unit L2 norm; ``rows`` is the
+    filtered frame, for callers that read its other columns."""
+    import numpy as np
+
+    rows = pdf[pdf[vec_col].notna() & pdf[id_col].notna()]
+    ids = rows[id_col].to_numpy(dtype=id_dtype)
+    if not len(rows):
+        return rows, ids, np.empty((0, 0))
+    m = np.stack(rows[vec_col].to_numpy()).astype(np.float64)
+    return rows, ids, m / np.linalg.norm(m, axis=1, keepdims=True)
 
 
 def _collect_matrix(df: DataFrame, id_col: str, vec_col: str):
-    """Driver-side (ids, normalized float64 matrix) via Arrow transfer.
+    """Driver-side ``(ids, unit-row float64 matrix)`` via Arrow transfer.
 
     Arrow-batched ``toPandas`` moves the vectors columnar instead of
     row-by-row pickled Rows — measured ~5× faster than ``collect()`` for
     50k × 64-dim at sf0.1."""
-    import numpy as np
-
     spark = df.sparkSession
     key = "spark.sql.execution.arrow.pyspark.enabled"
     prev = spark.conf.get(key, "false")
@@ -41,9 +79,8 @@ def _collect_matrix(df: DataFrame, id_col: str, vec_col: str):
         pdf = df.select(id_col, vec_col).toPandas()
     finally:
         spark.conf.set(key, prev)
-    ids = pdf[id_col].to_numpy(dtype=np.int64)
-    m = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-    return ids, m / np.linalg.norm(m, axis=1, keepdims=True)
+    _, ids, unit = _unit_rows(pdf, id_col, vec_col, _id_dtype(df, id_col))
+    return ids, unit
 
 
 def _broadcast_or_capture(spark, payload):
@@ -82,6 +119,16 @@ def with_norm(df: DataFrame, vec_col: str, out: str = "norm") -> DataFrame:
     return df.withColumn(out, _norm(F.col(vec_col)))
 
 
+def _top_k(scored: DataFrame, k: int) -> DataFrame:
+    """Each query's ``k`` best ``(query_id, neighbor_id, cosine)`` rows,
+    ranked by cosine descending with ties to the lower neighbor_id, plus
+    that ``rank`` — the one top-k tail of the search operators."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cosine").desc(), F.col("neighbor_id").asc())
+    return (scored.withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= k))
+
+
 def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -99,7 +146,7 @@ def cosine_topk(
     emits only its local top-k per query — exact, because global top-k ⊆
     union of per-partition top-k. The corpus is scanned once, never
     shuffled; only |queries| × k × partitions candidate rows reach the
-    final ranking window.
+    final ranking window. NULL vectors are never a query or a neighbor.
     """
     import numpy as np
     import pandas as pd
@@ -109,6 +156,7 @@ def cosine_topk(
     q_ids, qm_n = _collect_matrix(queries, id_col, vec_col)  # query side: small by contract
     spark = corpus.sparkSession
     get_q = _broadcast_or_capture(spark, (q_ids, qm_n))
+    id_dtype = _id_dtype(corpus, id_col)
 
     out_schema = StructType([
         StructField("query_id", LongType()),
@@ -119,12 +167,10 @@ def cosine_topk(
     def part(it):
         ids, qn = get_q()
         for pdf in it:
-            if not len(pdf):
+            _, c_ids, cm_n = _unit_rows(pdf, id_col, vec_col, id_dtype)
+            if not len(c_ids):
                 continue
-            cm = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            cm_n = cm / np.linalg.norm(cm, axis=1, keepdims=True)
             sims = qn @ cm_n.T                      # (n_q, n_batch) BLAS
-            c_ids = pdf[id_col].to_numpy()
             for qi, qid in enumerate(ids):
                 s = sims[qi]
                 mask = c_ids != qid if exclude_self else np.ones(len(s), bool)
@@ -141,14 +187,37 @@ def cosine_topk(
 
     from ..plans import fan_out
 
-    candidates = fan_out(corpus.select(id_col, vec_col)).mapInPandas(part, out_schema)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        candidates.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _top_k(
+        fan_out(corpus.select(id_col, vec_col)).mapInPandas(part, out_schema),
+        k)
+
+
+def _hof_scored(corpus: DataFrame, queries: DataFrame, *, id_col: str,
+                vec_col: str, exclude_self: bool,
+                label_col: Optional[str] = None) -> DataFrame:
+    """``(query_id, neighbor_id, cosine)`` for every corpus row against
+    the broadcast query set, as pure Column math (higher-order dot
+    product, no Python). With ``label_col`` only pairs whose labels
+    differ are scored, and rows with a NULL label are dropped on both
+    sides."""
+    def side(df, id_as, v, lbl, n):
+        if label_col:
+            df = df.filter(F.col(label_col).isNotNull())
+        cols = [F.col(id_col).alias(id_as), F.col(vec_col).alias(v)]
+        if label_col:
+            cols.append(F.col(label_col).alias(lbl))
+        return df.select(*cols).withColumn(n, _norm(F.col(v)))
+
+    q = side(queries, "query_id", "__qv", "__ql", "__qn")
+    c = side(corpus, "neighbor_id", "__cv", "__cl", "__cn")
+    joined = c.crossJoin(F.broadcast(q))
+    if exclude_self:
+        joined = joined.filter(F.col("neighbor_id") != F.col("query_id"))
+    if label_col:
+        joined = joined.filter(F.col("__cl") != F.col("__ql"))
+    sim = (_dot(F.col("__qv"), F.col("__cv"))
+           / (F.col("__qn") * F.col("__cn"))).alias("cosine")
+    return joined.select("query_id", "neighbor_id", sim)
 
 
 def cosine_topk_hof(
@@ -164,24 +233,8 @@ def cosine_topk_hof(
     dot). No Python workers at all, but per-element expression evaluation
     is ~10× slower than the BLAS path on wide vectors — kept as the
     zero-dependency fallback and the semantic reference."""
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qv")
-    ).withColumn("__qn", _norm(F.col("__qv")))
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__cv")
-    ).withColumn("__cn", _norm(F.col("__cv")))
-    joined = c.crossJoin(F.broadcast(q))
-    if exclude_self:
-        joined = joined.filter(F.col("neighbor_id") != F.col("query_id"))
-    sim = (_dot(F.col("__qv"), F.col("__cv")) / (F.col("__qn") * F.col("__cn"))).alias("cosine")
-    scored = joined.select("query_id", "neighbor_id", sim)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _top_k(_hof_scored(corpus, queries, id_col=id_col,
+                              vec_col=vec_col, exclude_self=exclude_self), k)
 
 
 def hard_negatives(
@@ -203,52 +256,80 @@ def hard_negatives(
     prove neither positive nor negative. Returns (query_id,
     neighbor_id, cosine, rank).
 
-    Scale shape: cosine_topk_hof's contract — the query set is small
-    by contract and broadcast (with its labels); the corpus is scanned
-    once, never shuffled; the mask is a map-side predicate so only
-    masked candidates reach the per-query rank window."""
-    q = (queries
-         .filter(F.col(label_col).isNotNull())
-         .select(F.col(id_col).alias("query_id"),
-                 F.col(vec_col).alias("__qv"),
-                 F.col(label_col).alias("__ql"))
-         .withColumn("__qn", _norm(F.col("__qv"))))
-    c = (corpus
-         .filter(F.col(label_col).isNotNull())
-         .select(F.col(id_col).alias("neighbor_id"),
-                 F.col(vec_col).alias("__cv"),
-                 F.col(label_col).alias("__cl"))
-         .withColumn("__cn", _norm(F.col("__cv"))))
-    joined = (c.crossJoin(F.broadcast(q))
-              .filter(F.col("__cl") != F.col("__ql")))
-    sim = (_dot(F.col("__qv"), F.col("__cv"))
-           / (F.col("__qn") * F.col("__cn"))).alias("cosine")
-    scored = joined.select("query_id", "neighbor_id", sim)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc())
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k))
+    Scale shape: cosine_topk_hof's scoring body with the label mask —
+    the query set is small by contract and broadcast (with its labels);
+    the corpus is scanned once, never shuffled; the mask is a map-side
+    predicate so only masked candidates reach the per-query rank window.
+    A query is never its own negative: it shares its own label."""
+    return _top_k(_hof_scored(corpus, queries, id_col=id_col,
+                              vec_col=vec_col, exclude_self=False,
+                              label_col=label_col), k)
 
 
-def _iter_threshold_tiles(ids, m_n, threshold: float, chunk: int):
-    """Yield (idx_a, idx_b, cosine) arrays for all pairs with
-    ``cosine >= threshold`` and ``ids[a] < ids[b]``, computed as
-    ``chunk × chunk`` BLAS tiles so no sims matrix exceeds chunk²
-    doubles regardless of group size. Shared by the blocked and
-    LSH-bucketed pair operators."""
+def _threshold_pairs(ids_a, unit_a, ids_b, unit_b, threshold: float,
+                     chunk: int = _CHUNK):
+    """The pair kernel: ``(idx_a, idx_b, cosine)`` arrays for every row
+    of A and row of B with ``cosine >= threshold`` and
+    ``ids_a[idx_a] < ids_b[idx_b]``. ``unit_a``/``unit_b`` are unit-row
+    matrices from :func:`_unit_rows`. The product is formed as
+    ``chunk × chunk`` BLAS tiles, so no sims matrix exceeds chunk²
+    doubles whatever the sizes. The grouped searches pass one group as
+    both sides; the broadcast search passes a batch against the
+    corpus."""
     import numpy as np
 
-    n = len(ids)
-    for lo_i in range(0, n, chunk):
-        hi_i = min(lo_i + chunk, n)
-        for lo_j in range(0, n, chunk):
-            hi_j = min(lo_j + chunk, n)
-            sims = m_n[lo_i:hi_i] @ m_n[lo_j:hi_j].T
+    out = []
+    for lo_a in range(0, len(ids_a), chunk):
+        tile_ids_a = ids_a[lo_a:lo_a + chunk, None]
+        for lo_b in range(0, len(ids_b), chunk):
+            sims = unit_a[lo_a:lo_a + chunk] @ unit_b[lo_b:lo_b + chunk].T
             ia, ib = np.nonzero(
                 (sims >= threshold)
-                & (ids[lo_i:hi_i, None] < ids[None, lo_j:hi_j]))
+                & (tile_ids_a < ids_b[None, lo_b:lo_b + chunk]))
             if len(ia):
-                yield ia + lo_i, ib + lo_j, sims[ia, ib]
+                out.append((ia + lo_a, ib + lo_b, sims[ia, ib]))
+    if not out:
+        return np.empty(0, np.intp), np.empty(0, np.intp), np.empty(0)
+    return tuple(np.concatenate(col) for col in zip(*out))
+
+
+def _pair_schema(df: DataFrame, id_col: str, carry=()) -> str:
+    """``id_a, id_b, *carry, cosine`` with the id and carried columns
+    typed as in ``df``."""
+    def typed(name, col):
+        return f"{name} {df.schema[col].dataType.simpleString()}"
+
+    return ", ".join([typed("id_a", id_col), typed("id_b", id_col),
+                      *(typed(c, c) for c in carry), "cosine double"])
+
+
+def _grouped_pairs(cand: DataFrame, cells: list, *, id_col: str,
+                   vec_col: str, threshold: float, chunk: int,
+                   keep=None, carry=()) -> DataFrame:
+    """The one grouped pair search: ``cand``'s rows grouped by the
+    ``cells`` columns, and the kernel run on each group against itself
+    inside one grouped ``applyInPandas``. Returns ``(id_a, id_b,
+    *carry, cosine)``, where ``carry`` names cell columns copied onto
+    each pair. ``keep(key, rows, idx_a, idx_b)``, when given, returns a
+    mask over a group's pairs, for callers whose groups overlap."""
+    import pandas as pd
+
+    id_dtype = _id_dtype(cand, id_col)
+
+    def _cell(key, pdf):
+        rows, ids, unit = _unit_rows(pdf, id_col, vec_col, id_dtype)
+        ia, ib, cos = _threshold_pairs(ids, unit, ids, unit, threshold, chunk)
+        if keep is not None:
+            m = keep(key, rows, ia, ib)
+            ia, ib, cos = ia[m], ib[m], cos[m]
+        out = {"id_a": ids[ia], "id_b": ids[ib]}
+        for c in carry:
+            out[c] = [key[cells.index(c)]] * len(ia)
+        out["cosine"] = cos
+        return pd.DataFrame(out)
+
+    return cand.groupBy(*cells).applyInPandas(
+        _cell, _pair_schema(cand, id_col, carry))
 
 
 def near_duplicate_pairs(
@@ -261,52 +342,40 @@ def near_duplicate_pairs(
 ) -> DataFrame:
     """All pairs with cosine >= threshold (embedding near-dup detection).
 
-    The full corpus matrix (normalized, float64) is broadcast and each
-    partition computes its block-vs-all BLAS product, emitting only pairs
-    over threshold with id_a < id_b — an O(n²) compute but O(n) shuffle.
-    Broadcasting bounds corpus size (~2M × 64-dim ≈ 1 GB); beyond that,
-    bucket with ``random_hyperplane_lsh`` first and run this per bucket —
-    that composition is the 100 TB path.
+    The exact reference tier. The full corpus matrix (normalized,
+    float64) is broadcast and each Arrow batch runs the pair kernel
+    against it (batch × corpus, tiled like the other tiers), emitting
+    only pairs over threshold with id_a < id_b — an O(n²) compute but
+    O(n) shuffle. Broadcasting bounds corpus size (~2M × 64-dim ≈ 1 GB);
+    beyond that use ``blocked_near_duplicate_pairs`` (exact, no cap) or
+    ``bucketed_near_duplicate_pairs`` (LSH candidates). Rows with a NULL
+    vector are in no pair; ids keep their input type.
     """
-    import numpy as np
     import pandas as pd
-    from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
-    ids, m_n = _collect_matrix(df, id_col, vec_col)
+    ids, unit = _collect_matrix(df, id_col, vec_col)
     if len(ids) > corpus_broadcast_limit:
         raise ValueError(
             f"corpus has {len(ids)} vectors > broadcast limit; "
-            "bucket with random_hyperplane_lsh first")
-    spark = df.sparkSession
-    get_all = _broadcast_or_capture(spark, (ids, m_n))
-
-    out_schema = StructType([
-        StructField("id_a", LongType()),
-        StructField("id_b", LongType()),
-        StructField("cosine", DoubleType()),
-    ])
+            "use blocked_near_duplicate_pairs or "
+            "bucketed_near_duplicate_pairs")
+    get_all = _broadcast_or_capture(df.sparkSession, (ids, unit))
+    id_dtype = _id_dtype(df, id_col)
 
     def part(it):
-        all_ids, all_m = get_all()
+        all_ids, all_unit = get_all()
         for pdf in it:
-            if not len(pdf):
-                continue
-            bm = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            bm_n = bm / np.linalg.norm(bm, axis=1, keepdims=True)
-            b_ids = pdf[id_col].to_numpy()
-            sims = bm_n @ all_m.T                  # (n_batch, n_corpus)
-            ai, bi = np.nonzero((sims >= threshold) & (b_ids[:, None] < all_ids[None, :]))
-            if not len(ai):
-                continue
-            yield pd.DataFrame({
-                "id_a": b_ids[ai].astype(np.int64),
-                "id_b": all_ids[bi].astype(np.int64),
-                "cosine": sims[ai, bi],
-            })
+            _, b_ids, b_unit = _unit_rows(pdf, id_col, vec_col, id_dtype)
+            ia, ib, cos = _threshold_pairs(
+                b_ids, b_unit, all_ids, all_unit, threshold)
+            if len(ia):
+                yield pd.DataFrame({"id_a": b_ids[ia], "id_b": all_ids[ib],
+                                    "cosine": cos})
 
     from ..plans import fan_out
 
-    return fan_out(df.select(id_col, vec_col)).mapInPandas(part, out_schema)
+    return fan_out(df.select(id_col, vec_col)).mapInPandas(
+        part, _pair_schema(df, id_col))
 
 
 def blocked_near_duplicate_pairs(
@@ -316,7 +385,7 @@ def blocked_near_duplicate_pairs(
     vec_col: str = "embedding",
     threshold: float = 0.95,
     num_blocks: int = 8,
-    chunk: int = 4096,
+    chunk: int = _CHUNK,
 ) -> DataFrame:
     """Exact all-pairs cosine >= threshold with NO driver collect and no
     corpus-size cap — the drop-in scale replacement for
@@ -325,11 +394,12 @@ def blocked_near_duplicate_pairs(
     Block nested-loop join: rows hash into ``num_blocks`` blocks; each
     row is replicated to the ``num_blocks`` unordered block pairs it
     participates in (one explode — shuffle volume O(n · num_blocks)),
-    and each (i, j) group computes its cross-block BLAS product inside
-    grouped ``applyInPandas``, chunked so no sims matrix exceeds
-    ``chunk²`` doubles. Same-block pairs are emitted only by the
-    diagonal group (i, i), cross-block pairs only by (i, j), i < j — so
-    every pair is produced exactly once and no dedup pass is needed.
+    and each (i, j) group runs the pair kernel inside the grouped
+    ``applyInPandas``, chunked so no sims matrix exceeds ``chunk²``
+    doubles. A group keeps only the pairs whose own block pair is the
+    group's: same-block pairs come only from the diagonal group (i, i),
+    cross-block pairs only from (i, j), i < j — so every pair is
+    produced exactly once and no dedup pass is needed.
 
     Exact: identical output to ``near_duplicate_pairs`` for unique ids
     (asserted in tests, including chunk sizes that don't divide the
@@ -342,7 +412,6 @@ def blocked_near_duplicate_pairs(
     grows.
     """
     import numpy as np
-    import pandas as pd
 
     B = max(1, num_blocks)
     blk = F.pmod(F.xxhash64(F.col(id_col)), F.lit(B)).alias("__blk")
@@ -356,33 +425,14 @@ def blocked_near_duplicate_pairs(
     )).alias("__pair")
     cand = base.select(id_col, vec_col, "__blk", pair_id)
 
-    def _pair_block(key, pdf):
-        gi, gj = divmod(int(key[0]), B)
-        ids = pdf[id_col].to_numpy(dtype=np.int64)
-        blks = pdf["__blk"].to_numpy()
-        m = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-        m_n = m / np.linalg.norm(m, axis=1, keepdims=True)
-        out_a, out_b, out_c = [], [], []
-        for ga, gb, cos in _iter_threshold_tiles(ids, m_n, threshold, chunk):
-            if gi != gj:  # off-diagonal group: cross-block pairs only
-                keep = blks[ga] != blks[gb]
-                ga, gb, cos = ga[keep], gb[keep], cos[keep]
-            if not len(ga):
-                continue
-            out_a.append(ids[ga])
-            out_b.append(ids[gb])
-            out_c.append(cos)
-        if not out_a:
-            return pd.DataFrame({"id_a": [], "id_b": [], "cosine": []}).astype(
-                {"id_a": "int64", "id_b": "int64", "cosine": "float64"})
-        return pd.DataFrame({
-            "id_a": np.concatenate(out_a),
-            "id_b": np.concatenate(out_b),
-            "cosine": np.concatenate(out_c),
-        })
+    def _own_block_pair(key, rows, ia, ib):
+        b = rows["__blk"].to_numpy()
+        return (np.minimum(b[ia], b[ib]) * B + np.maximum(b[ia], b[ib])
+                == key[0])
 
-    return cand.groupBy("__pair").applyInPandas(
-        _pair_block, "id_a long, id_b long, cosine double")
+    return _grouped_pairs(cand, ["__pair"], id_col=id_col, vec_col=vec_col,
+                          threshold=threshold, chunk=chunk,
+                          keep=_own_block_pair)
 
 
 def bucketed_near_duplicate_pairs(
@@ -395,18 +445,18 @@ def bucketed_near_duplicate_pairs(
     num_tables: int = 8,
     planes_per_table: int = 8,
     seed: int = 42,
-    chunk: int = 4096,
+    chunk: int = _CHUNK,
 ) -> DataFrame:
     """near_duplicate_pairs without the driver-memory ceiling.
 
-    The 100 TB path promised by ``near_duplicate_pairs``'s docstring,
-    packaged: each row is bucketed by ``num_tables`` independent
-    random-hyperplane LSH tables (pure column expressions, one scan),
-    then each (table, bucket) group runs an all-pairs block BLAS product
-    via grouped ``applyInPandas`` and emits only pairs over threshold;
-    a final groupBy dedups pairs found by several tables. Nothing is
-    collected to the driver and no broadcast grows with the corpus —
-    shuffle volume is O(n · num_tables) rows, compute is O(Σ bucket²).
+    Each row is bucketed by ``num_tables`` independent random-hyperplane
+    LSH tables (the :func:`random_hyperplane_lsh` bucket, pure column
+    expressions, one scan), then each (table, bucket) group runs the
+    pair kernel inside the grouped ``applyInPandas`` and emits only
+    pairs over threshold; a final groupBy dedups pairs found by several
+    tables. Nothing is collected to the driver and no broadcast grows
+    with the corpus — shuffle volume is O(n · num_tables) rows, compute
+    is O(Σ bucket²).
 
     Recall: a pair is found iff some table puts both rows in the same
     bucket — P(hit one table) = (1 - θ/π)^planes, so more tables with
@@ -425,52 +475,20 @@ def bucketed_near_duplicate_pairs(
     Within a bucket the product is tiled to ``chunk²`` doubles so a
     large bucket degrades to more tile iterations, not an OOM.
     """
-    import numpy as np
-    import pandas as pd  # noqa: F401 — worker closure
-
     # ONE scan: every table's bucket id is a pure column expression, so
     # all num_tables (table, bucket) assignments ride a single exploded
     # projection — the union-of-branches formulation re-scanned (and
     # re-normalized) the corpus once per table
-    structs = []
-    for t in range(num_tables):
-        rnd = _lcg(seed + 7919 * t)
-        planes = [[_gauss(rnd) for _ in range(dim)]
-                  for _ in range(planes_per_table)]
-        bucket = None
-        for p_idx, plane in enumerate(planes):
-            lit_plane = F.array(*[F.lit(float(v)) for v in plane])
-            bit = (_dot(F.col(vec_col), lit_plane) > 0).cast("long")
-            term = bit * F.lit(2 ** p_idx).cast("long")
-            bucket = term if bucket is None else bucket + term
-        structs.append(F.struct(F.lit(t).alias("__table"),
-                                bucket.alias("__bucket")))
+    structs = [
+        F.struct(F.lit(t).alias("__table"),
+                 _hyperplane_bucket(vec_col, dim, planes_per_table,
+                                    seed + 7919 * t).alias("__bucket"))
+        for t in range(num_tables)]
     cand = (df.select(id_col, vec_col,
                       F.explode(F.array(*structs)).alias("__tb"))
             .select(id_col, vec_col, "__tb.__table", "__tb.__bucket"))
-
-    def _bucket_pairs(pdf):
-        empty = pd.DataFrame({"id_a": [], "id_b": [], "cosine": []}).astype(
-            {"id_a": "int64", "id_b": "int64", "cosine": "float64"})
-        if len(pdf) < 2:
-            return empty
-        m = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-        m_n = m / np.linalg.norm(m, axis=1, keepdims=True)
-        ids = pdf[id_col].to_numpy(dtype=np.int64)
-        out_a, out_b, out_c = [], [], []
-        for ga, gb, cos in _iter_threshold_tiles(ids, m_n, threshold, chunk):
-            out_a.append(ids[ga])
-            out_b.append(ids[gb])
-            out_c.append(cos)
-        if not out_a:
-            return empty
-        return pd.DataFrame({
-            "id_a": np.concatenate(out_a),
-            "id_b": np.concatenate(out_b),
-            "cosine": np.concatenate(out_c)})
-
-    pairs = cand.groupBy("__table", "__bucket").applyInPandas(
-        _bucket_pairs, "id_a long, id_b long, cosine double")
+    pairs = _grouped_pairs(cand, ["__table", "__bucket"], id_col=id_col,
+                           vec_col=vec_col, threshold=threshold, chunk=chunk)
     # same pair may surface from several tables; cosine is identical
     # (recomputed exactly) so any aggregate works — max is deterministic
     return pairs.groupBy("id_a", "id_b").agg(F.max("cosine").alias("cosine"))
@@ -951,9 +969,7 @@ def ivf_topk(
     joined = c.join(F.broadcast(probes), on="centroid_id") \
               .filter(F.col("neighbor_id") != F.col("query_id"))
     sim = _dot(F.col("__qv"), F.col("__cv")) / (F.col("__qn") * F.col("__cn2"))
-    scored = joined.select("query_id", "neighbor_id", sim.alias("cosine"))
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id").asc())
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _top_k(joined.select("query_id", "neighbor_id", sim.alias("cosine")), k)
 
 
 # ---------------------------------------------------------------------------
@@ -975,6 +991,14 @@ def random_hyperplane_lsh(
     driver-side and inlined as array literals — executors evaluate pure
     column expressions; vectors with the same bucket are cosine-close
     candidates."""
+    return df.withColumn(out, _hyperplane_bucket(vec_col, dim, num_planes, seed))
+
+
+def _hyperplane_bucket(vec_col: str, dim: int, num_planes: int,
+                       seed: int) -> Column:
+    """Sign-bit bucket id of ``vec_col`` against ``num_planes``
+    hyperplanes drawn from ``seed``: bit p is set when the vector lies
+    on plane p's positive side. NULL for a NULL vector."""
     rnd = _lcg(seed)
     planes = [
         [_gauss(rnd) for _ in range(dim)] for _ in range(num_planes)
@@ -985,7 +1009,7 @@ def random_hyperplane_lsh(
         bit = (_dot(F.col(vec_col), lit_plane) > 0).cast("long")
         term = bit * F.lit(2 ** p_idx).cast("long")
         bucket = term if bucket is None else bucket + term
-    return df.withColumn(out, bucket)
+    return bucket
 
 
 def _lcg(seed: int):
@@ -1497,16 +1521,16 @@ def semdedup_pairs(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     threshold: float = 0.95,
-    chunk: int = 4096,
+    chunk: int = _CHUNK,
 ) -> DataFrame:
     """Within-cluster near-duplicate pairs — the candidate step of
     SemDeDup (Abbas et al. 2023, arXiv:2303.09540): assign every vector
     to its nearest centroid, then compare ONLY vectors sharing a cell.
 
     Scale shape: assignment is a single scan against a broadcast
-    centroid table (:func:`assign_centroids`); the pair search is one
-    groupBy(centroid_id) feeding a grouped ``applyInPandas`` BLAS block
-    product, tiled to ``chunk``² doubles — compute O(Σ cell²) instead of
+    centroid table (:func:`assign_centroids`); the pair search is the
+    module's pair kernel per groupBy(centroid_id) group, in one grouped
+    ``applyInPandas``, tiled to ``chunk``² doubles — compute O(Σ cell²) instead of
     the O(n²) of exact all-pairs, shuffle O(n) rows, nothing collected
     to the driver. Cell sizes must stay task-sized: grow
     ``num_centroids`` with the corpus (n/k rows per cell on average),
@@ -1521,51 +1545,17 @@ def semdedup_pairs(
     e.g. ``train_centroids_df`` over string labels work; the output
     schema is derived, not hardcoded to long). If ``df`` already
     carries a ``centroid_id`` column the assignment scan is skipped
-    (how :func:`semdedup` avoids assigning twice).
+    (how :func:`semdedup` avoids assigning twice). A row with a NULL
+    vector is in no pair.
     """
-    import numpy as np
-    import pandas as pd  # noqa: F401 — worker closure
-
     if "centroid_id" in df.columns:
         assigned = df.select(id_col, vec_col, "centroid_id")
     else:
         assigned = assign_centroids(
             df.select(id_col, vec_col), centroids, vec_col=vec_col)
-    id_t = assigned.schema[id_col].dataType.simpleString()
-    cid_t = assigned.schema["centroid_id"].dataType.simpleString()
-    id_np = "int64" if id_t in ("bigint", "int", "smallint", "tinyint") \
-        else "object"
-
-    def _cell_pairs(pdf):
-        empty = pd.DataFrame(
-            {"id_a": [], "id_b": [], "centroid_id": [], "cosine": []}
-        ).astype({"id_a": id_np, "id_b": id_np,
-                  "centroid_id": pdf["centroid_id"].dtype
-                  if len(pdf) else "object",
-                  "cosine": "float64"})
-        if len(pdf) < 2:
-            return empty
-        m = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-        m_n = m / np.linalg.norm(m, axis=1, keepdims=True)
-        ids = pdf[id_col].to_numpy() if id_np == "object" \
-            else pdf[id_col].to_numpy(dtype=np.int64)
-        cid = pdf["centroid_id"].iloc[0]
-        out_a, out_b, out_c = [], [], []
-        for ga, gb, cos in _iter_threshold_tiles(ids, m_n, threshold, chunk):
-            out_a.append(ids[ga])
-            out_b.append(ids[gb])
-            out_c.append(cos)
-        if not out_a:
-            return empty
-        a = np.concatenate(out_a)
-        return pd.DataFrame({
-            "id_a": a, "id_b": np.concatenate(out_b),
-            "centroid_id": [cid] * len(a),
-            "cosine": np.concatenate(out_c)})
-
-    return assigned.groupBy("centroid_id").applyInPandas(
-        _cell_pairs,
-        f"id_a {id_t}, id_b {id_t}, centroid_id {cid_t}, cosine double")
+    return _grouped_pairs(assigned, ["centroid_id"], id_col=id_col,
+                          vec_col=vec_col, threshold=threshold, chunk=chunk,
+                          carry=("centroid_id",))
 
 
 def semdedup(
@@ -1577,7 +1567,7 @@ def semdedup(
     centroids: Optional[DataFrame] = None,
     num_centroids: int = 16,
     by_col: Optional[str] = None,
-    chunk: int = 4096,
+    chunk: int = _CHUNK,
 ) -> DataFrame:
     """Semantic deduplication (SemDeDup, arXiv:2303.09540): cluster the
     embedding space, then drop every vector that has a LOWER-id neighbor
@@ -1591,7 +1581,9 @@ def semdedup(
     approximation of exact near-dup removal. Pass a refined codebook
     from :func:`kmeans_refine` for better cells at the same cost.
 
-    Returns the kept rows: all original columns + ``centroid_id``.
+    Returns the kept rows: all original columns + ``centroid_id``. A row
+    with a NULL vector is in no pair, so it is kept (with a NULL
+    ``centroid_id``).
     """
     from pyspark.storagelevel import StorageLevel
 

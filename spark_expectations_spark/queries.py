@@ -1146,12 +1146,13 @@ ORACLE_DEDUP_SIMHASH_MD5 = _oracle_simhash_md5()
 
 
 def q_embed_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Headline near-dup pairs — routes through the scale-safe
-    similarity.blocked_near_duplicate_pairs tier (scan-fed, chunk-tiled,
-    no driver collect, no corpus-size cap). The broadcast tier
-    (similarity.near_duplicate_pairs, ≤2M-row cap) remains available as a
-    documented small-corpus opt-in and is exercised by
-    embed_near_dups_bcast below."""
+    """Headline near-dup pairs through the exact, uncapped contract
+    (similarity.blocked_near_duplicate_pairs: scan-fed block
+    nested-loop join, no driver collect). All four embedding near-dup
+    operators run one tiled pair kernel and differ only in how they
+    pick the rows compared; a NULL vector is in no pair. The broadcast
+    contract (similarity.near_duplicate_pairs, ≤2M-row cap) is
+    exercised by embed_near_dups_bcast below."""
     emb = load(spark, sf_dir, "embeddings")
     pairs = similarity.blocked_near_duplicate_pairs(
         emb, id_col="vec_id", vec_col="embedding", threshold=0.4)
@@ -1174,11 +1175,13 @@ WHERE list_sum(list_transform(range(1, len(a.e) + 1),
 
 
 def q_embed_near_dups_bcast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Small-corpus opt-in tier (similarity.near_duplicate_pairs):
-    collects the matrix to the driver and broadcasts it — fastest under
-    the hard 2M-row cap, never the default. Exact, so it shares
-    embed_near_dups' oracle verbatim; keeping it in the catalog pins the
-    tiers' parity every round."""
+    """The broadcast contract (similarity.near_duplicate_pairs): the
+    corpus matrix is collected to the driver and broadcast, and each
+    Arrow batch runs the shared tiled pair kernel against it — under a
+    hard 2M-row cap, never the default. Exact, so it shares
+    embed_near_dups' oracle verbatim; keeping it in the catalog pins
+    the two exact contracts' parity every round. A NULL vector is in
+    no pair."""
     emb = load(spark, sf_dir, "embeddings")
     pairs = similarity.near_duplicate_pairs(
         emb, id_col="vec_id", vec_col="embedding", threshold=0.4)
@@ -12162,7 +12165,7 @@ DRIVER_PRIORITY: list[str] = [
     "docs_padding_waste", "docs_span_removal", "docs_source_qnorm",
     "docs_bootstrap_ci", "docs_curriculum", "docs_interleave",
     "docs_score_auc",
-    # 26 of the r12-stale cohort, risk-first: dedup/graph/embedding
+    # 25 of the r12-stale cohort, risk-first: dedup/graph/embedding
     # pipelines and sketch rollups before single-fold metrics
     "dedup_canonical", "dedup_canonical_centrality", "dedup_clusters",
     "dedup_containment", "dedup_fingerprint", "docs_cc_largestar",
@@ -12172,13 +12175,18 @@ DRIVER_PRIORITY: list[str] = [
     "docs_source_qnorm_bucketed", "docs_weighted_topk",
     "events_cms_daily_rollup", "events_distinct_rollup_exact",
     "events_hourly_anomalies", "docs_dsir_weights", "docs_group_sample",
-    "docs_ngram_novelty", "docs_dup_shingles", "docs_corpus_report",
+    "docs_ngram_novelty", "docs_dup_shingles",
     # the two leakage-safe splits: with the dedup entries above they
     # are every catalog caller of graph.connected_components, gated
     # together since it became the one connected-components operator
     # (displacing docs_line_stats and docs_label_alpha_ci, unchanged
     # single-fold metrics)
     "docs_split_leakage", "docs_cv_leakage_safe",
+    # the broadcast near-dup tier: its pair search moved onto the
+    # module's one tiled pair kernel (with embed_near_dups and
+    # embed_semdedup above, every catalog caller of that kernel);
+    # displaces docs_corpus_report, an unchanged single-agg rollup
+    "embed_near_dups_bcast",
 ]
 
 

@@ -459,6 +459,78 @@ class TestSimilarity:
         kept = similarity.semdedup(df, threshold=0.99, centroids=cents)
         assert {r["vec_id"] for r in kept.collect()} == {"doc-a", "doc-c"}
 
+    # the three corpus-wide pair searches, each called the way its own
+    # contract needs (blocked with tiles smaller than a group, bucketed
+    # over 2-dim vectors)
+    PAIR_SEARCHES = {
+        "broadcast": lambda df: similarity.near_duplicate_pairs(
+            df, threshold=0.99),
+        "blocked": lambda df: similarity.blocked_near_duplicate_pairs(
+            df, threshold=0.99, num_blocks=3, chunk=2),
+        "bucketed": lambda df: similarity.bucketed_near_duplicate_pairs(
+            df, dim=2, threshold=0.99),
+    }
+
+    @pytest.mark.parametrize("search", [*PAIR_SEARCHES, "semdedup"])
+    def test_null_vectors_are_in_no_pair(self, spark, search):
+        """A row whose vector is NULL has no cosine, so it is in no pair
+        in any tier; semdedup keeps such rows, as it keeps every row
+        without a lower-id near-dup."""
+        df = spark.createDataFrame(
+            [(1, [1.0, 0.0]), (2, [0.999, 0.01]), (3, None), (4, None),
+             (5, [0.0, 1.0])],
+            "vec_id long, embedding array<float>")
+        if search == "semdedup":
+            cents = spark.createDataFrame(
+                [(0, [1.0, 0.0]), (1, [0.0, 1.0])],
+                "centroid_id long, centroid array<float>")
+            kept = similarity.semdedup(df, threshold=0.99, centroids=cents)
+            assert {r["vec_id"] for r in kept.collect()} == {1, 3, 4, 5}
+            return
+        pairs = self.PAIR_SEARCHES[search](df).collect()
+        assert [(r["id_a"], r["id_b"]) for r in pairs] == [(1, 2)]
+
+    @pytest.mark.parametrize("search", list(PAIR_SEARCHES))
+    def test_pair_searches_keep_string_ids(self, spark, search):
+        """Every tier types its ids from the input schema, as
+        semdedup_pairs does: string ids pair by string order."""
+        df = spark.createDataFrame(
+            [("doc-b", [0.999, 0.01]), ("doc-a", [1.0, 0.0]),
+             ("doc-c", [0.0, 1.0]), ("doc-d", [0.01, 0.999])],
+            "vec_id string, embedding array<float>")
+        pairs = self.PAIR_SEARCHES[search](df)
+        assert pairs.schema["id_a"].dataType.simpleString() == "string"
+        assert {(r["id_a"], r["id_b"]) for r in pairs.collect()} == {
+            ("doc-a", "doc-b"), ("doc-c", "doc-d")}
+
+    @pytest.mark.parametrize("square", [False, True])
+    def test_pair_kernel_matches_brute_force(self, square):
+        """The tiled kernel equals one untiled product, with a chunk that
+        divides neither side, for a batch against a corpus (rectangular)
+        and for a group against itself (square)."""
+        import numpy as np
+
+        rng = np.random.default_rng(7)
+
+        def side(n):
+            m = rng.normal(size=(n, 5))
+            return (rng.permutation(100)[:n],
+                    m / np.linalg.norm(m, axis=1, keepdims=True))
+
+        ids_a, unit_a = side(23)
+        ids_b, unit_b = (ids_a, unit_a) if square else side(17)
+        ia, ib, cos = similarity._threshold_pairs(
+            ids_a, unit_a, ids_b, unit_b, 0.2, chunk=5)
+        sims = unit_a @ unit_b.T
+        want_a, want_b = np.nonzero(
+            (sims >= 0.2) & (ids_a[:, None] < ids_b[None, :]))
+        got = sorted(zip(ids_a[ia], ids_b[ib], cos))
+        want = sorted(zip(ids_a[want_a], ids_b[want_b], sims[want_a, want_b]))
+        assert len(want) > 10
+        assert [g[:2] for g in got] == [w[:2] for w in want]
+        assert np.allclose([g[2] for g in got], [w[2] for w in want],
+                           rtol=0, atol=1e-12)
+
     def test_semdedup_consistent_with_pairs(self, emb):
         """kept == corpus minus the distinct id_b side of semdedup_pairs
         (the removal rule is exactly 'has a lower-id in-cell neighbor')."""
