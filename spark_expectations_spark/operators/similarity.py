@@ -25,6 +25,14 @@ selects the candidates) and :func:`semdedup_pairs` (within one centroid
 cell). All four drop a row whose vector is NULL — it has no cosine, so
 it is in no pair — and take ids of any orderable type, typed from the
 input schema.
+
+Squared-L2 nearest-centroid assignment — :func:`lloyd_kmeans`,
+:func:`kmeans_cluster_qa`, :func:`product_quantize_arrow` and the two
+streaming codebook monitors — comes from one tiled numpy kernel,
+:func:`_nearest`, with Spark's ordering as its one tie and NaN rule.
+Those operators read a long-form codebook with :func:`_read_codebook`
+and keep only rows that pass :func:`_usable`: a NULL, empty or
+non-finite vector has no distance, so it joins no cluster.
 """
 
 from __future__ import annotations
@@ -36,8 +44,9 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegralType
 
-#: rows per side of one similarity tile: no product the pair kernel forms
-#: exceeds _CHUNK² doubles (128 MiB), whatever the group or corpus size
+#: rows per side of one similarity tile: no product the pair kernel forms,
+#: and no distance block the nearest-centroid kernel forms, exceeds
+#: _CHUNK² doubles (128 MiB), whatever the batch, group or corpus size
 _CHUNK = 4096
 
 
@@ -147,22 +156,17 @@ def cosine_topk(
     union of per-partition top-k. The corpus is scanned once, never
     shuffled; only |queries| × k × partitions candidate rows reach the
     final ranking window. NULL vectors are never a query or a neighbor.
+    Ids of any orderable type are typed from the corpus schema.
     """
     import numpy as np
     import pandas as pd
-    from pyspark.sql.types import (DoubleType, LongType, StructField,
-                                   StructType)
 
     q_ids, qm_n = _collect_matrix(queries, id_col, vec_col)  # query side: small by contract
     spark = corpus.sparkSession
     get_q = _broadcast_or_capture(spark, (q_ids, qm_n))
     id_dtype = _id_dtype(corpus, id_col)
-
-    out_schema = StructType([
-        StructField("query_id", LongType()),
-        StructField("neighbor_id", LongType()),
-        StructField("cosine", DoubleType()),
-    ])
+    id_t = corpus.schema[id_col].dataType.simpleString()
+    out_schema = f"query_id {id_t}, neighbor_id {id_t}, cosine double"
 
     def part(it):
         ids, qn = get_q()
@@ -180,8 +184,8 @@ def cosine_topk(
                 # local exact top-k by (-cosine, id)
                 order = cand_idx[np.lexsort((c_ids[cand_idx], -s[cand_idx]))][:k]
                 yield pd.DataFrame({
-                    "query_id": np.full(len(order), qid, dtype=np.int64),
-                    "neighbor_id": c_ids[order].astype(np.int64),
+                    "query_id": np.full(len(order), qid, dtype=id_dtype),
+                    "neighbor_id": c_ids[order],
                     "cosine": s[order],
                 })
 
@@ -531,93 +535,111 @@ def train_centroids_df(
         .alias("centroid"))
 
 
-def _l2_assigned(frame: DataFrame, cents) -> DataFrame:
-    """Tag ``frame`` (which carries ``__v`` as array<double>) with the
-    squared-L2-nearest centroid from the driver-side coordinate lists
-    ``cents`` (index = centroid id). The k-row codebook rides as a
-    broadcast 1-row array-of-structs (assign_centroids' pattern — NOT
-    k·dim literals, which made every k-means iteration recompile a
-    500-node expression tree); squared-L2 to every centroid evaluated
-    once (transform), then an argmin fold with ties -> lowest
-    centroid_id. Adds ``__cid`` and ``__dist``; shuffle zero. Since
-    r16 this is the STREAMING monitors' path only (no collect at
-    wiring time, plan-side codebook — what foreachBatch wants);
-    lloyd_kmeans's batch passes moved to :func:`_lloyd_pass_arrow`
-    (vectorized partials)."""
-    spark = frame.sparkSession
-    from ..plans import local_frame
-    cents_row = local_frame(
-        spark, [(cid, list(cvec)) for cid, cvec in enumerate(cents)],
-        "cid int, cvec array<double>",
-    ).agg(F.collect_list(F.struct("cid", "cvec")).alias("__cents"))
-    dists = F.transform(
-        F.col("__cents"),
-        lambda c: F.struct(
-            F.aggregate(
-                F.zip_with(F.col("__v"), c["cvec"],
-                           lambda a, b: (a - b) * (a - b)),
-                F.lit(0.0), lambda acc, x: acc + x).alias("d"),
-            c["cid"].alias("cid")))
-    best = F.aggregate(
-        F.slice(dists, 2, F.greatest(F.size(dists) - 1, F.lit(0))),
-        F.element_at(dists, 1),
-        lambda acc, x: F.when(
-            (x["d"] < acc["d"])
-            | ((x["d"] == acc["d"]) & (x["cid"] < acc["cid"])),
-            x).otherwise(acc))
-    cols = frame.columns
-    return (frame.crossJoin(F.broadcast(cents_row))
-            .withColumn("__best", best)
-            .select(*cols, F.col("__best")["cid"].alias("__cid"),
-                    F.col("__best")["d"].alias("__dist")))
+def _nearest(x, c, tile: int = _CHUNK * _CHUNK):
+    """The squared-L2 nearest-centroid kernel: ``(idx, dist, runner)``
+    for the float64 rows ``x`` (n × dim) against the codebook ``c``
+    (k × dim) — each row's nearest codeword index, its squared distance
+    and the runner-up squared distance (+inf when k = 1).
+
+    Distances are ``((x − c)²).sum`` over row tiles, so no temporary
+    exceeds ``tile`` doubles whatever n and k are; each row's sum runs
+    over the same dim values as one untiled block, so tiling changes no
+    bit. Order is Spark's: NaN sorts above every double, +inf included,
+    and ties go to the lowest index. A row whose every distance is NaN
+    gets index 0, as ``array_position(d, array_min(d))`` does in SQL."""
+    import numpy as np
+
+    n, k = len(x), len(c)
+    idx = np.empty(n, np.intp)
+    dist = np.empty(n)
+    runner = np.full(n, np.inf)
+    step = max(1, tile // max(1, k * c.shape[1]))
+    for lo in range(0, n, step):
+        xt = x[lo:lo + step]
+        # inf − inf is NaN, which the rule below orders; no warning
+        with np.errstate(invalid="ignore"):
+            d = ((xt[:, None, :] - c[None, :, :]) ** 2).sum(-1)
+        nan = np.isnan(d)
+        best = np.where(nan, np.inf, d).argmin(axis=1)
+        # NaN was folded onto +inf for the argmin; where it won, a real
+        # +inf later in the row still beats it
+        rows = np.arange(len(d))
+        lost = nan[rows, best] & ~nan.all(axis=1)
+        best[lost] = (~nan[lost]).argmax(axis=1)
+        idx[lo:lo + step] = best
+        dist[lo:lo + step] = d[rows, best]
+        if k > 1:
+            # np.partition also sorts NaN above +inf
+            runner[lo:lo + step] = np.partition(d, 1, axis=1)[:, 1]
+    return idx, dist, runner
 
 
-def _lloyd_pass_arrow(vecs: DataFrame, cents, *, measure: bool):
-    """One Lloyd assignment pass as a single Arrow-batched
-    ``mapInPandas`` job emitting per-batch per-centroid partials —
-    ``(cid, n, s[dim])`` sums for the update step, ``(cid, n, wcss)``
-    for the final measure step — reduced driver-side (k×dim floats per
-    batch, model-scale, never corpus rows).
+def _usable(df: DataFrame, vec_col: str,
+            id_col: Optional[str] = None) -> DataFrame:
+    """``df``'s rows whose vector has a squared-L2 distance: not NULL,
+    non-empty, and every element a finite non-NULL number (``id_col``,
+    when given, non-NULL too). A NaN, ±inf or NULL element has no
+    distance, so the codebook operators put such a vector in no
+    cluster, as they do a NULL vector. Built from ``array_max`` /
+    ``array_min`` (NaN sorts above +inf), so it stays in codegen."""
+    v = F.col(vec_col)
+    ok = (v.isNotNull() & (F.size(v) > 0)
+          & (F.size(F.array_compact(v)) == F.size(v))
+          & (F.array_max(v) < F.lit(math.inf))
+          & (F.array_min(v) > F.lit(-math.inf)))
+    if id_col is not None:
+        ok = ok & F.col(id_col).isNotNull()
+    return df.filter(ok)
 
-    r16 (guide §4.2, the product_quantize_arrow precedent made the
-    default): the previous pass evaluated a k×dim ``transform`` +
-    ``aggregate`` distance fold per row. Higher-order functions are
-    CodegenFallback — measured ~3.7 ms/row interpreted at k=8, d=64 —
-    and each iteration then paid a groupBy shuffle + collect. Here the
-    distances are one vectorized ``((x−c)²).sum`` per batch (BLAS
-    speed), assignment is ``argmin`` (first-min = lowest cid, the HOF
-    fold's tie rule), and the shuffle is gone entirely — partials come
-    straight back in the collect. Float semantics: inputs upcast to
-    float64 exactly like the old ``transform(cast)``; distance/series
-    sums use numpy's pairwise order where the old fold was
-    left-to-right — the same class of reordering the DuckDB oracle
-    already absorbs (its SUM order is unspecified), far below the
-    4-digit output rounding, and assignment can differ only on an
-    EXACT squared-distance tie between distinct centroids, where both
-    rules pick the lowest cid."""
+
+def _read_codebook(centroids_long: DataFrame, carry: Optional[str] = None):
+    """``(cids, cmat)`` from a long-form ``(centroid_id, pos, coord)``
+    codebook — :func:`lloyd_kmeans`'s output shape, extra columns
+    ignored: the centroid ids in Spark's order and a k × dim float64
+    matrix of their coordinates by ``pos``. With ``carry``, a third
+    item lists that per-centroid column's value (read from each
+    centroid's first row) aligned with ``cids``. The one driver-side
+    reader of the format: one collect of k × dim rows, model-scale."""
+    import numpy as np
+
+    cols = ["centroid_id", "pos", "coord"] + ([carry] if carry else [])
+    rows = (centroids_long.select(*cols)
+            .orderBy("centroid_id", "pos").collect())
+    cids, coords, carried = [], [], []
+    for r in rows:
+        if not cids or r["centroid_id"] != cids[-1]:
+            cids.append(r["centroid_id"])
+            coords.append([])
+            carried.append(r[carry] if carry else None)
+        coords[-1].append(r["coord"])
+    cmat = np.asarray(coords, dtype=np.float64)
+    return (cids, cmat, carried) if carry else (cids, cmat)
+
+
+def _lloyd_partials(vecs: DataFrame, cents, *, measure: bool) -> DataFrame:
+    """The plan of one Lloyd assignment pass over ``vecs`` (``__v``
+    vectors that passed :func:`_usable`): one Arrow-batched
+    ``mapInPandas`` assigning each row to its nearest centroid of
+    ``cents`` (:func:`_nearest`) and emitting per-batch per-centroid
+    partials — ``(cid, n, Σx)`` for an update step, ``(cid, n, wcss)``
+    for a measure step — where ``cid`` indexes ``cents``. Map-only."""
     import numpy as np
     import pandas as pd
-
 
     c = np.asarray(cents, dtype=np.float64)
 
     def _partials(it):
         for pdf in it:
-            col = pdf["__v"].dropna()
-            if not len(col):
+            if not len(pdf):
                 continue
-            x = np.stack(col.to_numpy()).astype(np.float64)
-            d = ((x[:, None, :] - c[None, :, :]) ** 2).sum(-1)
-            cid = d.argmin(axis=1)
+            x = np.stack(pdf["__v"].to_numpy()).astype(np.float64)
+            cid, dist, _ = _nearest(x, c)
             rows = []
             for ci in np.unique(cid):
                 m = cid == ci
-                if measure:
-                    rows.append((int(ci), int(m.sum()),
-                                 float(d[m, ci].sum())))
-                else:
-                    rows.append((int(ci), int(m.sum()),
-                                 x[m].sum(axis=0).tolist()))
+                agg = (float(dist[m].sum()) if measure
+                       else x[m].sum(axis=0).tolist())
+                rows.append((int(ci), int(m.sum()), agg))
             yield pd.DataFrame(rows, columns=["cid", "n", "agg"])
 
     schema = ("cid int, n long, agg double" if measure
@@ -630,10 +652,26 @@ def _lloyd_pass_arrow(vecs: DataFrame, cents, *, measure: bool):
     # At scale the scan arrives in many partitions and parallelism is
     # free; fan_out stays on the genuinely CPU-per-row paths
     # (shingling, q-grams).
-    parts = (vecs.select("__v")
-             .mapInPandas(_partials, schema).collect())
+    return vecs.select("__v").mapInPandas(_partials, schema)
+
+
+def _lloyd_pass_arrow(vecs: DataFrame, cents, *, measure: bool) -> dict:
+    """One Lloyd assignment pass: :func:`_lloyd_partials` collected and
+    reduced driver-side to ``{cid: (n, Σx)}`` (update) or ``{cid: (n,
+    wcss)}`` (measure), a centroid no row chose absent — k×dim floats
+    per batch, model-scale, never corpus rows. ONE job, zero shuffles:
+    the partials come straight back in the collect.
+
+    Float semantics: inputs upcast to float64 exactly; distance and
+    member sums use numpy's pairwise order, the same class of
+    reordering the DuckDB oracle already absorbs (its SUM order is
+    unspecified), far below the 4-digit output rounding; assignment
+    follows :func:`_nearest`'s lowest-index tie rule, the SQL oracle's
+    ``ORDER BY dist, cid``."""
+    import numpy as np
+
     out: dict = {}
-    for p in parts:
+    for p in _lloyd_partials(vecs, cents, measure=measure).collect():
         ci = p["cid"]
         if measure:
             n0, w0 = out.get(ci, (0, 0.0))
@@ -666,7 +704,9 @@ def lloyd_kmeans(
     Deterministic by construction, no RNG: initial centroids are the
     vectors of the ``k`` smallest ids, ties in the nearest-centroid
     argmin break to the lowest centroid id, and an emptied cluster
-    keeps its previous centroid. ``iterations`` full Lloyd updates run,
+    keeps its previous centroid. A row whose vector is NULL, empty or
+    non-finite, or whose id is NULL, is neither a seed nor a member of
+    any cluster (:func:`_usable`). ``iterations`` full Lloyd updates run,
     then one final assignment pass measures membership. Returns the
     long-form frame ``(centroid_id, pos, coord, n_assigned, wcss)`` —
     one row per centroid per dimension, ``coord`` rounded to
@@ -675,10 +715,9 @@ def lloyd_kmeans(
     squared L2 distances.
 
     Scale shape (100 TB): each iteration is ONE map-only Arrow pass
-    (:func:`_lloyd_pass_arrow`) — vectorized squared-L2 against the
-    k×dim driver-side codebook, argmin assignment, and per-batch
-    per-centroid partial sums, reduced driver-side. ZERO shuffles per
-    iteration (the r16 rewrite also removed the old groupBy exchange);
+    (:func:`_lloyd_pass_arrow`) — :func:`_nearest` against the k×dim
+    driver-side codebook, and per-batch per-centroid partial sums,
+    reduced driver-side. ZERO shuffles per iteration;
     the only collects are k×dim model partials, never corpus rows;
     arithmetic is all float64 so a DuckDB re-derivation lands within
     rounding of the same centroids.
@@ -697,11 +736,8 @@ def lloyd_kmeans(
     if iterations < 0:
         raise ValueError("iterations must be >= 0")
     # raw vector column through — the Arrow pass upcasts per batch
-    # (float32 → float64 is exact, the same values the old
-    # transform(cast) produced) and ships half the bytes
-    vecs = (corpus
-            .filter(F.col(vec_col).isNotNull() & (F.size(vec_col) > 0)
-                    & F.col(id_col).isNotNull())
+    # (float32 → float64 is exact) and ships half the bytes
+    vecs = (_usable(corpus, vec_col, id_col)
             .select(F.col(id_col).alias("__id"),
                     F.col(vec_col).alias("__v")))
     train = vecs
@@ -782,43 +818,30 @@ def kmeans_cluster_qa(
     numerator and denominator; NULL when the cluster has no labeled
     member). Emptied centroids still get a row (n = 0, NULL metrics).
 
-    Scale shape: the k-row codebook rides driver-side (k×dim doubles,
-    model-scale) into ONE map-only Arrow pass — vectorized distance
-    matrix per batch, min + runner-up by argmin/partition (r16; was an
-    interpreted per-row HOF fold) — then a k-row groupBy plus (with
+    A row whose vector is NULL, empty or non-finite, or whose id is
+    NULL, is in no cluster (:func:`_usable`).
+
+    Scale shape: the k-row codebook is read driver-side
+    (:func:`_read_codebook`, k×dim doubles, model-scale) into ONE
+    map-only Arrow pass — :func:`_nearest` gives each row's distance to
+    its centroid and to the runner-up — then a k-row groupBy plus (with
     labels) a (k × labels)-row count; no window over corpus rows, no
     join against corpus-sized frames."""
     import numpy as np
     import pandas as pd
 
+    from ..plans import local_frame
 
-    cb = (centroids_from_long(centroids_long)
-          .select(F.col("centroid_id").alias("cid"),
-                  F.col("centroid").alias("cvec")))
+    cids, cmat = _read_codebook(centroids_long)
+    cid_t = centroids_long.schema["centroid_id"].dataType.simpleString()
+    cb = local_frame(corpus.sparkSession, [(c,) for c in cids],
+                     f"cid {cid_t}")
     base_cols = [F.col(vec_col).alias("__v")]
     if label_col:
         base_cols.append(F.col(label_col).alias("__lbl"))
-    vecs = (corpus
-            .filter(F.col(vec_col).isNotNull() & (F.size(vec_col) > 0)
-                    & F.col(id_col).isNotNull())
-            .select(*base_cols))
-    # r16 (guide §4.2, the _lloyd_pass_arrow shape): the per-row
-    # (d1, cid, d2) HOF fold over the broadcast codebook ran
-    # interpreted (CodegenFallback). The k-row codebook is collected
-    # sorted by cid — k×dim doubles, model-scale — and the min +
-    # runner-up come from one vectorized distance matrix per batch
-    # (argmin first-win over cid-sorted rows == the fold's
-    # ties→lowest-cid rule; np.partition's index-1 element is the
-    # exact second-smallest, tied values included, matching the fold's
-    # d2). k=1 keeps d2 = +inf, so silhouette degenerates to the same
-    # NaN the fold produced. Only the per-row (cid, a, sil[, label])
-    # tuple returns to the JVM — the downstream k-row groupBys and the
-    # purity window are unchanged.
-    cb_rows = cb.orderBy("cid").collect()
-    cids = [r["cid"] for r in cb_rows]
-    cmat = np.asarray([list(r["cvec"]) for r in cb_rows],
-                      dtype=np.float64)
-    cid_t = cb.schema["cid"].dataType.simpleString()
+    vecs = _usable(corpus, vec_col, id_col).select(*base_cols)
+    # only the per-row (cid, a, sil[, label]) tuple returns to the JVM;
+    # k=1 leaves the runner-up at +inf, so silhouette is NaN there
     schema = f"__cid {cid_t}, __a double, __s double"
     if label_col:
         lbl_t = vecs.schema["__lbl"].dataType.simpleString()
@@ -829,13 +852,8 @@ def kmeans_cluster_qa(
             if not len(pdf):
                 continue
             x = np.stack(pdf["__v"].to_numpy()).astype(np.float64)
-            d = ((x[:, None, :] - cmat[None, :, :]) ** 2).sum(-1)
-            c1 = d.argmin(axis=1)
-            a = np.sqrt(d[np.arange(len(d)), c1])
-            if d.shape[1] > 1:
-                b = np.sqrt(np.partition(d, 1, axis=1)[:, 1])
-            else:
-                b = np.full(len(d), np.inf)
+            c1, d1, d2 = _nearest(x, cmat)
+            a, b = np.sqrt(d1), np.sqrt(d2)
             mx = np.maximum(a, b)
             with np.errstate(invalid="ignore"):
                 s = np.where(mx == 0, 0.0, (b - a) / mx)
@@ -847,7 +865,7 @@ def kmeans_cluster_qa(
             yield out
 
     # no fan_out (r16): vectorized per-batch work — see
-    # _lloyd_pass_arrow's note on the per-task Python overhead
+    # _lloyd_partials' note on the per-task Python overhead
     assigned = vecs.mapInPandas(_qa_rows, schema)
     st = (assigned.groupBy("__cid")
           .agg(F.count(F.lit(1)).alias("__n"),
@@ -1185,14 +1203,15 @@ def product_quantize_arrow(
     dist_out: Optional[str] = None,
 ) -> DataFrame:
     """Arrow-batched BLAS twin of :func:`product_quantize` for bulk
-    encode jobs: ``mapInPandas`` + one vectorized
-    ``((X - C)**2).sum`` / ``argmin`` per subspace per batch — measured
+    encode jobs: ``mapInPandas`` + one :func:`_nearest` call per
+    subspace per batch — measured
     ~3.6× the rows/s of the HOF path at the catalog codebook size
     (322k vs 90k rows/s, 400k×64-dim on local[32]; the gap widens with
     m·k, since interpreted higher-order-function folds pay
     per-row-per-codeword overhead while numpy pays per-batch). Same
-    storage layout, same lowest-index tie
-    rule (``np.argmin``); the only divergence is float summation ORDER
+    storage layout, same order — lowest index on a tie, a NaN distance
+    above every other, so a NaN codeword loses to every finite one as
+    it does under ``array_min``; the only divergence is float summation ORDER
     (numpy pairwise vs left-to-right), which can flip a code only on an
     exact distance tie between distinct codewords — degenerate for
     real-valued embeddings. The catalog/oracle path stays on the HOF
@@ -1228,11 +1247,8 @@ def product_quantize_arrow(
                 c_all = np.empty((x.shape[0], len(cbs)), dtype=np.int32)
                 d_all = np.empty((x.shape[0], len(cbs)), dtype=np.float64)
                 for j, cb in enumerate(cbs):
-                    sub = x[:, j * dsub:(j + 1) * dsub]
-                    # (n, k): squared L2 to every codeword of subspace j
-                    d = ((sub[:, None, :] - cb[None, :, :]) ** 2).sum(-1)
-                    c_all[:, j] = d.argmin(axis=1)
-                    d_all[:, j] = d.min(axis=1)
+                    c_all[:, j], d_all[:, j], _ = _nearest(
+                        x[:, j * dsub:(j + 1) * dsub], cb)
                 # elementwise object assignment — a plain list-of-lists
                 # on the masked index trips pandas/numpy 2-D broadcasting
                 cv = np.empty(int(mask.sum()), dtype=object)

@@ -12156,13 +12156,12 @@ DRIVER_PRIORITY: list[str] = [
     # (dedup_jaccard + the LSH report that drives the same machinery)
     "docs_weighted_cosine", "docs_set_jaccard_join",
     "part_copurchase_triangles", "dedup_jaccard", "dedup_lsh_quality",
-    # the FULL r11-stale cohort (14 entries, the oldest in the
-    # CORRECTNESS_r1..r16 histogram): the 10 stable single-pass
-    # text/regex entries named by the r16 rotation log as leading r17,
-    # plus the 4 bottom-fill displacements from r16
-    "window_rank", "docs_strip_html", "docs_url_stats", "text_langid",
-    "text_quality", "text_repetition", "text_pii_redact",
-    "docs_padding_waste", "docs_span_removal", "docs_source_qnorm",
+    # the r11-stale cohort (the oldest in the CORRECTNESS_r1..r16
+    # histogram): 6 of the 10 stable single-pass text/regex entries
+    # named by the r16 rotation log as leading r17, plus the 4
+    # bottom-fill displacements from r16
+    "window_rank", "docs_strip_html", "text_quality", "text_pii_redact",
+    "docs_span_removal", "docs_source_qnorm",
     "docs_bootstrap_ci", "docs_curriculum", "docs_interleave",
     "docs_score_auc",
     # 25 of the r12-stale cohort, risk-first: dedup/graph/embedding
@@ -12187,6 +12186,14 @@ DRIVER_PRIORITY: list[str] = [
     # embed_semdedup above, every catalog caller of that kernel);
     # displaces docs_corpus_report, an unchanged single-agg rollup
     "embed_near_dups_bcast",
+    # the squared-L2 codebook family: k-means training (full and
+    # sampled), the cluster-QA gate and the kmeans-trained IVF search
+    # moved onto the one nearest-centroid kernel and the one
+    # usable-vector filter; displaces docs_url_stats, text_langid,
+    # text_repetition and docs_padding_waste (unchanged single-pass
+    # folds from the r11-stale cohort above)
+    "embed_kmeans", "embed_kmeans_sampled", "embed_cluster_qa",
+    "ann_ivf_kmeans",
 ]
 
 

@@ -1200,26 +1200,13 @@ def fuzzy_match_stream(
     return step
 
 
-def _centroids(rows) -> dict:
-    """Collected long-form ``(centroid_id, pos, coord)`` rows → ``{
-    centroid_id: [coord by pos]}`` in centroid_id order."""
-    by_cid: dict = {}
-    for r in rows:
-        by_cid.setdefault(r["centroid_id"], {})[r["pos"]] = r["coord"]
-    return {c: [v[p] for p in sorted(v)] for c, v in sorted(by_cid.items())}
+def _batch_vectors(batch_df: DataFrame, vec_col: str) -> DataFrame:
+    """The batch's vectors that have a squared-L2 distance, as ``__v``
+    (similarity's ``_usable`` rule: NULL, empty and non-finite vectors
+    join no cluster) — the input of one ``_lloyd_pass_arrow``."""
+    from ..operators.similarity import _usable
 
-
-def _assigned(batch_df: DataFrame, vec_col: str, cents: list) -> DataFrame:
-    """The batch's non-empty vectors as double arrays ``__v``, each with
-    its nearest centroid ``__cid`` (one map-only broadcast argmin,
-    similarity's ``_l2_assigned``)."""
-    from ..operators.similarity import _l2_assigned
-
-    vecs = (batch_df
-            .filter(F.col(vec_col).isNotNull() & (F.size(vec_col) > 0))
-            .select(F.transform(F.col(vec_col), lambda x: x.cast("double"))
-                    .alias("__v")))
-    return _l2_assigned(vecs, cents)
+    return _usable(batch_df, vec_col).select(F.col(vec_col).alias("__v"))
 
 
 def embedding_drift_monitor(
@@ -1244,33 +1231,33 @@ def embedding_drift_monitor(
     model-scale, k x dim rows); ``baseline_props`` maps centroid_id ->
     expected assignment fraction, from a batch profiling pass (e.g.
     n_assigned/total of the same codebook's training output). Per
-    batch: one map-only squared-L2 argmin pass (broadcast codebook,
-    similarity's ``_l2_assigned``) into a k-row count — no state, no
-    stream-stream join; PSI folds driver-side over the k-row
-    histogram exactly like ``drift_monitor``.
+    batch: one map-only squared-L2 argmin job (similarity's
+    ``_lloyd_pass_arrow``) returns the k per-centroid counts — no
+    shuffle, no state, no stream-stream join; PSI folds driver-side over
+    the k-row histogram exactly like ``drift_monitor``. A vector that is
+    NULL, empty or non-finite is in no cluster and not counted in ``n``.
 
     Verdict rows ``(_batch_id, n, psi, drifted)`` land at ``out_path``
     as batch partitions (the module's State recipe — a replayed batch
     replaces its own row). ``on_drift(batch_id, psi)`` additionally
     fires above ``threshold``; wire it to a NotificationHub channel.
     Empty batches write nothing (no histogram -> no verdict)."""
-    by_cid = _centroids(
-        codebook.select("centroid_id", "pos", "coord").collect())
-    if not by_cid:
+    from ..operators.similarity import _lloyd_pass_arrow, _read_codebook
+
+    cids, cents = _read_codebook(codebook)
+    if not cids:
         raise ValueError("codebook has no centroids")
-    if list(by_cid) != list(range(len(by_cid))):
+    if cids != list(range(len(cids))):
         raise ValueError("codebook centroid_ids must be 0..k-1")
-    cents = list(by_cid.values())
     base = {int(k): float(v) for k, v in baseline_props.items()}
 
     def step(batch_df: DataFrame, batch_id: int) -> None:
-        rows = (_assigned(batch_df, vec_col, cents)
-                .groupBy("__cid").agg(F.count(F.lit(1)).alias("n"))
-                .collect())
-        total = sum(r["n"] for r in rows)
+        counts = {cid: n for cid, (n, _) in _lloyd_pass_arrow(
+            _batch_vectors(batch_df, vec_col), cents, measure=True).items()}
+        total = sum(counts.values())
         if not total:
             return
-        psi = _psi(base, {r["__cid"]: r["n"] / total for r in rows})
+        psi = _psi(base, {cid: n / total for cid, n in counts.items()})
         if out_path is not None:
             _write_increment(batch_df.sparkSession.createDataFrame(
                 [(int(total), float(psi), bool(psi > threshold))],
@@ -1306,7 +1293,8 @@ def kmeans_update_stream(
     mini-batch k-means recipe (Sculley, WWW'10) with exact
     count-weighted means instead of a learning rate: per micro-batch,
     assign the batch's vectors to the CURRENT codebook (one map-only
-    broadcast argmin pass, similarity's ``_l2_assigned``) and move
+    argmin job, similarity's ``_lloyd_pass_arrow``, which returns each
+    centroid's count and vector sum — no shuffle) and move
     each touched centroid to the exact cumulative mean of everything
     it has ever absorbed: ``c' = (n_seen·c + Σx_batch)/(n_seen + n)``.
     Untouched centroids keep coordinates and count. This closes the
@@ -1319,12 +1307,15 @@ def kmeans_update_stream(
     batch partition — k×dim rows per version, model-scale, so "rewrite
     the whole state" is the cheap and replay-safe design. Merge: the
     read side takes the latest version, excluding the current batch id
-    (the module's State recipe). Empty batches (no usable vectors) write
-    nothing. ``out_path`` optionally records one observability row per
+    (the module's State recipe). A vector that is NULL, empty or
+    non-finite moves no centroid; empty batches (no usable vectors)
+    write nothing. ``out_path`` optionally records one observability row per
     batch: ``(_batch_id, n, max_shift)`` — the largest centroid L2 move,
     the number to alarm on when the stream drifts faster than the
     codebook can follow.
     """
+
+    from ..operators.similarity import _lloyd_pass_arrow, _read_codebook
 
     def step(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -1335,39 +1326,29 @@ def kmeans_update_stream(
                 f"{codebook_path!r} — seed it with init_codebook_state "
                 "from a lloyd_kmeans run")
         latest = prior.agg(F.max("_batch_id")).first()[0]
-        rows = (prior.filter(F.col("_batch_id") == latest)
-                .select("centroid_id", "pos", "coord", "n_seen")
-                .collect())
-        cents = list(_centroids(rows).values())
-        n_seen = {r["centroid_id"]: r["n_seen"] for r in rows}
-        dim = len(cents[0])
-        stats = (_assigned(batch_df, vec_col, cents)
-                 .groupBy("__cid")
-                 .agg(F.count(F.lit(1)).alias("__n"),
-                      *[F.sum(F.element_at("__v", i + 1)).alias(f"__s{i}")
-                        for i in range(dim)])
-                 .collect())
+        cids, cents, n_seen = _read_codebook(
+            prior.filter(F.col("_batch_id") == latest), "n_seen")
+        stats = _lloyd_pass_arrow(_batch_vectors(batch_df, vec_col), cents,
+                                  measure=False)
         if not stats:
             return
-        upd = {r["__cid"]: r for r in stats}
         out_rows = []
         max_shift = 0.0
-        for cid, cvec in enumerate(cents):
-            seen = int(n_seen.get(cid, 0))
-            if cid in upd:
-                n = int(upd[cid]["__n"])
-                new = [(seen * cvec[i] + upd[cid][f"__s{i}"])
-                       / (seen + n) for i in range(dim)]
-                max_shift = max(max_shift, math.sqrt(sum(
-                    (a - b) * (a - b) for a, b in zip(new, cvec))))
+        for i, (cid, cvec) in enumerate(zip(cids, cents)):
+            seen = int(n_seen[i] or 0)
+            if i in stats:
+                n, total = stats[i]
+                new = (seen * cvec + total) / (seen + n)
+                max_shift = max(max_shift, math.sqrt(
+                    float(((new - cvec) ** 2).sum())))
                 cvec, seen = new, seen + n
             out_rows.extend(
-                (cid, pos, float(cvec[pos]), seen) for pos in range(dim))
+                (cid, pos, float(v), seen) for pos, v in enumerate(cvec))
         _write_increment(spark.createDataFrame(
             out_rows, "centroid_id int, pos int, coord double, n_seen long"),
             codebook_path, batch_id)
         if out_path is not None:
-            n_total = sum(int(r["__n"]) for r in stats)
+            n_total = sum(n for n, _ in stats.values())
             _write_increment(spark.createDataFrame(
                 [(n_total, float(max_shift))], "n long, max_shift double"),
                 out_path, batch_id)

@@ -143,6 +143,30 @@ class TestDriverCanonEmulation:
         assert driver_canon_error(["a", "b"], [(1, "x"), (2, None)]) is None
 
 
+class TestCodeLines:
+    def test_counts_files_and_directories_without_docs(self, tmp_path,
+                                                       capsys):
+        """tools/code_lines.py counts lines that carry code, not
+        docstrings, comments or blanks, and a directory stands for its
+        *.py files in sorted order."""
+        from tools.code_lines import main
+        src = tmp_path / "pkg"
+        (src / "sub").mkdir(parents=True)
+        (src / "b.py").write_text(
+            '"""Module doc."""\n\n# a comment\nx = 1\n\n\n'
+            'def f():\n    """Doc\n    lines."""\n    return x\n')
+        (src / "sub" / "a.py").write_text("y = [\n    2,\n]\n")
+        (src / "notes.txt").write_text("z = 3\n")
+        main([str(src / "b.py")])
+        assert capsys.readouterr().out.split("\n")[0].split() == [
+            "3", str(src / "b.py")]
+        main([str(src)])
+        lines = capsys.readouterr().out.splitlines()
+        assert [ln.split() for ln in lines] == [
+            ["3", str(src / "b.py")], ["3", str(src / "sub" / "a.py")],
+            ["6", "total"]]
+
+
 class TestBenchStreamingCleanup:
     """bench's streaming entry stops its query and removes its source
     and checkpoint directory on every exit, a failed run included."""

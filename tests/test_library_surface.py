@@ -2540,19 +2540,18 @@ class TestClusteringPlanShapes:
             [(c, p, float(c * 10 + p)) for c in range(2) for p in range(2)],
             "centroid_id int, pos int, coord double")
 
-    def test_l2_assignment_is_map_only_with_broadcast_codebook(
-            self, spark):
-        """The kmeans assignment pass: broadcast codebook crossJoin +
-        fold — ZERO shuffles on the corpus."""
+    def test_l2_assignment_pass_is_one_map_in_pandas(self, spark):
+        """The assignment pass of lloyd_kmeans and both streaming
+        codebook steps: ZERO shuffles on the corpus, and the distances,
+        argmin and partials all in ONE MapInPandas node."""
         from spark_expectations_spark.operators.similarity import \
-            _l2_assigned
+            _lloyd_partials
         vecs = spark.range(100).selectExpr(
             "array(cast(id as double), cast(id+1 as double)) as __v")
-        out = _l2_assigned(vecs, [[0.0, 0.0], [50.0, 50.0]])
+        out = _lloyd_partials(vecs, [[0.0, 0.0], [50.0, 50.0]],
+                              measure=False)
         assert plans.num_shuffles(out) == 0
-        # the 1-row codebook crossJoin plans as the scalar-broadcast
-        # BroadcastNestedLoopJoin (linter-demoted shape), not a hash join
-        assert "BroadcastExchange" in plans.plan_text(out, "simple")
+        assert plans.plan_text(out, "simple").count("MapInPandas") == 1
 
     def test_cluster_qa_no_corpus_window(self, spark):
         """cluster_qa's silhouette comes from the one-pass fold — the

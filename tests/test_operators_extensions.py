@@ -503,6 +503,26 @@ class TestSimilarity:
         assert {(r["id_a"], r["id_b"]) for r in pairs.collect()} == {
             ("doc-a", "doc-b"), ("doc-c", "doc-d")}
 
+    def test_topk_keeps_string_ids(self, spark):
+        """cosine_topk types its ids from the input schema, as the pair
+        searches do, and ranks as its reference cosine_topk_hof does."""
+        df = spark.createDataFrame(
+            [("doc-b", [0.999, 0.01]), ("doc-a", [1.0, 0.0]),
+             ("doc-c", [0.0, 1.0]), ("doc-d", [0.01, 0.999])],
+            "vec_id string, embedding array<float>")
+        fast = similarity.cosine_topk(df, df, k=2)
+        slow = similarity.cosine_topk_hof(df, df, k=2)
+        assert fast.schema["query_id"].dataType.simpleString() == "string"
+        assert fast.schema["neighbor_id"].dataType.simpleString() == \
+            "string"
+
+        def ranked(out):
+            return {(r["query_id"], r["rank"]): r["neighbor_id"]
+                    for r in out.collect()}
+
+        assert ranked(fast) == ranked(slow)
+        assert ranked(fast)[("doc-a", 1)] == "doc-b"
+
     @pytest.mark.parametrize("square", [False, True])
     def test_pair_kernel_matches_brute_force(self, square):
         """The tiled kernel equals one untiled product, with a chunk that
@@ -530,6 +550,44 @@ class TestSimilarity:
         assert [g[:2] for g in got] == [w[:2] for w in want]
         assert np.allclose([g[2] for g in got], [w[2] for w in want],
                            rtol=0, atol=1e-12)
+
+    def test_nearest_kernel_matches_untiled_block(self):
+        """The tiled nearest-centroid kernel equals one untiled
+        ``((x - c)**2).sum`` block bit for bit, with a tile that divides
+        no side, including rows tied between two equal centroids."""
+        import numpy as np
+
+        rng = np.random.default_rng(7)
+        x = rng.normal(size=(23, 5))
+        c = rng.normal(size=(4, 5))
+        c[3] = c[1]                      # every row ties 1 vs 3 or not
+        idx, dist, runner = similarity._nearest(x, c, tile=3 * 4 * 5)
+        d = ((x[:, None, :] - c[None, :, :]) ** 2).sum(-1)
+        assert (idx == d.argmin(axis=1)).all()
+        assert (dist == d.min(axis=1)).all()
+        assert (runner == np.sort(d, axis=1)[:, 1]).all()
+        assert 3 not in idx
+
+    def test_nearest_kernel_orders_nan_above_inf(self):
+        """Spark's order: NaN sorts above every double, +inf included;
+        ties go to the lowest index; an all-NaN row takes index 0."""
+        import numpy as np
+
+        nan, inf = np.nan, np.inf
+        x = np.array([[0.0], [inf], [nan], [2.0]])
+        c = np.array([[nan], [inf], [1.0]])
+        idx, dist, runner = similarity._nearest(x, c)
+        # row 0: NaN, inf, 1 -> 2; row 1: NaN, NaN, inf -> 2;
+        # row 2: all NaN -> 0; row 3: NaN, inf, 1 -> 2
+        assert idx.tolist() == [2, 2, 0, 2]
+        assert dist[[0, 1, 3]].tolist() == [1.0, inf, 1.0]
+        assert np.isnan(dist[2])
+        # the runner-up is the second in the same order
+        assert runner[[0, 3]].tolist() == [inf, inf]
+        assert np.isnan(runner[1])
+        one = similarity._nearest(np.array([[nan], [inf]]),
+                                  np.array([[nan], [0.0]]))[0]
+        assert one.tolist() == [0, 1]
 
     def test_semdedup_consistent_with_pairs(self, emb):
         """kept == corpus minus the distinct id_b side of semdedup_pairs
@@ -5798,23 +5856,34 @@ class TestProductQuantize:
     def test_arrow_twin_matches_hof_and_handles_nulls(self, spark):
         """product_quantize_arrow is the bulk-encode path: same codes
         and distances as the literal-HOF twin on real-valued vectors,
-        NULL vectors pass through as NULL codes."""
+        NULL vectors pass through as NULL codes; with non-finite
+        codewords (TestNonFiniteCodewords' codebook) a NaN codeword
+        loses to every finite one in both twins."""
         from spark_expectations_spark.operators import similarity
-        df = spark.createDataFrame(
-            [(1, [9.0, 9.0, -4.0, -6.0]),
-             (2, [1.0, -1.0, 4.0, 6.0]),
-             (3, None)],
-            "vec_id long, embedding array<float>")
-        hof = {r["vec_id"]: (r["pq_codes"], r["d"])
-               for r in similarity.product_quantize(
-                   df, codebooks=self.BOOKS, dist_out="d").collect()}
-        arw = {r["vec_id"]: (r["pq_codes"], r["d"])
-               for r in similarity.product_quantize_arrow(
-                   df, codebooks=self.BOOKS, dist_out="d").collect()}
-        for k in (1, 2):
-            assert list(arw[k][0]) == list(hof[k][0])
-            assert [pytest.approx(x) for x in hof[k][1]] == list(arw[k][1])
-        assert arw[3] == (None, None) and hof[3][0] is None
+        nan, inf = float("nan"), float("inf")
+        non_finite = [[[nan, 1.0], [0.0, 0.0]], [[inf, 0.0], [2.0, -inf]]]
+        cases = [
+            (self.BOOKS, [(1, [9.0, 9.0, -4.0, -6.0]),
+                          (2, [1.0, -1.0, 4.0, 6.0]), (3, None)]),
+            (non_finite, [(1, [0.5, 0.5, 1.0, 1.0])]),
+        ]
+        for books, rows in cases:
+            df = spark.createDataFrame(
+                rows, "vec_id long, embedding array<float>")
+            hof = {r["vec_id"]: (r["pq_codes"], r["d"])
+                   for r in similarity.product_quantize(
+                       df, codebooks=books, dist_out="d").collect()}
+            arw = {r["vec_id"]: (r["pq_codes"], r["d"])
+                   for r in similarity.product_quantize_arrow(
+                       df, codebooks=books, dist_out="d").collect()}
+            for k, vec in rows:
+                if vec is None:
+                    assert arw[k] == (None, None) and hof[k][0] is None
+                    continue
+                assert list(arw[k][0]) == list(hof[k][0])
+                assert [pytest.approx(x) for x in hof[k][1]] == \
+                    list(arw[k][1])
+        assert list(arw[1][0]) == [1, 0]
 
     def test_codebooks_deterministic_and_shaped(self, spark):
         from spark_expectations_spark.operators import similarity
@@ -6960,6 +7029,70 @@ class TestLloydKmeansSampled:
         b = sorted(map(tuple, sim.lloyd_kmeans(
             df, k=2, iterations=2, sample_fraction=1.0).collect()))
         assert a == b
+
+
+class TestNonFiniteVectors:
+    """A vector with a NaN or ±inf element has no squared-L2 distance, so
+    every codebook operator puts it in no cluster, as it does a NULL
+    vector."""
+
+    SCHEMA = "vec_id long, embedding array<double>"
+    CLEAN = [(1, [0.0]), (2, [1.0]), (3, [10.0]), (4, [11.0])]
+
+    def _codebook(self, spark):
+        return spark.createDataFrame(
+            [(0, 0, 0.5), (1, 0, 10.0)],
+            "centroid_id int, pos int, coord double")
+
+    @pytest.mark.parametrize("bad", [float("nan"), float("inf")])
+    @pytest.mark.parametrize("iterations", [0, 2])
+    def test_lloyd_kmeans_returns_the_clean_codebook(self, spark, bad,
+                                                     iterations):
+        from spark_expectations_spark.operators import similarity as sim
+
+        def run(rows):
+            out = sim.lloyd_kmeans(spark.createDataFrame(rows, self.SCHEMA),
+                                   k=2, iterations=iterations)
+            return sorted(map(tuple, out.collect()))
+
+        # the smallest id: were it usable, it would seed centroid 0
+        assert run([(0, [bad]), *self.CLEAN]) == run(self.CLEAN)
+
+    def test_cluster_qa_leaves_the_row_out_of_n(self, spark):
+        from spark_expectations_spark.operators import similarity as sim
+        corpus = spark.createDataFrame(
+            [(1, [0.0]), (2, [1.0]), (3, [float("nan")]),
+             (4, [float("-inf")]), (5, [10.0])], self.SCHEMA)
+        got = {r["centroid_id"]: r for r in
+               sim.kmeans_cluster_qa(corpus, self._codebook(spark))
+               .collect()}
+        assert (got[0]["n"], got[1]["n"]) == (2, 1)
+        assert got[0]["avg_intra"] == 0.5 and got[1]["avg_intra"] == 0.0
+
+    def test_drift_monitor_counts_finite_rows_only(self, spark, tmp_path):
+        from spark_expectations_spark import streaming as st
+        out = str(tmp_path / "drift")
+        step = st.embedding_drift_monitor(
+            self._codebook(spark), {0: 0.5, 1: 0.5}, out_path=out)
+        step(spark.createDataFrame(
+            [(1, [9.9]), (2, [float("nan")]), (3, [10.1])],
+            "id long, embedding array<double>"), 0)
+        assert spark.read.parquet(out).first()["n"] == 2
+
+    def test_kmeans_update_stream_moves_no_centroid_for_it(self, spark,
+                                                           tmp_path):
+        from spark_expectations_spark import streaming as st
+        path = str(tmp_path / "codebook")
+        st.init_codebook_state(spark.createDataFrame(
+            [(0, 0, 0.0, 2), (1, 0, 10.0, 2)],
+            "centroid_id int, pos int, coord double, n_assigned long"),
+            path)
+        st.kmeans_update_stream(path)(spark.createDataFrame(
+            [(1, [1.0]), (2, [float("nan")]), (3, [3.0])],
+            "id long, embedding array<double>"), 0)
+        got = {r["centroid_id"]: (r["coord"], r["n_seen"]) for r in
+               spark.read.parquet(path).filter("_batch_id = 0").collect()}
+        assert got == {0: (1.0, 4), 1: (10.0, 2)}
 
 
 class TestHardNegatives:

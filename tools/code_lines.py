@@ -1,9 +1,11 @@
 """Count code lines per Python file: lines that carry a token, minus
 comments, blank lines and docstrings (module, class and function).
 
-    python tools/code_lines.py FILE [FILE ...]
+    python tools/code_lines.py PATH [PATH ...]
 
-Prints one ``<count>  <file>`` line per file, then the total.
+A PATH that is a directory stands for every ``*.py`` file under it, in
+sorted order. Prints one ``<count>  <file>`` line per file, then the
+total.
 """
 
 from __future__ import annotations
@@ -12,6 +14,7 @@ import ast
 import io
 import sys
 import tokenize
+from pathlib import Path
 
 _SKIP = {tokenize.COMMENT, tokenize.NL, tokenize.NEWLINE, tokenize.INDENT,
          tokenize.DEDENT, tokenize.ENCODING, tokenize.ENDMARKER}
@@ -30,9 +33,21 @@ def code_lines(source: str) -> int:
     return len(lines)
 
 
+def py_files(paths: list[str]) -> list[str]:
+    """``paths`` with each directory replaced by its ``*.py`` files,
+    recursively, in sorted order."""
+    out = []
+    for path in paths:
+        if Path(path).is_dir():
+            out.extend(str(f) for f in sorted(Path(path).rglob("*.py")))
+        else:
+            out.append(path)
+    return out
+
+
 def main(paths: list[str]) -> int:
     total = 0
-    for path in paths:
+    for path in py_files(paths):
         with open(path, encoding="utf-8") as fh:
             n = code_lines(fh.read())
         total += n

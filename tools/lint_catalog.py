@@ -255,9 +255,10 @@ KNOWN_BENIGN: dict[tuple[str, str], str] = {
         "filter/slice chains) — computed arrays, no scan column; "
         "corpus scanned once per side",
     ("embed_cluster_qa", "filter-not-pushed"):
-        "size(embedding) > 0 array guard — parquet cannot push "
-        "array-typed predicates; the QA joins are centroid-keyed "
-        "equi-joins after one corpus scan",
+        "the usable-vector guard (size(embedding) > 0, every element "
+        "finite and non-NULL) — parquet cannot push array-typed "
+        "predicates; the QA joins are centroid-keyed equi-joins after "
+        "one corpus scan",
     ("embed_mean_pool", "filter-not-pushed"):
         "size(embedding) > 0 array guard (array-typed predicate — "
         "unpushable by format); map-only pooling after one scan",
