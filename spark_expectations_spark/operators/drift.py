@@ -25,12 +25,36 @@ from __future__ import annotations
 
 from typing import Optional
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 #: Laplace-style floor for empty buckets — PSI's ln(p/q) is undefined at
 #: zero; the standard practice is clamping proportions to a small epsilon.
 _EPS = 1e-6
+
+
+def _edge_bucket(value: Column, edges) -> Column:
+    """Bucket index of ``value`` over sorted ``edges``: the number of
+    edges ≤ value, so ``len(edges)+1`` buckets cover (−inf, inf), and a
+    NULL value lands in bucket 0 (``NULL >= e`` folds to 0). A fold
+    over a small literal array, with no join against an edge table. It
+    is an interpreted higher-order function, so the projection holding
+    it runs outside whole-stage codegen; the scan under it stays
+    compiled. The one bucket rule of the drift family and of
+    :func:`~.sketches.quantile_histogram`."""
+    arr = F.array(*[F.lit(float(e)) for e in edges])
+    return F.aggregate(
+        arr, F.lit(0),
+        lambda acc, e: acc + F.when(value >= e, 1).otherwise(0))
+
+
+def _psi_sum(p: Column, q: Column) -> Column:
+    """The PSI aggregate ``Σ (p − q)·ln(p/q)`` over aligned proportions,
+    each side NULL → 0 and then floored at ``_EPS``: a bucket present
+    on one side only is penalized, not ignored."""
+    pe = F.greatest(F.coalesce(p, F.lit(0.0)), F.lit(_EPS))
+    qe = F.greatest(F.coalesce(q, F.lit(0.0)), F.lit(_EPS))
+    return F.sum((pe - qe) * F.log(pe / qe))
 
 
 def bucket_proportions(
@@ -69,13 +93,8 @@ def psi(
     penalized (clamped to epsilon), not ignored."""
     p = bucket_proportions(baseline, col, lo=lo, hi=hi, bins=bins, out="p")
     q = bucket_proportions(current, col, lo=lo, hi=hi, bins=bins, out="q")
-    j = p.join(q, "bucket", "full_outer").select(
-        F.greatest(F.coalesce(F.col("p"), F.lit(0.0)), F.lit(_EPS)).alias("p"),
-        F.greatest(F.coalesce(F.col("q"), F.lit(0.0)), F.lit(_EPS)).alias("q"),
-    )
-    term = (F.col("p") - F.col("q")) * F.log(F.col("p") / F.col("q"))
-    return j.agg(
-        F.sum(term).alias("psi"),
+    return p.join(q, "bucket", "full_outer").agg(
+        _psi_sum(F.col("p"), F.col("q")).alias("psi"),
         F.count(F.lit(1)).alias("n_buckets_compared"),
     )
 
@@ -147,13 +166,8 @@ def categorical_psi(
     category rows ever converge anywhere."""
     p = category_proportions(baseline, col, top_n=top_n, out="p")
     q = category_proportions(current, col, top_n=top_n, out="q")
-    j = p.join(q, "category", "full_outer").select(
-        F.greatest(F.coalesce(F.col("p"), F.lit(0.0)), F.lit(_EPS)).alias("p"),
-        F.greatest(F.coalesce(F.col("q"), F.lit(0.0)), F.lit(_EPS)).alias("q"),
-    )
-    term = (F.col("p") - F.col("q")) * F.log(F.col("p") / F.col("q"))
-    return j.agg(
-        F.sum(term).alias("psi"),
+    return p.join(q, "category", "full_outer").agg(
+        _psi_sum(F.col("p"), F.col("q")).alias("psi"),
         F.count(F.lit(1)).alias("n_categories_compared"),
     )
 
@@ -256,90 +270,107 @@ def psi_with_edges(
     col: str,
     edges: list,
 ) -> DataFrame:
-    """PSI over explicit (e.g. quantile) edges. Bucket index = number of
-    edges ≤ value — a fold over a small literal array, pure codegen, no
-    join against an edge table."""
-    arr = F.array(*[F.lit(float(e)) for e in edges])
-
-    def prop(df: DataFrame, out: str) -> DataFrame:
-        b = F.aggregate(
-            arr, F.lit(0),
-            lambda acc, e: acc + F.when(F.col(col) >= e, 1).otherwise(0))
-        counts = df.groupBy(b.alias("bucket")).agg(
-            F.count(F.lit(1)).alias("_n"))
-        total = counts.agg(F.sum("_n").alias("_t"))
-        return counts.crossJoin(F.broadcast(total)).select(
-            "bucket", (F.col("_n") / F.col("_t")).alias(out))
-
-    p = prop(baseline, "p")
-    q = prop(current, "q")
-    j = p.join(q, "bucket", "full_outer").select(
-        F.greatest(F.coalesce(F.col("p"), F.lit(0.0)), F.lit(_EPS)).alias("p"),
-        F.greatest(F.coalesce(F.col("q"), F.lit(0.0)), F.lit(_EPS)).alias("q"),
-    )
-    term = (F.col("p") - F.col("q")) * F.log(F.col("p") / F.col("q"))
-    return j.agg(F.sum(term).alias("psi"),
-                 F.count(F.lit(1)).alias("n_buckets_compared"))
+    """PSI over explicit (e.g. quantile) edges: one row
+    ``(psi, n_buckets_compared)``. Buckets are :func:`_edge_bucket`
+    indices (number of edges ≤ value, NULLs to bucket 0), and the
+    number is :func:`drift_report`'s ε-clamped PSI for the one column,
+    from the same histogram and combine. Raises when either side has no
+    rows: PSI is undefined on an empty sample, where the ε clamp alone
+    would report a large finite number."""
+    return _one_column(baseline, current, col, edges, False, "psi",
+                       "psi_with_edges").select(
+        "psi", F.col("n_buckets").alias("n_buckets_compared"))
 
 
-def _multi_hist(df: DataFrame, edges_by_col: dict,
-                drop_nulls: bool, out: str) -> DataFrame:
+def _multi_hist(df: DataFrame, edges_by_col: dict, drop_nulls: bool,
+                out: str, segment: Optional[Column] = None) -> DataFrame:
     """(column, bucket, count) for EVERY monitored column in one pass:
-    per-column fold-bucket indices in the same scan projection,
-    exploded and group-counted (map-side partial) — shared by
-    :func:`drift_report` and :func:`histogram_snapshot`."""
-    entries = []
-    for c, edges in edges_by_col.items():
-        arr = F.array(*[F.lit(float(e)) for e in edges])
-        b = F.aggregate(
-            arr, F.lit(0),
-            lambda acc, e: acc + F.when(F.col(c) >= e, 1)
-            .otherwise(0))
+    per-column :func:`_edge_bucket` indices in the same scan
+    projection, exploded and group-counted (map-side partial) — the
+    histogram of every binned-drift operator and of
+    :func:`histogram_snapshot`. A ``segment`` expression adds a leading
+    ``segment`` key (:func:`ks_by_segment`)."""
+    folds, entries = [], []
+    for i, (c, edges) in enumerate(edges_by_col.items()):
+        b = _edge_bucket(F.col(c), edges)
         if drop_nulls:
             b = F.when(F.col(c).isNotNull(), b)
+        folds.append(b.alias(f"_b{i}"))
         entries.append(F.struct(F.lit(c).alias("column"),
-                                b.alias("bucket")))
-    ex = (df.select(F.explode(F.array(*entries)).alias("e"))
-          .select("e.*").filter(F.col("bucket").isNotNull()))
-    return ex.groupBy("column", "bucket").agg(
-        F.count(F.lit(1)).alias(out))
+                                F.col(f"_b{i}").alias("bucket")))
+    keys = [] if segment is None else [segment.alias("segment")]
+    # the folds get their own projection under the explode: inside the
+    # Generate's expressions the interpreted fold made the histogram
+    # pass up to 1.5x slower
+    pre = df.select(*keys, *folds)
+    ex = (pre.select(*pre.columns[:len(keys)], F.inline(F.array(*entries)))
+          .filter(F.col("bucket").isNotNull()))
+    return ex.groupBy(*ex.columns).agg(F.count(F.lit(1)).alias(out))
 
 
-def _combine_drift(j: DataFrame) -> DataFrame:
-    """PSI + binned KS + JSD per column from an aligned
-    (column, bucket, _nb, _nc) histogram frame — the tiny-state combine
-    every drift entry point shares."""
-    wt = Window.partitionBy("column")
-    wc = (Window.partitionBy("column").orderBy("bucket")
-          .rowsBetween(Window.unboundedPreceding, 0))
-    t = (j.withColumn("_tb", F.sum("_nb").over(wt))
-         .withColumn("_tc", F.sum("_nc").over(wt))
-         .withColumn("p", F.try_divide(F.col("_nb"), F.col("_tb")))
-         .withColumn("q", F.try_divide(F.col("_nc"), F.col("_tc")))
-         .withColumn("_cb", F.sum("_nb").over(wc))
-         .withColumn("_cc", F.sum("_nc").over(wc)))
-    pe = F.greatest(F.coalesce(F.col("p"), F.lit(0.0)), F.lit(_EPS))
-    qe = F.greatest(F.coalesce(F.col("q"), F.lit(0.0)), F.lit(_EPS))
-    psi_term = (pe - qe) * F.log(pe / qe)
-    m = (F.col("p") + F.col("q")) / 2
-    jsd_term = (F.when(F.col("p") > 0,
-                       F.col("p") * F.log(F.col("p") / m)).otherwise(0.0)
-                + F.when(F.col("q") > 0,
-                         F.col("q") * F.log(F.col("q") / m))
-                .otherwise(0.0))
+def _aligned(base: DataFrame, cur: DataFrame) -> DataFrame:
+    """Full-outer align a ``_nb`` and a ``_nc`` histogram on their
+    shared keys; a bucket missing on one side counts 0 there."""
+    keys = [c for c in base.columns if c != "_nb"]
+    return base.join(cur, keys, "full_outer").select(
+        *keys, F.coalesce("_nb", F.lit(0)).alias("_nb"),
+        F.coalesce("_nc", F.lit(0)).alias("_nc"))
+
+
+def _combine_drift(j: DataFrame, key: Optional[str]) -> DataFrame:
+    """PSI + binned KS + JSD per ``key`` (``column`` or ``segment``)
+    from an :func:`_aligned` histogram frame — the tiny-state combine
+    every binned-drift operator shares. Returns ``(key, psi, ks, jsd,
+    n_base, n_cur, n_buckets)``; a key with an empty side gets NULL
+    statistics. ``key=None`` combines the whole frame into exactly ONE
+    row, also when both sides are empty (a keyed groupBy over no rows
+    yields no row), which the single-column guard needs."""
+    keys = [key] if key else []
+    wt = Window.partitionBy(*keys)
+    wc = wt.orderBy("bucket").rowsBetween(Window.unboundedPreceding, 0)
+    t = j.select(*keys, "_nb", "_nc",
+                 F.sum("_nb").over(wt).alias("_tb"),
+                 F.sum("_nc").over(wt).alias("_tc"),
+                 F.sum("_nb").over(wc).alias("_cb"),
+                 F.sum("_nc").over(wc).alias("_cc"))
+    p = F.try_divide(F.col("_nb"), F.col("_tb"))
+    q = F.try_divide(F.col("_nc"), F.col("_tc"))
+    m = (p + q) / 2
+    jsd_term = (F.when(p > 0, p * F.log(p / m)).otherwise(0.0)
+                + F.when(q > 0, q * F.log(q / m)).otherwise(0.0))
     ks_gap = F.abs(F.try_divide(F.col("_cb"), F.col("_tb"))
                    - F.try_divide(F.col("_cc"), F.col("_tc")))
-    agg = (t.groupBy("column")
-           .agg(F.sum(psi_term).alias("psi"),
+    agg = (t.groupBy(*keys)
+           .agg(_psi_sum(p, q).alias("psi"),
                 F.max(ks_gap).alias("ks"),
                 (F.sum(jsd_term) / 2).alias("jsd"),
                 F.max("_tb").alias("n_base"),
-                F.max("_tc").alias("n_cur")))
+                F.max("_tc").alias("n_cur"),
+                F.count(F.lit(1)).alias("n_buckets")))
     ok = (F.col("n_base") > 0) & (F.col("n_cur") > 0)
     return agg.select(
-        "column",
+        *keys,
         *[F.when(ok, F.col(c)).alias(c) for c in ("psi", "ks", "jsd")],
-        "n_base", "n_cur")
+        "n_base", "n_cur", "n_buckets")
+
+
+def _one_column(baseline: DataFrame, current: DataFrame, col: str,
+                edges: list, drop_nulls: bool, stat: str,
+                who: str) -> DataFrame:
+    """The core's one row for ``col``, with ``stat`` raising when either
+    side has no rows (both included) — the empty-side rule of
+    :func:`psi_with_edges`, :func:`ks_statistic` and
+    :func:`js_divergence`. The sweeps (:func:`drift_report`,
+    :func:`drift_from_snapshot`, :func:`ks_by_segment`) report NULL
+    statistics for that key instead."""
+    j = _aligned(_multi_hist(baseline, {col: edges}, drop_nulls, "_nb"),
+                 _multi_hist(current, {col: edges}, drop_nulls, "_nc"))
+    # the combine already NULLs the statistic on an empty side
+    return _combine_drift(j, None).withColumn(stat, F.when(
+        F.col(stat).isNull(), F.raise_error(F.lit(
+            f"{who}: baseline or current side has no rows — "
+            f"{stat.upper()} is undefined on an empty sample")))
+        .otherwise(F.col(stat)))
 
 
 def drift_report(
@@ -356,32 +387,30 @@ def drift_report(
 
     ``edges_by_col`` maps column name → its persisted edge list (the
     :func:`quantile_edges` contract). Per side, every column's
-    fold-bucket index is computed in the same projection and exploded
-    to ``(column, bucket)`` rows, so ONE groupBy shuffles a
+    :func:`_edge_bucket` index is computed in the same projection and
+    exploded to ``(column, bucket)`` rows, so ONE groupBy shuffles a
     (columns × buckets)-cardinality frame regardless of row count;
-    the per-column PSI (ε-clamped like :func:`psi_with_edges`), KS
-    (cumulative window PARTITIONED BY column — never global), and JSD
-    then aggregate that tiny frame. Returns one row per column:
+    the per-column PSI (ε-clamped), KS (cumulative window PARTITIONED
+    BY column — never global), and JSD then aggregate that tiny frame.
+    This histogram and combine are the one binned-drift core:
+    :func:`psi_with_edges`, :func:`ks_statistic`,
+    :func:`js_divergence` and :func:`ks_by_segment` are projections of
+    it. Returns one row per column:
     ``(column, psi, ks, jsd, n_base, n_cur)``.
 
     Conventions follow the single-column operators: NULLs to bucket 0
     unless ``drop_nulls`` (then per-column non-NULL row counts), edges
-    persisted with the baseline. A column empty on either side (only
-    possible under ``drop_nulls``) yields NULL statistics rather than
-    raising — one all-NULL column must not kill the whole sweep.
-    When the baseline side is rescanned every run, persist it once with
-    :func:`histogram_snapshot` and use :func:`drift_from_snapshot`
-    instead."""
-    cols = list(edges_by_col)
-    if not cols:
+    persisted with the baseline. A column empty on either side yields
+    NULL statistics rather than raising — one all-NULL column must not
+    kill the whole sweep — and when both sides are empty there is no
+    row for it. When the baseline side is rescanned every run, persist
+    it once with :func:`histogram_snapshot` and use
+    :func:`drift_from_snapshot` instead."""
+    if not edges_by_col:
         raise ValueError("edges_by_col must be non-empty")
-    j = (_multi_hist(baseline, edges_by_col, drop_nulls, "_nb")
-         .join(_multi_hist(current, edges_by_col, drop_nulls, "_nc"),
-               ["column", "bucket"], "full_outer")
-         .select("column", "bucket",
-                 F.coalesce("_nb", F.lit(0)).alias("_nb"),
-                 F.coalesce("_nc", F.lit(0)).alias("_nc")))
-    return _combine_drift(j)
+    j = _aligned(_multi_hist(baseline, edges_by_col, drop_nulls, "_nb"),
+                 _multi_hist(current, edges_by_col, drop_nulls, "_nc"))
+    return _combine_drift(j, "column").drop("n_buckets")
 
 
 def histogram_snapshot(
@@ -420,13 +449,9 @@ def drift_from_snapshot(
         raise ValueError("edges_by_col must be non-empty")
     base = snapshot.groupBy("column", "bucket").agg(
         F.sum("n").alias("_nb"))
-    j = (base.join(_multi_hist(current, edges_by_col, drop_nulls,
-                               "_nc"),
-                   ["column", "bucket"], "full_outer")
-         .select("column", "bucket",
-                 F.coalesce("_nb", F.lit(0)).alias("_nb"),
-                 F.coalesce("_nc", F.lit(0)).alias("_nc")))
-    return _combine_drift(j)
+    j = _aligned(base, _multi_hist(current, edges_by_col, drop_nulls,
+                                   "_nc"))
+    return _combine_drift(j, "column").drop("n_buckets")
 
 
 def drift_verdict(
@@ -492,49 +517,13 @@ def js_divergence(
     0.5·Σ q·ln(q/m)`` with ``m = (p+q)/2``). Natural-log formulation;
     divide by ``ln 2`` for bits. Returns one row (jsd, n_base, n_cur).
 
-    Same scale shape and conventions as :func:`ks_statistic` (shared
-    fold-bucket histogram: two codegen passes, bucket-cardinality
-    state; persist ``edges`` with the baseline; NULLs to bucket 0
-    unless ``drop_nulls``); empty-bucket terms contribute 0 for the
-    empty side (lim x→0 of x·ln(x/m)), and an empty SIDE raises like
-    KS — the divergence is undefined there."""
-    arr = F.array(*[F.lit(float(e)) for e in edges])
-    if drop_nulls:
-        baseline = baseline.filter(F.col(col).isNotNull())
-        current = current.filter(F.col(col).isNotNull())
-
-    def hist(df: DataFrame, out: str) -> DataFrame:
-        b = F.aggregate(
-            arr, F.lit(0),
-            lambda acc, e: acc + F.when(F.col(col) >= e, 1).otherwise(0))
-        return df.groupBy(b.alias("bucket")).agg(
-            F.count(F.lit(1)).alias(out))
-
-    j = (hist(baseline, "_nb").join(hist(current, "_nc"),
-                                    "bucket", "full_outer")
-         .select(F.coalesce("_nb", F.lit(0)).alias("_nb"),
-                 F.coalesce("_nc", F.lit(0)).alias("_nc")))
-    tot = j.agg(F.sum("_nb").alias("_tb"), F.sum("_nc").alias("_tc"))
-    t = j.crossJoin(F.broadcast(tot)).select(
-        F.try_divide(F.col("_nb"), F.col("_tb")).alias("p"),
-        F.try_divide(F.col("_nc"), F.col("_tc")).alias("q"))
-    m = (F.col("p") + F.col("q")) / 2
-    term = (F.when(F.col("p") > 0,
-                   F.col("p") * F.log(F.col("p") / m)).otherwise(0.0)
-            + F.when(F.col("q") > 0,
-                     F.col("q") * F.log(F.col("q") / m)).otherwise(0.0))
-    agg = (t.agg(F.sum(term).alias("_s"))
-           .crossJoin(F.broadcast(tot))
-           .select((F.col("_s") / 2).alias("jsd"),
-                   F.col("_tb").alias("n_base"),
-                   F.col("_tc").alias("n_cur")))
-    ok = (F.coalesce(F.col("n_base"), F.lit(0)) > 0) & \
-         (F.coalesce(F.col("n_cur"), F.lit(0)) > 0)
-    return agg.select(
-        F.when(ok, F.col("jsd")).otherwise(F.raise_error(F.lit(
-            "js_divergence: baseline or current side has no rows — "
-            "JSD is undefined on an empty sample"))).alias("jsd"),
-        "n_base", "n_cur")
+    Same histogram, combine and conventions as :func:`ks_statistic`
+    (:func:`drift_report`'s core for one column; persist ``edges`` with
+    the baseline; NULLs to bucket 0 unless ``drop_nulls``); empty-bucket
+    terms contribute 0 for the empty side (lim x→0 of x·ln(x/m)), and
+    an empty SIDE raises like KS — the divergence is undefined there."""
+    return _one_column(baseline, current, col, edges, drop_nulls, "jsd",
+                       "js_divergence").select("jsd", "n_base", "n_cur")
 
 
 def ks_statistic(
@@ -556,9 +545,11 @@ def ks_statistic(
     may fall between edges); with quantile-derived edges the gap is
     ≤ 1/bins. That is the price of a SCALABLE exact-at-the-grid
     answer: the textbook exact KS sorts both samples together — a
-    global single-task sort at 100 TB — while this is two codegen
-    fold-bucket histogram passes + a bucket-cardinality cumulative
-    window. Returns one row (ks, n_base, n_cur).
+    global single-task sort at 100 TB — while this is
+    :func:`drift_report`'s core for one column: one
+    :func:`_edge_bucket` histogram pass per side plus a
+    bucket-cardinality cumulative window. Returns one row
+    (ks, n_base, n_cur); an empty side (either, or both) raises.
 
     Persist the edges with the baseline (same contract as
     :func:`psi_with_edges`) so every later comparison uses the SAME
@@ -571,47 +562,8 @@ def ks_statistic(
     ``drop_nulls=True`` to exclude NULLs from the statistic entirely
     (``n_base``/``n_cur`` then count non-NULL rows only).
     """
-    arr = F.array(*[F.lit(float(e)) for e in edges])
-    if drop_nulls:
-        baseline = baseline.filter(F.col(col).isNotNull())
-        current = current.filter(F.col(col).isNotNull())
-
-    def hist(df: DataFrame, out: str) -> DataFrame:
-        b = F.aggregate(
-            arr, F.lit(0),
-            lambda acc, e: acc + F.when(F.col(col) >= e, 1).otherwise(0))
-        return df.groupBy(b.alias("bucket")).agg(
-            F.count(F.lit(1)).alias(out))
-
-    p = hist(baseline, "_nb")
-    q = hist(current, "_nc")
-    j = (p.join(q, "bucket", "full_outer")
-         .select("bucket",
-                 F.coalesce("_nb", F.lit(0)).alias("_nb"),
-                 F.coalesce("_nc", F.lit(0)).alias("_nc")))
-    w = (Window.orderBy("bucket")
-         .rowsBetween(Window.unboundedPreceding, 0))
-    tot = j.agg(F.sum("_nb").alias("_tb"), F.sum("_nc").alias("_tc"))
-    cum = (j.withColumn("_cb", F.sum("_nb").over(w))
-           .withColumn("_cc", F.sum("_nc").over(w))
-           .crossJoin(F.broadcast(tot)))
-    # try_divide: an empty side would otherwise throw an opaque ANSI
-    # DIVIDE_BY_ZERO from generated code; the raise below turns it into
-    # a clear error instead (an empty baseline/current is routine — a
-    # new partition, an over-tight filter — and KS is undefined there)
-    agg = cum.agg(
-        F.max(F.abs(F.try_divide(F.col("_cb"), F.col("_tb"))
-                    - F.try_divide(F.col("_cc"), F.col("_tc"))))
-        .alias("ks"),
-        F.first("_tb").alias("n_base"),
-        F.first("_tc").alias("n_cur"))
-    ok = (F.coalesce(F.col("n_base"), F.lit(0)) > 0) & \
-         (F.coalesce(F.col("n_cur"), F.lit(0)) > 0)
-    return agg.select(
-        F.when(ok, F.col("ks")).otherwise(F.raise_error(F.lit(
-            "ks_statistic: baseline or current side has no rows — "
-            "KS is undefined on an empty sample"))).alias("ks"),
-        "n_base", "n_cur")
+    return _one_column(baseline, current, col, edges, drop_nulls, "ks",
+                       "ks_statistic").select("ks", "n_base", "n_cur")
 
 
 def chi2_by_segment(
@@ -906,45 +858,19 @@ def ks_by_segment(
     than raising — a fleet sweep should report the degenerate cohort,
     not die on it.
 
-    Scale shape: one (segment, bucket) groupBy per side — the bucket
-    fold rides the scan projection — a full-outer align, per-segment
-    cumulative windows (segment-partitioned, bucket-cardinality rows
-    each), and a segment-keyed max. Output is segments-scale.
+    Scale shape: :func:`drift_report`'s core keyed by segment — one
+    (segment, bucket) groupBy per side (the bucket fold rides the scan
+    projection), a full-outer align, per-segment cumulative windows
+    (segment-partitioned, bucket-cardinality rows each), and a
+    segment-keyed max. Output is segments-scale.
     """
-    arr = F.array(*[F.lit(float(e)) for e in edges])
     seg = F.coalesce(F.col(segment_col).cast("string"),
                      F.lit("__null__"))
-    if drop_nulls:
-        baseline = baseline.filter(F.col(col).isNotNull())
-        current = current.filter(F.col(col).isNotNull())
-
-    def hist(df: DataFrame, out: str) -> DataFrame:
-        b = F.aggregate(
-            arr, F.lit(0),
-            lambda acc, e: acc + F.when(F.col(col) >= e, 1).otherwise(0))
-        return df.groupBy(seg.alias("segment"), b.alias("bucket")).agg(
-            F.count(F.lit(1)).alias(out))
-
-    j = (hist(baseline, "_nb")
-         .join(hist(current, "_nc"), ["segment", "bucket"],
-               "full_outer")
-         .select("segment", "bucket",
-                 F.coalesce("_nb", F.lit(0)).alias("_nb"),
-                 F.coalesce("_nc", F.lit(0)).alias("_nc")))
-    w = (Window.partitionBy("segment").orderBy("bucket")
-         .rowsBetween(Window.unboundedPreceding, 0))
-    cum = (j.withColumn("_cb", F.sum("_nb").over(w))
-           .withColumn("_cc", F.sum("_nc").over(w)))
-    tot = j.groupBy("segment").agg(F.sum("_nb").alias("_tb"),
-                                   F.sum("_nc").alias("_tc"))
-    gap = F.abs(F.try_divide(F.col("_cb"), F.col("_tb"))
-                - F.try_divide(F.col("_cc"), F.col("_tc")))
-    return (cum.join(tot, "segment")
-            .groupBy("segment")
-            .agg(F.when((F.max("_tb") > 0) & (F.max("_tc") > 0),
-                        F.max(gap)).alias("ks"),
-                 F.max("_tb").alias("n_base"),
-                 F.max("_tc").alias("n_cur")))
+    j = _aligned(
+        _multi_hist(baseline, {col: edges}, drop_nulls, "_nb", seg),
+        _multi_hist(current, {col: edges}, drop_nulls, "_nc", seg))
+    return _combine_drift(j, "segment").select(
+        "segment", "ks", "n_base", "n_cur")
 
 
 def survival_curve(

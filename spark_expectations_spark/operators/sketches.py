@@ -22,8 +22,10 @@ from __future__ import annotations
 
 from typing import Optional, Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from .drift import _edge_bucket
 
 
 def hll_by_group(
@@ -105,9 +107,11 @@ def quantile_histogram(
     — pick ``edges`` from domain knowledge or a one-off percentile
     probe, exactly like the drift family's fold buckets.
 
-    Bin ``i`` = number of ``edges`` ≤ value (the drift-module fold
-    device: a literal-array fold, pure codegen, no edge-table join) —
-    ``len(edges)+1`` possible bins covering (−inf, inf). Each cell
+    Bin ``i`` = number of ``edges`` ≤ value (the drift module's
+    ``_edge_bucket`` fold over a literal array, no edge-table join; an
+    interpreted higher-order function, so its projection runs outside
+    whole-stage codegen) — ``len(edges)+1`` possible bins covering
+    (−inf, inf). Each cell
     carries ``(n, lo, hi)``: exact row count plus the exact min/max
     value seen in that bin. All three are mergeable by construction —
     ``n`` by SUM, ``lo`` by MIN, ``hi`` by MAX — so
@@ -137,11 +141,8 @@ def quantile_histogram(
             "partition_cols may not be named bin/n/lo/hi — they share "
             "the cell table with the sketch fields")
     v = F.col(value_col).cast("double")
-    arr = F.array(*[F.lit(e) for e in es])
-    b = F.aggregate(arr, F.lit(0),
-                    lambda acc, e: acc + F.when(v >= e, 1).otherwise(0))
     return (df.filter(v.isNotNull())
-            .groupBy(*pc, b.alias("bin"))
+            .groupBy(*pc, _edge_bucket(v, es).alias("bin"))
             .agg(F.count(F.lit(1)).alias("n"),
                  F.min(v).alias("lo"),
                  F.max(v).alias("hi")))
@@ -293,16 +294,9 @@ def quantile_histogram_rebin(
     if sorted(es) != es or len(set(es)) != len(es):
         raise ValueError("edges must be strictly increasing")
     gc = list(group_cols)
-    arr = F.array(*[F.lit(e) for e in es])
-
-    def nb(col: str) -> Column:
-        return F.aggregate(
-            arr, F.lit(0),
-            lambda acc, e: acc + F.when(F.col(col) >= e, 1).otherwise(0))
-
     binned = (sketch_df
-              .withColumn("_nb_lo", nb("lo"))
-              .withColumn("_nb_hi", nb("hi")))
+              .withColumn("_nb_lo", _edge_bucket(F.col("lo"), es))
+              .withColumn("_nb_hi", _edge_bucket(F.col("hi"), es)))
     n_straddle = binned.filter(
         F.col("_nb_lo") != F.col("_nb_hi")).count()
     if n_straddle:

@@ -6153,9 +6153,10 @@ _KS_EDGES = [10_000.0 * i for i in range(1, 12)]
 
 def q_lineitem_price_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Binned two-sample KS statistic (drift.ks_statistic) between two
-    deterministic halves of lineitem — two codegen fold-bucket
-    histogram passes + a bucket-cardinality cumulative window; the
-    grid-evaluated max CDF gap, no global sort."""
+    deterministic halves of lineitem — drift_report's histogram and
+    combine for one column: one fold-bucket histogram pass per side +
+    a bucket-cardinality cumulative window; the grid-evaluated max CDF
+    gap, no global sort."""
     from .operators import drift
 
     li = load(spark, sf_dir, "lineitem")
@@ -12157,11 +12158,10 @@ DRIVER_PRIORITY: list[str] = [
     "docs_weighted_cosine", "docs_set_jaccard_join",
     "part_copurchase_triangles", "dedup_jaccard", "dedup_lsh_quality",
     # the r11-stale cohort (the oldest in the CORRECTNESS_r1..r16
-    # histogram): 6 of the 10 stable single-pass text/regex entries
+    # histogram): 2 of the 10 stable single-pass text/regex entries
     # named by the r16 rotation log as leading r17, plus the 4
     # bottom-fill displacements from r16
-    "window_rank", "docs_strip_html", "text_quality", "text_pii_redact",
-    "docs_span_removal", "docs_source_qnorm",
+    "window_rank", "docs_strip_html",
     "docs_bootstrap_ci", "docs_curriculum", "docs_interleave",
     "docs_score_auc",
     # 25 of the r12-stale cohort, risk-first: dedup/graph/embedding
@@ -12194,6 +12194,13 @@ DRIVER_PRIORITY: list[str] = [
     # folds from the r11-stale cohort above)
     "embed_kmeans", "embed_kmeans_sampled", "embed_cluster_qa",
     "ann_ivf_kmeans",
+    # the binned-drift family: the single-column KS and JSD and the
+    # per-segment KS became projections of drift_report's histogram
+    # and combine; displaces text_quality, text_pii_redact,
+    # docs_span_removal and docs_source_qnorm (unchanged single-pass
+    # folds from the r11-stale cohort above)
+    "lineitem_price_ks", "lineitem_ks_pvalue", "lineitem_ks_by_flag_fdr",
+    "lineitem_price_jsd",
 ]
 
 

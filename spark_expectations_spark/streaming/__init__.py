@@ -22,11 +22,17 @@ the same way:
    as the ``_batch_id=<id>`` partition, with dynamic partition
    overwrite, so a replayed batch replaces its partition instead of
    appending a second copy.
+   The k-means codebook is the one state that replaces instead of
+   adding: it keeps two slots (``_slot=0`` / ``_slot=1``, with
+   ``_batch_id`` a data column), and each batch overwrites the slot
+   that does NOT hold the version it read. The state then holds at
+   most two versions, and a failed or replayed batch never touches
+   what it read.
 2. Merge on read: readers fold the partitions with the state's merge —
    SUM for counts, OR for bitmaps and Bloom words, latest version for the
    k-means codebook — so the per-batch write never reads history.
 3. Exclude the current batch on read: a step that reads its own state
-   first drops the current batch id's partition (a failed attempt's
+   first drops the current batch id's rows (a failed attempt's
    half-written increment), so a replay sees exactly what the first
    attempt saw.
 4. Compact at quiescence, to a new path: the ``compact_*`` functions fold
@@ -529,20 +535,19 @@ def drift_monitor(
     ``baseline_edges``/``baseline_props`` come from a batch profiling
     pass (`drift.quantile_edges` + bucket proportions collected once) —
     the baseline is driver-held constants, so each micro-batch adds one
-    small aggregation, no stream-stream state. ``on_drift(batch_id,
-    psi)`` fires when PSI crosses ``threshold``; wire it to a
-    NotificationHub channel for alerting.
+    small aggregation, no stream-stream state: the batch's
+    ``drift.histogram_snapshot`` (the drift family's bucket rule, NULLs
+    to bucket 0), collected and folded into PSI driver-side.
+    ``on_drift(batch_id, psi)`` fires when PSI crosses ``threshold``;
+    wire it to a NotificationHub channel for alerting.
     """
-    edges = [float(e) for e in baseline_edges]
+    from ..operators.drift import histogram_snapshot
+
+    edges = {col: list(baseline_edges)}
     base = {int(k): float(v) for k, v in baseline_props.items()}
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        arr = F.array(*[F.lit(e) for e in edges])
-        b = F.aggregate(
-            arr, F.lit(0),
-            lambda acc, e: acc + F.when(F.col(col) >= e, 1).otherwise(0))
-        rows = (batch_df.groupBy(b.alias("bucket"))
-                .agg(F.count(F.lit(1)).alias("n")).collect())
+        rows = histogram_snapshot(batch_df, edges).collect()
         total = sum(r.n for r in rows)
         if not total:
             return
@@ -556,12 +561,17 @@ def drift_monitor(
     return writer.start()
 
 
-def _write_increment(df: DataFrame, path: str, batch_id: int) -> None:
+def _write_increment(df: DataFrame, path: str, batch_id: int,
+                     slot: Optional[int] = None) -> None:
     """Write ``df`` as partition ``_batch_id=batch_id`` of ``path`` with
     dynamic partition overwrite — step 1 of the module's State recipe:
-    a replay replaces its own partition and leaves the others alone."""
-    (df.withColumn("_batch_id", F.lit(batch_id))
-     .write.mode("overwrite").partitionBy("_batch_id")
+    a replay replaces its own partition and leaves the others alone.
+    With ``slot`` the partition is ``_slot=slot`` instead and
+    ``_batch_id`` a data column (the codebook's two-slot rule)."""
+    df, part = df.withColumn("_batch_id", F.lit(batch_id)), "_batch_id"
+    if slot is not None:
+        df, part = df.withColumn("_slot", F.lit(slot)), "_slot"
+    (df.write.mode("overwrite").partitionBy(part)
      .option("partitionOverwriteMode", "dynamic")
      .parquet(path))
 
@@ -1274,13 +1284,15 @@ def init_codebook_state(codebook: DataFrame, codebook_path: str) -> None:
     long-form output and writes ``(centroid_id, pos, coord, n_seen,
     _batch_id=-1)`` — ``n_seen`` starts from the training run's
     ``n_assigned`` when present (so the online updates are weighted as
-    a continuation of training), else 0."""
+    a continuation of training), else 0. The seed fills slot 0 of the
+    two-slot state (``_slot=0``, ``_batch_id=-1`` as a data column);
+    ``codebook_path`` must be a new path."""
     n_seen = (F.col("n_assigned").cast("long")
               if "n_assigned" in codebook.columns
               else F.lit(0).cast("long"))
     _write_increment(codebook.select("centroid_id", "pos", "coord",
                                      n_seen.alias("n_seen")),
-                     codebook_path, -1)
+                     codebook_path, -1, slot=0)
 
 
 def kmeans_update_stream(
@@ -1303,11 +1315,14 @@ def kmeans_update_stream(
     corpus streams in, and ``embedding_drift_monitor`` watches the
     SAME codebook for distribution shift.
 
-    State is the full long-form codebook re-written each batch as its
-    batch partition — k×dim rows per version, model-scale, so "rewrite
-    the whole state" is the cheap and replay-safe design. Merge: the
-    read side takes the latest version, excluding the current batch id
-    (the module's State recipe). A vector that is NULL, empty or
+    State is the full long-form codebook re-written each batch — k×dim
+    rows per version, model-scale, so "rewrite the whole state" is the
+    cheap and replay-safe design — in two slots, so it holds at most
+    two versions (2·k·dim rows) however long the stream runs: the
+    batch reads the latest version, excluding its own batch id (the
+    module's State recipe), and overwrites the OTHER slot with its
+    result. A failed or replayed batch therefore never touches the
+    version it read. A vector that is NULL, empty or
     non-finite moves no centroid; empty batches (no usable vectors)
     write nothing. ``out_path`` optionally records one observability row per
     batch: ``(_batch_id, n, max_shift)`` — the largest centroid L2 move,
@@ -1325,7 +1340,13 @@ def kmeans_update_stream(
                 "kmeans_update_stream: no codebook state at "
                 f"{codebook_path!r} — seed it with init_codebook_state "
                 "from a lloyd_kmeans run")
-        latest = prior.agg(F.max("_batch_id")).first()[0]
+        if "_slot" not in prior.columns:
+            raise ValueError(
+                f"kmeans_update_stream: {codebook_path!r} is not a "
+                "two-slot codebook state — seed it with "
+                "init_codebook_state at a new path")
+        latest, slot = prior.agg(
+            F.max(F.struct("_batch_id", "_slot"))).first()[0]
         cids, cents, n_seen = _read_codebook(
             prior.filter(F.col("_batch_id") == latest), "n_seen")
         stats = _lloyd_pass_arrow(_batch_vectors(batch_df, vec_col), cents,
@@ -1346,7 +1367,7 @@ def kmeans_update_stream(
                 (cid, pos, float(v), seen) for pos, v in enumerate(cvec))
         _write_increment(spark.createDataFrame(
             out_rows, "centroid_id int, pos int, coord double, n_seen long"),
-            codebook_path, batch_id)
+            codebook_path, batch_id, slot=1 - slot)
         if out_path is not None:
             n_total = sum(n for n, _ in stats.values())
             _write_increment(spark.createDataFrame(

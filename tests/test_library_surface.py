@@ -2658,6 +2658,52 @@ class TestKmeansUpdateStream:
                 0)
 
 
+class TestKmeansCodebookSlots:
+    """kmeans_update_stream keeps at most two codebook versions: the one
+    a batch read and the one it writes."""
+
+    def test_state_stays_bounded_over_many_batches(self, spark, tmp_path):
+        import random
+
+        import pyspark.sql.functions as F
+        from spark_expectations_spark import streaming as st
+        k, dim = 4, 8
+        path = str(tmp_path / "codebook")
+        st.init_codebook_state(spark.createDataFrame(
+            [(c, p, float(c * 10 + p), 5) for c in range(k)
+             for p in range(dim)],
+            "centroid_id int, pos int, coord double, n_assigned long"),
+            path)
+        rng = random.Random(3)
+        step = st.kmeans_update_stream(path)
+        for bid in range(16):
+            step(spark.createDataFrame(
+                [(i, [rng.uniform(0, 40) for _ in range(dim)])
+                 for i in range(12)],
+                "id long, embedding array<double>"), bid)
+        state = spark.read.parquet(path)
+        assert state.count() <= 2 * k * dim
+        versions = {r["_batch_id"] for r in
+                    state.select("_batch_id").distinct().collect()}
+        assert versions == {14, 15}
+        step(spark.createDataFrame([(0, [1.0] * dim)],
+                                   "id long, embedding array<double>"), 15)
+        replayed = spark.read.parquet(path)
+        assert replayed.filter(F.col("_batch_id") == 14).count() == k * dim
+
+    def test_state_of_the_batch_partitioned_layout_raises(self, spark,
+                                                          tmp_path):
+        from spark_expectations_spark import streaming as st
+        path = str(tmp_path / "codebook")
+        (spark.createDataFrame([(0, 0, 0.0, 2, -1)],
+                               "centroid_id int, pos int, coord double, "
+                               "n_seen long, _batch_id int")
+         .write.partitionBy("_batch_id").parquet(path))
+        with pytest.raises(ValueError, match="two-slot"):
+            st.kmeans_update_stream(path)(spark.createDataFrame(
+                [(1, [0.0])], "id long, embedding array<double>"), 0)
+
+
 class TestStreamingStateRecipe:
     """The shared exactly-once state helpers behind the stream steps."""
 

@@ -5068,6 +5068,67 @@ class TestDriftReport:
                 drift.js_divergence(base, cur, c,
                                     edges[c]).first()["jsd"])
             assert (rep[c]["n_base"], rep[c]["n_cur"]) == (200, 180)
+            # the four share one core: pin them to a reference that
+            # does not, computed over the collected rows
+            want = _binned_drift_reference(
+                [r[c] for r in base.collect()],
+                [r[c] for r in cur.collect()], edges[c])
+            for stat in ("psi", "ks", "jsd", "n_base", "n_cur"):
+                assert rep[c][stat] == pytest.approx(want[stat]), (c, stat)
+            assert drift.psi_with_edges(base, cur, c, edges[c]).first()[
+                "n_buckets_compared"] == want["n_buckets"]
+
+    def test_drop_nulls_matches_python_reference(self, spark):
+        """drop_nulls=True: NULLs leave both the histogram and the
+        counts, on both sides, in the sweep and in the single-column
+        operators alike."""
+        base = spark.createDataFrame(
+            [(None if i % 9 == 0 else float(i % 50),) for i in range(200)],
+            "a double")
+        cur = spark.createDataFrame(
+            [(None if i % 4 == 0 else float((i + 13) % 50),)
+             for i in range(180)], "a double")
+        edges = [10.0, 20.0, 30.0, 40.0]
+        want = _binned_drift_reference(
+            [r["a"] for r in base.collect() if r["a"] is not None],
+            [r["a"] for r in cur.collect() if r["a"] is not None], edges)
+        rep = drift.drift_report(base, cur, {"a": edges},
+                                 drop_nulls=True).first()
+        ks = drift.ks_statistic(base, cur, "a", edges,
+                                drop_nulls=True).first()
+        jsd = drift.js_divergence(base, cur, "a", edges,
+                                  drop_nulls=True).first()
+        assert (rep["n_base"], rep["n_cur"]) == (177, 135)
+        for stat in ("psi", "ks", "jsd", "n_base", "n_cur"):
+            assert rep[stat] == pytest.approx(want[stat]), stat
+        assert ks["ks"] == pytest.approx(want["ks"])
+        assert jsd["jsd"] == pytest.approx(want["jsd"])
+        assert (ks["n_base"], ks["n_cur"]) == (177, 135)
+
+    def test_ks_by_segment_matches_python_reference(self, spark):
+        """Per segment (NULL segment included, one segment present on
+        one side only): the reference over that segment's rows."""
+        rows_b = [(["x", "y", None][i % 3], float(i % 50))
+                  for i in range(200)]
+        rows_c = [(["x", "y", "z"][i % 3], float((i + 13) % 50))
+                  for i in range(180)]
+        base = spark.createDataFrame(rows_b, "s string, a double")
+        cur = spark.createDataFrame(rows_c, "s string, a double")
+        edges = [10.0, 20.0, 30.0, 40.0]
+        got = {r["segment"]: r for r in drift.ks_by_segment(
+            base, cur, "a", "s", edges=edges).collect()}
+        assert set(got) == {"x", "y", "z", "__null__"}
+        for seg in ("x", "y"):
+            want = _binned_drift_reference(
+                [a for s, a in rows_b if s == seg],
+                [a for s, a in rows_c if s == seg], edges)
+            assert got[seg]["ks"] == pytest.approx(want["ks"]), seg
+            assert (got[seg]["n_base"], got[seg]["n_cur"]) == (
+                want["n_base"], want["n_cur"])
+        # one-sided segments: NULL ks, counts kept
+        assert got["z"]["ks"] is None and got["z"]["n_base"] == 0
+        assert got["__null__"]["ks"] is None
+        assert got["__null__"]["n_cur"] == 0
 
     def test_null_column_yields_null_stats_not_failure(self, spark):
         """drop_nulls + an all-NULL column on one side: that column
@@ -5084,6 +5145,82 @@ class TestDriftReport:
         assert rep["a"]["psi"] is not None
         with pytest.raises(ValueError, match="non-empty"):
             drift.drift_report(base, cur, {})
+
+
+def _binned_drift_reference(base, cur, edges):
+    """Pure-Python binned drift of two value lists: each value goes to
+    bucket ``#edges <= x`` (None to 0); then the PSI with both
+    proportions floored at 1e-6, the largest gap between the two
+    cumulative distributions, and Jensen-Shannon with natural logs."""
+    def hist(vals):
+        h = [0] * (len(edges) + 1)
+        for x in vals:
+            h[0 if x is None else sum(x >= e for e in edges)] += 1
+        return h
+
+    hb, hc = hist(base), hist(cur)
+    nb, nc = len(base), len(cur)
+    psi = ks = jsd = 0.0
+    cb = cc = 0
+    for b, c in zip(hb, hc):
+        p, q = b / nb, c / nc
+        pe, qe = max(p, 1e-6), max(q, 1e-6)
+        psi += (pe - qe) * math.log(pe / qe)
+        cb, cc = cb + b, cc + c
+        ks = max(ks, abs(cb / nb - cc / nc))
+        m = (p + q) / 2
+        jsd += (p * math.log(p / m) if p else 0.0) \
+            + (q * math.log(q / m) if q else 0.0)
+    return {"psi": psi, "ks": ks, "jsd": jsd / 2, "n_base": nb,
+            "n_cur": nc, "n_buckets": sum(1 for b, c in zip(hb, hc)
+                                          if b or c)}
+
+
+class TestBinnedDriftCore:
+    """psi_with_edges, ks_statistic and js_divergence are projections of
+    drift_report's histogram and combine: one empty-side rule and no
+    more exchanges than the sweep."""
+
+    def _frames(self, spark):
+        base = spark.createDataFrame(
+            [(float(i % 50),) for i in range(200)], "a double")
+        cur = spark.createDataFrame(
+            [(float((i + 13) % 50),) for i in range(180)], "a double")
+        return base, cur, [10.0, 20.0, 30.0, 40.0]
+
+    def test_psi_with_edges_raises_on_an_empty_side(self, spark):
+        base, _, edges = self._frames(spark)
+        empty = base.filter("a > 1000")
+        for b, c in ((base, empty), (empty, base), (empty, empty)):
+            with pytest.raises(Exception, match="empty sample"):
+                drift.psi_with_edges(b, c, "a", edges).collect()
+
+    @pytest.mark.parametrize("op", ["ks_statistic", "js_divergence"])
+    def test_both_sides_empty_raises(self, spark, op):
+        """A keyed groupBy over no rows yields no row; the single-column
+        path must still produce its one guarded row, and raise."""
+        base, _, edges = self._frames(spark)
+        empty = base.filter("a > 1000")
+        with pytest.raises(Exception, match="empty sample"):
+            getattr(drift, op)(empty, empty, "a", edges).collect()
+
+    def test_sweep_keeps_null_statistics_on_an_empty_side(self, spark):
+        base, _, edges = self._frames(spark)
+        empty = base.filter("a > 1000")
+        r = drift.drift_report(base, empty, {"a": edges}).first()
+        assert (r["psi"], r["ks"], r["jsd"]) == (None, None, None)
+        assert (r["n_base"], r["n_cur"]) == (200, 0)
+
+    def test_single_column_plans_no_more_exchanges_than_the_sweep(
+            self, spark):
+        from spark_expectations_spark import plans
+        base, cur, edges = self._frames(spark)
+        sweep = plans.num_exchanges(
+            drift.drift_report(base, cur, {"a": edges}))
+        for op in (drift.psi_with_edges, drift.ks_statistic,
+                   drift.js_divergence):
+            n = plans.num_exchanges(op(base, cur, "a", edges))
+            assert n <= sweep, (op.__name__, n, sweep)
 
 
 class TestDriftVerdict:

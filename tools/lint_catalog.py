@@ -313,6 +313,10 @@ KNOWN_BENIGN: dict[tuple[str, str], str] = {
     ("lineitem_price_ks", "single-partition-exchange"):
         "same bins-cardinality cumulative-CDF window as "
         "lineitem_ks_pvalue",
+    ("lineitem_price_jsd", "single-partition-exchange"):
+        "js_divergence is drift_report's combine for one column: its "
+        "per-side totals are a window over the same bins-cardinality "
+        "histogram as lineitem_ks_pvalue",
     ("orders_priority_status_effects", "single-partition-exchange"):
         "the global N/chi² margins are windows over the r×c CELL "
         "frame (15 rows here; cells-cardinality by construction — "
