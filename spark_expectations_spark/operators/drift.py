@@ -90,13 +90,28 @@ def psi(
 ) -> DataFrame:
     """One-row frame: (psi, n_buckets_compared). Full-outer join on
     bucket id so mass appearing in a bucket the other side lacks is
-    penalized (clamped to epsilon), not ignored."""
+    penalized (clamped to epsilon), not ignored. Raises when either
+    side has no rows, both included (:func:`_aligned_psi`)."""
     p = bucket_proportions(baseline, col, lo=lo, hi=hi, bins=bins, out="p")
     q = bucket_proportions(current, col, lo=lo, hi=hi, bins=bins, out="q")
-    return p.join(q, "bucket", "full_outer").agg(
+    return _aligned_psi(p, q, "bucket", "n_buckets_compared", "psi")
+
+
+def _aligned_psi(p: DataFrame, q: DataFrame, key: str, n_out: str,
+                 who: str) -> DataFrame:
+    """``(psi, n_out)`` over the full-outer alignment of two
+    ``(key, p)`` / ``(key, q)`` proportion frames, raising when either
+    side has no rows — the single-column empty-side rule of
+    :func:`_one_column`: there the ε clamp would turn the missing side
+    into a finite PSI that only the clamp produces."""
+    agg = p.join(q, key, "full_outer").agg(
         _psi_sum(F.col("p"), F.col("q")).alias("psi"),
-        F.count(F.lit(1)).alias("n_buckets_compared"),
-    )
+        F.count(F.lit(1)).alias(n_out),
+        F.count("p").alias("_np"), F.count("q").alias("_nq"))
+    return agg.select(
+        F.when((F.col("_np") == 0) | (F.col("_nq") == 0),
+               _empty_side_error("psi", who))
+        .otherwise(F.col("psi")).alias("psi"), n_out)
 
 
 def category_proportions(
@@ -163,13 +178,12 @@ def categorical_psi(
     Scale note: the top-N cut is TakeOrderedAndProject over the
     distinct-category counts (per-partition partial top-N, no global
     sort), so high-cardinality columns are safe; only ``top_n`` + 2
-    category rows ever converge anywhere."""
+    category rows ever converge anywhere. Raises when either side has
+    no rows, both included."""
     p = category_proportions(baseline, col, top_n=top_n, out="p")
     q = category_proportions(current, col, top_n=top_n, out="q")
-    return p.join(q, "category", "full_outer").agg(
-        _psi_sum(F.col("p"), F.col("q")).alias("psi"),
-        F.count(F.lit(1)).alias("n_categories_compared"),
-    )
+    return _aligned_psi(p, q, "category", "n_categories_compared",
+                        "categorical_psi")
 
 
 def chi2_categorical(
@@ -367,10 +381,15 @@ def _one_column(baseline: DataFrame, current: DataFrame, col: str,
                  _multi_hist(current, {col: edges}, drop_nulls, "_nc"))
     # the combine already NULLs the statistic on an empty side
     return _combine_drift(j, None).withColumn(stat, F.when(
-        F.col(stat).isNull(), F.raise_error(F.lit(
-            f"{who}: baseline or current side has no rows — "
-            f"{stat.upper()} is undefined on an empty sample")))
+        F.col(stat).isNull(), _empty_side_error(stat, who))
         .otherwise(F.col(stat)))
+
+
+def _empty_side_error(stat: str, who: str) -> Column:
+    """The one error of the single-column empty-side rule."""
+    return F.raise_error(F.lit(
+        f"{who}: baseline or current side has no rows — "
+        f"{stat.upper()} is undefined on an empty sample"))
 
 
 def drift_report(

@@ -6,9 +6,7 @@ Net-new scale operators (not in the reference):
   broadcast, each corpus Arrow batch computes one BLAS product against
   it inside ``mapInPandas`` and emits only its local top-k per query,
   and a window keeps the global top-k. O(|corpus| * |queries|) compute,
-  zero shuffle on the corpus side. ``cosine_topk_hof`` is the same
-  search as pure Column math (broadcast cross join + higher-order dot
-  product), kept as the reference.
+  zero shuffle on the corpus side.
 * ``ivf_topk`` — IVF-style pruning: assign corpus vectors to the nearest
   of C centroids once (one pass), then search only the ``nprobe`` closest
   centroids' partitions per query. The scale path: 100 TB of vectors
@@ -16,15 +14,24 @@ Net-new scale operators (not in the reference):
 * ``random_hyperplane_lsh`` — sign-bit bucketing for cosine LSH; bucket
   join replaces the cross product.
 
+Every ranked cosine search — :func:`cosine_topk`,
+:func:`hard_negatives` and :func:`ivf_topk` — is one BLAS kernel,
+:func:`_cosine_search`, with a per-query candidate mask; the IVF probe
+of :func:`ivf_topk` and :func:`ivf_pq_topk` is one function,
+:func:`_ivf_probe`. One usable-vector rule, :func:`_unit_rows`, holds
+for every cosine in the module: a vector that is NULL or empty, has
+zero norm, or holds a NaN, ±inf or NULL element has no cosine, so it
+is no query and no neighbor in any search, in no pair, and its
+``centroid_id`` from :func:`assign_centroids` is NULL.
+
 Embedding near-duplicate pairs (``cosine >= threshold``, ``id_a < id_b``)
 come from one tiled BLAS kernel, :func:`_threshold_pairs`, under four
 contracts: :func:`near_duplicate_pairs` (exact, broadcast corpus, capped
 at 2M rows), :func:`blocked_near_duplicate_pairs` (exact, block
 nested-loop join, no cap), :func:`bucketed_near_duplicate_pairs` (LSH
 selects the candidates) and :func:`semdedup_pairs` (within one centroid
-cell). All four drop a row whose vector is NULL — it has no cosine, so
-it is in no pair — and take ids of any orderable type, typed from the
-input schema.
+cell). All four take ids of any orderable type, typed from the input
+schema.
 
 Squared-L2 nearest-centroid assignment — :func:`lloyd_kmeans`,
 :func:`kmeans_cluster_qa`, :func:`product_quantize_arrow` and the two
@@ -58,38 +65,55 @@ def _id_dtype(df: DataFrame, id_col: str) -> str:
             else "object")
 
 
-def _unit_rows(pdf, id_col: str, vec_col: str, id_dtype: str):
-    """``(rows, ids, unit)`` for the rows of ``pdf`` that can be compared.
-    A row whose vector or id is NULL has no cosine, so it is dropped here:
-    the one NULL rule of every search in this module. ``unit`` stacks the
-    vectors as float64 rows scaled to unit L2 norm; ``rows`` is the
-    filtered frame, for callers that read its other columns."""
+def _unit_rows(pdf, vec_col: str, id_col: Optional[str] = None,
+               id_dtype: str = "object"):
+    """``(rows, ids, unit)`` for the rows of ``pdf`` whose vector has a
+    cosine — the one usable-vector rule of every search and assignment
+    in this module. A vector that is NULL or empty, or whose L2 norm is
+    zero or not finite (a NaN, ±inf or NULL element), has no cosine, so
+    its row is dropped here, as is a row with a NULL id when ``id_col``
+    is given. ``unit`` stacks the kept vectors as float64 rows scaled to
+    unit L2 norm; ``rows`` is the kept frame with its index, for callers
+    that read its other columns; ``ids`` is None without ``id_col``."""
     import numpy as np
 
-    rows = pdf[pdf[vec_col].notna() & pdf[id_col].notna()]
-    ids = rows[id_col].to_numpy(dtype=id_dtype)
-    if not len(rows):
-        return rows, ids, np.empty((0, 0))
-    m = np.stack(rows[vec_col].to_numpy()).astype(np.float64)
-    return rows, ids, m / np.linalg.norm(m, axis=1, keepdims=True)
+    keep = pdf[vec_col].map(len, na_action="ignore") > 0
+    if id_col is not None:
+        keep &= pdf[id_col].notna()
+    rows = pdf[keep]
+    m = (np.stack(rows[vec_col].to_numpy()).astype(np.float64)
+         if len(rows) else np.empty((0, 0)))
+    norm = np.linalg.norm(m, axis=1)
+    ok = np.isfinite(norm) & (norm > 0)
+    rows = rows[ok]
+    ids = None if id_col is None else rows[id_col].to_numpy(dtype=id_dtype)
+    return rows, ids, m[ok] / norm[ok, None]
 
 
-def _collect_matrix(df: DataFrame, id_col: str, vec_col: str):
-    """Driver-side ``(ids, unit-row float64 matrix)`` via Arrow transfer.
-
-    Arrow-batched ``toPandas`` moves the vectors columnar instead of
-    row-by-row pickled Rows — measured ~5× faster than ``collect()`` for
-    50k × 64-dim at sf0.1."""
+def _collect_matrix(df: DataFrame, id_col: str, vec_col: str, *carry: str):
+    """Driver-side :func:`_unit_rows` of ``df``'s ``(id_col, vec_col,
+    *carry)`` columns, moved by Arrow transfer — measured ~5× faster
+    than ``collect()`` for 50k × 64-dim at sf0.1. Row order is
+    ``df``'s."""
     spark = df.sparkSession
     key = "spark.sql.execution.arrow.pyspark.enabled"
     prev = spark.conf.get(key, "false")
     spark.conf.set(key, "true")
     try:
-        pdf = df.select(id_col, vec_col).toPandas()
+        pdf = df.select(id_col, vec_col, *carry).toPandas()
     finally:
         spark.conf.set(key, prev)
-    _, ids, unit = _unit_rows(pdf, id_col, vec_col, _id_dtype(df, id_col))
-    return ids, unit
+    return _unit_rows(pdf, vec_col, id_col, _id_dtype(df, id_col))
+
+
+def _codebook_units(centroids: DataFrame):
+    """``(cids, unit)`` of an ``(centroid_id, centroid)`` codebook:
+    its usable centroids in Spark's ``centroid_id`` order (so string
+    labels tie-break as the engine would), as a Python list and unit
+    rows. k×dim doubles, model-scale."""
+    _, cids, unit = _collect_matrix(centroids.orderBy("centroid_id"),
+                                    "centroid_id", "centroid")
+    return cids.tolist(), unit
 
 
 def _broadcast_or_capture(spark, payload):
@@ -138,46 +162,44 @@ def _top_k(scored: DataFrame, k: int) -> DataFrame:
             .filter(F.col("rank") <= k))
 
 
-def cosine_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 10,
-    exclude_self: bool = True,
-) -> DataFrame:
-    """Exact top-k cosine neighbors for each query vector.
+def _cosine_search(corpus: DataFrame, query, *, id_col: str, vec_col: str,
+                   k: int, exclude_self: bool, key_col: Optional[str] = None,
+                   keep=None) -> DataFrame:
+    """The one ranked cosine search: each query's ``k`` best corpus rows
+    as ``(query_id, neighbor_id, cosine, rank)`` through :func:`_top_k`.
 
-    Returns (query_id, neighbor_id, cosine, rank). Execution: the
-    normalized query matrix is broadcast to executors; each corpus
-    partition computes one BLAS matmul (Arrow-batched mapInPandas) and
-    emits only its local top-k per query — exact, because global top-k ⊆
-    union of per-partition top-k. The corpus is scanned once, never
-    shuffled; only |queries| × k × partitions candidate rows reach the
-    final ranking window. NULL vectors are never a query or a neighbor.
-    Ids of any orderable type are typed from the corpus schema.
-    """
+    ``query`` is the driver-side ``(ids, unit, keys)`` of the usable
+    queries (:func:`_collect_matrix`; small by contract), broadcast to
+    executors. Each corpus Arrow batch forms one BLAS product against it
+    and emits only its local top-k per query — exact, because the global
+    top-k is in the union of the per-batch top-k — so the corpus is
+    scanned once and never shuffled. A corpus row is a candidate of
+    query ``i`` when it is usable (:func:`_unit_rows`), is not the query
+    itself under ``exclude_self``, and, with ``keep``, when
+    ``keep(key_col values of the batch, keys[i])`` holds. Ids keep the
+    corpus schema's type."""
     import numpy as np
     import pandas as pd
 
-    q_ids, qm_n = _collect_matrix(queries, id_col, vec_col)  # query side: small by contract
-    spark = corpus.sparkSession
-    get_q = _broadcast_or_capture(spark, (q_ids, qm_n))
+    get_q = _broadcast_or_capture(corpus.sparkSession, query)
     id_dtype = _id_dtype(corpus, id_col)
     id_t = corpus.schema[id_col].dataType.simpleString()
     out_schema = f"query_id {id_t}, neighbor_id {id_t}, cosine double"
+    cols = [id_col, vec_col] + ([key_col] if key_col else [])
 
     def part(it):
-        ids, qn = get_q()
+        ids, qn, keys = get_q()
         for pdf in it:
-            _, c_ids, cm_n = _unit_rows(pdf, id_col, vec_col, id_dtype)
-            if not len(c_ids):
+            rows, c_ids, cm_n = _unit_rows(pdf, vec_col, id_col, id_dtype)
+            if not len(c_ids) or not len(ids):
                 continue
+            c_keys = rows[key_col].to_numpy() if key_col else None
             sims = qn @ cm_n.T                      # (n_q, n_batch) BLAS
             for qi, qid in enumerate(ids):
                 s = sims[qi]
                 mask = c_ids != qid if exclude_self else np.ones(len(s), bool)
+                if keep is not None:
+                    mask &= keep(c_keys, keys[qi])
                 cand_idx = np.nonzero(mask)[0]
                 if not len(cand_idx):
                     continue
@@ -192,39 +214,10 @@ def cosine_topk(
     from ..plans import fan_out
 
     return _top_k(
-        fan_out(corpus.select(id_col, vec_col)).mapInPandas(part, out_schema),
-        k)
+        fan_out(corpus.select(*cols)).mapInPandas(part, out_schema), k)
 
 
-def _hof_scored(corpus: DataFrame, queries: DataFrame, *, id_col: str,
-                vec_col: str, exclude_self: bool,
-                label_col: Optional[str] = None) -> DataFrame:
-    """``(query_id, neighbor_id, cosine)`` for every corpus row against
-    the broadcast query set, as pure Column math (higher-order dot
-    product, no Python). With ``label_col`` only pairs whose labels
-    differ are scored, and rows with a NULL label are dropped on both
-    sides."""
-    def side(df, id_as, v, lbl, n):
-        if label_col:
-            df = df.filter(F.col(label_col).isNotNull())
-        cols = [F.col(id_col).alias(id_as), F.col(vec_col).alias(v)]
-        if label_col:
-            cols.append(F.col(label_col).alias(lbl))
-        return df.select(*cols).withColumn(n, _norm(F.col(v)))
-
-    q = side(queries, "query_id", "__qv", "__ql", "__qn")
-    c = side(corpus, "neighbor_id", "__cv", "__cl", "__cn")
-    joined = c.crossJoin(F.broadcast(q))
-    if exclude_self:
-        joined = joined.filter(F.col("neighbor_id") != F.col("query_id"))
-    if label_col:
-        joined = joined.filter(F.col("__cl") != F.col("__ql"))
-    sim = (_dot(F.col("__qv"), F.col("__cv"))
-           / (F.col("__qn") * F.col("__cn"))).alias("cosine")
-    return joined.select("query_id", "neighbor_id", sim)
-
-
-def cosine_topk_hof(
+def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
     *,
@@ -233,12 +226,20 @@ def cosine_topk_hof(
     k: int = 10,
     exclude_self: bool = True,
 ) -> DataFrame:
-    """Pure-Column variant of cosine_topk (broadcast-join + higher-order
-    dot). No Python workers at all, but per-element expression evaluation
-    is ~10× slower than the BLAS path on wide vectors — kept as the
-    zero-dependency fallback and the semantic reference."""
-    return _top_k(_hof_scored(corpus, queries, id_col=id_col,
-                              vec_col=vec_col, exclude_self=exclude_self), k)
+    """Exact top-k cosine neighbors for each query vector.
+
+    Returns (query_id, neighbor_id, cosine, rank), ranked by cosine
+    descending with ties to the lower neighbor id. Execution is
+    :func:`_cosine_search`: the normalized query matrix is broadcast,
+    each corpus batch runs one BLAS product and emits its local top-k,
+    and only |queries| × k × batches candidate rows reach the final
+    ranking window. A NULL, empty, zero or non-finite vector is never a
+    query or a neighbor. Ids of any orderable type are typed from the
+    corpus schema.
+    """
+    _, ids, unit = _collect_matrix(queries, id_col, vec_col)
+    return _cosine_search(corpus, (ids, unit, None), id_col=id_col,
+                          vec_col=vec_col, k=k, exclude_self=exclude_self)
 
 
 def hard_negatives(
@@ -260,14 +261,20 @@ def hard_negatives(
     prove neither positive nor negative. Returns (query_id,
     neighbor_id, cosine, rank).
 
-    Scale shape: cosine_topk_hof's scoring body with the label mask —
-    the query set is small by contract and broadcast (with its labels);
-    the corpus is scanned once, never shuffled; the mask is a map-side
-    predicate so only masked candidates reach the per-query rank window.
-    A query is never its own negative: it shares its own label."""
-    return _top_k(_hof_scored(corpus, queries, id_col=id_col,
-                              vec_col=vec_col, exclude_self=False,
-                              label_col=label_col), k)
+    Scale shape: :func:`_cosine_search` with the label mask — the query
+    set is small by contract and broadcast with its labels; the corpus
+    is scanned once, never shuffled, its NULL labels filtered at the
+    scan; only masked candidates reach the per-query rank window. A
+    query is never its own negative: it shares its own label. Unusable
+    vectors are in no result (:func:`_unit_rows`)."""
+    labelled = F.col(label_col).isNotNull()
+    q_rows, ids, unit = _collect_matrix(queries.filter(labelled), id_col,
+                                        vec_col, label_col)
+    return _cosine_search(corpus.filter(labelled),
+                          (ids, unit, q_rows[label_col].to_numpy()),
+                          id_col=id_col, vec_col=vec_col, k=k,
+                          exclude_self=False, key_col=label_col,
+                          keep=lambda c, q: c != q)
 
 
 def _threshold_pairs(ids_a, unit_a, ids_b, unit_b, threshold: float,
@@ -321,7 +328,7 @@ def _grouped_pairs(cand: DataFrame, cells: list, *, id_col: str,
     id_dtype = _id_dtype(cand, id_col)
 
     def _cell(key, pdf):
-        rows, ids, unit = _unit_rows(pdf, id_col, vec_col, id_dtype)
+        rows, ids, unit = _unit_rows(pdf, vec_col, id_col, id_dtype)
         ia, ib, cos = _threshold_pairs(ids, unit, ids, unit, threshold, chunk)
         if keep is not None:
             m = keep(key, rows, ia, ib)
@@ -357,7 +364,7 @@ def near_duplicate_pairs(
     """
     import pandas as pd
 
-    ids, unit = _collect_matrix(df, id_col, vec_col)
+    _, ids, unit = _collect_matrix(df, id_col, vec_col)
     if len(ids) > corpus_broadcast_limit:
         raise ValueError(
             f"corpus has {len(ids)} vectors > broadcast limit; "
@@ -369,7 +376,7 @@ def near_duplicate_pairs(
     def part(it):
         all_ids, all_unit = get_all()
         for pdf in it:
-            _, b_ids, b_unit = _unit_rows(pdf, id_col, vec_col, id_dtype)
+            _, b_ids, b_unit = _unit_rows(pdf, vec_col, id_col, id_dtype)
             ia, ib, cos = _threshold_pairs(
                 b_ids, b_unit, all_ids, all_unit, threshold)
             if len(ia):
@@ -905,33 +912,21 @@ def assign_centroids(
     centroid_id). At scale, write the result partitioned by centroid_id
     so probe queries prune partitions.
 
-    Plan shape (r16): the k-row codebook is collected driver-side
-    (k×dim doubles, model-scale) sorted by centroid_id under Spark's
-    own ordering (so string labels tie-break exactly as the engine
-    would), and the assignment is ONE map-only Arrow pass — a
-    vectorized cosine matrix per batch with ``argmax`` (first-max over
-    cid-sorted rows == ties → lowest centroid_id). The previous
-    broadcast-codebook ``aggregate`` fold evaluated the k cosines per
-    row through the HOF interpreter (CodegenFallback); the matrix
-    product is the same O(n·k·dim) at BLAS speed. Cost O(n·k·dim),
-    shuffle zero; NULL vectors keep a NULL centroid_id.
+    Plan shape: the k-row codebook is read driver-side
+    (:func:`_codebook_units`, k×dim doubles, model-scale) in Spark's
+    ``centroid_id`` order, and the assignment is ONE map-only Arrow
+    pass — one BLAS product of each batch's unit rows against the unit
+    codebook, with ``argmax`` (first max over cid-sorted rows == ties
+    → lowest centroid_id). Cost O(n·k·dim), shuffle zero. A vector with
+    no cosine (NULL, empty, zero or non-finite, :func:`_unit_rows`) gets
+    a NULL centroid_id, as does every row when no centroid is usable.
     """
-    import numpy as np
     import pandas as pd
 
-    cb_rows = (centroids
-               .select("centroid_id", "centroid")
-               .orderBy("centroid_id").collect())
-    if not cb_rows:
-        # empty codebook: every row keeps a NULL centroid_id (the old
-        # fold's element_at-on-empty semantics)
-        cid_t0 = centroids.schema["centroid_id"].dataType
-        return corpus.withColumn(
-            "centroid_id", F.lit(None).cast(cid_t0))
-    cids = [r["centroid_id"] for r in cb_rows]
-    cmat = np.asarray([list(r["centroid"]) for r in cb_rows],
-                      dtype=np.float64)
-    cn = np.sqrt((cmat * cmat).sum(axis=1))
+    cids, c_unit = _codebook_units(centroids)
+    if not cids:
+        return corpus.withColumn("centroid_id", F.lit(None).cast(
+            centroids.schema["centroid_id"].dataType))
     cid_t = centroids.schema["centroid_id"].dataType.simpleString()
     fields = ", ".join(f"{f.name} {f.dataType.simpleString()}"
                        for f in corpus.schema.fields)
@@ -939,22 +934,39 @@ def assign_centroids(
 
     def _assign(it):
         for pdf in it:
-            col = pdf[vec_col]
-            mask = col.notna().to_numpy()
-            out = np.empty(len(pdf), dtype=object)
-            if mask.any():
-                x = np.stack(col[mask].to_numpy()).astype(np.float64)
-                vn = np.sqrt((x * x).sum(axis=1))
-                with np.errstate(invalid="ignore", divide="ignore"):
-                    s = (x @ cmat.T) / (vn[:, None] * cn[None, :])
-                best = s.argmax(axis=1)
-                out[mask] = [cids[i] for i in best]
-            pdf = pdf.copy()
-            pdf["centroid_id"] = pd.Series(out, index=pdf.index,
-                                           dtype=object)
+            rows, _, x = _unit_rows(pdf, vec_col)
+            out = pd.Series(None, index=pdf.index, dtype=object)
+            if len(rows):
+                out[rows.index] = [cids[i]
+                                   for i in (x @ c_unit.T).argmax(axis=1)]
+            pdf["centroid_id"] = out
             yield pdf
 
     return corpus.mapInPandas(_assign, out_schema)
+
+
+def _ivf_probe(corpus: DataFrame, centroids: DataFrame, queries: DataFrame,
+               *, id_col: str, vec_col: str, nprobe: int):
+    """The one IVF probe of :func:`ivf_topk` and :func:`ivf_pq_topk`:
+    ``(ids, unit, probes, candidates)``. ``ids`` and ``unit`` are the
+    usable queries (:func:`_collect_matrix`; small by contract), and
+    row ``i`` of ``probes`` holds the ids of query ``i``'s ``nprobe``
+    nearest cells by cosine, ties to the lowest centroid_id, from one
+    driver-side product with the k-row codebook. ``candidates`` is
+    ``corpus`` filtered to ``centroid_id IN`` the probed cells — a
+    predicate that a store partitioned by cell prunes on."""
+    import numpy as np
+
+    cids, c_unit = _codebook_units(centroids)
+    _, ids, unit = _collect_matrix(queries, id_col, vec_col)
+    order = np.empty((len(ids), 0), np.intp)
+    if len(ids) and cids:
+        # stable over cid-sorted columns: equal cosines keep the lower id
+        order = np.argsort(-(unit @ c_unit.T), axis=1,
+                           kind="stable")[:, :max(0, nprobe)]
+    probes = np.array(cids, dtype=object)[order]
+    cells = sorted(set(probes.ravel().tolist()))
+    return ids, unit, probes, corpus.filter(F.col("centroid_id").isin(cells))
 
 
 def ivf_topk(
@@ -967,27 +979,27 @@ def ivf_topk(
     k: int = 10,
     nprobe: int = 4,
 ) -> DataFrame:
-    """Approximate top-k: per query, search only the nprobe nearest
-    centroids' vectors. The equi-join on centroid_id replaces the cross
-    join — with the corpus stored partitioned by centroid_id this is the
-    100 TB-ready plan (partition pruning + narrow shuffle)."""
-    cent = centroids.withColumn("__cn", _norm(F.col("centroid")))
-    q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qv")) \
-               .withColumn("__qn", _norm(F.col("__qv")))
-    qc = q.crossJoin(F.broadcast(cent)).withColumn(
-        "__csim", _dot(F.col("__qv"), F.col("centroid")) / (F.col("__qn") * F.col("__cn"))
-    )
-    wq = Window.partitionBy("query_id").orderBy(F.col("__csim").desc(), F.col("centroid_id").asc())
-    probes = qc.withColumn("__pr", F.row_number().over(wq)) \
-               .filter(F.col("__pr") <= nprobe) \
-               .select("query_id", "__qv", "__qn", "centroid_id")
-    c = corpus_assigned.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__cv"), "centroid_id"
-    ).withColumn("__cn2", _norm(F.col("__cv")))
-    joined = c.join(F.broadcast(probes), on="centroid_id") \
-              .filter(F.col("neighbor_id") != F.col("query_id"))
-    sim = _dot(F.col("__qv"), F.col("__cv")) / (F.col("__qn") * F.col("__cn2"))
-    return _top_k(joined.select("query_id", "neighbor_id", sim.alias("cosine")), k)
+    """Approximate top-k: per query, search only the corpus rows of its
+    ``nprobe`` nearest centroids' cells. Returns (query_id, neighbor_id,
+    cosine, rank).
+
+    The probe (:func:`_ivf_probe`) is worked out driver-side from the
+    broadcast queries and the k-row codebook, and the corpus is read
+    through ``centroid_id IN (probed cells)`` — with the corpus stored
+    partitioned by centroid_id, partition pruning skips every cell no
+    query probes (the 100 TB-ready plan). The search is
+    :func:`_cosine_search` with a per-query mask: a candidate's cell
+    must be one of that query's probed cells, and a query is not its
+    own neighbor. Unusable vectors are no query and no neighbor."""
+    import numpy as np
+
+    ids, unit, probes, cand = _ivf_probe(
+        corpus_assigned, centroids, queries, id_col=id_col,
+        vec_col=vec_col, nprobe=nprobe)
+    return _cosine_search(cand, (ids, unit, probes), id_col=id_col,
+                          vec_col=vec_col, k=k, exclude_self=True,
+                          key_col="centroid_id",
+                          keep=lambda c, cells: np.isin(c, cells))
 
 
 # ---------------------------------------------------------------------------
@@ -1128,6 +1140,26 @@ def _dbl_sql(c) -> str:
             else "CAST('-Infinity' AS DOUBLE)")
 
 
+def _pq_dist_sql(vec_col: str, codebooks: list) -> list:
+    """Per subspace ``j``, the SQL of each codeword's squared L2
+    distance to the ``j``-th slice of ``vec_col``: an all-double
+    left-to-right ``aggregate(zip_with(...))`` fold with the codeword
+    inlined as literals. The one distance builder of
+    :func:`product_quantize` and :func:`pq_query_lut`. Built as SQL
+    text, not Columns: a Column per codeword cost ~14 py4j round trips
+    (embed_ivf_pq profiled at 17.6k round trips of driver latency),
+    and the parsed tree is the same fold, a float's repr round-tripping
+    to the same double literal."""
+    dsub = len(codebooks[0][0])
+    vec_sql = "`" + vec_col.replace("`", "``") + "`"
+    d_sql = f"transform({vec_sql}, x -> CAST(x AS DOUBLE))"
+    return [[f"aggregate(zip_with(slice({d_sql}, {j * dsub + 1}, {dsub}), "
+             f"array({', '.join(_dbl_sql(c) for c in cw)}), "
+             f"(a, b) -> (a - b) * (a - b)), 0.0D, (acc, x) -> acc + x)"
+             for cw in book]
+            for j, book in enumerate(codebooks)]
+
+
 def product_quantize(
     df: DataFrame,
     *,
@@ -1158,28 +1190,9 @@ def product_quantize(
     second ``array<double>`` column (the quantization-quality signal;
     summed it is the vector's total squared reconstruction error).
     """
-    dsub = len(codebooks[0][0])
-    # each book's k-distance array is built as ONE SQL string: the
-    # previous per-codeword Column loop issued ~14 py4j round trips per
-    # codeword (m·k·(dsub lits + HOF wrappers) ≈ thousands of round
-    # trips ≈ seconds of driver latency per call — r16 cProfile of
-    # embed_ivf_pq: 17.6k round trips). The parsed tree is the
-    # IDENTICAL zip_with/aggregate expression — a float's repr()
-    # round-trips through the double literal to the same value — so
-    # codes, ties, and the oracle are untouched.
-    vec_sql = "`" + vec_col.replace("`", "``") + "`"
-    d_sql = f"transform({vec_sql}, x -> CAST(x AS DOUBLE))"
     codes = []
     mins = []
-    for j, book in enumerate(codebooks):
-        sub_sql = f"slice({d_sql}, {j * dsub + 1}, {dsub})"
-        terms = []
-        for cw in book:
-            arr = ", ".join(_dbl_sql(c) for c in cw)
-            terms.append(
-                f"aggregate(zip_with({sub_sql}, array({arr}), "
-                f"(a, b) -> (a - b) * (a - b)), 0.0D, "
-                f"(acc, x) -> acc + x)")
+    for terms in _pq_dist_sql(vec_col, codebooks):
         dists = F.expr("array(" + ", ".join(terms) + ")")
         codes.append(
             (F.array_position(dists, F.array_min(dists)) - 1).cast("int"))
@@ -1295,50 +1308,22 @@ def pq_reconstruction_error(
 
 
 def pq_query_lut(
-    vec: Column,
+    vec: str,
     codebooks: list,
 ) -> Column:
-    """Per-query asymmetric-distance lookup table: a flat
-    ``array<double>`` of ``m·k`` squared L2 distances from the query's
-    ``j``-th subvector to every codeword of subspace ``j``, laid out
-    ``lut[j*k + c]`` — computed ONCE per query, then every candidate's
-    distance is just ``m`` array lookups (:func:`ivf_pq_topk`). Pure
-    codegen projection with inlined codebook literals; all-double
-    left-to-right folds (the :func:`product_quantize` bit-exactness
-    contract, so a DuckDB oracle reproduces every entry)."""
-    dsub = len(codebooks[0][0])
-    if isinstance(vec, str):
-        # column-NAME fast path (r16): the whole m·k-entry LUT builds
-        # as ONE SQL string — the per-codeword Column loop cost ~14
-        # py4j round trips per codeword (embed_ivf_pq profiled at
-        # 17.6k round trips of pure driver chatter; same fix as
-        # product_quantize). The parsed tree is the identical
-        # zip_with/aggregate fold — float repr round-trips to the
-        # same double — so every LUT entry and the oracle are
-        # untouched. Column inputs keep the generic path below.
-        vec_sql = "`" + vec.replace("`", "``") + "`"
-        d_sql = f"transform({vec_sql}, x -> CAST(x AS DOUBLE))"
-        terms = []
-        for j, book in enumerate(codebooks):
-            sub_sql = f"slice({d_sql}, {j * dsub + 1}, {dsub})"
-            for cw in book:
-                arr = ", ".join(_dbl_sql(c) for c in cw)
-                terms.append(
-                    f"aggregate(zip_with({sub_sql}, array({arr}), "
-                    f"(a, b) -> (a - b) * (a - b)), 0.0D, "
-                    f"(acc, x) -> acc + x)")
-        return F.expr("array(" + ", ".join(terms) + ")")
-    d = F.transform(vec, lambda x: x.cast("double"))
-    entries = []
-    for j, book in enumerate(codebooks):
-        sub = F.slice(d, j * dsub + 1, dsub)
-        for cw in book:
-            entries.append(F.aggregate(
-                F.zip_with(sub,
-                           F.array(*[F.lit(float(c)) for c in cw]),
-                           lambda a, b: (a - b) * (a - b)),
-                F.lit(0.0), lambda acc, x: acc + x))
-    return F.array(*entries)
+    """Per-query asymmetric-distance lookup table for the column named
+    ``vec``: a flat ``array<double>`` of ``m·k`` squared L2 distances
+    from the query's ``j``-th subvector to every codeword of subspace
+    ``j``, laid out ``lut[j*k + c]`` — computed ONCE per query, then
+    every candidate's distance is just ``m`` array lookups
+    (:func:`ivf_pq_topk`). Pure projection with inlined codebook
+    literals, built by :func:`_pq_dist_sql` exactly as
+    :func:`product_quantize` builds its distances: all-double
+    left-to-right folds, so a DuckDB oracle reproduces every entry."""
+    if not isinstance(vec, str):
+        raise TypeError("pq_query_lut takes a column name")
+    return F.expr("array(" + ", ".join(
+        t for terms in _pq_dist_sql(vec, codebooks) for t in terms) + ")")
 
 
 def ivf_pq_topk(
@@ -1364,14 +1349,17 @@ def ivf_pq_topk(
     product. Returns ``(query_id, neighbor_id, rank, adc)`` with rank
     by ascending approximate squared distance (ties → lowest id).
 
-    Scale shape: centroids and the (queries × nprobe) probe frame are
-    broadcast; the only distributed work is one equi-join on
-    ``centroid_id`` against the code table — with the corpus bucketed
+    Scale shape: the probe is :func:`ivf_topk`'s (:func:`_ivf_probe`,
+    driver-side over the small query set), and the code table is read
+    through ``centroid_id IN (probed cells)`` — with the corpus bucketed
     or partitioned by cell, partition pruning touches ``nprobe/C`` of
-    the data, and each candidate row carries ``m`` ints instead of
-    ``dim`` floats (the ~100× I/O cut is the point at 100 TB). No UDF,
-    no Python, no decode. NULL-coded rows (NULL input vectors) are
-    skipped.
+    the data. The (queries × nprobe) probe pairs, joined to each
+    query's LUT, are broadcast; the only distributed work is one
+    equi-join on ``centroid_id`` against the code table, and each
+    candidate row carries ``m`` ints instead of ``dim`` floats (the
+    ~100× I/O cut is the point at 100 TB). No UDF, no decode.
+    NULL-coded rows (NULL input vectors) are skipped, and a query with
+    no cosine (:func:`_unit_rows`) has no result.
 
     ``corpus_encoded`` needs ``(id_col, centroid_id, codes_col)`` —
     from :func:`product_quantize` (or the Arrow twin) over an
@@ -1379,36 +1367,34 @@ def ivf_pq_topk(
     :func:`cosine_topk` to :func:`recall_at_k`, exactly like the plain
     IVF path.
     """
+    from ..plans import local_frame
+
     kcw = len(codebooks[0])
-    cent = centroids.withColumn("__cn", _norm(F.col("centroid")))
-    # NULL query vectors are dropped up front: their NULL LUT would
-    # yield NULL ADC for every candidate, and ascending NULLS-FIRST
-    # ordering would then rank arbitrary junk as their top-k
-    q = (queries
-         .filter(F.col(vec_col).isNotNull())
-         .select(F.col(id_col).alias("query_id"),
-                 F.col(vec_col).alias("__qv"))
-         .withColumn("__qn", _norm(F.col("__qv")))
-         .withColumn("__lut", pq_query_lut("__qv", codebooks)))
-    qc = q.crossJoin(F.broadcast(cent)).withColumn(
-        "__csim",
-        _dot(F.col("__qv"), F.col("centroid"))
-        / (F.col("__qn") * F.col("__cn")))
-    wq = Window.partitionBy("query_id").orderBy(
-        F.col("__csim").desc(), F.col("centroid_id").asc())
-    probes = (qc.withColumn("__pr", F.row_number().over(wq))
-              .filter(F.col("__pr") <= nprobe)
-              .select("query_id", "__lut", "centroid_id"))
-    c = corpus_encoded.select(
+    ids, _, probes, cand = _ivf_probe(
+        corpus_encoded, centroids, queries, id_col=id_col, vec_col=vec_col,
+        nprobe=nprobe)
+    id_t = queries.schema[id_col].dataType.simpleString()
+    cid_t = centroids.schema["centroid_id"].dataType.simpleString()
+    pairs = local_frame(
+        queries.sparkSession,
+        [(q, c) for q, cells in zip(ids.tolist(), probes.tolist())
+         for c in cells],
+        f"query_id {id_t}, centroid_id {cid_t}")
+    # the LUT is computed in Spark, so its folds stay the oracle's
+    lut = queries.select(
+        F.col(id_col).alias("query_id"),
+        pq_query_lut(vec_col, codebooks).alias("__lut"))
+    c = cand.select(
         F.col(id_col).alias("neighbor_id"), "centroid_id",
         F.col(codes_col).alias("__codes")).filter(
         F.col("__codes").isNotNull())
-    joined = (c.join(F.broadcast(probes), on="centroid_id")
+    joined = (c.join(F.broadcast(pairs.join(lut, "query_id")),
+                     on="centroid_id")
               .filter(F.col("neighbor_id") != F.col("query_id")))
-    lut = F.col("__lut")
     adc = F.aggregate(
         F.transform(F.col("__codes"),
-                    lambda code, j: F.element_at(lut, j * kcw + code + 1)),
+                    lambda code, j: F.element_at(F.col("__lut"),
+                                                 j * kcw + code + 1)),
         F.lit(0.0), lambda acc, x: acc + x)
     scored = joined.select("query_id", "neighbor_id", adc.alias("adc"))
     w = Window.partitionBy("query_id").orderBy(
@@ -1432,7 +1418,9 @@ def kmeans_refine(
     (array-of-float math that per-dimension SQL aggregates would turn
     into dim-wide plans; train_centroids_df's sum-per-dimension is kept
     for the UDF-free path). State per group is one vector; shuffle is
-    keyed by centroid_id, so cells balance as well as the data does.
+    keyed by centroid_id, so cells balance as well as the data does. A
+    vector with no cosine gets a NULL centroid_id from
+    :func:`assign_centroids` and joins no cell mean.
     """
     import numpy as np  # noqa: F401 — imported for the worker closure
     import pandas as pd  # noqa: F401
@@ -1452,7 +1440,8 @@ def kmeans_refine(
     out = centroids
     for _ in range(max(0, iters)):
         assigned = assign_centroids(corpus, out, vec_col=vec_col)
-        out = assigned.select("centroid_id", vec_col).groupBy(
+        out = assigned.filter(F.col("centroid_id").isNotNull()).select(
+            "centroid_id", vec_col).groupBy(
             "centroid_id").applyInPandas(
                 _cell_mean, f"centroid_id {cid_t}, centroid array<float>")
     return out
@@ -1467,24 +1456,29 @@ def assignment_quality(
     """Mean cosine similarity of each vector to its assigned centroid —
     the objective kmeans_refine improves; exposed for codebook QA.
 
-    Zero-shuffle: the codebook collapses to ONE broadcast row of
-    (vector, norm) structs and each corpus row's best similarity is an
-    ``array_max`` over a codegen transform — no k× row blowup, no
-    groupBy over corpus columns (which would also collapse duplicate
-    rows and mis-weight the mean)."""
-    cent_row = centroids.agg(F.collect_list(F.struct(
-        F.col("centroid").alias("v"),
-        _norm(F.col("centroid")).alias("n"))).alias("__cents"))
-    vnorm = _norm(F.col(vec_col))
-    best = F.array_max(F.transform(
-        F.col("__cents"),
-        lambda c: F.aggregate(
-            F.zip_with(F.col(vec_col), c["v"],
-                       lambda x, y: x.cast("double") * y.cast("double")),
-            F.lit(0.0), lambda a, v: a + v) / (vnorm * c["n"])))
-    row = (corpus.crossJoin(F.broadcast(cent_row))
-           .agg(F.avg(best).alias("__q")).first())
-    return float(row["__q"])
+    One map-only Arrow pass: each batch's unit rows (:func:`_unit_rows`,
+    the normalisation :func:`assign_centroids` uses) against the unit
+    codebook, reduced to per-batch ``(n, Σ best cosine)`` partials and
+    summed driver-side — no join, no groupBy over corpus rows (which
+    would also collapse duplicate rows and mis-weight the mean). A
+    vector with no cosine is left out of the mean; NaN when no vector
+    or no centroid is usable."""
+    import pandas as pd
+
+    _, c_unit = _codebook_units(centroids)
+
+    def _partials(it):
+        for pdf in it:
+            _, _, x = _unit_rows(pdf, vec_col)
+            if len(x) and len(c_unit):
+                yield pd.DataFrame({
+                    "n": [len(x)],
+                    "s": [float((x @ c_unit.T).max(axis=1).sum())]})
+
+    parts = (corpus.select(vec_col)
+             .mapInPandas(_partials, "n long, s double").collect())
+    n = sum(p["n"] for p in parts)
+    return sum(p["s"] for p in parts) / n if n else math.nan
 
 
 def mean_pool(
@@ -1639,7 +1633,7 @@ def recall_at_k(
     standard ANN quality gate (run on a sampled query set before
     trusting an IVF/LSH index for corpus-scale retrieval). Both inputs
     are (query, neighbor) frames, e.g. :func:`cosine_topk` (exact) vs
-    :func:`ivf_topk` / :func:`lsh_topk` (approximate).
+    :func:`ivf_topk` / :func:`ivf_pq_topk` (approximate).
 
     Emits (query, n_exact, n_matched, recall). Scale shape: every frame
     here is (queries x k)-sized — evaluation-sized, never corpus-sized —

@@ -12157,23 +12157,16 @@ DRIVER_PRIORITY: list[str] = [
     # (dedup_jaccard + the LSH report that drives the same machinery)
     "docs_weighted_cosine", "docs_set_jaccard_join",
     "part_copurchase_triangles", "dedup_jaccard", "dedup_lsh_quality",
-    # the r11-stale cohort (the oldest in the CORRECTNESS_r1..r16
-    # histogram): 2 of the 10 stable single-pass text/regex entries
-    # named by the r16 rotation log as leading r17, plus the 4
-    # bottom-fill displacements from r16
-    "window_rank", "docs_strip_html",
-    "docs_bootstrap_ci", "docs_curriculum", "docs_interleave",
-    "docs_score_auc",
-    # 25 of the r12-stale cohort, risk-first: dedup/graph/embedding
+    # 21 of the r12-stale cohort, risk-first: dedup/graph/embedding
     # pipelines and sketch rollups before single-fold metrics
     "dedup_canonical", "dedup_canonical_centrality", "dedup_clusters",
     "dedup_containment", "dedup_fingerprint", "docs_cc_largestar",
     "docs_dedup_pipeline", "embed_semdedup", "embed_near_dups",
     "embed_standardize", "docs_bm25_terms", "docs_tfidf_terms",
     "docs_incremental_dedup", "docs_nfd_pack",
-    "docs_source_qnorm_bucketed", "docs_weighted_topk",
+    "docs_source_qnorm_bucketed",
     "events_cms_daily_rollup", "events_distinct_rollup_exact",
-    "events_hourly_anomalies", "docs_dsir_weights", "docs_group_sample",
+    "events_hourly_anomalies", "docs_dsir_weights",
     "docs_ngram_novelty", "docs_dup_shingles",
     # the two leakage-safe splits: with the dedup entries above they
     # are every catalog caller of graph.connected_components, gated
@@ -12201,6 +12194,16 @@ DRIVER_PRIORITY: list[str] = [
     # folds from the r11-stale cohort above)
     "lineitem_price_ks", "lineitem_ks_pvalue", "lineitem_ks_by_flag_fdr",
     "lineitem_price_jsd",
+    # the cosine search family: the exact, label-masked and IVF top-k
+    # (and their callers) score through one BLAS kernel, both IVF
+    # probes are one driver-side probe, and the PQ distances have one
+    # SQL builder (with embed_semdedup and ann_ivf_kmeans above, every
+    # catalog caller); displaces window_rank, docs_strip_html,
+    # docs_bootstrap_ci, docs_curriculum, docs_interleave,
+    # docs_score_auc, docs_group_sample and docs_weighted_topk
+    # (unchanged single-pass entries)
+    "ann_topk", "ann_ivf", "ann_ivf_recall", "embed_hard_negatives",
+    "embed_mmr_topk", "embed_matryoshka_check", "embed_pq", "embed_ivf_pq",
 ]
 
 

@@ -366,12 +366,35 @@ class TestHashFamilyPairParity:
         assert got["xxhash64"] == got["md5_48"] == self.WANT
 
 
+def _brute_topk(corpus, queries, k, id_col="vec_id", vec_col="embedding"):
+    """``{(query_id, rank): neighbor_id}`` of an exact cosine top-k with
+    self excluded, by numpy brute force over the collected rows: one
+    untiled product of unit rows, ranked by (-cosine, neighbor id)."""
+    import numpy as np
+
+    def unit(df):
+        rows = [(r[id_col], r[vec_col]) for r in df.collect()]
+        m = np.array([v for _, v in rows], dtype=np.float64)
+        return ([i for i, _ in rows],
+                m / np.linalg.norm(m, axis=1, keepdims=True))
+
+    c_ids, c_unit = unit(corpus)
+    q_ids, q_unit = unit(queries)
+    sims = q_unit @ c_unit.T
+    want = {}
+    for qi, qid in enumerate(q_ids):
+        ranked = sorted((-sims[qi, j], nid) for j, nid in enumerate(c_ids)
+                        if nid != qid)
+        for rank, (_, nid) in enumerate(ranked[:k], start=1):
+            want[(qid, rank)] = nid
+    return want
+
+
 class TestSimilarity:
     def test_topk_matches_hof_reference(self, emb):
         fast = similarity.cosine_topk(emb, emb.filter(F.col("vec_id") < 3), k=4)
-        slow = similarity.cosine_topk_hof(emb, emb.filter(F.col("vec_id") < 3), k=4)
         f = {(r["query_id"], r["rank"]): r["neighbor_id"] for r in fast.collect()}
-        s = {(r["query_id"], r["rank"]): r["neighbor_id"] for r in slow.collect()}
+        s = _brute_topk(emb, emb.filter(F.col("vec_id") < 3), k=4)
         assert f == s
 
     def test_self_similarity_excluded(self, emb):
@@ -505,23 +528,98 @@ class TestSimilarity:
 
     def test_topk_keeps_string_ids(self, spark):
         """cosine_topk types its ids from the input schema, as the pair
-        searches do, and ranks as its reference cosine_topk_hof does."""
+        searches do, and ranks as a numpy brute force does."""
         df = spark.createDataFrame(
             [("doc-b", [0.999, 0.01]), ("doc-a", [1.0, 0.0]),
              ("doc-c", [0.0, 1.0]), ("doc-d", [0.01, 0.999])],
             "vec_id string, embedding array<float>")
         fast = similarity.cosine_topk(df, df, k=2)
-        slow = similarity.cosine_topk_hof(df, df, k=2)
         assert fast.schema["query_id"].dataType.simpleString() == "string"
         assert fast.schema["neighbor_id"].dataType.simpleString() == \
             "string"
 
-        def ranked(out):
-            return {(r["query_id"], r["rank"]): r["neighbor_id"]
-                    for r in out.collect()}
+        ranked = {(r["query_id"], r["rank"]): r["neighbor_id"]
+                  for r in fast.collect()}
+        assert ranked == _brute_topk(df, df, k=2)
+        assert ranked[("doc-a", 1)] == "doc-b"
 
-        assert ranked(fast) == ranked(slow)
-        assert ranked(fast)[("doc-a", 1)] == "doc-b"
+    def test_no_usable_query_gives_no_rows(self, spark):
+        """A query set without a usable vector gives an empty result,
+        not a worker error from an empty query matrix."""
+        df = spark.createDataFrame(
+            [(1, [1.0, 0.0]), (2, [0.9, 0.1]), (3, None), (4, [0.0, 0.0])],
+            "vec_id long, embedding array<double>")
+        assert similarity.cosine_topk(
+            df, df.filter("vec_id > 2"), k=2).count() == 0
+
+    # one row per vector with no cosine: NULL, zero, NaN, +inf, -inf,
+    # a NULL element and empty
+    UNUSABLE = [None, [0.0, 0.0], [math.nan, 1.0], [math.inf, 1.0],
+                [-math.inf, 1.0], [1.0, None], []]
+
+    USABLE_OPS = {
+        "cosine_topk": lambda df, cents: similarity.cosine_topk(
+            df, df, k=4),
+        "hard_negatives": lambda df, cents: similarity.hard_negatives(
+            df, df, k=4),
+        "ivf_topk": lambda df, cents: similarity.ivf_topk(
+            similarity.assign_centroids(df, cents), cents, df, k=4,
+            nprobe=2),
+        "ivf_pq_topk": lambda df, cents: similarity.ivf_pq_topk(
+            similarity.product_quantize(
+                similarity.assign_centroids(df, cents),
+                codebooks=[[[0.0], [1.0]], [[0.0], [1.0]]]),
+            cents, df, codebooks=[[[0.0], [1.0]], [[0.0], [1.0]]], k=4,
+            nprobe=2),
+        "assign_centroids": lambda df, cents: similarity.assign_centroids(
+            df, cents).select("vec_id", "centroid_id"),
+        "assignment_quality": lambda df, cents:
+            similarity.assignment_quality(df, cents),
+        "kmeans_refine": lambda df, cents: similarity.kmeans_refine(
+            df, cents),
+    }
+
+    @pytest.mark.parametrize("id_type", ["long", "string"])
+    @pytest.mark.parametrize("op", list(USABLE_OPS))
+    def test_unusable_vectors_are_in_no_result(self, spark, op, id_type):
+        """A vector with no cosine is no query and no neighbor of any
+        search, gets a NULL centroid_id and is left out of the
+        assignment mean and the refined cell means: each operator gives
+        on a corpus holding such rows exactly what it gives on the
+        usable rows alone, and none raises."""
+        good = [(1, [1.0, 0.0], 0), (2, [0.9, 0.1], 1), (9, [0.0, 1.0], 1)]
+        bad = [(10 + i, v, i % 2) for i, v in enumerate(self.UNUSABLE)]
+        key = (lambda i: i) if id_type == "long" else (lambda i: f"v{i}")
+
+        def frame(rows):
+            return spark.createDataFrame(
+                [(key(i), v, lbl) for i, v, lbl in rows],
+                f"vec_id {id_type}, embedding array<double>, label int")
+
+        cents = spark.createDataFrame(
+            [(0, [1.0, 0.0]), (1, [0.0, 1.0])],
+            "centroid_id int, centroid array<float>")
+        run = self.USABLE_OPS[op]
+        got, want = run(frame(good + bad), cents), run(frame(good), cents)
+        if op == "assignment_quality":
+            assert got == pytest.approx(want, abs=1e-12)
+            return
+
+        def rows(out):
+            # cosines from batches of other shapes may differ in the last
+            # bits, so floats compare to 12 places
+            return [tuple(round(x, 12) if isinstance(x, float) else x
+                          for x in r) for r in out.collect()]
+
+        want_rows, got_rows = sorted(rows(want), key=repr), rows(got)
+        if op == "assign_centroids":
+            assert sorted((r for r in got_rows if r[1] is not None),
+                          key=repr) == want_rows
+            assert sorted(r[0] for r in got_rows if r[1] is None) == \
+                sorted(key(i) for i, _, _ in bad)
+            return
+        assert len(want_rows) > 0
+        assert sorted(got_rows, key=repr) == want_rows
 
     @pytest.mark.parametrize("square", [False, True])
     def test_pair_kernel_matches_brute_force(self, square):
@@ -5194,6 +5292,23 @@ class TestBinnedDriftCore:
         for b, c in ((base, empty), (empty, base), (empty, empty)):
             with pytest.raises(Exception, match="empty sample"):
                 drift.psi_with_edges(b, c, "a", edges).collect()
+
+    @pytest.mark.parametrize("op", ["psi", "categorical_psi"])
+    def test_aligned_psi_raises_on_an_empty_side(self, spark, op):
+        """The width-bucket and categorical PSI follow the same rule:
+        without it the ε clamp turned a missing side into a finite PSI
+        that only the clamp produces."""
+        base, _, _ = self._frames(spark)
+        base = base.withColumn("s", F.col("a").cast("int") % 7)
+        empty = base.filter("a > 1000")
+        run = {"psi": lambda b, c: drift.psi(b, c, "a", lo=0, hi=50,
+                                             bins=5),
+               "categorical_psi": lambda b, c: drift.categorical_psi(
+                   b, c, "s")}[op]
+        assert run(base, base).first()["psi"] == pytest.approx(0.0)
+        for b, c in ((base, empty), (empty, base), (empty, empty)):
+            with pytest.raises(Exception, match="empty sample"):
+                run(b, c).collect()
 
     @pytest.mark.parametrize("op", ["ks_statistic", "js_divergence"])
     def test_both_sides_empty_raises(self, spark, op):

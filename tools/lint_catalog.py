@@ -5,7 +5,7 @@ sampler quotas, percentile thresholds — so this is minutes, not
 seconds) and reports plan_lint findings. Error-tier findings are the
 repo's zero-tolerance set (cartesian products, row-Python UDFs); the
 warn tier is printed for review — deliberate broadcast cross joins
-(queries × centroids, grid builds) appear there by design.
+(grid builds) appear there by design.
 
     python tools/lint_catalog.py [sf_dir] [query ...]
 
@@ -46,27 +46,12 @@ from spark_expectations_spark.queries import QUERIES  # noqa: E402
 #: prove benign from the plan alone. Each remaining cartesian-product
 #: warn is either here (with its reason) or a real finding to fix.
 KNOWN_BENIGN: dict[tuple[str, str], str] = {
-    ("ann_ivf", "cartesian-product"):
-        "queries x centroids probe grid — both sides dims-scale "
-        "(n_queries*k), broadcast by contract; corpus never cross-joins",
-    ("ann_ivf_recall", "cartesian-product"):
-        "same probe grid as ann_ivf plus a sampled exact side — "
-        "quadratic only on the documented sample",
-    ("embed_ivf_pq", "cartesian-product"):
-        "per-query LUT build (m*k distance table) against broadcast "
-        "centroids — model-scale frames, not corpus",
     ("docs_curriculum", "cartesian-product"):
         "quantile_buckets thresholds join: the single-group (lit "
         "constant) case folds the eqNullSafe key so the join plans as "
         "BNLJ, but the build side is the explicitly-broadcast "
         "group-cardinality thresholds frame (1 row per group) — the "
         "grouped agg isn't keyless so plan_lint can't prove it 1-row",
-    ("embed_hard_negatives", "cartesian-product"):
-        "query matrix broadcast BY CONTRACT (ann_topk's shape with the "
-        "label mask riding the map-side predicate; corpus streams once)",
-    ("ann_ivf_kmeans", "cartesian-product"):
-        "the ann_ivf probe grid (queries x centroids, dims-scale) plus "
-        "the kmeans codebook collapse — every cross side is model-scale",
     ("part_blocking_quality", "cartesian-product"):
         "the report's TRUTH side is a cross join BY DESIGN and by "
         "documented contract runs only on the deterministic sample "
