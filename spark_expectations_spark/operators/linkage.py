@@ -479,18 +479,20 @@ def set_similarity_join(
     if not 0.0 < threshold <= 1.0:
         raise ValueError("threshold must be in (0, 1]")
     t = float(threshold)
-    la = F.array_distinct(F.col(left_set))
-    ra = F.array_distinct(F.col(right_set))
-    L = (left.select(F.col(left_id).alias("__lid"), la.alias("__la"))
-         .filter(F.col("__la").isNotNull() & (F.size("__la") > 0)))
-    R = (right.select(F.col(right_id).alias("__rid"), ra.alias("__ra"))
-         .filter(F.col("__ra").isNotNull() & (F.size("__ra") > 0)))
-    ltok = L.select("__lid", F.explode("__la").alias("__tok"))
-    rtok = R.select("__rid", F.explode("__ra").alias("__tok"))
+    # explode the set EXPRESSION, not a projected column: explode drops
+    # NULL and empty sets itself, and over an attribute Catalyst infers
+    # a size(set) > 0 filter from the Generate and pushes it below any
+    # repartition into the scan — a second, single-task pass of the
+    # caller's set build
+    ltok = left.select(F.col(left_id).alias("__lid"),
+                       F.explode(F.array_distinct(F.col(left_set)))
+                       .alias("__tok"))
+    rtok = right.select(F.col(right_id).alias("__rid"),
+                        F.explode(F.array_distinct(F.col(right_set)))
+                        .alias("__tok"))
     if hash_tokens:
         # md5-60 image on the EXPLODED rows — a codegen row expression
-        # evaluated once per token (array-lambda hashing would run the
-        # interpreted HOF path per element; see _word_shingles3's note)
+        # evaluated once per token, not an array lambda per element
         h = F.conv(F.substring(F.md5(F.col("__tok")), 1, 15), 16, 10) \
             .cast("long")
         ltok = ltok.select("__lid", h.alias("__tok"))

@@ -14,6 +14,8 @@ from typing import Mapping, Optional, Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .dedup import _word_ngrams
+
 # Default per-language stopword marker lists for the n-gram/stopword
 # language heuristic. Deliberately tiny: language ID at scale is a
 # frequency heuristic, not a model.
@@ -2433,21 +2435,6 @@ def readability(
         F.when(nw > 0, flesch).alias("flesch"))
 
 
-def _word_ngrams(words: Column, n: int) -> Column:
-    """Word n-gram array from a token array via ``zip_with`` over n
-    shifted slices (the ``_word_shingles3`` builder generalized — a
-    transform-over-sequence lambda would re-evaluate its captured
-    expression per element on the interpreted HOF path). Documents
-    with fewer than ``n`` tokens yield an EMPTY array (ROUGE
-    convention: no n-grams, not a short whole-doc gram)."""
-    m = F.size(words) - (n - 1)
-    acc = F.slice(words, 1, F.greatest(m, F.lit(0)))
-    for i in range(2, n + 1):
-        nxt = F.slice(words, i, F.greatest(m, F.lit(0)))
-        acc = F.zip_with(acc, nxt, lambda a, b: F.concat_ws(" ", a, b))
-    return F.when(m >= 1, acc).otherwise(F.array().cast("array<string>"))
-
-
 def ngram_overlap(
     df: DataFrame,
     id_col: str,
@@ -2500,8 +2487,8 @@ def ngram_overlap(
         F.col(id_col).alias("__id"),
         _word_ngrams(words(ref_col), n).alias("__rg"),
         _word_ngrams(words(cand_col), n).alias("__cg"))
-    # size(_word_ngrams(ws, n)) == greatest(size(ws) - (n-1), 0) by
-    # construction (zip_with of equal-length slices) — computing it
+    # size(_word_ngrams(ws, n)) == greatest(size(ws) - (n-1), 0): one
+    # gram per token start with n-1 tokens after it — computing it
     # from the token arrays skips the gram-string build entirely
     sizes = df.select(
         F.col(id_col).alias("__id"),

@@ -9670,34 +9670,12 @@ SELECT (SELECT count(*) FROM ok) AS n,
 
 
 def _word_shingles3(warr):
-    """Word-3-gram shingle array via arrays_zip of three shifted
-    slices + ONE transform — the shape dedup.shingles_col uses. NOT
-    transform(sequence(...), i -> concat_ws(slice(warr, i, 3))): a
-    lambda that captures the outer array re-evaluates the captured
-    expression PER ELEMENT in Spark's interpreted HOF path — measured
-    ~245us/shingle, which made the two set-similarity joins' corpus
-    passes their dominant cost (same-session A/B at sf0.1: set-jaccard
-    12.4s -> 4.5s from that change alone). r16 re-measure (noop
-    protocol, per-pass microbench over sf0.1 documents, min-of-3):
-    the previous double-zip_with form ran TWO interpreted HOF walks
-    per row (0.857 s/pass); arrays_zip + one transform halves the
-    interpreted surface (0.366 s/pass, 2.3×) and also beat a
-    fully-codegen posexplode+element_at rewrite (0.545 s/pass — the
-    carried word array per exploded row costs more than one lambda).
-    Exploded-set equivalence proven exceptAll==0 both directions on
-    the sf0.1 corpus. Short-doc edge (< 3 words → the single whole-doc
-    shingle) and NULL/empty-array behavior match the old form where
-    consumers can see it: both operators filter NULL/size==0 arrays
-    before exploding, so the NULL-in/[]-out distinction is
-    unobservable downstream (guarded the same way shingles_col is)."""
-    m = F.greatest(F.size(warr) - 2, F.lit(0))
-    z = F.arrays_zip(*[F.slice(warr, i + 1, m) for i in range(3)])
-    grams = F.transform(
-        z, lambda x: F.concat_ws(" ", *[x[str(i)] for i in range(3)]))
-    return F.when(warr.isNull(), F.lit(None).cast("array<string>")) \
-        .when(F.size(warr) >= 3, grams) \
-        .when(F.size(warr) >= 1, F.array(F.concat_ws(" ", warr))) \
-        .otherwise(F.array().cast("array<string>"))
+    """Word-3-gram shingle array of a word array, from the dedup n-gram
+    kernel: 1-2 words give the single whole-text shingle, no words an
+    empty array, and a NULL array stays NULL."""
+    return (F.when(F.size(warr).between(1, 2),
+                   F.array(F.concat_ws(" ", warr)))
+            .when(warr.isNotNull(), dedup._word_ngrams(warr, 3)))
 
 
 def q_docs_set_jaccard_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -12157,17 +12135,25 @@ DRIVER_PRIORITY: list[str] = [
     # (dedup_jaccard + the LSH report that drives the same machinery)
     "docs_weighted_cosine", "docs_set_jaccard_join",
     "part_copurchase_triangles", "dedup_jaccard", "dedup_lsh_quality",
-    # 21 of the r12-stale cohort, risk-first: dedup/graph/embedding
-    # pipelines and sketch rollups before single-fold metrics
+    # 12 of the r12-stale cohort, risk-first: dedup/graph/embedding
+    # pipelines before single-fold metrics
     "dedup_canonical", "dedup_canonical_centrality", "dedup_clusters",
     "dedup_containment", "dedup_fingerprint", "docs_cc_largestar",
     "docs_dedup_pipeline", "embed_semdedup", "embed_near_dups",
-    "embed_standardize", "docs_bm25_terms", "docs_tfidf_terms",
-    "docs_incremental_dedup", "docs_nfd_pack",
-    "docs_source_qnorm_bucketed",
-    "events_cms_daily_rollup", "events_distinct_rollup_exact",
-    "events_hourly_anomalies", "docs_dsir_weights",
+    "docs_incremental_dedup",
     "docs_ngram_novelty", "docs_dup_shingles",
+    # the word-n-gram family: every shingle builder moved onto the one
+    # codegen n-gram kernel (with the dedup, linkage and leakage-split
+    # entries around this block, every catalog caller); displaces
+    # embed_standardize, docs_bm25_terms, docs_tfidf_terms,
+    # docs_nfd_pack, docs_source_qnorm_bucketed,
+    # events_cms_daily_rollup, events_distinct_rollup_exact,
+    # events_hourly_anomalies and docs_dsir_weights (unchanged entries
+    # of the r12-stale cohort above)
+    "docs_minhash_jaccard", "dedup_minhash_md5", "docs_minhash_index",
+    "docs_decontaminate", "docs_decontaminate_screened",
+    "docs_decontaminate_spans", "docs_dup_spans", "docs_span_removal",
+    "docs_rouge_overlap",
     # the two leakage-safe splits: with the dedup entries above they
     # are every catalog caller of graph.connected_components, gated
     # together since it became the one connected-components operator

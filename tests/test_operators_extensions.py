@@ -1024,6 +1024,146 @@ class TestWordShingles3ArraysZip:
         assert n_tw > 50  # the twin branch actually exercised
 
 
+class TestWordNgramKernel:
+    """dedup._word_ngrams, the one word-n-gram kernel, against a
+    pure-Python reference under each caller's tokenization and
+    short-text rule, on texts built to break a token-boundary regex:
+    leading/trailing tabs and newlines, whitespace runs, a lone space,
+    fewer than n tokens, "" and NULL."""
+
+    TEXTS = [None, "", " ", "\t", "\n", "  ", "a", "A b", "\ta b",
+             "a b\n", "\n\na  b\t\tc \r\n", " x   y  z ", "a b c d e f g",
+             "\x0bq\fr s\t", "a a a a a a", "One\ttwo\nthree four"]
+
+    @classmethod
+    def _texts(cls):
+        rng = random.Random(17)
+        parts = ["a", "Bb", "c", " ", "  ", "\t", "\n", "\r", "\x0b"]
+        return cls.TEXTS + ["".join(rng.choices(parts, k=rng.randint(0, 14)))
+                            for _ in range(150)]
+
+    @staticmethod
+    def _split(s):
+        # Spark's split(str, '\\s+') is Java's String.split(regex, -1):
+        # empty leading/trailing tokens kept; Java's \s is ASCII only
+        import re
+        return re.split(r"[ \t\n\x0b\f\r]+", s)
+
+    @staticmethod
+    def _grams(toks, n):
+        return [" ".join(toks[i:i + n]) for i in range(len(toks) - n + 1)]
+
+    @classmethod
+    def _frame(cls, spark):
+        return spark.createDataFrame(list(enumerate(cls._texts())),
+                                     "id long, t string")
+
+    @classmethod
+    def _collect(cls, spark, build):
+        return [(r["t"], r["g"]) for r in cls._frame(spark).select(
+            "t", build(F.col("t")).alias("g")).collect()]
+
+    @staticmethod
+    def _distinct(xs):
+        return list(dict.fromkeys(xs))
+
+    @pytest.mark.parametrize("n", [1, 2, 3, 4, 5])
+    def test_shingles_col(self, spark, n):
+        def ref(t):
+            if t is None:
+                return None
+            toks = self._split(t.strip(" ").lower())
+            if n <= 1:
+                return self._distinct(toks)
+            if len(toks) < n:
+                return [" ".join(toks)]
+            return self._distinct(self._grams(toks, n))
+        for t, got in self._collect(
+                spark, lambda c: dedup.shingles_col(c, n)):
+            assert got == ref(t), (t, n)
+
+    @pytest.mark.parametrize("n", [1, 2, 3, 4, 5])
+    def test_coverage_tokens_positions(self, spark, n):
+        """dup_span_coverage's grams: tokens_col, no short-text gram,
+        and posexplode positions are token indices."""
+        got = {}
+        for r in self._frame(spark).select("id", F.posexplode(dedup._word_ngrams(
+                dedup.tokens_col(F.col("t")), n))).collect():
+            got.setdefault(r["id"], []).append((r["pos"], r["col"]))
+        want = {}
+        for i, t in enumerate(self._texts()):
+            if t is not None:
+                g = self._grams(self._split(t.strip(" ").lower()), n)
+                if g:
+                    want[i] = list(enumerate(g))
+        assert got == want
+
+    @pytest.mark.parametrize("n", [1, 2, 3, 4, 5])
+    def test_span_operator_grams(self, spark, n):
+        """_word_grams: case-sensitive raw split, no short-text gram;
+        a NULL text has no gram."""
+        def ref(t):
+            if t is None:
+                return None, []
+            toks = self._split(t.strip(" "))
+            return toks, self._grams(toks, n)
+        toks, grams = dedup._word_grams("t", n)
+        for r in self._frame(spark).select(
+                "t", toks.alias("k"), grams.alias("g")).collect():
+            assert (r["k"], r["g"]) == ref(r["t"]), (r["t"], n)
+
+    def test_catalog_word_shingles3(self, spark):
+        from spark_expectations_spark.queries import _word_shingles3
+
+        def ref(t):
+            if t is None:
+                return None
+            ws = self._split(t.strip(" ").lower())
+            return ([" ".join(ws)] if 1 <= len(ws) <= 2
+                    else self._grams(ws, 3))
+        for t, got in self._collect(spark, lambda c: _word_shingles3(
+                F.split(F.lower(F.trim(c)), r"\s+"))):
+            assert got == ref(t), t
+        empty = spark.createDataFrame([([],)], "w array<string>")
+        assert empty.select(_word_shingles3(F.col("w"))).first()[0] == []
+
+    @pytest.mark.parametrize("n", [1, 2, 3, 4, 5])
+    def test_ngram_overlap_words(self, spark, n):
+        """ngram_overlap's tokens: NULL as "", empty tokens dropped,
+        fewer than n tokens give no n-gram."""
+        def ref(t):
+            toks = [w for w in self._split((t or "").strip(" ").lower())
+                    if w != ""]
+            return self._grams(toks, n)
+        for t, got in self._collect(spark, lambda c: text._word_ngrams(
+                F.filter(F.split(F.trim(F.lower(F.coalesce(c, F.lit("")))),
+                                 r"\s+"), lambda w: w != ""), n)):
+            assert got == ref(t), (t, n)
+
+    def test_kernel_null_and_n_below_one(self, spark):
+        df = spark.createDataFrame([(None,), ([],)], "w array<string>")
+        for n in (1, 3):
+            got = df.select(dedup._word_ngrams(F.col("w"), n)).collect()
+            assert [r[0] for r in got] == [[], []], n
+        with pytest.raises(ValueError, match="n must be"):
+            dedup._word_ngrams(F.col("w"), 0)
+
+    def test_null_text_has_no_shingle(self, spark):
+        """A NULL text has no shingle, so NULL-text rows pair with
+        nothing; "" keeps its one empty shingle."""
+        df = spark.createDataFrame(
+            [(1, None), (2, None), (3, ""),
+             (4, "the quick brown fox jumps"),
+             (5, "the quick brown fox jumps")], "doc_id long, text string")
+        sh = {r["doc_id"]: r["s"] for r in df.select(
+            "doc_id", dedup.shingles_col(F.col("text")).alias("s")).collect()}
+        assert sh[1] is None and sh[2] is None and sh[3] == [""]
+        jac = dedup.jaccard_pairs(df, "doc_id", "text", threshold=0.5)
+        assert [(r["id_a"], r["id_b"]) for r in jac.collect()] == [(4, 5)]
+        mh = dedup.minhash_dedup_pairs(df, "doc_id", "text", threshold=0.5)
+        assert [(r["id_a"], r["id_b"]) for r in mh.collect()] == [(4, 5)]
+
+
 class TestHeavyHitters:
     def test_exact_and_prunes(self, spark):
         from spark_expectations_spark.operators import sketches
@@ -6809,6 +6949,53 @@ class TestBlockingIndexProbe:
         assert linkage.probe_blocking_index(
             idx, probe, "pid", "pname", blockers=("ngram",),
             max_distance=2).count() == 0
+
+
+class TestLinkageShinglePlans:
+    """The two linkage catalog entries shingle each document once,
+    above the scan's round-robin spread, through the codegen n-gram
+    kernel. Exploding a projected set COLUMN lets Catalyst infer a
+    size(set) > 0 filter from the Generate and push it (and any
+    explicit NULL/empty filter) below the spread into the scan: a
+    second shingling pass on a single task."""
+
+    BUILDERS = ("regexp_extract_all", "array_distinct", "arrays_zip",
+                "zip_with", "lambdafunction")
+
+    @staticmethod
+    def _plan(spark, name):
+        from spark_expectations_spark import plans
+        from spark_expectations_spark.queries import QUERIES
+        return plans.plan_text(QUERIES[name](spark, SF))
+
+    def test_set_jaccard_join_shingles_above_the_spread(self, spark):
+        from spark_expectations_spark.plans import _parse_tree_and_details
+        txt = self._plan(spark, "docs_set_jaccard_join")
+        tree, details = _parse_tree_and_details(txt)
+        below, n_spread = [], 0
+        for i, (depth, name, nid) in enumerate(tree):
+            if (name == "Exchange"
+                    and "RoundRobinPartitioning" in details.get(nid, "")):
+                n_spread += 1
+                j = i + 1
+                while j < len(tree) and tree[j][0] > depth:
+                    below.append(tree[j][2])
+                    j += 1
+        assert n_spread >= 2 and below
+        for nid in below:
+            for b in self.BUILDERS:
+                assert b not in details[nid], (nid, b, details[nid])
+        for line in txt.splitlines():
+            if "DataFilters" in line:
+                assert not any(b in line for b in self.BUILDERS), line
+
+    @pytest.mark.parametrize("name", ["docs_set_jaccard_join",
+                                      "docs_weighted_cosine"])
+    def test_no_lambda_ngram_builder(self, spark, name):
+        txt = self._plan(spark, name)
+        assert "regexp_extract_all" in txt
+        for b in ("arrays_zip", "zip_with", "lambdafunction(concat_ws"):
+            assert b not in txt, b
 
 
 class TestSetSimilaritySelfPairs:
